@@ -361,6 +361,7 @@ def _build(dialect: str) -> str:
     tables=("orders",),
     doc=("Academy of Medical Sciences awards parse "
          "(scripts/local/acmedsci_to_s3.py)"),
+    spread=("orders",),
 )
 def acmedsci_parse_awards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AcMedSci per-scheme grammar cascade: comma3 with the
@@ -368,9 +369,7 @@ def acmedsci_parse_awards(spark: SparkSession, sf_dir: str) -> DataFrame:
     working-with/at, Turnberg from/visiting, Networking paired-lead
     UK-side pick; lead-title strip + parenthetical removal + the
     38-token post-nominal peel; family-required drop; composite
-    slugified ids.  One scan, one parallelizing key-only repartition
-    (registry.parallelize_scan_sql — the single-row-group fixture scan
-    is one task and this grammar cascade is regex-heavy), no Python."""
-    from openalex_walden_spark.queries.registry import parallelize_scan_sql
-
-    return spark.sql(parallelize_scan_sql(spark, _build("spark")))
+    slugified ids.  One scan, one round-robin spread exchange under it
+    (``spread`` in ``register`` — the single-row-group fixture scan is
+    one task and this grammar cascade is regex-heavy), no Python."""
+    return spark.sql(_build("spark"))

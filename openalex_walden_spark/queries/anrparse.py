@@ -283,6 +283,7 @@ def _sql(dialect: str) -> str:
         "ANR projects+partners parse (scripts/local/anr_to_s3.py:"
         "240-345,347-545,672-700)"
     ),
+    spread=("orders", "lineitem"),
 )
 def anr_parse_projects(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lead-partner role selection + left join + the combined-frame
@@ -290,9 +291,4 @@ def anr_parse_projects(spark: SparkSession, sf_dir: str) -> DataFrame:
     amount clean, strict-ISO date coerce, numeric edition) + keep-first
     dedup across the three directorate arms (module docstring has the
     full semantics map, including the dead constant-France fallback)."""
-    from openalex_walden_spark.queries.registry import parallelize_scan_sql
-
-    # r15: parallelizing key-only repartition under the single-row-group
-    # fixture scan(s) — the regex parse otherwise runs on one task
-    # (registry.parallelize_scan_sql has the measurements)
-    return spark.sql(parallelize_scan_sql(spark, _sql("spark"), ('orders', 'lineitem')))
+    return spark.sql(_sql("spark"))

@@ -359,6 +359,7 @@ ORDER BY family
     oracle=_REGISTRY_BATTERY_ORACLE,
     tags=("sqludf", "scalar", "awards"),
     tables=("orders",),
+    spread=("orders",),
 )
 def udf_award_registry_key_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The registry-side per-funder keying (``award_registry_key``) —
@@ -371,14 +372,11 @@ def udf_award_registry_key_battery(spark: SparkSession, sf_dir: str) -> DataFram
     (accept, by the reference's own rule).  Macro-expanded SQL UDF:
     zero Python in the plan, one shuffle for the rollup."""
     create_sql_udfs(spark)
-    spark.table("orders").repartition(
-        spark.sparkContext.defaultParallelism, "o_orderkey"
-    ).createOrReplaceTempView("orders_rp_reg")
     return spark.sql(f"""
         WITH raw AS (
           SELECT o_orderkey, {_FAMILY_NAME} AS family,
                  {_REGISTRY_RAW_SPARK} AS award
-          FROM orders_rp_reg
+          FROM orders
         ),
         variants AS (
           SELECT family, 'canonical' AS variant, award FROM raw

@@ -346,14 +346,10 @@ def _build(dialect: str) -> str:
     tables=("orders",),
     doc=("Blue Planet Prize laureate parse "
          "(scripts/local/blue_planet_prize_to_s3.py)"),
+    spread=("orders",),
 )
 def blue_planet_parse_awards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blue Planet Prize laureate normalize (module docstring has the
     full semantics map).  One scan through Generate layer barriers; no
     shuffle, no Python."""
-    from openalex_walden_spark.queries.registry import parallelize_scan_sql
-
-    # r15: parallelizing key-only repartition under the single-row-group
-    # fixture scan(s) — the regex parse otherwise runs on one task
-    # (registry.parallelize_scan_sql has the measurements)
-    return spark.sql(parallelize_scan_sql(spark, _build("spark"), "orders"))
+    return spark.sql(_build("spark"))

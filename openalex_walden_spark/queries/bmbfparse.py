@@ -282,14 +282,10 @@ def _parse_sql(dialect: str) -> str:
         "BMBF Förderkatalog detail-page parse stage "
         "(scripts/local/bmbf_to_s3.py:279-440,737-760)"
     ),
+    spread=("orders",),
 )
 def bmbf_parse_projects(spark: SparkSession, sf_dir: str) -> DataFrame:
     """German label→field map, amount/date-range/Ressort/Bundesland
     parses, the stateful two-Ort assignment, and the FKZ keep-first
     dedup (module docstring has the full semantics map)."""
-    from openalex_walden_spark.queries.registry import parallelize_scan_sql
-
-    # r15: parallelizing key-only repartition under the single-row-group
-    # fixture scan(s) — the regex parse otherwise runs on one task
-    # (registry.parallelize_scan_sql has the measurements)
-    return spark.sql(parallelize_scan_sql(spark, _parse_sql("spark"), "orders"))
+    return spark.sql(_parse_sql("spark"))

@@ -344,15 +344,11 @@ def _build(dialect: str) -> str:
     tables=("orders",),
     doc=("Carlsbergfondet grants parse "
          "(scripts/local/carlsberg_fondet_to_s3.py)"),
+    spread=("orders",),
 )
 def carlsberg_parse_grants(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Carlsberg labeled-facts parse: amount/currency split with the
     Danish-number NULL arm, institutional-name PI guard, conservative
     title/degree name split, DKK-0 TEST-page skip, URL-only degraded
     rows.  One scan, zero exchanges, no Python."""
-    from openalex_walden_spark.queries.registry import parallelize_scan_sql
-
-    # r15: parallelizing key-only repartition under the single-row-group
-    # fixture scan(s) — the regex parse otherwise runs on one task
-    # (registry.parallelize_scan_sql has the measurements)
-    return spark.sql(parallelize_scan_sql(spark, _build("spark"), "orders"))
+    return spark.sql(_build("spark"))

@@ -408,14 +408,10 @@ def _build(dialect: str) -> str:
     tables=("orders",),
     doc=("Canada Council prize-archive + GGBooks parse stage "
          "(scripts/local/canada_council_prizes_to_s3.py)"),
+    spread=("orders",),
 )
 def canada_council_prizes_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canada Council prize normalize (module docstring has the full
     semantics map).  One scan per arm, a co-author explode, a 10-row
     broadcast label join; no shuffle beyond the union, no Python."""
-    from openalex_walden_spark.queries.registry import parallelize_scan_sql
-
-    # r15: parallelizing key-only repartition under the single-row-group
-    # fixture scan(s) — the regex parse otherwise runs on one task
-    # (registry.parallelize_scan_sql has the measurements)
-    return spark.sql(parallelize_scan_sql(spark, _build("spark"), "orders"))
+    return spark.sql(_build("spark"))

@@ -896,6 +896,7 @@ def _build(dialect: str) -> str:
     doc=("Fellowship-directory parse family (scripts/local/"
          "{guggenheim,radcliffe,scas_former_fellows,hertz,lister}"
          "_to_s3.py)"),
+    spread=("orders",),
 )
 def fellowship_directory_parse(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
@@ -903,9 +904,4 @@ def fellowship_directory_parse(spark: SparkSession,
     shared particle-aware name split (module docstring has the map).
     Two barriered scan arms + the radcliffe (slug, year) keep-first
     window; no Python."""
-    from openalex_walden_spark.queries.registry import parallelize_scan_sql
-
-    # r15: parallelizing key-only repartition under the single-row-group
-    # fixture scan(s) — the regex parse otherwise runs on one task
-    # (registry.parallelize_scan_sql has the measurements)
-    return spark.sql(parallelize_scan_sql(spark, _build("spark"), "orders"))
+    return spark.sql(_build("spark"))

@@ -674,15 +674,11 @@ def _build(dialect: str) -> str:
     tables=("orders",),
     doc=("Foundation-archive scraper family (scripts/local/{ahmanson,"
          "costech,kirby,lumina}_to_s3.py)"),
+    spread=("orders",),
 )
 def foundation_archive_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Four foundation-archive ingests in one union plan (module
     docstring has the semantics map; note the costech dead-regex quirk
     preserved and the kirby sha1->sha256 digest deviation).  Four
     barriered scan arms + the kirby year-column explode; no shuffle."""
-    from openalex_walden_spark.queries.registry import parallelize_scan_sql
-
-    # r15: parallelizing key-only repartition under the single-row-group
-    # fixture scan(s) — the regex parse otherwise runs on one task
-    # (registry.parallelize_scan_sql has the measurements)
-    return spark.sql(parallelize_scan_sql(spark, _build("spark"), "orders"))
+    return spark.sql(_build("spark"))

@@ -438,6 +438,7 @@ def _parse_sql(dialect: str) -> str:
         "FRIS project parse shared by the 4-script Flemish scraper "
         "family (scripts/local/fwo_to_s3.py:160-305 et al.)"
     ),
+    spread=("orders",),
 )
 def fris_parse_projects(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Funding-party membership filter + EN-text pick + authority-
@@ -445,9 +446,4 @@ def fris_parse_projects(spark: SparkSession, sf_dir: str) -> DataFrame:
     participant cascade — the shared FRIS template run for all four
     member funders in one plan (module docstring has the semantics
     map and the reference's document-order subtleties)."""
-    from openalex_walden_spark.queries.registry import parallelize_scan_sql
-
-    # r15: parallelizing key-only repartition under the single-row-group
-    # fixture scan(s) — the regex parse otherwise runs on one task
-    # (registry.parallelize_scan_sql has the measurements)
-    return spark.sql(parallelize_scan_sql(spark, _parse_sql("spark"), "orders"))
+    return spark.sql(_parse_sql("spark"))

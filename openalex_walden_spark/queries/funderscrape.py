@@ -558,6 +558,7 @@ FROM schemed
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc="Chinese provincial award-list shared parse (_cn_province_common.py)",
+    spread=("orders",),
 )
 def cn_province_awards_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The provincial scrapers' shared normalize library
@@ -582,12 +583,7 @@ def cn_province_awards_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: one scan, pure column algebra (the reference runs this
     per-row in pandas); no shuffle at all."""
-    from openalex_walden_spark.queries.registry import parallelize_scan_sql
-
-    # r15: parallelizing key-only repartition under the single-row-group
-    # fixture scan (registry.parallelize_scan_sql has the measurements)
-    return spark.sql(parallelize_scan_sql(
-        spark, _cn_parse("spark").replace("{rows}", _CN_ROWS_SPARK)))
+    return spark.sql(_cn_parse("spark").replace("{rows}", _CN_ROWS_SPARK))
 
 
 # ---------------------------------------------------------------------------

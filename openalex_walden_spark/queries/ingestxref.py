@@ -683,17 +683,13 @@ def _dc_fix(sql: str, dialect: str) -> str:
     oracle=_dc_fix(_dc_assemble("duck"), "duck"),
     tags=("ingest", "datacite"),
     tables=("orders", "lineitem"),
+    spread=("orders", "lineitem"),
 )
 def datacite_parse_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DataCite ingest parse — placeholder-name machine, typed related
     identifiers, the oxjob-476 raw_type rule, the published-date ladder
     (DataCite.py datacite_parsed; see the section comment above)."""
-    from openalex_walden_spark.queries.registry import parallelize_scan_sql
-
-    # r15: parallelizing key-only repartition under the single-row-group
-    # fixture scan(s) — the regex parse otherwise runs on one task
-    # (registry.parallelize_scan_sql has the measurements)
-    return spark.sql(parallelize_scan_sql(spark, _dc_fix(_dc_assemble("spark"), "spark"), ('orders', 'lineitem')))
+    return spark.sql(_dc_fix(_dc_assemble("spark"), "spark"))
 
 
 # ---------------------------------------------------------------------------

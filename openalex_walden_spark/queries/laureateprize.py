@@ -1791,16 +1791,14 @@ def _build(dialect: str) -> str:
          "japan_prize,brain_prize,king_faisal_prize,"
          "keio_medical_science_prize,international_biology_prize,"
          "welch_award,macarthur_fellows}_to_s3.py)"),
+    spread=("orders",),
 )
 def laureate_prize_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Eight laureate ingests in one union plan (module docstring has
     the per-member semantics map).  The kyoto and king-faisal
     share-count windows are the only exchanges; the keio arm explodes
     the two per-row laureate positions.  Each arm's orders scan sits
-    behind a parallelizing key-only repartition
-    (registry.parallelize_scan_sql): the single-row-group fixture scan
-    is one task per arm, and the regex-heavy parse ran on 8 cores for
-    8 arms while the rest idled."""
-    from openalex_walden_spark.queries.registry import parallelize_scan_sql
-
-    return spark.sql(parallelize_scan_sql(spark, _build("spark")))
+    under a round-robin spread exchange (``spread`` in ``register``):
+    the single-row-group fixture scan is one task per arm, and the
+    regex-heavy parse ran on 8 cores for 8 arms while the rest idled."""
+    return spark.sql(_build("spark"))

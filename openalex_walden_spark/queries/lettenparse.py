@@ -294,19 +294,9 @@ def _sql(dialect: str) -> str:
            "title_rendered", "content_rendered", "link", "item_date",
            "item_modified", "raw_json"]
 
-    # Spark: the fixture is a single-row-group parquet file, so the scan
-    # is ONE task no matter what maxPartitionBytes says — and this parse
-    # does ~100 µs/row of regex work, so the whole query ran on one core
-    # (r15, guide §2.5 "input skew: one huge unsplittable file ...
-    # repartition immediately after the read").  The hint shuffles ONLY
-    # o_orderkey (8 bytes/row; every parsed string is generated in-plan
-    # above it), so the exchange is scale-safe; the parallelism value is
-    # injected by the query function from defaultParallelism.  Measured
-    # at sf0.1: 55-74 s -> 5.6-6.0 s, identical rows.
-    par_hint = "/*+ REPARTITION(__PAR__) */ " if dialect == "spark" else ""
     return f"""
 WITH base AS (
-  SELECT {par_hint}o_orderkey AS k, w.award_year, w.source_type, w.source_slug,
+  SELECT o_orderkey AS k, w.award_year, w.source_type, w.source_slug,
     {LK} AS lk,
     CAST((o_orderkey + w.award_year) % 4 AS INT) AS arm,
     1000000 + o_orderkey * 100 + w.award_year % 100 AS wp_id
@@ -452,6 +442,7 @@ def _build(dialect: str) -> str:
     oracle=_build("duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
+    spread=("orders",),
     doc=("Letten Prize laureates parse "
          "(scripts/local/letten_prize_to_s3.py)"),
 )
@@ -459,7 +450,8 @@ def letten_parse_laureates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Letten canonical-winners parse: the 4-stage name cascade, the
     per-year affiliation regex table, the sentence-selection
     description truncation with the 900-char break, slugified ids,
-    year-tabled amounts.  One scan, one parallelizing key-only
-    repartition (see _sql), no Python."""
-    par = spark.sparkContext.defaultParallelism
-    return spark.sql(_build("spark").replace("__PAR__", str(par)))
+    year-tabled amounts.  One scan, one round-robin spread exchange
+    directly under it (``spread`` in ``register``: the single-row-group
+    fixture scan is one task and this parse does ~100 µs/row of regex
+    work), no Python."""
+    return spark.sql(_build("spark"))

@@ -1442,17 +1442,26 @@ wt_out AS (
                else "list_slice([''], 1, 0)"))
     sc_longtext = "'" + "x" * 85 + "'"
 
+    # Every page keys uniquely by construction (the reference RAISES on
+    # a funder_award_id collision): a URL-less page takes its slug from
+    # the picked name, so every text the walk can pick carries the key.
+    # The program and focus-area echoes are the page's OWN attributes
+    # (the walk skips them), never a foreign constant it would pick.
+    sc_program = ("CASE CAST(o_orderkey % 4 AS INT) "
+                  "WHEN 0 THEN NULL WHEN 1 THEN 'AI2050' "
+                  "WHEN 2 THEN 'Schmidt Science Polymaths' "
+                  "ELSE 'AI in Sci' END")
+    sc_slug = ("CASE CAST(o_orderkey % 5 AS INT) "
+               "WHEN 0 THEN NULL WHEN 1 THEN 'ai-advanced-computing' "
+               "WHEN 2 THEN 'biosciences' WHEN 3 THEN 'climate' "
+               "ELSE 'unknown-slug' END")
+    sc_term_digits = f"concat('12345 ', {ks})"
+
     sc = f"""
 sc_raw AS (
   SELECT o_orderkey AS k,
-    CASE CAST(o_orderkey % 4 AS INT)
-      WHEN 0 THEN NULL WHEN 1 THEN 'AI2050'
-      WHEN 2 THEN 'Schmidt Science Polymaths'
-      ELSE 'AI in Sci' END AS data_program,
-    CASE CAST(o_orderkey % 5 AS INT)
-      WHEN 0 THEN NULL WHEN 1 THEN 'ai-advanced-computing'
-      WHEN 2 THEN 'biosciences' WHEN 3 THEN 'climate'
-      ELSE 'unknown-slug' END AS focus_slug,
+    {sc_program} AS data_program,
+    {sc_slug} AS focus_slug,
     CASE CAST(o_orderkey % 6 AS INT)
       WHEN 0 THEN '' WHEN 1 THEN '2023'
       WHEN 2 THEN '2020, 2021, 2022, 2023'
@@ -1462,16 +1471,18 @@ sc_raw AS (
       THEN concat('https://www.schmidtsciences.org/grantee/jane-doe-',
                   {ks}, '/') END AS grantee_url,
     CASE WHEN o_orderkey % 7 = 3 THEN concat('jane doe ', {ks})
-      WHEN o_orderkey % 7 = 6 THEN '12345 678' END AS data_term,
+      WHEN o_orderkey % 7 = 6 THEN {sc_term_digits} END AS data_term,
     CASE CAST(o_orderkey % 7 AS INT)
-      WHEN 0 THEN {sc_arr("'AI2050'", f"concat('Jane Doe', {ks})")}
-      WHEN 1 THEN {sc_arr("''", "'AI & Advanced Computing'",
+      WHEN 0 THEN {sc_arr(f"coalesce({sc_program}, '')",
+                          f"concat('Jane Doe', {ks})")}
+      WHEN 1 THEN {sc_arr("''",
+                          f"coalesce(CASE {sc_slug} {sc_focus} END, '')",
                           f"concat('Nadia Drake', {ks}, ' PhD')")}
       WHEN 2 THEN {sc_arr(sc_longtext, f"concat('Omar Farah', {ks})")}
       WHEN 3 THEN {sc_arr(f"concat('jane doe ', {ks})")}
       WHEN 4 THEN {sc_arr()}
       WHEN 5 THEN {sc_arr(f"concat('X1 Research Collective ', {ks})")}
-      ELSE {sc_arr("'12345 678'")} END AS a_texts
+      ELSE {sc_arr(sc_term_digits)} END AS a_texts
   FROM orders
 ),
 {bar("sc_focused", "sc_raw", ["k", "data_program", "focus_slug",
@@ -1578,15 +1589,13 @@ def _build(dialect: str) -> str:
     doc=("Method-5 static-HTML scraper family (scripts/local/{mott,"
          "helmsley,fritz_thyssen,mercator_fellows,novo_nordisk_fonden,"
          "rj_jubileumsfond,wt_grant,aos_research_awards}_to_s3.py)"),
+    spread=("orders",),
 )
 def method5_parse_awards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nine method-5 publishers in one union plan (module docstring
     has the per-member semantics map).  Scan arms behind Generate
     barriers; slugs are unique by construction (the references RAISE on
     collision) so the only exchanges are the AOS arm's per-page
-    windows — plus, r15, the parallelizing key-only repartition under
-    each arm's single-row-group fixture scan
-    (registry.parallelize_scan_sql)."""
-    from openalex_walden_spark.queries.registry import parallelize_scan_sql
-
-    return spark.sql(parallelize_scan_sql(spark, _build("spark")))
+    windows — plus the round-robin spread exchange under each arm's
+    single-row-group fixture scan (``spread`` in ``register``)."""
+    return spark.sql(_build("spark"))

@@ -942,14 +942,10 @@ def _build(dialect: str) -> str:
     doc=("Micro-funder scraper kit (scripts/local/{eruk,lcrf,fmfc,ntap,"
          "brain_research_uk,medical_research_scotland,blood_cancer_uk,"
          "cirm}_to_s3.py)"),
+    spread=("orders",),
 )
 def microfunder_parse_awards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Eight micro-funder ingests in one union plan (module docstring
     has the per-member semantics map).  Line-array scans with the
     established HOF idioms; two keep-first windows, no Python."""
-    from openalex_walden_spark.queries.registry import parallelize_scan_sql
-
-    # r15: parallelizing key-only repartition under the single-row-group
-    # fixture scan(s) — the regex parse otherwise runs on one task
-    # (registry.parallelize_scan_sql has the measurements)
-    return spark.sql(parallelize_scan_sql(spark, _build("spark"), "orders"))
+    return spark.sql(_build("spark"))

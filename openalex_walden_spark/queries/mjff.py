@@ -474,13 +474,9 @@ def _build(dialect: str) -> str:
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc=("MJFF funded-studies parse (scripts/local/mjff_to_s3.py)"),
+    spread=("orders",),
 )
 def mjff_parse_grants(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MJFF card/detail/profile derivation cascades, wolf-family name
     split, JSON renders.  One scan, zero exchanges, no Python."""
-    from openalex_walden_spark.queries.registry import parallelize_scan_sql
-
-    # r15: parallelizing key-only repartition under the single-row-group
-    # fixture scan(s) — the regex parse otherwise runs on one task
-    # (registry.parallelize_scan_sql has the measurements)
-    return spark.sql(parallelize_scan_sql(spark, _build("spark"), "orders"))
+    return spark.sql(_build("spark"))

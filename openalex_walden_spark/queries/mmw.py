@@ -491,15 +491,11 @@ def _build(dialect: str) -> str:
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc=("MMW Wallenberg grants parse (scripts/local/mmw_to_s3.py)"),
+    spread=("orders",),
 )
 def mmw_parse_grants(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MMW paragraph grammar (SEK amount parse with million promotion,
     keyword-cut institution/PI classification, quoted-title extract),
     detail-page merge cascades, ordered collision-suffix ids.  One
     scan, one native-id exchange, no Python."""
-    from openalex_walden_spark.queries.registry import parallelize_scan_sql
-
-    # r15: parallelizing key-only repartition under the single-row-group
-    # fixture scan(s) — the regex parse otherwise runs on one task
-    # (registry.parallelize_scan_sql has the measurements)
-    return spark.sql(parallelize_scan_sql(spark, _build("spark"), "orders"))
+    return spark.sql(_build("spark"))

@@ -241,6 +241,7 @@ def _build(dialect: str) -> str:
     tables=("orders",),
     doc=("NOMIS Foundation projects parse "
          "(scripts/local/nomis_foundation_to_s3.py)"),
+    spread=("orders",),
 )
 def nomis_parse_projects(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NOMIS WP REST parse: earliest in-window in-text year over the
@@ -248,9 +249,4 @@ def nomis_parse_projects(spark: SparkSession, sf_dir: str) -> DataFrame:
     titles preserved, NULL-when-empty JSON org lists, 'nomis-{slug}'
     ids, §6.7 NULL amounts by source design.  One scan, zero
     exchanges, no Python."""
-    from openalex_walden_spark.queries.registry import parallelize_scan_sql
-
-    # r15: parallelizing key-only repartition under the single-row-group
-    # fixture scan(s) — the regex parse otherwise runs on one task
-    # (registry.parallelize_scan_sql has the measurements)
-    return spark.sql(parallelize_scan_sql(spark, _build("spark"), "orders"))
+    return spark.sql(_build("spark"))

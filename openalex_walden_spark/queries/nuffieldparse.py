@@ -377,6 +377,7 @@ def _build(dialect: str) -> str:
     tables=("orders",),
     doc=("Nuffield Foundation projects parse "
          "(scripts/local/nuffield_to_s3.py)"),
+    spread=("orders",),
 )
 def nuffield_parse_projects(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nuffield REST+landing hybrid: svg-icon-anchored amount/date/
@@ -384,9 +385,4 @@ def nuffield_parse_projects(spark: SparkSession, sf_dir: str) -> DataFrame:
     labeled strong-run researcher extraction, K/M amount multipliers,
     Month-YYYY date-range formatting, title+degree name peels with
     empty-string lead fields.  One scan, zero exchanges, no Python."""
-    from openalex_walden_spark.queries.registry import parallelize_scan_sql
-
-    # r15: parallelizing key-only repartition under the single-row-group
-    # fixture scan(s) — the regex parse otherwise runs on one task
-    # (registry.parallelize_scan_sql has the measurements)
-    return spark.sql(parallelize_scan_sql(spark, _build("spark"), "orders"))
+    return spark.sql(_build("spark"))

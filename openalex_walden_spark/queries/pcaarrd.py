@@ -771,15 +771,11 @@ def _build(dialect: str) -> str:
     tables=("orders",),
     doc=("DOST-PCAARRD GIA transparency-PDF parse "
          "(scripts/local/pcaarrd_to_s3.py)"),
+    spread=("orders",),
 )
 def pcaarrd_parse_projects(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PCAARRD block parse + keep-latest dedupe in one plan (module
     docstring has the semantics map; note the documented sha1->sha256
     digest deviation).  One scan, barrier-layered column algebra, one
     award-id shuffle."""
-    from openalex_walden_spark.queries.registry import parallelize_scan_sql
-
-    # r15: parallelizing key-only repartition under the single-row-group
-    # fixture scan(s) — the regex parse otherwise runs on one task
-    # (registry.parallelize_scan_sql has the measurements)
-    return spark.sql(parallelize_scan_sql(spark, _build("spark"), "orders"))
+    return spark.sql(_build("spark"))

@@ -354,14 +354,10 @@ def _build(dialect: str) -> str:
     tables=("orders",),
     doc=("Potter Foundation dual-arm grants parse "
          "(scripts/local/potter_foundation_to_s3.py)"),
+    spread=("orders",),
 )
 def potter_parse_awards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Potter workbook + legacy-HTML arms in one union plan (module
     docstring has the semantics map; note the documented sha1->sha256
     digest deviation).  Two scan arms, no shuffle, no Python."""
-    from openalex_walden_spark.queries.registry import parallelize_scan_sql
-
-    # r15: parallelizing key-only repartition under the single-row-group
-    # fixture scan(s) — the regex parse otherwise runs on one task
-    # (registry.parallelize_scan_sql has the measurements)
-    return spark.sql(parallelize_scan_sql(spark, _build("spark"), "orders"))
+    return spark.sql(_build("spark"))

@@ -1513,14 +1513,10 @@ def _build(dialect: str) -> str:
     doc=("Prize-pattern scraper family (scripts/local/{bbva_frontiers,"
          "crafoord_prize,dan_david_prize,millennium_prize,"
          "princess_asturias,stockholm_water_prize}_to_s3.py)"),
+    spread=("orders",),
 )
 def prize_pattern_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Four prize ingests in one union plan (module docstring has the
     per-member semantics map).  Share-count windows are the only
     exchanges; the millennium arm explodes multi-laureate rows."""
-    from openalex_walden_spark.queries.registry import parallelize_scan_sql
-
-    # r15: parallelizing key-only repartition under the single-row-group
-    # fixture scan(s) — the regex parse otherwise runs on one task
-    # (registry.parallelize_scan_sql has the measurements)
-    return spark.sql(parallelize_scan_sql(spark, _build("spark"), "orders"))
+    return spark.sql(_build("spark"))

@@ -22,6 +22,8 @@ class QuerySpec:
     tables: tuple[str, ...] = TABLES
     module: str = ""  # defining module — the unit of change for the
     #                   driver-window freshness audit (test_driver_window)
+    spread: tuple[str, ...] = ()  # tables scanned through a round-robin
+    #                               exchange (see ``register``)
 
 
 CATALOG: dict[str, QuerySpec] = {}
@@ -33,18 +35,42 @@ def register(
     tags: tuple[str, ...] = (),
     tables: tuple[str, ...] = TABLES,
     doc: str = "",
+    spread: tuple[str, ...] = (),
 ) -> Callable[[SparkQuery], SparkQuery]:
     """Decorator: register a (spark_fn, oracle_sql) pair under ``name``.
 
     ``tables`` lists the test tables the query reads; only those get
     (re-)registered as temp views before the query body runs, so one
     unreadable fixture can never break unrelated queries.
+
+    ``spread`` names tables (each also in ``tables``) whose scan feeds
+    CPU-heavy per-row work, typically a regex parse.  The fixtures are
+    single-row-group parquet files, so such a scan is ONE task whatever
+    ``spark.sql.files.maxPartitionBytes`` says, and the work above it
+    ran on one core (letten at sf0.1: 55-74 s; 5.6-6.0 s spread).  While
+    the query body runs, each spread table's view is a round-robin
+    ``repartition(defaultParallelism)`` of the scan; the plain view is
+    put back once the body returns.  The returned DataFrame was analysed
+    eagerly, so it keeps the exchange and no later query sees it.  The
+    SQL text is untouched, and column pruning still narrows what crosses
+    the exchange.
     """
+    missing = sorted(set(spread) - set(tables))
+    if missing:
+        raise ValueError(f"{name}: spread tables {missing} are not in tables")
 
     def wrap(fn: SparkQuery) -> SparkQuery:
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-            register_views(spark, sf_dir, tables)
-            return fn(spark, sf_dir)
+            views = register_views(spark, sf_dir, tables)
+            plain = {t: views[t] for t in spread if t in views}
+            par = spark.sparkContext.defaultParallelism
+            for t, df in plain.items():
+                df.repartition(par).createOrReplaceTempView(t)
+            try:
+                return fn(spark, sf_dir)
+            finally:
+                for t, df in plain.items():
+                    df.createOrReplaceTempView(t)
 
         CATALOG[name] = QuerySpec(
             name=name,
@@ -54,38 +80,8 @@ def register(
             doc=doc or (fn.__doc__ or ""),
             tables=tables,
             module=fn.__module__,
+            spread=spread,
         )
         return run
 
     return wrap
-
-
-def parallelize_scan_sql(
-    spark: SparkSession, sql_text: str, table: str | tuple[str, ...] = "orders"
-) -> str:
-    """Inject a key-only parallelizing REPARTITION under every scan of
-    ``table`` in a SQL-text query (r15, guide §2.5 "input skew: one huge
-    unsplittable file — repartition immediately after the read").
-
-    The local fixtures are single-row-group parquet files, so a scan is
-    ONE task regardless of ``spark.sql.files.maxPartitionBytes`` — and
-    the scraper-parse fleet does 10-100 µs/row of regex work ABOVE the
-    scan, which therefore ran on one core while the rest idled (measured
-    at sf0.1: letten 55-74 s -> 5.6-6.0 s with the hint; every parsed
-    string is generated in-plan from the narrow scan columns, so the
-    exchange moves bytes-per-row, not documents).  The round-robin value
-    follows ``defaultParallelism`` — scale-adaptive, never a constant.
-    On splittable production input the hint costs one narrow-column
-    shuffle and still guarantees the parse runs at full width.  The
-    oracle dialect is untouched (hints are Spark-only syntax).
-    """
-    import re
-
-    par = spark.sparkContext.defaultParallelism
-    for t in (table,) if isinstance(table, str) else table:
-        sql_text = re.sub(
-            rf"FROM {t}\b",
-            f"FROM (SELECT /*+ REPARTITION({par}) */ * FROM {t})",
-            sql_text,
-        )
-    return sql_text

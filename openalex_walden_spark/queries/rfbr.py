@@ -350,14 +350,10 @@ def _build(dialect: str) -> str:
     tables=("orders",),
     doc=("RFBR legacy-portal projects parse "
          "(scripts/local/rfbr_to_s3.py)"),
+    spread=("orders",),
 )
 def rfbr_parse_projects(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFBR listing+detail grammar, keep-earliest dedupe (pre-filter
     quirk preserved), supported-only filter, Russian PI split.  One
     scan, one grant-number exchange, no Python."""
-    from openalex_walden_spark.queries.registry import parallelize_scan_sql
-
-    # r15: parallelizing key-only repartition under the single-row-group
-    # fixture scan(s) — the regex parse otherwise runs on one task
-    # (registry.parallelize_scan_sql has the measurements)
-    return spark.sql(parallelize_scan_sql(spark, _build("spark"), "orders"))
+    return spark.sql(_build("spark"))

@@ -354,14 +354,10 @@ def _build(dialect: str) -> str:
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc="RGC Hong Kong project-enquiry parse (scripts/local/rgc_hk_to_s3.py)",
+    spread=("orders",),
 )
 def rgc_hk_parse_awards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RGC HK detail-record normalize (module docstring has the full
     semantics map).  One scan, HOF column algebra, no shuffle, no
     Python."""
-    from openalex_walden_spark.queries.registry import parallelize_scan_sql
-
-    # r15: parallelizing key-only repartition under the single-row-group
-    # fixture scan(s) — the regex parse otherwise runs on one task
-    # (registry.parallelize_scan_sql has the measurements)
-    return spark.sql(parallelize_scan_sql(spark, _build("spark"), "orders"))
+    return spark.sql(_build("spark"))

@@ -17,16 +17,6 @@ from pyspark.sql import functions as F
 from openalex_walden_spark.functions.sql_udfs import create_sql_udfs
 from openalex_walden_spark.queries.registry import register
 
-def _orders_rp(spark: SparkSession) -> None:
-    """Register ``orders_rp``: the orders table spread across cores. The
-    single-file local fixture scans as ONE split, so regex-heavy key
-    projections would otherwise run on one core (a real cluster gets
-    split-parallelism from the file layout for free)."""
-    spark.table("orders").repartition(
-        spark.sparkContext.defaultParallelism, F.col("o_orderkey")
-    ).createOrReplaceTempView("orders_rp")
-
-
 # ---------------------------------------------------------------------------
 # Award-id normalization battery over synthesized deposited strings.
 
@@ -77,6 +67,7 @@ FROM keyed GROUP BY is_weak, key_len ORDER BY is_weak, key_len
     oracle=_AWARD_ORACLE,
     tags=("sqludf", "scalar"),
     tables=("orders",),
+    spread=("orders",),
 )
 def udf_award_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Award-id normalization via session SQL UDFs (award_key +
@@ -84,11 +75,10 @@ def udf_award_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from plain SQL — macro-expanded by Catalyst, zero Python in the plan.
     """
     create_sql_udfs(spark)
-    _orders_rp(spark)
     return spark.sql(f"""
         WITH raw AS (
           SELECT o_orderkey, o_custkey, {_AWARD_RAW_SPARK} AS award
-          FROM orders_rp
+          FROM orders
         ),
         keyed AS (
           SELECT o_orderkey, award_key(award) AS k,
@@ -255,6 +245,7 @@ GROUP BY fam
     oracle=_FAMILY_ORACLE,
     tags=("sqludf", "domain", "A4"),
     tables=("orders",),
+    spread=("orders",),
 )
 def award_family_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The award family policy (``AwardNormKey.sql`` header: families
@@ -263,12 +254,11 @@ def award_family_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     (min orderkey breaks year ties — totalized). max_by-with-tie-break
     (A4) over the SQL-UDF key layer; one shuffle on the family key."""
     create_sql_udfs(spark)
-    _orders_rp(spark)
     return spark.sql(f"""
         WITH raw AS (
           SELECT o_orderkey, {_AWARD_RAW_SPARK} AS award,
                  CAST(year(o_orderdate) AS BIGINT) AS yr
-          FROM orders_rp
+          FROM orders
         ),
         keyed AS (
           SELECT o_orderkey, yr, award_key(award) AS fam FROM raw
@@ -735,6 +725,7 @@ ORDER BY family, key_len
     oracle=_FAMILY_BATTERY_ORACLE,
     tags=("sqludf", "scalar", "awards"),
     tables=("orders",),
+    spread=("orders",),
 )
 def udf_award_family_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The per-family award normalizers — 53 funder families spanning
@@ -749,12 +740,11 @@ def udf_award_family_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     Macro-expanded SQL UDF: zero Python in the plan, one shuffle for
     the rollup."""
     create_sql_udfs(spark)
-    _orders_rp(spark)
     return spark.sql(f"""
         WITH raw AS (
           SELECT o_orderkey, {_FAMILY_NAME} AS family,
                  {_FAMILY_RAW_SPARK} AS award
-          FROM orders_rp
+          FROM orders
         ),
         keyed AS (
           SELECT family, award_family_key(family, award) AS k FROM raw
@@ -851,6 +841,7 @@ ORDER BY family, verdict
     oracle=_VERDICT_ORACLE,
     tags=("sqludf", "scalar", "awards", "scoring"),
     tables=("orders",),
+    spread=("orders",),
 )
 def udf_award_verdict_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Award scoring verdicts over the 53-family fixture plus injected
@@ -862,13 +853,12 @@ def udf_award_verdict_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     one shuffle for the rollup; at 100 TB the scoring layer is a
     map-side projection over the deposited table."""
     create_sql_udfs(spark)
-    _orders_rp(spark)
     return spark.sql(f"""
         WITH raw AS (
           SELECT o_orderkey, {_FAMILY_NAME} AS family,
                  {_verdict_raw(_FAMILY_RAW_SPARK).format(fam=_FAMILY_NAME, str_t="STRING")} AS award,
                  CAST({_N_AWARDS} AS BIGINT) AS n_awards
-          FROM orders_rp
+          FROM orders
         ),
         scored AS (
           SELECT family, award_verdict(family, award, n_awards) AS verdict
@@ -986,6 +976,7 @@ ORDER BY family, action
     oracle=_S1_ORACLE,
     tags=("sqludf", "scalar", "awards", "salvage"),
     tables=("orders",),
+    spread=("orders",),
 )
 def udf_award_salvage_s1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1 decorated own-id salvage over the 54-family fixture: strip
@@ -1000,7 +991,6 @@ def udf_award_salvage_s1(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension by construction); the strip/key/grammar layer is a
     map-side projection of macro-expanded SQL UDFs, zero Python."""
     create_sql_udfs(spark)
-    _orders_rp(spark)
     # Two lazy localCheckpoint barriers, not CTEs: the macro-expanded
     # family-key CASE is ~26k chars over a COLUMN and ~1.7M chars over
     # the composed fixture expression, and Catalyst re-composes CTEs
@@ -1021,7 +1011,7 @@ def udf_award_salvage_s1(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM (
             SELECT {_FAMILY_NAME} AS family,
                    {_DECOR_RAW.format(fmt=_FAMILY_RAW_SPARK)} AS award
-            FROM orders_rp
+            FROM orders
           )
         ) WHERE s <> '' AND s <> _n0
     """).localCheckpoint(eager=False)
@@ -1031,7 +1021,7 @@ def udf_award_salvage_s1(spark: SparkSession, sf_dir: str) -> DataFrame:
                award_generic_key(award) AS nk_g
         FROM (
           SELECT {_FAMILY_NAME} AS family, {_FAMILY_RAW_SPARK} AS award
-          FROM orders_rp WHERE o_orderkey % 3 = 0
+          FROM orders WHERE o_orderkey % 3 = 0
         )
     """).localCheckpoint(eager=False)
     regk.createOrReplaceTempView("s1_regk")
@@ -1170,6 +1160,7 @@ ORDER BY family, rescued, n_parts, n_confirmed_parts, n_plausible_parts
     oracle=_S2_ORACLE,
     tags=("sqludf", "scalar", "awards", "salvage"),
     tables=("orders",),
+    spread=("orders",),
 )
 def udf_award_salvage_s2_multiid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2 multi-id split salvage: explode separator-bearing garbage
@@ -1182,11 +1173,10 @@ def udf_award_salvage_s2_multiid(spark: SparkSession, sf_dir: str) -> DataFrame:
     then (family, counts) — at 100 TB the fan-out is bounded by the
     separator count per string, never the corpus."""
     create_sql_udfs(spark)
-    _orders_rp(spark)
     multi = spark.sql(f"""
         SELECT o_orderkey, {_FAMILY_NAME} AS family,
                award_norm0({_MULTI_RAW_SPARK}) AS _n
-        FROM orders_rp
+        FROM orders
     """).localCheckpoint(eager=False)
     multi.createOrReplaceTempView("s2_multi")
     regk = spark.sql(f"""
@@ -1194,7 +1184,7 @@ def udf_award_salvage_s2_multiid(spark: SparkSession, sf_dir: str) -> DataFrame:
                award_generic_key(award) AS nk_g
         FROM (
           SELECT {_FAMILY_NAME} AS family, {_FAMILY_RAW_SPARK} AS award
-          FROM orders_rp WHERE o_orderkey % 3 = 0
+          FROM orders WHERE o_orderkey % 3 = 0
         )
     """).localCheckpoint(eager=False)
     regk.createOrReplaceTempView("s2_regk")
@@ -1339,6 +1329,7 @@ ORDER BY k.source_family, k.t_family
     oracle=_S3_ORACLE,
     tags=("sqludf", "scalar", "awards", "salvage"),
     tables=("orders",),
+    spread=("orders",),
 )
 def udf_award_salvage_s3_wrong_funder(
     spark: SparkSession, sf_dir: str
@@ -1352,18 +1343,17 @@ def udf_award_salvage_s3_wrong_funder(
     keying so the 22x fan-out collapses immediately; the registry join
     broadcasts.  Same localCheckpoint barriers as S1."""
     create_sql_udfs(spark)
-    _orders_rp(spark)
     cand = spark.sql(f"""
         SELECT o_orderkey, {_FAMILY_NAME} AS family,
                award_norm0({_S3_RAW_SPARK}) AS _n
-        FROM orders_rp
+        FROM orders
     """).localCheckpoint(eager=False)
     cand.createOrReplaceTempView("s3_cand")
     regk = spark.sql(f"""
         SELECT DISTINCT family, award_family_key(family, award) AS nk
         FROM (
           SELECT {_FAMILY_NAME} AS family, {_FAMILY_RAW_SPARK} AS award
-          FROM orders_rp WHERE o_orderkey % 5 = 0
+          FROM orders WHERE o_orderkey % 5 = 0
         )
     """).localCheckpoint(eager=False)
     regk.createOrReplaceTempView("s3_regk")
@@ -1491,6 +1481,7 @@ ORDER BY family, reason, decision
     oracle=_GUARD_ORACLE,
     tags=("sqludf", "scalar", "awards", "scoring"),
     tables=("orders",),
+    spread=("orders",),
 )
 def udf_award_guard_decision(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Guard decision battery: verdict tiers flow through unchanged,
@@ -1502,7 +1493,6 @@ def udf_award_guard_decision(spark: SparkSession, sf_dir: str) -> DataFrame:
     barrier then a map-side reason projection + one rollup shuffle; at
     100 TB the guard is a single pass over the scored table."""
     create_sql_udfs(spark)
-    _orders_rp(spark)
     scored = spark.sql(f"""
         SELECT family, award, actions,
                award_verdict(family, award, n_awards) AS verdict
@@ -1511,7 +1501,7 @@ def udf_award_guard_decision(spark: SparkSession, sf_dir: str) -> DataFrame:
                  {_GUARD_RAW.format(fmt=_FAMILY_RAW_SPARK)} AS award,
                  CAST({_N_AWARDS} AS BIGINT) AS n_awards,
                  {_GUARD_ACTIONS_SPARK} AS actions
-          FROM orders_rp
+          FROM orders
         )
     """).localCheckpoint(eager=False)
     scored.createOrReplaceTempView("guard_scored")
@@ -1761,6 +1751,7 @@ scored AS (
     oracle=_ROADMAP_ORACLE,
     tags=("sqludf", "awards", "A6", "roadmap"),
     tables=("orders",),
+    spread=("orders",),
 )
 def award_missing_grants_roadmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The per-funder missing-grants acquisition roadmap
@@ -1774,13 +1765,12 @@ def award_missing_grants_roadmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Spark plans a single expand + partial aggregate, no per-class
     scans)."""
     create_sql_udfs(spark)
-    _orders_rp(spark)
     return spark.sql(f"""
         WITH raw AS (
           SELECT o_orderkey, {_FAMILY_NAME} AS family,
                  {_verdict_raw(_FAMILY_RAW_SPARK).format(fam=_FAMILY_NAME, str_t="STRING")} AS award,
                  CAST({_N_AWARDS} AS BIGINT) AS n_awards
-          FROM orders_rp
+          FROM orders
         ),
         scored AS (
           SELECT family, award, award_verdict(family, award, n_awards) AS verdict

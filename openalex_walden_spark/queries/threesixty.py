@@ -746,14 +746,10 @@ def _build(dialect: str) -> str:
     doc=("360Giving workbook-parse family, simple column-map publishers "
          "(scripts/local/{garfield_weston,lloyds_register,wolfson,"
          "maudsley,sir_jules_thorn,guys_st_thomas,vivensa}_to_s3.py)"),
+    spread=("orders",),
 )
 def threesixty_simple_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seven 360Giving publishers in one union plan (module docstring
     has the per-member semantics map).  Column algebra + two keep-one
     windows + one DISTINCT, all keyed on the award id."""
-    from openalex_walden_spark.queries.registry import parallelize_scan_sql
-
-    # r15: parallelizing key-only repartition under the single-row-group
-    # fixture scan(s) — the regex parse otherwise runs on one task
-    # (registry.parallelize_scan_sql has the measurements)
-    return spark.sql(parallelize_scan_sql(spark, _build("spark"), "orders"))
+    return spark.sql(_build("spark"))

@@ -303,17 +303,13 @@ def _build(which: str, dialect: str) -> str:
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc="Arcadia Fund 360Giving CSV parse (scripts/local/arcadia_to_s3.py)",
+    spread=("orders",),
 )
 def arcadia_parse_grants(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arcadia normalize (module docstring has the semantics map):
     single scan of column algebra, the fractional-vs-integral amount
     render and the synthetic year-bound dates preserved."""
-    from openalex_walden_spark.queries.registry import parallelize_scan_sql
-
-    # r15: parallelizing key-only repartition under the single-row-group
-    # fixture scan(s) — the regex parse otherwise runs on one task
-    # (registry.parallelize_scan_sql has the measurements)
-    return spark.sql(parallelize_scan_sql(spark, _build("arcadia", "spark"), "orders"))
+    return spark.sql(_build("arcadia", "spark"))
 
 
 @register(

@@ -626,14 +626,10 @@ def _build(dialect: str) -> str:
     tables=("orders",),
     doc=("Tiny-funder line-scan scraper kit (scripts/local/{bacp,bdsra,"
          "gla,ons_foundation,researchnb}_to_s3.py)"),
+    spread=("orders",),
 )
 def tinyfunder_parse_awards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Five line-scan scrapers in one union plan (module docstring has
     the per-member semantics map).  Array-HOF window scans; the only
     exchanges are the five per-member keep-first windows."""
-    from openalex_walden_spark.queries.registry import parallelize_scan_sql
-
-    # r15: parallelizing key-only repartition under the single-row-group
-    # fixture scan(s) — the regex parse otherwise runs on one task
-    # (registry.parallelize_scan_sql has the measurements)
-    return spark.sql(parallelize_scan_sql(spark, _build("spark"), "orders"))
+    return spark.sql(_build("spark"))

@@ -370,14 +370,10 @@ import re  # noqa: E402  (used by _build's RLIKE rewrite)
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc="TWAS awards-archive parse stage (scripts/local/twas_awards_to_s3.py)",
+    spread=("orders",),
 )
 def twas_parse_awards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TWAS laureate-paragraph normalize (module docstring has the full
     semantics map with reference line cites).  One scan, pure column
     algebra, no shuffle, no Python."""
-    from openalex_walden_spark.queries.registry import parallelize_scan_sql
-
-    # r15: parallelizing key-only repartition under the single-row-group
-    # fixture scan(s) — the regex parse otherwise runs on one task
-    # (registry.parallelize_scan_sql has the measurements)
-    return spark.sql(parallelize_scan_sql(spark, _build("spark"), "orders"))
+    return spark.sql(_build("spark"))

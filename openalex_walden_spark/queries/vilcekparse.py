@@ -372,6 +372,7 @@ def _build(dialect: str) -> str:
     tables=("orders",),
     doc=("Vilcek Foundation prizes parse "
          "(scripts/local/vilcek_prizes_to_s3.py)"),
+    spread=("orders",),
 )
 def vilcek_parse_prizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vilcek wrapped-envelope WP REST parse: first-non-honoree scheme
@@ -379,9 +380,4 @@ def vilcek_parse_prizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     with no-year drops, single-pass honorific strip + degree peel,
     600-char word-safe bio truncation, comma-location US rule.  One
     scan, zero exchanges, no Python."""
-    from openalex_walden_spark.queries.registry import parallelize_scan_sql
-
-    # r15: parallelizing key-only repartition under the single-row-group
-    # fixture scan(s) — the regex parse otherwise runs on one task
-    # (registry.parallelize_scan_sql has the measurements)
-    return spark.sql(parallelize_scan_sql(spark, _build("spark"), "orders"))
+    return spark.sql(_build("spark"))

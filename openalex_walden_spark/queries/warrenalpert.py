@@ -298,6 +298,7 @@ def _build(dialect: str) -> str:
     tables=("orders",),
     doc=("Warren Alpert Prize parse "
          "(scripts/local/warren_alpert_prize_to_s3.py)"),
+    spread=("orders",),
 )
 def warren_alpert_parse_prizes(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
@@ -306,9 +307,4 @@ def warren_alpert_parse_prizes(spark: SparkSession,
     fallback, positions text + first-affiliation walks, dash-collapsed
     [:90] slug ids.  One scan + one Generate, zero exchanges, no
     Python."""
-    from openalex_walden_spark.queries.registry import parallelize_scan_sql
-
-    # r15: parallelizing key-only repartition under the single-row-group
-    # fixture scan(s) — the regex parse otherwise runs on one task
-    # (registry.parallelize_scan_sql has the measurements)
-    return spark.sql(parallelize_scan_sql(spark, _build("spark"), "orders"))
+    return spark.sql(_build("spark"))

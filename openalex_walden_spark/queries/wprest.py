@@ -894,15 +894,11 @@ def _build(dialect: str) -> str:
     tables=("orders",),
     doc=("WP-REST project-parse pair (scripts/local/gulbenkian_to_s3.py,"
          " scripts/local/velux_stiftung_to_s3.py)"),
+    spread=("orders",),
 )
 def wprest_parse_projects(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gulbenkian + Velux Stiftung WP-REST normalizes in one union plan
     (module docstring has the semantics map: the Portuguese and Swiss
     amount grammars, the year fallbacks, the taxonomy join-render).
     Two barriered scan arms, zero shuffle, no Python."""
-    from openalex_walden_spark.queries.registry import parallelize_scan_sql
-
-    # r15: parallelizing key-only repartition under the single-row-group
-    # fixture scan(s) — the regex parse otherwise runs on one task
-    # (registry.parallelize_scan_sql has the measurements)
-    return spark.sql(parallelize_scan_sql(spark, _build("spark"), "orders"))
+    return spark.sql(_build("spark"))

@@ -10833,15 +10833,16 @@ def test_schmidt_matches_reference_semantics(spark, sf_dir, orders_rows):
         url = (f"https://www.schmidtsciences.org/grantee/jane-doe-{k}/"
                if k % 3 < 2 else None)
         term = (f"jane doe {k}" if k % 7 == 3
-                else ("12345 678" if k % 7 == 6 else None))
-        texts = [["AI2050", f"Jane Doe{k}"],
-                 ["", "AI & Advanced Computing", f"Nadia Drake{k} PhD"],
+                else (f"12345 {k}" if k % 7 == 6 else None))
+        focus_disp = _SCH_FOCUS.get(focus_slug) if focus_slug else None
+        # the program / focus-area echoes are the page's own attributes
+        texts = [[program or "", f"Jane Doe{k}"],
+                 ["", focus_disp or "", f"Nadia Drake{k} PhD"],
                  ["x" * 85, f"Omar Farah{k}"],
                  [f"jane doe {k}"], [],
                  [f"X1 Research Collective {k}"],
-                 ["12345 678"]][k % 7]
+                 [f"12345 {k}"]][k % 7]
         # parse_listing name walk (:252-275), reference logic verbatim
-        focus_disp = _SCH_FOCUS.get(focus_slug) if focus_slug else None
         name = None
         for t in texts:
             if not t:
@@ -10871,6 +10872,7 @@ def test_schmidt_matches_reference_semantics(spark, sf_dir, orders_rows):
         # build_dataframe id (:337-341): fillna(0) year, 'none' program
         aid = (f"schmidt-{start_year if start_year is not None else 0}"
                f"-{_sch_slug(program or 'none')}-{slug_final}")
+        assert aid not in expected, f"fixture collision on {aid}"
         expected[aid] = {
             "recipient": name, "given_name": given,
             "family_name": family, "slug": slug_final,
@@ -10893,6 +10895,21 @@ def test_schmidt_matches_reference_semantics(spark, sf_dir, orders_rows):
         for col, want in exp.items():
             assert getattr(r, col) == want, (aid, col, getattr(r, col),
                                              want)
+
+
+def test_method5_award_ids_unique_per_member(spark, sf_dir):
+    """funder_award_id is each member's primary key: the references
+    RAISE on a collision, so no member may emit one id twice."""
+    from collections import Counter
+
+    ids = Counter((r.member, r.funder_award_id)
+                  for r in _run(spark, sf_dir, "method5_parse_awards"))
+    dup = sorted(key for key, n in ids.items() if n > 1)
+    assert not dup, f"{len(dup)} duplicate ids, e.g. {dup[:3]}"
+    assert {m for m, _ in ids} >= {
+        "aos", "mott", "helmsley", "fritz_thyssen", "mercator_fellows",
+        "novo_nordisk_fonden", "rj_jubileumsfond", "wt_grant",
+        "schmidt_sciences"}
 
 
 def test_schmidt_constants_match_reference():
