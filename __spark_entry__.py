@@ -72,38 +72,69 @@ _LAST_GREEN: dict[str, int] = {
 # defining module changed since the last round-boundary commit must be
 # here or never-verified).
 _CHANGED_THIS_ROUND: list[str] = [
-    # r15 OPTIMIZATION round replans (outputs proven identical: sf0.01
-    # oracle parity + byte-stable goldens; see OPTIMIZATION_r15.md):
-    # - checkpoint-truncated doubling/propagation loops
-    #   (operators/checkpoints.py run_truncated_loop): the unrolled
-    #   plans re-instantiated every earlier round geometrically (3^4 =
-    #   81 base copies / 243 input scans for the lineage closure); each
-    #   round now executes exactly once
-    "institution_ancestors_lineage",
-    "hierarchy_flatten_doubling",
-    "graph_label_propagation",
-    # - one-window density edge plane (operators/density.py; the r14
-    #   verdict's #1 landing): the second full-frame nth_value window —
-    #   and its full partition-local re-sort of the mirrored pair plane
-    #   — is replaced by a persist_scalar'd single-window output feeding
-    #   a (g, pt) core table joined onto the eps-pre-filtered
-    #   candidates; outputs bit-identical, A/B 8.07 -> 6.43 s at sf0.1
-    "overmerge_density_split",
-    "overmerge_screened_density",
-    # - map-side array-intersection verify for the exact set-similarity
-    #   join (queries/llmdata.py): the candidate x tokens exploded
-    #   verify join and its 9M-row aggregate are gone; n_inter/n_union/
-    #   jaccard bit-identical, A/B 5.37 -> 3.69 s at sf0.1
-    "dedup_prefix_filter_pairs",
-    # - parallelizing key-only repartition under single-row-group
-    #   fixture scans feeding regex-heavy parses (the scan is ONE task
-    #   no matter what maxPartitionBytes says, so these parses ran on
-    #   one core): letten 55-74 s -> 5.6-6.0 s at sf0.1; rows identical,
-    #   goldens order-insensitive and unchanged
+    # Round 16.  Single-task scans are spread by one declaration,
+    # ``register(..., spread=("orders",))`` (queries/registry.py): the
+    # run closure re-registers each spread table as a round-robin
+    # repartition while the query body runs.
+    # - letten: its hand-placed REPARTITION hint sat above base's
+    #   projection and the x4 winners Generate; the spread exchange now
+    #   sits directly on the scan (1/4 of the rows cross it)
     "letten_parse_laureates",
-    "acmedsci_parse_awards",
-    "laureate_prize_parse",
+    # - the orders_rp / orders_rp_reg side views hash-partitioned on
+    #   o_orderkey; each becomes the round-robin spread.  Exchange
+    #   counts are unchanged (every skeleton differs from the parent's
+    #   only in that one partitioning, checked per query incl. the
+    #   localCheckpoint sub-plans)
+    "udf_award_normalize",
+    "award_family_merge",
+    "udf_award_family_battery",
+    "udf_award_verdict_battery",
+    "udf_award_salvage_s1",
+    "udf_award_salvage_s2_multiid",
+    "udf_award_salvage_s3_wrong_funder",
+    "udf_award_guard_decision",
+    "award_missing_grants_roadmap",
+    "udf_award_registry_key_battery",
+    # - OUTPUT change: the schmidt arm's synthesized pages key uniquely
+    #   by construction (11 duplicate funder_award_ids at sf0.001 before;
+    #   golden regenerated)
     "method5_parse_awards",
+    # - r15 llmdata replans (doc_id repartition + lower(text) hoist)
+    #   that the r15 ledger wrongly exempted as untouched
+    "text_fingerprint_winnow",
+    "dedup_connected_components",
+    "decontaminate_eval_overlap",
+    # - former parallelize_scan_sql sites whose last green predates the
+    #   r15 regex repartition: their current plan (identical to the
+    #   parent's, skeleton and normalized physical plan) has never had
+    #   a driver row
+    "anr_parse_projects",
+    "arcadia_parse_grants",
+    "blue_planet_parse_awards",
+    "bmbf_parse_projects",
+    "canada_council_prizes_parse",
+    "carlsberg_parse_grants",
+    "cn_province_awards_parse",
+    "datacite_parse_ingest",
+    "fellowship_directory_parse",
+    "foundation_archive_parse",
+    "fris_parse_projects",
+    "microfunder_parse_awards",
+    "mjff_parse_grants",
+    "mmw_parse_grants",
+    "nomis_parse_projects",
+    "nuffield_parse_projects",
+    "pcaarrd_parse_projects",
+    "potter_parse_awards",
+    "prize_pattern_parse",
+    "rfbr_parse_projects",
+    "rgc_hk_parse_awards",
+    "threesixty_simple_parse",
+    "tinyfunder_parse_awards",
+    "twas_parse_awards",
+    "vilcek_parse_prizes",
+    "warren_alpert_parse_prizes",
+    "wprest_parse_projects",
 ]
 
 # Queries whose defining MODULE changed this round but whose own plan
@@ -113,130 +144,52 @@ _CHANGED_THIS_ROUND: list[str] = [
 # module-changed green query that is neither here nor in
 # _CHANGED_THIS_ROUND.  Reset to {} at every round boundary.
 #
-# The r15 OPERATOR diffs that trip the one-hop import audit are:
-# - operators/guardrails.py: persist_scalar gained a DOCSTRING (the
-#   session-owner release contract) and persist_fixed_width now rejects
-#   non-numeric array elements — its ONLY call site is the trainer's
-#   array<bigint> quantized corpus (grep: one call, queries/advanced.py
-#   train_ivf_centroids), which was accepted before and after, so no
-#   query's plan or output changes.
-# - operators/checkpoints.py: a NEW helper (run_truncated_loop) was
-#   added; the pre-existing janitor/lock code is untouched, so
-#   pagerank_fixedpoint / connected_components callers are unaffected
-#   (their call sites changed in r14 and were driver-verified then).
+# "Plan check" below means: planned at sf0.001 on this tree and on the
+# parent commit, the physical-plan skeleton (the Exchange / Scan /
+# Aggregate / Join / Generate sequence, Projects and exprIds stripped)
+# and the normalized physical and optimized plans are identical.
 _WINDOW_EXEMPT: dict[str, str] = {
-    # llmdata.py's one r15 edit is dedup_prefix_filter_pairs' verify
-    # rewrite (fronted in _CHANGED_THIS_ROUND); every other query in
-    # the module is untouched.  The module is additionally flagged for
-    # importing guardrails' persist guards (docstring + a fixed-width
-    # element check whose sole call site is advanced.py's trainer) and
-    # the checkpoints module (this module's iterative call site,
-    # dedup_connected_components via components.py, is plan-identical:
-    # the janitor code it uses is untouched).
+    # Former parallelize_scan_sql sites whose r15 green row was taken on
+    # the r15 repartition plan, which the spread reproduces exactly.
     name: (
-        "sibling-module flag only: llmdata.py's r15 edit is the "
-        "dedup_prefix_filter_pairs verify rewrite (fronted); this query "
-        "is untouched; the flagged operator diffs are the persist-guard "
-        "docstring/element-check (only call site: advanced.py trainer, "
-        "array<bigint> — accepted before and after) and a NEW "
-        "checkpoints helper this module does not call; golden unchanged")
-    for name in (
-        "text_quality_features", "text_lang_id", "dedup_exact_documents",
-        "dedup_minhash_lsh_pairs", "dedup_simhash", "ann_cosine_topk",
-        "llm_judge_verdicts", "text_token_stats", "dedup_ngram_jaccard",
-        "llm_embed_vectors", "text_fingerprint_winnow",
-        "dedup_connected_components", "sample_stratified_hash",
-        "decontaminate_eval_overlap", "quality_filter_gate",
-        "quality_gopher_repetition", "pii_scrub_redact",
-        "search_boolean_retrieval", "dedup_segments_exact",
-        "search_bm25_topk", "ann_sq8_topk", "mixture_rebalance_sample",
-        "pack_sequences_chunked", "sample_importance_weighted",
-        "quality_lm_surprisal",
-        "chunk_documents_overlap", "bpe_top_merges", "crawl_drain_queue",
-        "search_hybrid_rrf",
-    )
+        "spread declaration replaces the regex rewrite: the r15 green "
+        "row was taken on the r15 repartition plan and the plan check "
+        "(skeleton + normalized physical/optimized plan) is identical "
+        "to the parent's; golden unchanged")
+    for name in ("acmedsci_parse_awards", "laureate_prize_parse")
 }
 _WINDOW_EXEMPT.update({
-    # advanced.py is unedited; flagged for the same guardrails /
-    # checkpoints import.  The persist_fixed_width element-check DOES
-    # gate its trainer call site — but the cached frame is (vec_id
-    # bigint, qx array<bigint>), numeric before and after, so the guard
-    # accepts identically and the trainer's plan is byte-identical.
+    # Siblings in a module whose only edit is another query's spread
+    # declaration (or, in sqludf.py, the removed orders_rp helper that
+    # these queries never called).
     name: (
-        "import-flag only: advanced.py is unedited in r15; its "
-        "persist_fixed_width call caches (bigint, array<bigint>) which "
-        "the tightened numeric-element guard accepts unchanged; the new "
-        "checkpoints helper is not called here; golden unchanged")
+        "sibling-module flag only: the module's edit is a sibling "
+        "query's spread declaration; this query's code is untouched and "
+        "the plan check is identical to the parent's; golden unchanged")
     for name in (
-        "p5_author_key_blocks", "multimodal_decode", "ann_ivf_topk",
-        "embedding_neardup_pairs", "a7_histogram_zero_bucket",
-        "a8_tall_metrics", "s6_json_export_shape", "skew_salted_agg",
-        "skew_salted_join", "multimodal_frame_sample", "multimodal_resize",
-        "semdedup_prune", "kmeans_lloyd_step", "ann_ivf_multiprobe_topk",
-        "ann_ivf_trained_topk", "ann_recall_audit", "ann_srp_bucket_pairs",
-        "s6_export_authors_shape", "s6_export_salt_ladder",
-        "s6_export_funders_shape", "s6_export_sources_shape",
-        "s6_export_topic_hierarchy_shape", "s6_export_institutions_shape",
-        "s6_export_publishers_shape", "s6_export_keywords_shape",
-        "s6_export_awards_shape", "s6_export_concepts_shape",
-        "s6_export_common_entities",
+        "award_label_entangled_holdback", "crossref_parse_ingest",
+        "gtr_parse_awards", "irdb_jpcoar_ids", "kaken_parse_projects",
+        "landing_page_stage", "mag_works_rebuild", "nwo_parse_awards",
+        "pubmed_parse_ingest", "taiwan_grb_parse_awards",
+        "udf_names_compatible_pairs", "udf_priority_best_fold",
+        "wellcome_parse_grants",
     )
 })
+# Every query of a module flagged only for importing operators/
+# checkpoints.py or operators/guardrails.py: both diffs are docstring
+# text (clearCache() does not free localCheckpoint blocks; the
+# ContextCleaner does, on driver GC), so no plan or output changes.
+_IMPORT_FLAGGED = ("advanced", "domain2", "enrichmerge", "graphops",
+                   "llmdata", "nested", "sketches", "timeseries")
 _WINDOW_EXEMPT.update({
-    # domain2.py / nested.py / timeseries.py / sketches.py are unedited;
-    # flagged only for importing guardrails' persist_scalar, whose r15
-    # diff is docstring-only for that function.
     name: (
-        "import-flag only: this module is unedited in r15 and imports "
-        "only persist_scalar from the changed guardrails module — the "
-        "r15 diff to persist_scalar is docstring-only (session-owner "
-        "contract note); golden unchanged")
-    for name in (
-        "j9_merge_scd1_batch", "j9_merge_state_rounds", "a6_distinct_pairs",
-        "d3_best_location_pick", "d4_oa_status", "d6_unique_gate_match",
-        "d7_type_classification", "d11_entity_aggregates",
-        "d12_curation_overlay", "p8_affiliation_filter", "p9_langcode_map",
-        "p10_version_detect", "p11_oai_id_extract", "s8_model_inference",
-        "d8_reference_resolution", "d5_percentile_flags", "d6_and_cascade",
-        "d7_type_cascade", "award_oa_compliance",
-        "d0_works_build", "p12_tei_extract", "d0_works_enriched",
-        "fulltext_work_build",
-        "j14_asof_join", "ev_hypertable_rollup", "sketch_countmin_estimates",
-        "j15_range_join", "ev_gapfill_locf", "w9_range_frame_trailing",
-        "fit_isotonic_pava",
-        "sketch_hll_distinct", "sketch_bloom_probe",
-        "sketch_hll_merge_rollup", "sketch_bloom_join_prune",
-    )
-})
-_WINDOW_EXEMPT.update({
-    # overmerge.py is unedited; flagged for importing the changed
-    # density operator, whose only two call sites —
-    # overmerge_density_split and overmerge_screened_density — are
-    # fronted in _CHANGED_THIS_ROUND (grep: density_split_stats is
-    # called nowhere else).  These two siblings never call the density
-    # operator.
-    name: (
-        "import-flag only: overmerge.py's r15 flag is the density "
-        "operator edit; its only call sites (the two density queries) "
-        "are fronted, and this query does not call density_split_stats; "
-        "golden unchanged")
-    for name in ("overmerge_pairwise_signal", "overmerge_centroid_fit")
-})
-_WINDOW_EXEMPT.update({
-    # graphops.py's r15 edits are the checkpoint-truncated LPA and
-    # doubling loops (both fronted); pagerank/triangle are untouched
-    # column algebra in the same module.  enrichmerge.py's r15 edit is
-    # institution_ancestors_lineage (fronted); its siblings are
-    # untouched.
-    name: (
-        "sibling-module flag only: this module's r15 change is the "
-        "checkpoint-truncated loop in a SIBLING query (fronted in "
-        "_CHANGED_THIS_ROUND); this query's own code is untouched; "
-        "golden unchanged")
-    for name in (
-        "graph_pagerank_fixedpoint", "graph_triangle_count",
-        "topics_merge_output", "concepts_keywords_dynamic",
-    )
+        "import-flag only: the operators/checkpoints.py and "
+        "operators/guardrails.py diffs are docstring-only (the "
+        "localCheckpoint release note); this module is unedited; golden "
+        "unchanged")
+    for name, spec in _q.CATALOG.items()
+    if spec.module.rsplit(".", 1)[-1] in _IMPORT_FLAGGED
+    and name not in _CHANGED_THIS_ROUND
 })
 
 # Every query with a green driver row, stalest round first (name

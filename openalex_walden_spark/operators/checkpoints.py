@@ -126,10 +126,13 @@ def run_truncated_loop(
     captures) is attributed and released with the intermediates.
     Everything except the FINAL round's blocks is released before
     returning; the returned (already-materialized) DataFrame keeps only
-    its own blocks pinned, which the session owner may release after
-    materializing downstream results.  The lock serializes the
-    janitor's persistent-id attribution and is the engine-wide
-    single-threaded-session contract.
+    its own blocks pinned.  ``spark.catalog.clearCache()`` does NOT
+    free them: it clears the SQL CacheManager, and a ``localCheckpoint``
+    RDD is not in it.  The final-round blocks are released only when
+    the driver garbage-collects the RDD and Spark's ContextCleaner
+    unpersists it.  The lock serializes the janitor's persistent-id
+    attribution and is the engine-wide single-threaded-session
+    contract.
     """
     with SESSION_SCOPE_LOCK:
         jan = CheckpointJanitor(spark)

@@ -119,6 +119,11 @@ def persist_scalar(df: DataFrame, level=None) -> DataFrame:
     (scripts/driver_sim.py) sweeps between queries, and a long-lived
     production session must do the same between pipeline stages.  All
     caches are within-run subplan reuse, never cross-run result caches.
+    ``clearCache()`` covers only ``persist``/``cache`` blocks: the
+    final-round ``localCheckpoint`` blocks a returned DataFrame keeps
+    (``checkpoints.run_truncated_loop``) are not in the CacheManager and
+    are released only when driver GC lets Spark's ContextCleaner
+    unpersist the RDD.
     """
     from pyspark.sql.types import ArrayType, MapType, StructType
 

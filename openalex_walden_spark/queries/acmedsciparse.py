@@ -36,7 +36,8 @@ downstream ports:
   (§6.7 waiver).
 
 Plan: ONE orders scan of pure column algebra behind Generate barriers
-— zero exchanges, no Python.  tests/test_template_fidelity.py
+— its only exchange is the round-robin spread over the scan, no
+Python.  tests/test_template_fidelity.py
 re-derives the full expected output with the reference's real regexes
 and AST-pins SCHEMES, POSTNOMINALS, SUFFIXES and INST_CONT.
 """

@@ -47,7 +47,8 @@ Fixture: one laureate per orders row; heading lattice x body lattice
 exercises every paren class and every kind/affiliation branch; rows
 ``o_orderkey % 7 = 0`` take the card arm.  Plan: one scan, column
 algebra through explode-array layer barriers (the chained-derivation
-plan-blowup discipline from the round-10 parse ports); no shuffle, no
+plan-blowup discipline from the round-10 parse ports); no hash
+shuffle (the one exchange is the round-robin spread over the scan), no
 Python.
 
 tests/test_template_fidelity.py re-derives the full expected output in

@@ -41,8 +41,8 @@ Runtime-only ``downloaded_at`` and the transient ``parse_error``
 field are not ported; duplicate award ids RAISE in the reference
 (:437-439) and the sitemap fixture mints unique slugs.
 
-Plan: ONE orders scan of pure column algebra — zero exchanges, no
-Python.  tests/test_template_fidelity.py re-derives the full expected
+Plan: ONE orders scan of pure column algebra — its only exchange is
+the round-robin spread over the scan, no Python.  tests/test_template_fidelity.py re-derives the full expected
 output in Python and AST-pins LABEL_MAP, the marker vocabulary and
 both title/degree token sets.
 """
@@ -350,5 +350,6 @@ def carlsberg_parse_grants(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Carlsberg labeled-facts parse: amount/currency split with the
     Danish-number NULL arm, institutional-name PI guard, conservative
     title/degree name split, DKK-0 TEST-page skip, URL-only degraded
-    rows.  One scan, zero exchanges, no Python."""
+    rows.  One scan under one round-robin spread exchange, no
+    Python."""
     return spark.sql(_build("spark"))

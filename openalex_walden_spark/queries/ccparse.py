@@ -34,7 +34,8 @@ are the seam; what ports is the per-entry compute:
 Fixture: even orders rows synthesize PDF entries across the style
 lattice (incl. gated rows that must drop); odd rows synthesize GGBooks
 finalists (incl. a two-author split and a non-winner).  Plan: one scan,
-column algebra + one explode for co-authors; no shuffle, no Python.
+column algebra + one explode for co-authors; no hash shuffle (each
+arm's one exchange is the round-robin spread over its scan), no Python.
 
 tests/test_template_fidelity.py re-derives the expected rows in Python
 (reference semantics, independent of this SQL).
@@ -221,7 +222,7 @@ def _sql(dialect: str) -> str:
         CollapseProject cannot merge across a Generate, so the chained
         CASE/regex derivations stay LINEAR in plan size instead of
         multiplying at every reference (the plain chained-CTE form
-        inlined to a 70 MB optimized plan).  Still zero shuffle, still
+        inlined to a 70 MB optimized plan).  Still no hash shuffle, still
         whole-stage codegen.  DuckDB evaluates CTE columns without the
         blowup, so its side keeps plain projections."""
         if dialect == "spark":
@@ -413,5 +414,6 @@ def _build(dialect: str) -> str:
 def canada_council_prizes_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canada Council prize normalize (module docstring has the full
     semantics map).  One scan per arm, a co-author explode, a 10-row
-    broadcast label join; no shuffle beyond the union, no Python."""
+    broadcast label join; no hash shuffle (each arm's scan sits under
+    one round-robin spread exchange), no Python."""
     return spark.sql(_build("spark"))

@@ -50,9 +50,10 @@ one record per orders key.  Ported compute:
   amount.
 
 Plan: 4 scan arms behind Generate barriers; the only Generate beyond
-the barriers is kirby's per-year-column explode.  No shuffle (every
-member's ids are unique by construction — validates RAISE on
-collision).  No Python.
+the barriers is kirby's per-year-column explode.  No hash shuffle
+(every member's ids are unique by construction — validates RAISE on
+collision); each arm's scan sits under one round-robin spread
+exchange.  No Python.
 
 tests/test_template_fidelity.py re-derives all four members.
 """
@@ -680,5 +681,6 @@ def foundation_archive_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Four foundation-archive ingests in one union plan (module
     docstring has the semantics map; note the costech dead-regex quirk
     preserved and the kirby sha1->sha256 digest deviation).  Four
-    barriered scan arms + the kirby year-column explode; no shuffle."""
+    barriered scan arms + the kirby year-column explode; no hash
+    shuffle, one round-robin spread exchange per scan."""
     return spark.sql(_build("spark"))

@@ -582,7 +582,8 @@ def cn_province_awards_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
       collide (the Chongqing 拟立项 device).
 
     Plan: one scan, pure column algebra (the reference runs this
-    per-row in pandas); no shuffle at all."""
+    per-row in pandas); the only exchange is the round-robin spread
+    over the scan, no hash shuffle."""
     return spark.sql(_cn_parse("spark").replace("{rows}", _CN_ROWS_SPARK))
 
 

@@ -51,7 +51,8 @@ downstream ports:
   downloaded_at precedent).
 
 Plan: ONE orders scan exploded x4 canonical winners behind Generate
-barriers — zero exchanges, no Python.  tests/test_template_fidelity.py
+barriers — the only exchange is the round-robin spread directly over
+the scan, no Python.  tests/test_template_fidelity.py
 re-derives the full expected output in Python (running the reference's
 real regexes and selection loop) and AST-pins CANONICAL_WINNERS, the
 suffix set and the amount table.

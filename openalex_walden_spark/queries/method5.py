@@ -82,7 +82,8 @@ All members stringify every column before shipping
 (``df.astype("string")``); amounts render as Python ``str(float)``.
 Every member's validate RAISES on slug collisions, so the fixture
 keys pages uniquely and the plan needs NO dedup: 7 scan arms of pure
-column algebra behind Generate barriers, zero shuffle, no Python.
+column algebra behind Generate barriers, no hash shuffle (each scan
+sits under one round-robin spread exchange), no Python.
 
 tests/test_template_fidelity.py re-derives all seven members in
 Python from the reference rules.

@@ -48,8 +48,8 @@ RAISE in the reference (:316) — the fixture mints unique slugs, so no
 dedup exists to port.
 
 Plan: ONE orders scan of pure column algebra behind Generate barriers
-— zero exchanges, zero joins, zero Python.  Embarrassingly parallel
-at any scale.
+— its only exchange is the round-robin spread over the scan, zero
+joins, zero Python.  Embarrassingly parallel at any scale.
 
 tests/test_template_fidelity.py re-derives the full expected output
 in Python (reference semantics, real ``html.unescape``/``json.dumps``)
@@ -478,5 +478,6 @@ def _build(dialect: str) -> str:
 )
 def mjff_parse_grants(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MJFF card/detail/profile derivation cascades, wolf-family name
-    split, JSON renders.  One scan, zero exchanges, no Python."""
+    split, JSON renders.  One scan under one round-robin spread
+    exchange, no Python."""
     return spark.sql(_build("spark"))

@@ -24,7 +24,8 @@ title/content, WP date and status.  Everything downstream ports
   module docstring :40-49); page_year/award_year ints ship str(int).
 
 Plan: ONE orders scan of pure column algebra behind Generate barriers
-— zero exchanges, no Python.  tests/test_template_fidelity.py
+— its only exchange is the round-robin spread over the scan, no
+Python.  tests/test_template_fidelity.py
 re-derives the full expected output in Python (running the reference's
 real year regex incl. the 3000-char window) and pins the grammar
 against the source.

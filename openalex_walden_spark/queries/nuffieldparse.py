@@ -32,7 +32,8 @@ patterns over it:
   slugs); ``declined=False`` -> 'False'.
 
 Plan: ONE orders scan of pure column algebra behind Generate barriers
-— zero exchanges, no Python.  tests/test_template_fidelity.py runs
+— its only exchange is the round-robin spread over the scan, no
+Python.  tests/test_template_fidelity.py runs
 the reference's real regexes over the same HTML and AST-pins
 _NON_THEME_ICONS and both token sets.
 """
@@ -384,5 +385,6 @@ def nuffield_parse_projects(spark: SparkSession, sf_dir: str) -> DataFrame:
     theme regex walk with the non-theme-icon and currency-text gates,
     labeled strong-run researcher extraction, K/M amount multipliers,
     Month-YYYY date-range formatting, title+degree name peels with
-    empty-string lead fields.  One scan, zero exchanges, no Python."""
+    empty-string lead fields.  One scan under one round-robin spread
+    exchange, no Python."""
     return spark.sql(_build("spark"))

@@ -48,7 +48,8 @@ key (the XLSX/DOM readers supply physical row positions — the fixture
 carries o_orderkey as that position).
 
 Fixture: one workbook record AND one legacy table row per orders key.
-Plan: two scan arms unioned, pure column algebra, no shuffle at all.
+Plan: two scan arms unioned, pure column algebra, no hash shuffle
+(each scan sits under one round-robin spread exchange).
 
 tests/test_template_fidelity.py re-derives both arms in Python
 (with the sha256 deviation applied there too, so the digest inputs and
@@ -359,5 +360,6 @@ def _build(dialect: str) -> str:
 def potter_parse_awards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Potter workbook + legacy-HTML arms in one union plan (module
     docstring has the semantics map; note the documented sha1->sha256
-    digest deviation).  Two scan arms, no shuffle, no Python."""
+    digest deviation).  Two scan arms, each under one round-robin
+    spread exchange, no hash shuffle, no Python."""
     return spark.sql(_build("spark"))

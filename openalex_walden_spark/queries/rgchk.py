@@ -39,7 +39,7 @@ covers all three name forms + honorifics + the case-sensitive suffix,
 amounts cover integral/fractional/zero/junk, the co-investigator cell
 carries a duplicate that the order-preserving dedup must drop.  Plan:
 one scan, pure column algebra (HOF transforms for the people JSON);
-no shuffle, no Python.
+the only exchange is the round-robin spread over the scan, no Python.
 """
 
 from __future__ import annotations
@@ -358,6 +358,6 @@ def _build(dialect: str) -> str:
 )
 def rgc_hk_parse_awards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RGC HK detail-record normalize (module docstring has the full
-    semantics map).  One scan, HOF column algebra, no shuffle, no
-    Python."""
+    semantics map).  One scan under one round-robin spread exchange,
+    HOF column algebra, no hash shuffle, no Python."""
     return spark.sql(_build("spark"))

@@ -37,8 +37,9 @@ lattice driven by o_orderkey so all three name styles, all three
 era branches, both amount modes, and group sizes 1-3 are exercised
 at every scale.  Plan: one scan of pure column algebra — the
 reference's per-paragraph Python loops become whole-stage-codegen
-expressions; no shuffle, no UDF.  At 100 TB the stage stays
-map-side and scales linearly with input splits.
+expressions; no hash shuffle, no UDF.  At 100 TB the stage stays
+map-side and scales linearly with input splits (the one exchange is
+the round-robin spread over the single-task fixture scan).
 
 tests/test_template_fidelity.py re-derives the expected output in
 Python (reference semantics, independently of this SQL) and compares
@@ -375,5 +376,6 @@ import re  # noqa: E402  (used by _build's RLIKE rewrite)
 def twas_parse_awards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TWAS laureate-paragraph normalize (module docstring has the full
     semantics map with reference line cites).  One scan, pure column
-    algebra, no shuffle, no Python."""
+    algebra under one round-robin spread exchange, no hash shuffle, no
+    Python."""
     return spark.sql(_build("spark"))

@@ -41,7 +41,8 @@ raw ACF fields.  Everything downstream ports (``build_dataframe``
 * ``declined=False`` -> 'False', amounts ``str(float)``.
 
 Plan: ONE orders scan of pure column algebra behind Generate barriers
-— zero exchanges, no Python.  tests/test_template_fidelity.py
+— its only exchange is the round-robin spread over the scan, no
+Python.  tests/test_template_fidelity.py
 re-derives the full expected output in Python and AST-pins
 SCHEME_AMOUNT_FALLBACK, the honorific/degree token sets and the
 honoree regex.
@@ -379,5 +380,5 @@ def vilcek_parse_prizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     resolution, ACF-else-scheme-table amounts, range-gated first year
     with no-year drops, single-pass honorific strip + degree peel,
     600-char word-safe bio truncation, comma-location US rule.  One
-    scan, zero exchanges, no Python."""
+    scan under one round-robin spread exchange, no Python."""
     return spark.sql(_build("spark"))

@@ -30,7 +30,7 @@ Everything downstream ports (``fetch_raw_rows`` :173-236):
   URL columns; ``provenance`` constant.
 
 Plan: ONE orders scan + one Generate explode over the winners array —
-zero exchanges, no Python.  tests/test_template_fidelity.py
+the only exchange is the round-robin spread over the scan, no Python.  tests/test_template_fidelity.py
 re-derives the full expected output in Python and pins the grammar
 against the reference source.
 """
@@ -305,6 +305,6 @@ def warren_alpert_parse_prizes(spark: SparkSession,
     """Warren Alpert cohort x winner expansion: label year bounds
     (first/last), 500k/N float-repr amount split, name-else-title
     fallback, positions text + first-affiliation walks, dash-collapsed
-    [:90] slug ids.  One scan + one Generate, zero exchanges, no
-    Python."""
+    [:90] slug ids.  One scan + one Generate, one round-robin spread
+    exchange over the scan, no Python."""
     return spark.sql(_build("spark"))

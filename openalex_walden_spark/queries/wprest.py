@@ -900,5 +900,6 @@ def wprest_parse_projects(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gulbenkian + Velux Stiftung WP-REST normalizes in one union plan
     (module docstring has the semantics map: the Portuguese and Swiss
     amount grammars, the year fallbacks, the taxonomy join-render).
-    Two barriered scan arms, zero shuffle, no Python."""
+    Two barriered scan arms, no hash shuffle (one round-robin spread
+    exchange per scan), no Python."""
     return spark.sql(_build("spark"))

@@ -876,10 +876,11 @@ def test_registry_key_battery_single_rollup(spark, sf_dir):
 
 def test_cn_province_parse_is_shuffle_free(spark, sf_dir):
     """The shared provincial normalize library is pure column algebra:
-    one scan, no exchange, no Python in the plan (the reference runs
-    per-row pandas)."""
+    one scan, whose only exchange is the round-robin spread over it
+    (``spread``: no hash shuffle), no Python in the plan (the reference
+    runs per-row pandas)."""
     plan = _plan(spark, sf_dir, "cn_province_awards_parse")
-    assert plan.count("Exchange RoundRobinPartitioning") >= 1
+    assert plan.count("Exchange RoundRobinPartitioning") == 1
     assert "Exchange hashpartitioning" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
@@ -916,11 +917,12 @@ def test_indexes_vocab_distinct_before_count(spark, sf_dir):
 
 def test_twas_parse_single_scan_no_shuffle(spark, sf_dir):
     """TWAS normalize: one scan, the layer barriers are 1:1 Generates
-    (no shuffle, no Python stage), and the plan stays bounded (the
-    chained-CTE form inlined to a 167 KB optimized plan and fell out of
-    whole-stage codegen)."""
+    (no hash shuffle — only the round-robin spread over the scan — and
+    no Python stage), and the plan stays bounded (the chained-CTE form
+    inlined to a 167 KB optimized plan and fell out of whole-stage
+    codegen)."""
     plan = _plan(spark, sf_dir, "twas_parse_awards")
-    assert plan.count("Exchange RoundRobinPartitioning") >= 1
+    assert plan.count("Exchange RoundRobinPartitioning") == 1
     assert "Exchange hashpartitioning" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "CartesianProduct" not in plan
@@ -981,11 +983,12 @@ def test_sshrc_single_aggregate_shuffle(spark, sf_dir):
 
 
 def test_rgc_hk_single_scan_no_shuffle(spark, sf_dir):
-    """RGC HK normalize: pure HOF column algebra over one scan, plan
+    """RGC HK normalize: pure HOF column algebra over one scan (its
+    only exchange is the round-robin spread over the scan), plan
     bounded (the person-split expressions repeat over attributes, not
     over inlined derivations)."""
     plan = _plan(spark, sf_dir, "rgc_hk_parse_awards")
-    assert plan.count("Exchange RoundRobinPartitioning") >= 1
+    assert plan.count("Exchange RoundRobinPartitioning") == 1
     assert "Exchange hashpartitioning" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     df = q.CATALOG["rgc_hk_parse_awards"].spark(spark, sf_dir)
@@ -995,9 +998,10 @@ def test_rgc_hk_single_scan_no_shuffle(spark, sf_dir):
 
 def test_blue_planet_single_scan_no_shuffle(spark, sf_dir):
     """Blue Planet normalize: one scan through Generate layer barriers,
-    bounded plan, no shuffle, no Python."""
+    bounded plan, no hash shuffle (the one exchange is the round-robin
+    spread over the scan), no Python."""
     plan = _plan(spark, sf_dir, "blue_planet_parse_awards")
-    assert plan.count("Exchange RoundRobinPartitioning") >= 1
+    assert plan.count("Exchange RoundRobinPartitioning") == 1
     assert "Exchange hashpartitioning" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     df = q.CATALOG["blue_planet_parse_awards"].spark(spark, sf_dir)
@@ -1048,10 +1052,11 @@ def test_threesixty_simple_union_shape(spark, sf_dir):
 
 
 def test_threesixty_rich_single_scan_shapes(spark, sf_dir):
-    """Arcadia: single scan, pure column algebra, no shuffle.  Wellcome:
+    """Arcadia: single scan, pure column algebra, no hash shuffle (the
+    one exchange is the round-robin spread over the scan).  Wellcome:
     one scan + the grant_ref keep-first window.  No Python either way."""
     plan = _plan(spark, sf_dir, "arcadia_parse_grants")
-    assert plan.count("Exchange RoundRobinPartitioning") >= 1
+    assert plan.count("Exchange RoundRobinPartitioning") == 1
     assert "Exchange hashpartitioning" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     plan = _plan(spark, sf_dir, "wellcome_parse_grants")
@@ -1061,10 +1066,11 @@ def test_threesixty_rich_single_scan_shapes(spark, sf_dir):
 
 
 def test_potter_dual_arm_no_shuffle(spark, sf_dir):
-    """Potter: two scan arms unioned, no shuffle at all, no Python,
+    """Potter: two scan arms unioned, no hash shuffle (each arm's one
+    exchange is the round-robin spread over its scan), no Python,
     bounded plan."""
     plan = _plan(spark, sf_dir, "potter_parse_awards")
-    assert plan.count("Exchange RoundRobinPartitioning") >= 1
+    assert plan.count("Exchange RoundRobinPartitioning") == 2
     assert "Exchange hashpartitioning" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "CartesianProduct" not in plan
@@ -1089,8 +1095,9 @@ def test_tinyfunder_barriered_union_shape(spark, sf_dir):
 
 
 def test_method5_no_shuffle_union(spark, sf_dir):
-    """Method-5 family: eight zero-shuffle scan arms behind Generate
-    barriers plus the AOS arm (round 11), whose page-walk is exploded
+    """Method-5 family: eight scan arms behind Generate barriers, whose
+    only exchanges are the round-robin spreads over their scans, plus
+    the AOS arm (round 11), whose page-walk is exploded
     node rows with per-page windows/joins — those exchanges partition
     on the page key and are the arm's whole cost; no Python; bounded
     plan.  Bound raised 150K -> 170K for the round-14 schmidt arm:
@@ -1100,9 +1107,8 @@ def test_method5_no_shuffle_union(spark, sf_dir):
     it exists for (tinyfunder measured 270K pre-barrier)."""
     plan = _plan(spark, sf_dir, "method5_parse_awards")
     assert plan.count("Exchange hashpartitioning") <= 14
-    # r15: arms parallelize their single-row-group scans (key-only
-    # round-robin repartition, parallelize_scan_sql)
-    assert plan.count("Exchange RoundRobinPartitioning") >= 1
+    # one round-robin spread per orders scan (``spread``)
+    assert plan.count("Exchange RoundRobinPartitioning") == 19
     assert "Generate" in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "CartesianProduct" not in plan
@@ -1277,10 +1283,11 @@ def test_rfbr_single_shuffle_keep_earliest(spark, sf_dir):
 
 
 def test_mjff_zero_shuffle_scan(spark, sf_dir):
-    """MJFF: one scan of pure column algebra — zero exchanges, no
-    joins, no Python, bounded plan."""
+    """MJFF: one scan of pure column algebra — its only exchange is the
+    round-robin spread over the scan, no joins, no Python, bounded
+    plan."""
     plan = _plan(spark, sf_dir, "mjff_parse_grants")
-    assert plan.count("Exchange RoundRobinPartitioning") >= 1
+    assert plan.count("Exchange RoundRobinPartitioning") == 1
     assert "Exchange hashpartitioning" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "CartesianProduct" not in plan
@@ -1290,10 +1297,10 @@ def test_mjff_zero_shuffle_scan(spark, sf_dir):
 
 
 def test_carlsberg_zero_shuffle_scan(spark, sf_dir):
-    """Carlsberg: one scan of pure column algebra — zero exchanges,
-    no Python, bounded plan."""
+    """Carlsberg: one scan of pure column algebra — its only exchange
+    is the round-robin spread over the scan, no Python, bounded plan."""
     plan = _plan(spark, sf_dir, "carlsberg_parse_grants")
-    assert plan.count("Exchange RoundRobinPartitioning") >= 1
+    assert plan.count("Exchange RoundRobinPartitioning") == 1
     assert "Exchange hashpartitioning" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "CartesianProduct" not in plan
@@ -1329,11 +1336,11 @@ def test_holberg_zero_shuffle_scan(spark, sf_dir):
 
 def test_letten_zero_shuffle_scan(spark, sf_dir):
     """Letten: one scan exploded x4 canonical winners behind Generate
-    barriers — exactly ONE exchange (the r15 key-only parallelizing
-    repartition: the single-row-group fixture scan is one task, and
-    this parse is ~100 µs/row of regex, so without it the whole query
-    ran on one core; the hint moves only o_orderkey), no Python,
-    bounded plan."""
+    barriers — exactly ONE exchange (the round-robin spread directly
+    over the scan, below the x4 winners Generate: the single-row-group
+    fixture scan is one task, and this parse is ~100 µs/row of regex,
+    so without it the whole query ran on one core), no Python, bounded
+    plan."""
     plan = _plan(spark, sf_dir, "letten_parse_laureates")
     assert plan.count("Exchange") == 1  # the parallelizing repartition
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
@@ -1368,10 +1375,10 @@ def test_telethon_zero_shuffle_scan(spark, sf_dir):
 
 
 def test_vilcek_zero_shuffle_scan(spark, sf_dir):
-    """Vilcek: one scan of pure column algebra — zero exchanges, no
-    Python, bounded plan."""
+    """Vilcek: one scan of pure column algebra — its only exchange is
+    the round-robin spread over the scan, no Python, bounded plan."""
     plan = _plan(spark, sf_dir, "vilcek_parse_prizes")
-    assert plan.count("Exchange RoundRobinPartitioning") >= 1
+    assert plan.count("Exchange RoundRobinPartitioning") == 1
     assert "Exchange hashpartitioning" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "CartesianProduct" not in plan
@@ -1381,10 +1388,10 @@ def test_vilcek_zero_shuffle_scan(spark, sf_dir):
 
 
 def test_nuffield_zero_shuffle_scan(spark, sf_dir):
-    """Nuffield: one scan of pure column algebra — zero exchanges, no
-    Python, bounded plan."""
+    """Nuffield: one scan of pure column algebra — its only exchange is
+    the round-robin spread over the scan, no Python, bounded plan."""
     plan = _plan(spark, sf_dir, "nuffield_parse_projects")
-    assert plan.count("Exchange RoundRobinPartitioning") >= 1
+    assert plan.count("Exchange RoundRobinPartitioning") == 1
     assert "Exchange hashpartitioning" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "CartesianProduct" not in plan
@@ -1395,8 +1402,8 @@ def test_nuffield_zero_shuffle_scan(spark, sf_dir):
 
 def test_acmedsci_zero_shuffle_scan(spark, sf_dir):
     """AcMedSci: one scan of pure column algebra — exactly one exchange
-    (the r15 key-only parallelizing repartition under the
-    single-row-group fixture scan), no Python, bounded plan."""
+    (the round-robin spread over the single-row-group fixture scan),
+    no Python, bounded plan."""
     plan = _plan(spark, sf_dir, "acmedsci_parse_awards")
     assert plan.count("Exchange") == 1  # the parallelizing repartition
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
@@ -1455,10 +1462,11 @@ def test_keck_zero_shuffle_scan(spark, sf_dir):
 
 
 def test_warren_alpert_zero_shuffle_scan(spark, sf_dir):
-    """Warren Alpert: one scan + one Generate explode — zero
-    exchanges, no Python, bounded plan."""
+    """Warren Alpert: one scan + one Generate explode — its only
+    exchange is the round-robin spread over the scan, no Python,
+    bounded plan."""
     plan = _plan(spark, sf_dir, "warren_alpert_parse_prizes")
-    assert plan.count("Exchange RoundRobinPartitioning") >= 1
+    assert plan.count("Exchange RoundRobinPartitioning") == 1
     assert "Exchange hashpartitioning" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "CartesianProduct" not in plan
@@ -1480,10 +1488,10 @@ def test_pchrd_ongoing_zero_shuffle_scan(spark, sf_dir):
 
 
 def test_nomis_zero_shuffle_scan(spark, sf_dir):
-    """NOMIS: one scan of pure column algebra — zero exchanges, no
-    Python, bounded plan."""
+    """NOMIS: one scan of pure column algebra — its only exchange is
+    the round-robin spread over the scan, no Python, bounded plan."""
     plan = _plan(spark, sf_dir, "nomis_parse_projects")
-    assert plan.count("Exchange RoundRobinPartitioning") >= 1
+    assert plan.count("Exchange RoundRobinPartitioning") == 1
     assert "Exchange hashpartitioning" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "CartesianProduct" not in plan
@@ -1541,10 +1549,112 @@ def test_laureate_prize_two_window_exchanges(spark, sf_dir):
     assert "CartesianProduct" not in plan
     n_ex = plan.count("Exchange hashpartitioning")
     assert n_ex <= 4, n_ex  # 2 windows; AQE may add reused shuffles
-    # r15: each arm additionally parallelizes its single-row-group scan
-    # with a key-only round-robin repartition (parallelize_scan_sql)
-    assert plan.count("Exchange RoundRobinPartitioning") >= 1
+    # each arm's single-row-group scan additionally sits under one
+    # round-robin spread exchange (``spread``)
+    assert plan.count("Exchange RoundRobinPartitioning") == 8
     assert plan.count("Window") >= 2
     df = q.CATALOG["laureate_prize_parse"].spark(spark, sf_dir)
     opt = df._jdf.queryExecution().optimizedPlan().toString()  # noqa: SLF001
     assert len(opt) < 150_000, f"plan blow-up: {len(opt)} chars"
+
+
+# ---------------------------------------------------------------------------
+# Scan spread declared on register(spread=...)
+# ---------------------------------------------------------------------------
+
+_SPREAD = sorted(n for n, s in q.CATALOG.items() if s.spread)
+_PASS_THROUGH = ("Filter", "Project", "ColumnarToRow", "InputAdapter")
+
+
+def _plan_nodes(plan: str) -> list[tuple[int, str]]:
+    """(depth, node text) per line of a physical-plan tree string, with
+    the tree glyphs and whole-stage-codegen markers stripped."""
+    import re
+
+    out = []
+    for line in plan.splitlines():
+        body = line.lstrip(" :|+-")
+        depth = len(line) - len(body)
+        out.append((depth, re.sub(r"^\*\(\d+\)\s*", "", body)))
+    return out
+
+
+def _spread_violations(plan: str, tables) -> list[str]:
+    """Scans of ``tables`` not directly under a round-robin exchange
+    (Filter/Project in between are fine: they narrow the scan side), and
+    round-robin exchanges over anything else."""
+    nodes = _plan_nodes(plan)
+    bad, spread_scans = [], 0
+    for i, (depth, body) in enumerate(nodes):
+        if not body.startswith("FileScan") or not any(
+            f"/{t}.parquet]" in body for t in tables
+        ):
+            continue
+        spread_scans += 1
+        d, j = depth, i
+        while j > 0:
+            j -= 1
+            if nodes[j][0] < d:
+                d = nodes[j][0]
+                if not nodes[j][1].startswith(_PASS_THROUGH):
+                    break
+        if not nodes[j][1].startswith("Exchange RoundRobinPartitioning"):
+            bad.append(f"scan under {nodes[j][1][:60]!r}")
+    n_rr = sum(b.startswith("Exchange RoundRobinPartitioning") for _, b in nodes)
+    if n_rr != spread_scans:
+        bad.append(f"{n_rr} round-robin exchanges for {spread_scans} scans")
+    return bad
+
+
+def _plans_with_checkpoints(spark, sf_dir, name, monkeypatch) -> list[str]:
+    """The query's final physical plan plus every sub-plan it froze
+    behind a localCheckpoint barrier (those hide their scans)."""
+    frozen: list[str] = []
+    cls = type(spark.range(0))
+    orig = cls.localCheckpoint
+
+    def record(self, *args, **kwargs):
+        frozen.append(self._jdf.queryExecution().executedPlan().toString())  # noqa: SLF001
+        return orig(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", record)
+    return frozen + [_plan(spark, sf_dir, name)]
+
+
+def test_spread_must_name_a_read_table():
+    from openalex_walden_spark.queries.registry import register
+
+    with pytest.raises(ValueError, match="not in tables"):
+        register("spread_probe", None, tables=("orders",),
+                 spread=("lineitem",))
+    assert "spread_probe" not in q.CATALOG
+
+
+@pytest.mark.parametrize("name", _SPREAD)
+def test_spread_exchange_sits_on_each_declared_scan(
+    spark, sf_dir, name, monkeypatch
+):
+    """Every scan of a declared table sits directly under one
+    ``Exchange RoundRobinPartitioning``, and there is no other
+    round-robin exchange in the query."""
+    spec = q.CATALOG[name]
+    plans = _plans_with_checkpoints(spark, sf_dir, name, monkeypatch)
+    joined = "\n".join(plans)
+    assert "Exchange RoundRobinPartitioning" in joined
+    bad = [v for p in plans for v in _spread_violations(p, spec.spread)]
+    assert not bad, bad
+
+
+def test_spread_does_not_leak_into_later_queries(spark, sf_dir):
+    """The plain view is back once a spread query returns: a later
+    non-spread query over orders plans without any round-robin
+    exchange."""
+    assert q.CATALOG["nomis_parse_projects"].spread == ("orders",)
+    assert "orders" in q.CATALOG["agg_max_by_order"].tables
+    assert not q.CATALOG["agg_max_by_order"].spread
+    spread_plan = _plan(spark, sf_dir, "nomis_parse_projects")
+    assert "Exchange RoundRobinPartitioning" in spread_plan
+    assert "RoundRobinPartitioning" not in _plan(
+        spark, sf_dir, "agg_max_by_order")
+    view = spark.table("orders")._jdf.queryExecution().optimizedPlan()  # noqa: SLF001
+    assert "Repartition" not in view.toString()
