@@ -42,9 +42,10 @@ field are not ported; duplicate award ids RAISE in the reference
 (:437-439) and the sitemap fixture mints unique slugs.
 
 Plan: ONE orders scan of pure column algebra — its only exchange is
-the round-robin spread over the scan, no Python.  tests/test_template_fidelity.py re-derives the full expected
-output in Python and AST-pins LABEL_MAP, the marker vocabulary and
-both title/degree token sets.
+the round-robin spread over the scan, no Python.
+tests/test_template_fidelity.py re-derives the full expected output in
+Python and AST-pins LABEL_MAP, the marker vocabulary and both
+title/degree token sets.
 """
 
 from __future__ import annotations

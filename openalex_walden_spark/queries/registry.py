@@ -63,8 +63,8 @@ def register(
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:
             views = register_views(spark, sf_dir, tables)
             plain = {t: views[t] for t in spread if t in views}
+            par = spark.sparkContext.defaultParallelism
             for t, df in plain.items():
-                par = spark.sparkContext.defaultParallelism
                 df.repartition(par).createOrReplaceTempView(t)
             try:
                 return fn(spark, sf_dir)

@@ -30,9 +30,9 @@ Everything downstream ports (``fetch_raw_rows`` :173-236):
   URL columns; ``provenance`` constant.
 
 Plan: ONE orders scan + one Generate explode over the winners array —
-the only exchange is the round-robin spread over the scan, no Python.  tests/test_template_fidelity.py
-re-derives the full expected output in Python and pins the grammar
-against the reference source.
+the only exchange is the round-robin spread over the scan, no Python.
+tests/test_template_fidelity.py re-derives the full expected output in
+Python and pins the grammar against the reference source.
 """
 
 from __future__ import annotations

@@ -1600,7 +1600,7 @@ def _spread_violations(plan: str, tables) -> list[str]:
                     break
         if not nodes[j][1].startswith("Exchange RoundRobinPartitioning"):
             bad.append(f"scan under {nodes[j][1][:60]!r}")
-    n_rr = sum(b.startswith("Exchange RoundRobinPartitioning") for _, b in nodes)
+    n_rr = sum(b.startswith("Exchange RoundRobin") for _, b in nodes)
     if n_rr != spread_scans:
         bad.append(f"{n_rr} round-robin exchanges for {spread_scans} scans")
     return bad
@@ -1614,7 +1614,8 @@ def _plans_with_checkpoints(spark, sf_dir, name, monkeypatch) -> list[str]:
     orig = cls.localCheckpoint
 
     def record(self, *args, **kwargs):
-        frozen.append(self._jdf.queryExecution().executedPlan().toString())  # noqa: SLF001
+        qe = self._jdf.queryExecution()  # noqa: SLF001
+        frozen.append(qe.executedPlan().toString())
         return orig(self, *args, **kwargs)
 
     monkeypatch.setattr(cls, "localCheckpoint", record)
