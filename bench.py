@@ -150,6 +150,9 @@ def main() -> None:
     # ~hundreds of rows and the timed runs below measure steady-state
     # data work — the regime that matters at cluster scale, where compile
     # seconds are noise against data hours.
+    # A failure here must not stop the bench, so it is recorded on the
+    # full output line only (the compact line's size is pinned).
+    errors: dict[str, str] = {}
     warm_dir = os.path.join(os.path.dirname(SF_DIR.rstrip("/")), "sf0.001")
     if not os.path.isdir(warm_dir):
         warm_dir = SF_DIR
@@ -158,8 +161,8 @@ def main() -> None:
         if spec is not None:
             try:
                 spec.spark(spark, warm_dir).write.format("noop").mode("overwrite").save()
-            except Exception:  # pragma: no cover - keep bench robust
-                pass
+            except Exception as ex:  # noqa: BLE001
+                errors[f"{name}:warmup"] = _first_line(ex)
 
     # One unrecorded full-SF buffer run: the 30s warm-up burst can leave
     # the (shared) host throttled for a few seconds, and whichever query
@@ -178,7 +181,6 @@ def main() -> None:
     # randomly inside one.
     timings: dict[str, float] = {}
     spreads: dict[str, float] = {}
-    errors: dict[str, str] = {}
     train: dict[str, float] = {}
     total = 0.0
 
@@ -209,8 +211,8 @@ def main() -> None:
                 spark.range(32).count()
             runs.append(time.perf_counter() - t0)
         calib["jobs"] = round(min(runs), 3)
-    except Exception:  # pragma: no cover - calibration must never
-        pass  # break the bench
+    except Exception as ex:  # noqa: BLE001 - calibration must never
+        errors["calib"] = _first_line(ex)  # break the bench
 
     # Train/serve split (round-10 verdict): ann_ivf_trained_topk's first
     # run pays the k-means training loop and runs 2-3 hit _TR_CACHE, so
@@ -238,7 +240,7 @@ def main() -> None:
         train["ann_ivf_trained_topk"] = round(min(runs), 3)
         spreads["ann_ivf_trained_topk:train"] = round(max(runs) - min(runs), 3)
     except Exception as ex:  # noqa: BLE001 - training failure must not
-        errors["ann_ivf_trained_topk:train"] = str(ex).split("\n", 1)[0][:200]
+        errors["ann_ivf_trained_topk:train"] = _first_line(ex)
 
     for name in HEADLINE:
         spec = q.CATALOG.get(name)
@@ -261,7 +263,7 @@ def main() -> None:
         except Exception as ex:  # noqa: BLE001 - one broken query must not
             # zero the whole round's numbers (round 4 lost ALL timings to
             # a single loader error); record it and keep measuring.
-            errors[name] = str(ex).split("\n", 1)[0][:200]
+            errors[name] = _first_line(ex)
             continue
         timings[name] = round(min(runs), 3)
         # Recorded per-query spread (max - min over the 3 runs): the
@@ -304,6 +306,10 @@ def main() -> None:
     print(json.dumps(full))
     print(json.dumps(compact))
     spark.stop()
+
+
+def _first_line(ex: Exception) -> str:
+    return str(ex).split("\n", 1)[0][:200]
 
 
 if __name__ == "__main__":

@@ -20,8 +20,6 @@ class QuerySpec:
     tags: tuple[str, ...] = ()
     doc: str = ""
     tables: tuple[str, ...] = TABLES
-    module: str = ""  # defining module — the unit of change for the
-    #                   driver-window freshness audit (test_driver_window)
     spread: tuple[str, ...] = ()  # tables scanned through a round-robin
     #                               exchange (see ``register``)
 
@@ -79,7 +77,6 @@ def register(
             tags=tags,
             doc=doc or (fn.__doc__ or ""),
             tables=tables,
-            module=fn.__module__,
             spread=spread,
         )
         return run

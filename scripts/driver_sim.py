@@ -20,55 +20,27 @@ def main() -> int:
     from openalex_walden_spark import queries as _q
     from pyspark.sql import SparkSession
 
-    # Window-composition audit (checked in code, not comments): the
-    # driver verifies the FIRST 50 queries() entries, so every query the
-    # entry module marks as never-verified must sit inside that window,
-    # and the ordering must cover the catalog exactly once.
+    # Window audit: the driver verifies the FIRST 50 queries() entries.
+    # The derived front (greens whose plan or output changed since their
+    # green row) leads; whatever of it, or of the never-verified queries,
+    # falls past slot 50 is verification debt.
     order = e._driver_order()
     assert sorted(order) == sorted(_q.CATALOG), "order != catalog"
-    window = set(order[:50])
-    retired = set(e._ROTATION)
-    changed = [n for n in e._CHANGED_THIS_ROUND if n in _q.CATALOG]
-    # Changed-since-last-green queries MUST occupy window slots ahead of
-    # never-verified ones: a stale green looks verified, an unchecked
-    # new query doesn't (round-8 verdict, What's wrong #1).
-    missing_changed = [n for n in changed if n not in window]
-    assert not missing_changed, (
-        f"_CHANGED_THIS_ROUND entries outside the 50-slot window: "
-        f"{missing_changed}"
-    )
-    # The PENDING backlog (state-file never-verified) must fill the
-    # slots left after the changed front — a pending query outside the
-    # window while a slot is open is a scheduling bug.  Mid-round
-    # catalog additions (not yet in the state file) deliberately queue
-    # LAST, behind even the stale-green rotation: they enter pending at
-    # the next boundary and front the next window from there.
-    pending = [n for n in e._NEVER_VERIFIED_BACKLOG if n in _q.CATALOG]
-    slots_after_changed = 50 - len([n for n in changed if n in _q.CATALOG])
-    out_pending = [n for n in pending if n not in window]
-    if out_pending:
-        assert len(pending) > slots_after_changed, (
-            f"pending queries outside a non-full window: {out_pending}"
-        )
-    midround = [n for n in _q.CATALOG
-                if n not in retired and n not in set(pending)
-                and n not in set(changed)]
-    debt = out_pending + [n for n in midround if n not in window]
-    if debt:
-        print(
-            f"VERIFICATION DEBT: {len(debt)} never-verified queries wait "
-            f"for a later window ({len(out_pending)} pending overflow, "
-            f"{len(debt) - len(out_pending)} mid-round additions):"
-        )
-        for n in debt:
-            print(f"  overflow: {n}")
-    stale_drained = [n for n in order[:50] if n in retired]
-    if stale_drained:
-        print(
-            f"window re-verifies {len(stale_drained)} stalest greens "
-            f"(oldest round "
-            f"{min(e._LAST_GREEN[n] for n in stale_drained)})"
-        )
+    front = e._front()
+    assert order[: len(front[:50])] == front[:50], "front not leading"
+    print(f"derived front: {len(front)} changed-since-green queries")
+    unverified = [n for n in order[50:] if n not in e._LAST_GREEN]
+    for label, debt in (("changed greens", front[50:]),
+                        ("never-verified queries", unverified)):
+        if debt:
+            print(f"VERIFICATION DEBT: {len(debt)} {label} wait for a "
+                  f"later window:")
+            for n in debt:
+                print(f"  overflow: {n}")
+    stale = [n for n in order[:50] if n in e._LAST_GREEN and n not in front]
+    if stale:
+        print(f"window re-verifies {len(stale)} stalest greens (oldest "
+              f"round {min(e._LAST_GREEN[n] for n in stale)})")
 
     spark = (
         SparkSession.builder.master("local[8]")

@@ -1,22 +1,19 @@
 #!/usr/bin/env python
-"""Regenerate the committed golden output fingerprints.
+"""Regenerate the committed golden output and plan fingerprints.
 
 Usage:
     python scripts/gen_goldens.py            # all catalog queries
     python scripts/gen_goldens.py q1 q2 ...  # refresh only the named ones
 
-Writes ``tests/goldens_sf0001.json``: one ``{"rows": N, "hash": sha256}``
-per catalog query, computed at the test scale factor (sf0.001 unless
-``SPARK_GRAFT_TEST_SF_DIR`` points elsewhere) with the SAME Spark session
-config as ``tests/conftest.py`` so the parity suite reproduces the hash
-bit-for-bit.  The fingerprint is order-insensitive (rows and columns are
-canonically sorted before hashing — ``oracle.golden_hash``), so partition
-count and task order cannot perturb it.
-
-Workflow contract (enforced by tests/test_driver_window.py): regenerating
-a golden whose query already has a green driver row REQUIRES fronting that
-query in ``__spark_entry__._CHANGED_THIS_ROUND`` — the boundary-diff audit
-compares this file against its version at the round-boundary commit.
+Writes one entry per catalog query to ``tests/goldens_sf0001.json``
+(``{"rows": N, "hash": sha256}`` of the output, ``oracle.golden_hash``;
+order-insensitive, so partition count and task order cannot perturb it)
+and to ``tests/plans_sf0001.json`` (``oracle.plan_fingerprint``), at the
+test scale factor (sf0.001 unless ``SPARK_GRAFT_TEST_SF_DIR`` points
+elsewhere) with the SAME Spark session config as ``tests/conftest.py``,
+so the parity suite reproduces both bit-for-bit.  A regenerated query
+with a green driver row no longer matches the key that row was taken on,
+so the driver window fronts it.
 """
 
 from __future__ import annotations
@@ -29,6 +26,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 GOLDENS_PATH = os.path.join(REPO, "tests", "goldens_sf0001.json")
+PLANS_PATH = os.path.join(REPO, "tests", "plans_sf0001.json")
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
@@ -36,7 +34,11 @@ def main() -> int:
     from pyspark.sql import SparkSession
 
     from openalex_walden_spark import queries as q
-    from openalex_walden_spark.oracle import golden_hash
+    from openalex_walden_spark.oracle import (
+        checkpoint_capture,
+        golden_hash,
+        plan_fingerprint,
+    )
 
     q.load_all()
     only = set(sys.argv[1:])
@@ -45,13 +47,12 @@ def main() -> int:
         print(f"unknown queries: {sorted(unknown)}", file=sys.stderr)
         return 2
 
-    existing: dict[str, dict] = {}
-    if os.path.exists(GOLDENS_PATH):
-        with open(GOLDENS_PATH, encoding="utf-8") as f:
-            existing = json.load(f)
+    goldens, plans = (
+        json.load(open(p, encoding="utf-8")) if os.path.exists(p) else {}
+        for p in (GOLDENS_PATH, PLANS_PATH))
 
     # Mirror tests/conftest.py exactly — the parity suite must reproduce
-    # every hash this script writes.
+    # every fingerprint this script writes.
     spark = (
         SparkSession.builder.master("local[4]")
         .appName("openalex-walden-spark-goldens")
@@ -65,36 +66,38 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     names = sorted(only) if only else sorted(q.CATALOG)
-    out = dict(existing)
     changed, failed = [], []
     for i, name in enumerate(names, 1):
         try:
-            df = q.CATALOG[name].spark(spark, SF_DIR)
+            with checkpoint_capture(spark) as frozen:
+                df = q.CATALOG[name].spark(spark, SF_DIR)
             g = golden_hash(df.toPandas(), df.schema)
+            p = plan_fingerprint(df, frozen)
         except Exception as ex:  # noqa: BLE001
             failed.append(name)
             print(f"[{i}/{len(names)}] FAIL {name}: {str(ex)[:160]}")
             continue
-        if existing.get(name) != g:
+        if (goldens.get(name), plans.get(name)) != (g, p):
             changed.append(name)
-        out[name] = g
-        print(f"[{i}/{len(names)}] {name}: rows={g['rows']} {g['hash'][:12]}")
+        goldens[name], plans[name] = g, p
+        print(f"[{i}/{len(names)}] {name}: rows={g['rows']} {g['hash'][:12]} "
+              f"plan {p[:12]}")
     spark.stop()
 
-    # Drop goldens for queries that no longer exist.
-    stale = [n for n in out if n not in q.CATALOG]
-    for n in stale:
-        del out[n]
-
-    with open(GOLDENS_PATH, "w", encoding="utf-8") as f:
-        json.dump(dict(sorted(out.items())), f, indent=1, sort_keys=True)
-        f.write("\n")
+    # Drop entries for queries that no longer exist.
+    stale = [n for n in goldens if n not in q.CATALOG]
+    for path, pinned in ((GOLDENS_PATH, goldens), (PLANS_PATH, plans)):
+        for n in stale:
+            pinned.pop(n, None)
+        with open(path, "w", encoding="utf-8") as f:
+            json.dump(dict(sorted(pinned.items())), f, indent=1, sort_keys=True)
+            f.write("\n")
     print(
-        f"\nwrote {GOLDENS_PATH}: {len(out)} entries "
+        f"\nwrote {GOLDENS_PATH} and {PLANS_PATH}: {len(goldens)} entries "
         f"({len(changed)} changed, {len(stale)} removed, {len(failed)} failed)"
     )
     if changed:
-        print("changed (front these in _CHANGED_THIS_ROUND if driver-green):")
+        print("changed (the driver window fronts any that are driver-green):")
         for n in changed:
             print(f"  {n}")
     return 1 if failed else 0

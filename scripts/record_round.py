@@ -8,17 +8,18 @@ the first 50 ``queries()`` entries) and updates
 ``driver_window_state.json``:
 
   * every fully-green row (rows+schema+hash) gets ``last_green = round``
-    and leaves the never-verified pending list;
+    and ``verified`` = the query's current verification key (its
+    committed plan fingerprint combined with its golden hash, i.e. what
+    the driver just checked), and leaves the never-verified pending list;
   * red rows keep their previous state (a failed re-check must not mint
     a green);
   * catalog queries the state file has never seen are appended to
     pending (new additions queue behind older debt).
 
-This replaces the hand-maintained per-round ``_LAST_GREEN_R*`` lists
-(round-8 verdict, "derive the window from git, not by hand"): the
-rotation is now derived from the driver's own artifacts, so it cannot
-silently drift.  After running this, reset ``_CHANGED_THIS_ROUND = []``
-and ``_WINDOW_EXEMPT = {}`` in ``__spark_entry__.py`` for the new round.
+Run it on the tree the driver verified, before any new change lands.
+From then on a query whose plan or output is regenerated
+(``scripts/gen_goldens.py <name>``) no longer matches its ``verified``
+key, and the window fronts it; nothing is reset by hand.
 """
 
 from __future__ import annotations
@@ -168,9 +169,9 @@ def main() -> int:
     with open(STATE_PATH, encoding="utf-8") as f:
         state = json.load(f)
 
-    from openalex_walden_spark import queries as q
+    import __spark_entry__ as e
 
-    q.load_all()
+    q = e._q
 
     greens = sorted(
         name for name, r in rows.items()
@@ -182,6 +183,7 @@ def main() -> int:
             print(f"  note: green row for retired query {name!r} ignored")
             continue
         state["last_green"][name] = rnd
+        state["verified"][name] = e._verification_key(name)
     state["pending"] = [
         n for n in state["pending"]
         if n in q.CATALOG and n not in state["last_green"]
@@ -189,10 +191,11 @@ def main() -> int:
     known = set(state["last_green"]) | set(state["pending"])
     fresh = [n for n in q.CATALOG if n not in known]
     state["pending"].extend(fresh)
-    state["last_green"] = {
-        k: v for k, v in sorted(state["last_green"].items())
-        if k in q.CATALOG
-    }
+    for key in ("last_green", "verified"):
+        state[key] = {
+            k: v for k, v in sorted(state[key].items())
+            if k in q.CATALOG
+        }
 
     with open(STATE_PATH, "w", encoding="utf-8") as f:
         json.dump(state, f, indent=1)
@@ -204,8 +207,8 @@ def main() -> int:
         f"{len(state['pending'])} pending"
     )
     print(
-        "now reset _CHANGED_THIS_ROUND = [] and _WINDOW_EXEMPT = {} in "
-        "__spark_entry__.py for the new round"
+        "from here on, regenerate a changed query with "
+        "`python scripts/gen_goldens.py <name>`; the window fronts it"
     )
     section = emit_drift_table(rnd)
     if section:

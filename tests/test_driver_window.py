@@ -1,39 +1,18 @@
-"""Mechanical freshness audit for the driver verification window.
+"""The driver verification window and the plan fingerprints behind it.
 
-Round-8 verdict (What's wrong #1): ``_CHANGED_THIS_ROUND`` was
-maintained by hand and shipped empty over seven plan-changing commits,
-so the driver's green rows vouched for superseded plans.  This test
-derives the changed set from git instead: any catalog query whose
-defining module changed since the last round-boundary commit must be
-
-  * in ``_CHANGED_THIS_ROUND`` (fronted for re-verification), or
-  * never driver-verified (the window already fronts those), or
-  * in ``_WINDOW_EXEMPT`` with a written reason (module touched, this
-    query's plan provably untouched — e.g. a sibling query was added).
-
-Granularity: the unit of change is the query's *defining module*
-(``QuerySpec.module``) PLUS that module's engine-internal imports
-(``functions/``, ``operators/``, ``sinks/``, ...), resolved statically
-from the AST — so a change to a shared dependency module (the round-8
-award fixes lived in ``functions/sql_udfs.py``) flags every query of
-every module importing it, one hop deep.  Deeper transitive chains and
-dynamic imports still rely on the maintainer, but both round-8 misses
-would have been caught at this granularity.
-
-Second, OUTPUT-level layer (round 9): the committed golden fingerprints
-(``tests/goldens_sf0001.json``, recomputed on every parity run) are
-diffed against their version at the round-boundary commit.  Any query
-whose output hash changed since the boundary and which holds a green
-driver row MUST be fronted — no exemption can override an output change,
-and conversely every ``_WINDOW_EXEMPT`` entry must be output-stable,
-turning the exemptions' prose evidence into a machine check.
+The driver re-verifies the first 50 ``queries()`` entries each round.
+A query is "changed since its last driver verification" exactly when its
+verification key (committed plan fingerprint + golden hash, both pinned
+to the code by ``test_oracle_parity``) differs from the key its last
+green row was taken on (``driver_window_state.json``).  These tests pin
+how that front is derived and ordered, and that the fingerprint is
+deterministic yet sees plan and Python-UDF changes.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import subprocess
 
 import pytest
 
@@ -45,176 +24,34 @@ if REPO not in sys.path:
     sys.path.insert(0, REPO)
 
 import __spark_entry__ as e  # noqa: E402
+from openalex_walden_spark import oracle  # noqa: E402
 from openalex_walden_spark import queries as _q  # noqa: E402
 
 WINDOW = 50
 
 
-def _git(*args: str) -> str:
-    return subprocess.run(
-        ["git", *args], cwd=REPO, capture_output=True, text=True, check=True
-    ).stdout
-
-
-def _round_boundary_commit() -> str:
-    """The driver's last 'round N: verdict/...' commit = round start."""
-    return _git(
-        "log", "--grep", "^round [0-9]*: verdict", "-n", "1", "--format=%H"
-    ).strip()
-
-
-def _changed_package_files(boundary: str) -> set[str]:
-    """Package-relative dotted module names changed since the boundary,
-    including uncommitted working-tree edits (diff vs the commit)."""
-    diff = _git(
-        "diff", "--name-only", boundary, "--", "openalex_walden_spark",
-    )
-    mods = set()
-    for line in diff.splitlines():
-        p = line.strip()
-        if not p.endswith(".py"):
-            continue
-        dotted = p[: -len(".py")].replace("/", ".")
-        if dotted.endswith(("__init__", ".registry")):
-            continue
-        mods.add(dotted)
-    return mods
-
-
-def _module_imports(dotted: str) -> set[str]:
-    """Engine-internal modules imported by ``dotted`` (AST, one hop)."""
-    import ast
-
-    path = os.path.join(REPO, dotted.replace(".", "/") + ".py")
-    try:
-        tree = ast.parse(open(path, encoding="utf-8").read())
-    except (OSError, SyntaxError):
-        return set()
-    out: set[str] = set()
-    for node in ast.walk(tree):
-        if isinstance(node, ast.Import):
-            for a in node.names:
-                if a.name.startswith("openalex_walden_spark."):
-                    out.add(a.name)
-        elif isinstance(node, ast.ImportFrom) and node.module:
-            if node.module.startswith("openalex_walden_spark"):
-                out.add(node.module)
-                for a in node.names:
-                    # "from pkg.functions import sql_udfs" style
-                    out.add(f"{node.module}.{a.name}")
-    return out
-
-
-def _changed_query_modules(boundary: str) -> set[str]:
-    """Short names of query modules whose own file OR any engine-internal
-    import (one hop) changed since the boundary."""
-    changed_files = _changed_package_files(boundary)
-    flagged = set()
-    qdir = os.path.join(REPO, "openalex_walden_spark", "queries")
-    for fname in os.listdir(qdir):
-        if not fname.endswith(".py") or fname in ("__init__.py", "registry.py"):
-            continue
-        dotted = f"openalex_walden_spark.queries.{fname[:-3]}"
-        if dotted in changed_files or (_module_imports(dotted) & changed_files):
-            flagged.add(fname[: -len(".py")])
-    return flagged
-
-
-@pytest.fixture(scope="module")
-def boundary() -> str:
-    try:
-        commit = _round_boundary_commit()
-    except (OSError, subprocess.CalledProcessError) as ex:  # pragma: no cover
-        pytest.fail(f"git unavailable for the window audit: {ex}")
-    assert commit, "no round-boundary commit found (driver always writes one)"
-    return commit
-
-
-def test_changed_query_modules_are_fronted(boundary: str) -> None:
-    changed_mods = _changed_query_modules(boundary)
-    rotation = set(e._ROTATION)
-    fronted = set(e._CHANGED_THIS_ROUND)
-    exempt = set(e._WINDOW_EXEMPT)
-    stale = []
-    for name, spec in _q.CATALOG.items():
-        mod = spec.module.rsplit(".", 1)[-1]
-        if mod not in changed_mods:
-            continue
-        if name in fronted or name in exempt or name not in rotation:
-            continue
-        stale.append((name, mod))
-    assert not stale, (
-        "queries with a green driver row whose defining module changed "
-        "this round, yet not fronted in _CHANGED_THIS_ROUND (or "
-        f"explicitly exempted with a reason): {stale}"
-    )
-
-
-def _goldens_at(commit: str) -> dict | None:
-    """tests/goldens_sf0001.json as of ``commit``, or None if absent."""
-    try:
-        raw = _git("show", f"{commit}:tests/goldens_sf0001.json")
-    except subprocess.CalledProcessError:
-        return None
-    return json.loads(raw)
-
-
-def _current_goldens() -> dict:
-    path = os.path.join(REPO, "tests", "goldens_sf0001.json")
-    with open(path, encoding="utf-8") as f:
-        return json.load(f)
-
-
-def test_output_changed_queries_are_fronted(boundary: str) -> None:
-    """Output-hash layer: a golden that moved since the round boundary
-    invalidates the query's green driver row — it must be fronted, and
-    no _WINDOW_EXEMPT prose can excuse it."""
-    base = _goldens_at(boundary)
-    if base is None:
-        # The harness was introduced this round; the boundary commit has
-        # no goldens to diff against.  The file-level audit above still
-        # covers this round; from the next round boundary on, this check
-        # is live.  (Deliberately a pass, not a skip — nothing to do.)
-        return
-    cur = _current_goldens()
-    rotation = set(e._ROTATION)
-    fronted = set(e._CHANGED_THIS_ROUND)
-    moved = sorted(
-        n for n in cur
-        if n in base and base[n] != cur[n] and n in _q.CATALOG
-    )
-    offenders = [n for n in moved if n in rotation and n not in fronted]
-    assert not offenders, (
-        "queries whose OUTPUT changed since the round boundary but which "
-        f"still hold an unfronted green driver row: {offenders} — add "
-        "them to _CHANGED_THIS_ROUND"
-    )
-    bad_exempt = sorted(set(moved) & set(e._WINDOW_EXEMPT))
-    assert not bad_exempt, (
-        "_WINDOW_EXEMPT entries whose output changed since the boundary "
-        f"(an exemption claims output stability): {bad_exempt}"
-    )
-
-
-def test_exemptions_carry_reasons() -> None:
-    for name, reason in e._WINDOW_EXEMPT.items():
-        assert name in _q.CATALOG, f"exemption for unknown query {name!r}"
-        assert len(reason.strip()) >= 20, (
-            f"exemption for {name!r} needs a checkable reason, got {reason!r}"
-        )
-        assert name not in e._CHANGED_THIS_ROUND, (
-            f"{name!r} is both fronted and exempted — pick one"
-        )
-
-
 def test_changed_front_occupies_window_slots() -> None:
     """A changed green must win a slot over never-verified queries."""
+    front = e._front()
+    k = min(len(front), WINDOW)
+    assert e._driver_order()[:k] == front[:k]
+
+
+def test_derived_front_is_stalest_first(monkeypatch) -> None:
+    """A key mismatch fronts the query ahead of the backlog, stalest
+    ``last_green`` first."""
+    monkeypatch.setattr(e, "_VERIFIED", {
+        n: e._verification_key(n) for n in e._LAST_GREEN
+    })
+    assert e._front() == []
+    stalest, newest = e._ROTATION[0], e._ROTATION[-1]
+    assert e._LAST_GREEN[stalest] < e._LAST_GREEN[newest]
+    for n in (newest, stalest):
+        e._VERIFIED[n] = "0" * 64
     order = e._driver_order()
-    window = set(order[:WINDOW])
-    missing = [
-        n for n in e._CHANGED_THIS_ROUND if n in _q.CATALOG and n not in window
-    ]
-    assert not missing, f"_CHANGED_THIS_ROUND outside the window: {missing}"
+    backlog = [n for n in e._NEVER_VERIFIED_BACKLOG if n in _q.CATALOG]
+    assert order[:2] == [stalest, newest]
+    assert order[2:2 + len(backlog)] == backlog
 
 
 def test_order_covers_catalog_exactly_once() -> None:
@@ -233,6 +70,7 @@ def test_window_state_invariants() -> None:
     assert not (verified & set(pending)), (
         f"in both verified and pending: {verified & set(pending)}"
     )
+    assert set(e._VERIFIED) <= verified, "a verified key without a green row"
     catalog = set(_q.CATALOG)
     unknown = (verified | set(pending)) - catalog
     assert not unknown, f"state entries not in the catalog: {unknown}"
@@ -271,3 +109,48 @@ def test_state_greens_match_driver_artifacts() -> None:
             assert r.get("rows_match") and r.get("schema_match") and r.get(
                 "hash_match"
             ), f"{n}: last_green={rnd} but the {art} row is not green: {r}"
+
+
+def _fingerprint(spark, sf_dir, name: str) -> str:
+    with oracle.checkpoint_capture(spark) as frozen:
+        df = _q.CATALOG[name].spark(spark, sf_dir)
+    return oracle.plan_fingerprint(df, frozen)
+
+
+def test_plan_fingerprint_is_deterministic(spark, sf_dir) -> None:
+    """CTE ids, lambda variables and checkpoint sub-plans come from
+    session-wide counters; rebuilding after other queries ran must not
+    move the fingerprint."""
+    names = ["blue_planet_parse_awards",  # CTEs
+             "d5_counts_by_year",  # PySpark lambdas
+             "graph_pagerank_fixedpoint",  # localCheckpoint sub-plans
+             "nomis_parse_projects"]  # spread scan
+    first = {n: _fingerprint(spark, sf_dir, n) for n in names}
+    second = {n: _fingerprint(spark, sf_dir, n) for n in reversed(names)}
+    assert first == second
+
+
+def test_plan_fingerprint_sees_sql_not_comments(spark, sf_dir) -> None:
+    from openalex_walden_spark.tables import register_views
+
+    register_views(spark, sf_dir, ("orders",))
+    sql = "SELECT o_orderkey FROM orders WHERE o_totalprice > {}"
+
+    def fp(text: str) -> str:
+        return oracle.plan_fingerprint(spark.sql(text))
+
+    base = fp(sql.format(100))
+    assert fp(sql.format(101)) != base
+    assert fp("-- a comment\n" + sql.format("/* and another */ 100")) == base
+
+
+def test_plan_fingerprint_folds_udf_module_source(
+    spark, sf_dir, monkeypatch
+) -> None:
+    """The plan only names a Python UDF, so the source of the function's
+    module is folded in: editing it moves the fingerprint."""
+    base = _fingerprint(spark, sf_dir, "text_lang_id")
+    read = oracle._module_source
+    monkeypatch.setattr(oracle, "_module_source", lambda m: read(m) + (
+        "\n# edited" if m == "openalex_walden_spark.functions.lid" else ""))
+    assert _fingerprint(spark, sf_dir, "text_lang_id") != base

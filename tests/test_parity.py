@@ -4,14 +4,13 @@ Every CATALOG entry with an oracle must match DuckDB exactly (row count,
 column names, canonical values) at sf0.001. Entries without an oracle must
 at least execute and return a stable schema.
 
-Each query's output is ALSO checked against its committed golden
-fingerprint (tests/goldens_sf0001.json) — DuckDB parity alone cannot see a
-change where the Spark query and its oracle move together, which is
-exactly the round-8 freshness failure (_CHANGED_THIS_ROUND shipped empty
-over seven such changes).  A golden mismatch means the output changed:
-either revert, or regenerate via ``python scripts/gen_goldens.py <name>``
-AND front the query in ``_CHANGED_THIS_ROUND`` (the boundary-diff audit in
-test_driver_window.py enforces the pairing).
+Each query is ALSO pinned to two committed fingerprints: its golden
+output hash (tests/goldens_sf0001.json; DuckDB parity alone cannot see a
+change where the Spark query and its oracle move together) and its
+normalized analyzed-plan fingerprint (tests/plans_sf0001.json).  A
+mismatch means the output or the plan changed: either revert, or
+regenerate with ``python scripts/gen_goldens.py <name>``; the driver
+window fronts it (``__spark_entry__._driver_order``).
 """
 
 from __future__ import annotations
@@ -23,19 +22,30 @@ import pytest
 from pyspark.sql.types import ArrayType, MapType, StructType
 
 from openalex_walden_spark import queries as q
-from openalex_walden_spark.oracle import compare
+from openalex_walden_spark.oracle import (
+    checkpoint_capture,
+    compare,
+    plan_fingerprint,
+)
 
 q.load_all()
 
 _WITH_ORACLE = sorted(name for name, s in q.CATALOG.items() if s.oracle)
 _ROWS_ONLY = sorted(name for name, s in q.CATALOG.items() if not s.oracle)
 
-_GOLDENS_PATH = os.path.join(os.path.dirname(__file__), "goldens_sf0001.json")
-if os.path.exists(_GOLDENS_PATH):
-    with open(_GOLDENS_PATH, encoding="utf-8") as _f:
-        GOLDENS = json.load(_f)
-else:  # missing file fails the goldens assertions, not pytest collection
-    GOLDENS = {}
+
+def _committed(fname: str) -> dict:
+    """A committed fingerprint file; a missing one fails the pins, not
+    pytest collection."""
+    path = os.path.join(os.path.dirname(__file__), fname)
+    if not os.path.exists(path):
+        return {}
+    with open(path, encoding="utf-8") as f:
+        return json.load(f)
+
+
+GOLDENS = _committed("goldens_sf0001.json")
+PLANS = _committed("plans_sf0001.json")
 
 # The golden fingerprints are computed at the default test scale factor;
 # runs against a different SPARK_GRAFT_TEST_SF_DIR still get full DuckDB
@@ -49,7 +59,8 @@ _GOLDENS_APPLY = (
 @pytest.mark.parametrize("name", _WITH_ORACLE)
 def test_oracle_parity(name, spark, sf_dir, duck):
     spec = q.CATALOG[name]
-    sdf = spec.spark(spark, sf_dir)
+    with checkpoint_capture(spark) as frozen:
+        sdf = spec.spark(spark, sf_dir)
     # Driver-canon contract: the driver's canonicalizer does a raw
     # pandas sort_values over every output column, which crashes on
     # unhashable cell values (list/dict).  Top-level ARRAY/MAP/STRUCT
@@ -75,19 +86,33 @@ def test_oracle_parity(name, spark, sf_dir, duck):
         assert res.spark_golden == GOLDENS[name], (
             f"{name}: output changed vs committed golden "
             f"(got {res.spark_golden}, pinned {GOLDENS[name]}). If "
-            f"intentional: `python scripts/gen_goldens.py {name}` and "
-            f"front the query in _CHANGED_THIS_ROUND."
+            f"intentional, regenerate with `python scripts/gen_goldens.py "
+            f"{name}`; the window fronts it."
         )
+        assert plan_fingerprint(sdf, frozen) == PLANS.get(name), (
+            f"{name}: analyzed plan changed vs tests/plans_sf0001.json. If "
+            f"intentional, regenerate with `python scripts/gen_goldens.py "
+            f"{name}`; the window fronts it."
+        )
+
+
+def _assert_covers_catalog(pinned: dict, fname: str) -> None:
+    missing = sorted(set(q.CATALOG) - set(pinned))
+    stale = sorted(set(pinned) - set(q.CATALOG))
+    assert not missing and not stale, (
+        f"{fname} drift — missing: {missing}; stale: {stale}; "
+        f"run `python scripts/gen_goldens.py`"
+    )
 
 
 def test_goldens_cover_catalog_exactly():
     """The goldens file and the catalog must track each other 1:1."""
-    missing = sorted(set(q.CATALOG) - set(GOLDENS))
-    stale = sorted(set(GOLDENS) - set(q.CATALOG))
-    assert not missing and not stale, (
-        f"goldens drift — missing: {missing}; stale: {stale}; "
-        f"run `python scripts/gen_goldens.py`"
-    )
+    _assert_covers_catalog(GOLDENS, "goldens_sf0001.json")
+
+
+def test_plans_cover_catalog_exactly():
+    """The plan fingerprints and the catalog track each other 1:1."""
+    _assert_covers_catalog(PLANS, "plans_sf0001.json")
 
 
 def test_rows_only_bucket_stays_empty():

@@ -10,6 +10,7 @@ from __future__ import annotations
 import pytest
 
 from openalex_walden_spark import queries as q
+from openalex_walden_spark.oracle import checkpoint_capture
 
 q.load_all()
 
@@ -1606,20 +1607,12 @@ def _spread_violations(plan: str, tables) -> list[str]:
     return bad
 
 
-def _plans_with_checkpoints(spark, sf_dir, name, monkeypatch) -> list[str]:
+def _plans_with_checkpoints(spark, sf_dir, name) -> list[str]:
     """The query's final physical plan plus every sub-plan it froze
     behind a localCheckpoint barrier (those hide their scans)."""
-    frozen: list[str] = []
-    cls = type(spark.range(0))
-    orig = cls.localCheckpoint
-
-    def record(self, *args, **kwargs):
-        qe = self._jdf.queryExecution()  # noqa: SLF001
-        frozen.append(qe.executedPlan().toString())
-        return orig(self, *args, **kwargs)
-
-    monkeypatch.setattr(cls, "localCheckpoint", record)
-    return frozen + [_plan(spark, sf_dir, name)]
+    with checkpoint_capture(spark) as frozen:
+        final = _plan(spark, sf_dir, name)
+    return [qe.executedPlan().toString() for qe in frozen] + [final]
 
 
 def test_spread_must_name_a_read_table():
@@ -1632,14 +1625,12 @@ def test_spread_must_name_a_read_table():
 
 
 @pytest.mark.parametrize("name", _SPREAD)
-def test_spread_exchange_sits_on_each_declared_scan(
-    spark, sf_dir, name, monkeypatch
-):
+def test_spread_exchange_sits_on_each_declared_scan(spark, sf_dir, name):
     """Every scan of a declared table sits directly under one
     ``Exchange RoundRobinPartitioning``, and there is no other
     round-robin exchange in the query."""
     spec = q.CATALOG[name]
-    plans = _plans_with_checkpoints(spark, sf_dir, name, monkeypatch)
+    plans = _plans_with_checkpoints(spark, sf_dir, name)
     joined = "\n".join(plans)
     assert "Exchange RoundRobinPartitioning" in joined
     bad = [v for p in plans for v in _spread_violations(p, spec.spread)]
