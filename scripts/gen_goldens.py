@@ -21,6 +21,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+from pathlib import Path
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -48,8 +49,8 @@ def main() -> int:
         return 2
 
     goldens, plans = (
-        json.load(open(p, encoding="utf-8")) if os.path.exists(p) else {}
-        for p in (GOLDENS_PATH, PLANS_PATH))
+        json.loads(Path(p).read_text(encoding="utf-8")) if os.path.exists(p)
+        else {} for p in (GOLDENS_PATH, PLANS_PATH))
 
     # Mirror tests/conftest.py exactly — the parity suite must reproduce
     # every fingerprint this script writes.
