@@ -29,8 +29,14 @@ the key — the full out-of-order contract, not just the upsert half.
 Layout::
 
     state_path/
-      manifest_v00000002.json     # {"n_buckets": N, "buckets": {"3": 2}}
+      manifest_v00000002.json     # {"n_buckets": N, "keys": [...],
+                                  #  "schema": {...}, "buckets": {"3": 2}}
       buckets/3/v_00000002/part-*.parquet   # immutable
+
+The manifest carries the schema of the bucket files, as Delta's
+``metaData`` action does, so reads pass it to the parquet reader
+instead of launching a footer-inference job. A manifest written
+without it is read by inference and gets the field at its next commit.
 
 No driver-side data loops: the only collected values are the touched
 bucket ids (≤ n_buckets scalars — the same driver-scalar budget as the
@@ -47,6 +53,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 _M_RE = re.compile(r"^manifest_v(\d{8})\.json$")
@@ -132,6 +139,17 @@ def _read_manifest(state_path: str, version: int) -> dict:
         return json.load(f)
 
 
+def _read_buckets(spark: SparkSession, manifest: dict, paths: Sequence[str]) -> DataFrame:
+    """Read bucket files with the manifest's schema when it has one."""
+    reader = spark.read
+    if "schema" in manifest:
+        reader = reader.schema(StructType.fromJson(manifest["schema"]))
+    df = reader.parquet(*paths)
+    if _TOMBSTONE not in df.columns:
+        df = df.withColumn(_TOMBSTONE, F.lit(False))
+    return df
+
+
 def _bucket_dir(state_path: str, bucket: int, version: int) -> str:
     return os.path.join(state_path, "buckets", str(bucket), f"v_{version:08d}")
 
@@ -162,9 +180,7 @@ def read_state(
     ]
     if not paths:
         return None
-    df = spark.read.parquet(*paths)
-    if _TOMBSTONE not in df.columns:
-        df = df.withColumn(_TOMBSTONE, F.lit(False))
+    df = _read_buckets(spark, manifest, paths)
     if include_tombstones:
         return df
     return df.where(~F.col(_TOMBSTONE)).drop(_TOMBSTONE)
@@ -180,15 +196,15 @@ def merge_into_state(
     tie_breaker: str | None = None,
     keep_versions: int = 2,
     n_buckets: int = DEFAULT_BUCKETS,
-) -> DataFrame:
+) -> None:
     """One partition-pruned MERGE round against a bucketed state table.
 
     Reads only the buckets the batch touches, window-merges them with
     the batch (one shuffle over touched data, never the whole table),
     writes each touched bucket as a new immutable version directory, and
     commits a manifest pointing untouched buckets at their existing
-    files. Deletes become tombstones (see module doc). Returns the live
-    state.
+    files. Deletes become tombstones (see module doc). Read the result
+    with :func:`read_state`.
 
     ``n_buckets`` is fixed at state creation (persisted in the
     manifest); later calls inherit it.
@@ -200,7 +216,7 @@ def merge_into_state(
         prev_buckets: dict[str, int] = dict(manifest["buckets"])
         _check_keys(manifest, keys, state_path)
     else:
-        prev_buckets = {}
+        manifest, prev_buckets = {}, {}
 
     tomb = (
         F.coalesce(delete_predicate, F.lit(False))
@@ -220,10 +236,7 @@ def merge_into_state(
         if str(b) in prev_buckets
     ]
     if touched_paths:
-        target = spark.read.parquet(*touched_paths)
-        if _TOMBSTONE not in target.columns:
-            target = target.withColumn(_TOMBSTONE, F.lit(False))
-        target = target.withColumn(_BUCKET, bexpr)
+        target = _read_buckets(spark, manifest, touched_paths).withColumn(_BUCKET, bexpr)
     else:
         target = None
 
@@ -238,10 +251,9 @@ def merge_into_state(
     staging = os.path.join(state_path, f"_staging_v{next_v:08d}")
     merged.write.mode("overwrite").partitionBy(_BUCKET).parquet(staging)
     _commit_staged(
-        state_path, staging, next_v, n_buckets, keys,
+        state_path, staging, next_v, n_buckets, keys, merged.drop(_BUCKET).schema,
         base_buckets=prev_buckets, touched=touched, keep_versions=keep_versions,
     )
-    return read_state(spark, state_path)
 
 
 def _check_keys(manifest: dict, keys: Sequence[str], state_path: str) -> None:
@@ -264,15 +276,18 @@ def _commit_staged(
     next_v: int,
     n_buckets: int,
     keys: Sequence[str],
+    schema: StructType,
     base_buckets: dict[str, int],
     touched: Sequence[int] | None,
     keep_versions: int,
 ) -> None:
     """Atomically promote a staged partitionBy(_BUCKET) write: move each
     staged bucket dir to its versioned home, commit the manifest (the
-    atomic point), vacuum. ``touched`` limits which bucket pointers may
-    change (incremental merge); None promotes every staged bucket and
-    starts from ``base_buckets`` as given (rebucket passes {})."""
+    atomic point), vacuum. The manifest records ``schema``, the schema
+    of the bucket files, for readers. ``touched`` limits which bucket
+    pointers may change (incremental merge); None promotes every staged
+    bucket and starts from ``base_buckets`` as given (rebucket passes
+    {})."""
     staged: dict[int, str] = {}
     for name in os.listdir(staging):
         m = re.match(rf"^{_BUCKET}=(\d+)$", name)
@@ -302,6 +317,7 @@ def _commit_staged(
     manifest_out = {
         "n_buckets": n_buckets,
         "keys": list(keys),
+        "schema": schema.jsonValue(),
         "buckets": new_buckets,
     }
     tmp = os.path.join(state_path, f"_manifest_v{next_v:08d}.tmp")
@@ -342,7 +358,7 @@ def rebucket_state(
     keys: Sequence[str],
     n_buckets_new: int,
     keep_versions: int = 2,
-) -> DataFrame:
+) -> None:
     """OPTIMIZE-style maintenance: rewrite the state table into a new
     bucket count and commit it as one manifest version.
 
@@ -371,7 +387,6 @@ def rebucket_state(
     staging = os.path.join(state_path, f"_staging_v{next_v:08d}")
     staged.write.mode("overwrite").partitionBy(_BUCKET).parquet(staging)
     _commit_staged(
-        state_path, staging, next_v, n_buckets_new, keys,
+        state_path, staging, next_v, n_buckets_new, keys, full.schema,
         base_buckets={}, touched=None, keep_versions=keep_versions,
     )
-    return read_state(spark, state_path)

@@ -5,6 +5,18 @@ region nation customer supplier part orders lineitem events documents
 embeddings. Loading goes through ``spark.read.parquet`` so Catalyst gets
 predicate pushdown + column pruning on the scan for free.
 
+Each file's schema is inferred once per process. Inference launches a
+one-task footer-reading job ("parquet at <unknown>:0") on every
+``spark.read.parquet`` that is not given a schema; a catalog store or a
+Delta log records the schema instead, so the reads of the reference
+never pay for it. ``_SCHEMAS`` keeps the first inferred schema of each
+file, keyed by its identity ``(path, st_mtime_ns, st_size)`` plus the
+values of the confs that change what inference returns
+(``_INFERENCE_CONFS``). Later reads pass it to ``spark.read.schema``,
+which plans without a job. A rewritten file gets a new key, so it is
+inferred again. Every read still builds a fresh relation with fresh
+exprIds, so self-joins resolve exactly as with inference.
+
 ``events.parquet`` needs special handling: its ``ts`` column is physical
 INT64 TIMESTAMP(NANOS), which stock Spark 4.x rejects with
 ``PARQUET_TYPE_ILLEGAL``. We read it with
@@ -25,6 +37,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -41,13 +54,28 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# Confs the engine sets that change the schema parquet inference returns.
+_INFERENCE_CONFS = ("spark.sql.legacy.parquet.nanosAsLong",)
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    st = os.stat(path)
+    key = (path, st.st_mtime_ns, st.st_size, *map(spark.conf.get, _INFERENCE_CONFS))
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = df.schema
+    return df
+
 
 def _load_events(spark: SparkSession, path: str) -> DataFrame:
     # The conf is left enabled: it only affects nanosecond-precision parquet
     # columns (which Spark would otherwise refuse to read at all), and the
     # lazy DataFrame must still see it at execution time.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    df = _read_parquet(spark, path)
     if dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts_us", F.expr("ts div 1000")).withColumn(
             "ts", F.timestamp_micros(F.col("ts_us"))
@@ -71,7 +99,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         return _load_events(spark, path)
-    return spark.read.parquet(path)
+    return _read_parquet(spark, path)
 
 
 def register_views(

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -26,6 +27,28 @@ def spark():
     )
     yield spark
     spark.stop()
+
+
+@pytest.fixture()
+def jobs_in(spark):
+    """``with jobs_in("name") as ids:`` fills ``ids`` with the ids of the
+    Spark jobs the block launched, once the block has ended."""
+    sc = spark.sparkContext
+
+    @contextlib.contextmanager
+    def counting(group: str):
+        ids: list[int] = []
+        sc.setJobGroup(group, group)
+        try:
+            yield ids
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            # job starts reach the status store through the listener bus
+            sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+            ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+    return counting
 
 
 @pytest.fixture(scope="session")

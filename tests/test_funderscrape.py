@@ -366,6 +366,7 @@ def test_arc_parse_plan(spark, sf_dir):
     assert schema["start_year"] == "bigint"
 
 
+@pytest.mark.skipif(not os.path.isdir(_REF_DIR), reason="reference absent")
 def test_nstc_grb_is_the_most_grb_template():
     """nstc_grb_to_s3.py is the taiwan_most_grb_to_s3.py template with
     different constants (funder id 2461203286 vs 4320322795, plan-organ
@@ -395,6 +396,7 @@ def test_nstc_grb_is_the_most_grb_template():
         assert a[name] == b[name], f"{name} diverged between the GRB twins"
 
 
+@pytest.mark.skipif(not os.path.isdir(_REF_DIR), reason="reference absent")
 def test_sshrc_header_map_matches_reference():
     """The SSHRC bilingual/per-era header registry
     (openalex_walden_spark/queries/sshrcparse.py:HEADER_MAP) must equal
@@ -418,6 +420,7 @@ def test_sshrc_header_map_matches_reference():
     assert dict(HEADER_MAP) == mapping
 
 
+@pytest.mark.skipif(not os.path.isdir(_REF_DIR), reason="reference absent")
 def test_sloan_region_tables_match_reference():
     """The US-state and country-name tables in sloanparse must equal the
     reference's US_STATE_CODES / COUNTRY_NAME_TO_CODE (sloan_to_s3.py:
@@ -443,6 +446,7 @@ def test_sloan_region_tables_match_reference():
     assert dict(COUNTRY_NAME_TO_CODE) == countries
 
 
+@pytest.mark.skipif(not os.path.isdir(_REF_DIR), reason="reference absent")
 def test_dreyfus_program_registry_matches_reference():
     """The 4-scheme PROGRAM registry in dreyfusparse must match the
     reference's PROGRAMS list (dreyfus_to_s3.py:129-170) on every

@@ -53,6 +53,40 @@ def test_incremental_scan_pushdown(spark, sf_dir):
     assert "PushedFilters" in plan and "o_orderdate" in plan
 
 
+def test_register_views_reuses_inferred_schemas(spark, sf_dir, jobs_in):
+    """Only the first read of a fixture infers its schema; registering
+    the same unchanged files again plans without a Spark job, and each
+    read is still a fresh relation, so a self-join resolves."""
+    from openalex_walden_spark.tables import load_table, register_views
+
+    register_views(spark, sf_dir, ("orders", "part"))
+    with jobs_in("register_views_again") as jobs:
+        dfs = register_views(spark, sf_dir, ("orders", "part"))
+    assert jobs == []
+    assert set(dfs) == {"orders", "part"}
+    a = dfs["orders"]
+    b = load_table(spark, sf_dir, "orders")
+    assert a.join(b, a.o_orderkey == b.o_orderkey).count() == a.count() > 0
+
+
+def test_load_table_reinfers_a_rewritten_file(spark, tmp_path):
+    """The kept schema is keyed by the file's identity: rewriting the
+    file with another schema makes the next read infer it again."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from openalex_walden_spark.tables import load_table
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"id": [1, 2]}), path)
+    assert load_table(spark, str(tmp_path), "t").columns == ["id"]
+    assert load_table(spark, str(tmp_path), "t").columns == ["id"]
+    pq.write_table(pa.table({"id": [3], "name": ["c"]}), path)
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.columns == ["id", "name"]
+    assert [tuple(r) for r in df.collect()] == [(3, "c")]
+
+
 def test_export_snapshot_manifest_roundtrip(spark, tmp_path):
     df = spark.createDataFrame(
         [(1, "a\x00b  c", "X"), (2, "plain", "Y")], "id long, text string, tag string"

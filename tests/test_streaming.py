@@ -3,10 +3,12 @@ semantics the oracle-checked catalog queries define."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from openalex_walden_spark.operators.merge import merge_into_state, merge_upsert, read_state
 from openalex_walden_spark.streaming.expectations import split_on_expectations
@@ -473,6 +475,7 @@ def test_rebucket_state_optimize(spark, tmp_path):
     v = current_version(state)
     m = _read_manifest(state, v)
     assert m["n_buckets"] == 16
+    assert StructType.fromJson(m["schema"]).fieldNames() == ["k", "v", "seq", "_tombstone"]
     live_after = {r["k"]: r["v"] for r in read_state(spark, state).collect()}
     assert live_after == live_before
     # the tombstone crossed the rewrite: a stale (older-seq) upsert for
@@ -485,6 +488,68 @@ def test_rebucket_state_optimize(spark, tmp_path):
     merge_into_state(spark, state, fresh, ["k"], "seq")
     final = {r["k"]: r["v"] for r in read_state(spark, state).collect()}
     assert final[7] == "back" and len(final) == 100
+
+
+def _manifest_path(state: str) -> str:
+    from openalex_walden_spark.operators.merge import current_version
+
+    return os.path.join(state, f"manifest_v{current_version(state):08d}.json")
+
+
+def test_manifest_carries_state_schema(spark, tmp_path):
+    """The commit records the bucket files' schema, as Delta's metaData
+    action does, and it equals what footer inference reads from them."""
+    state = str(tmp_path / "schema_state")
+    b1 = spark.createDataFrame([(1, "a", 1), (2, "b", 1)], "k int, v string, seq int")
+    merge_into_state(spark, state, b1, ["k"], "seq", n_buckets=4)
+    with open(_manifest_path(state)) as f:
+        manifest = json.load(f)
+    schema = StructType.fromJson(manifest["schema"])
+    assert schema.fieldNames() == ["k", "v", "seq", "_tombstone"]
+    buckets = [
+        os.path.join(state, "buckets", b, f"v_{bv:08d}") for b, bv in manifest["buckets"].items()
+    ]
+    assert read_state(spark, state, include_tombstones=True).schema == spark.read.parquet(*buckets).schema
+
+
+def test_read_state_launches_no_job(spark, tmp_path, jobs_in):
+    """With the schema in the manifest, reading merged state plans
+    without a footer-inference job."""
+    state = str(tmp_path / "nojob_state")
+    b1 = spark.createDataFrame([(i, f"v{i}", 1) for i in range(20)], "k int, v string, seq int")
+    merge_into_state(spark, state, b1, ["k"], "seq", n_buckets=4)
+    b2 = spark.createDataFrame([(3, "new", 2)], "k int, v string, seq int")
+    merge_into_state(spark, state, b2, ["k"], "seq")
+    with jobs_in("read_state") as jobs:
+        df = read_state(spark, state)
+    assert jobs == []
+    final = {r["k"]: r["v"] for r in df.collect()}
+    assert len(final) == 20 and final[3] == "new"
+
+
+def test_manifest_without_schema_reads_and_backfills(spark, tmp_path):
+    """A manifest written before the schema was recorded still reads and
+    merges by inference, and the next commit writes the schema back."""
+    state = str(tmp_path / "legacy_state")
+    b1 = spark.createDataFrame([(i, f"v{i}", 1) for i in range(20)], "k int, v string, seq int")
+    merge_into_state(spark, state, b1, ["k"], "seq", n_buckets=4)
+    path = _manifest_path(state)
+    with open(path) as f:
+        manifest = json.load(f)
+    schema = manifest.pop("schema")
+    with open(path, "w") as f:
+        json.dump(manifest, f)
+
+    assert {r["k"]: r["v"] for r in read_state(spark, state).collect()} == {
+        i: f"v{i}" for i in range(20)
+    }
+    b2 = spark.createDataFrame([(3, "new", 2), (25, "w", 1)], "k int, v string, seq int")
+    merge_into_state(spark, state, b2, ["k"], "seq")
+    final = {r["k"]: r["v"] for r in read_state(spark, state).collect()}
+    assert len(final) == 21 and final[3] == "new" and final[25] == "w"
+    with open(_manifest_path(state)) as f:
+        written = json.load(f)["schema"]
+    assert StructType.fromJson(written).simpleString() == StructType.fromJson(schema).simpleString()
 
 
 def test_merge_rejects_mismatched_bucket_keys(spark, tmp_path):

@@ -9979,10 +9979,13 @@ def test_cifar_rule_tables_match_reference_source():
     """AST-pin the keyword / suffix vocabularies against
     scripts/local/cifar_to_s3.py (:133-139, :512)."""
     import ast
+    import os
 
     from openalex_walden_spark.queries import cifarparse as port
 
     ref = "/root/reference/scripts/local/cifar_to_s3.py"
+    if not os.path.exists(ref):
+        pytest.skip("reference absent")
     src = open(ref, encoding="utf-8").read()
     tree = ast.parse(src)
     found = {}
@@ -10114,7 +10117,11 @@ def test_kauffman_matches_reference_semantics(spark, sf_dir, orders_rows):
 def test_kauffman_rules_match_reference_source():
     """Pin the coercion / dedupe / double-unescape rules against
     scripts/local/kauffman_to_s3.py."""
+    import os
+
     ref = "/root/reference/scripts/local/kauffman_to_s3.py"
+    if not os.path.exists(ref):
+        pytest.skip("reference absent")
     src = open(ref, encoding="utf-8").read()
     # keep-first dedupe is a silent continue, not a raise (:303-306)
     assert "if funder_award_id in seen_ids:\n            continue" in src
@@ -10504,6 +10511,7 @@ def test_laureate_rule_tables_match_reference_source():
     """AST-pin the four members' rule tables against their reference
     scripts."""
     import ast
+    import os
 
     from openalex_walden_spark.queries import laureateprize as port
 
@@ -10519,6 +10527,8 @@ def test_laureate_rule_tables_match_reference_source():
         return src, found
 
     base = "/root/reference/scripts/local/"
+    if not os.path.isdir(base):
+        pytest.skip("reference absent")
     src, f = pinned(base + "kyoto_prize_to_s3.py",
                     {"CATEGORY_BY_CLASS", "ORG_HINTS",
                      "CURRENT_CATEGORY_AMOUNT",
@@ -10914,10 +10924,13 @@ def test_method5_award_ids_unique_per_member(spark, sf_dir):
 
 def test_schmidt_constants_match_reference():
     import ast
+    import os
 
     from openalex_walden_spark.queries import method5 as port
 
     ref = "/root/reference/scripts/local/schmidt_sciences_to_s3.py"
+    if not os.path.exists(ref):
+        pytest.skip("reference absent")
     src = open(ref, encoding="utf-8").read()
     tree = ast.parse(src)
     found = {}
@@ -11300,7 +11313,10 @@ def test_laureate_macarthur_matches_reference(lp_rows, orders_rows):
 def test_laureate_welch_macarthur_kit_pins():
     """Pin the welch/macarthur shared kit + macarthur constants."""
     import ast
+    import os
 
+    if not os.path.isdir("/root/reference/scripts/local"):
+        pytest.skip("reference absent")
     for script in ("welch_award_to_s3.py", "macarthur_fellows_to_s3.py"):
         src = open(f"/root/reference/scripts/local/{script}",
                    encoding="utf-8").read()
