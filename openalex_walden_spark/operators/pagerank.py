@@ -12,16 +12,13 @@ module is the real loop, with the same discipline as
   AND lets a SQL oracle replay the whole loop as unrolled CTEs (extra
   iterations past the fixed point are no-ops).
 - **Bounded lineage.** The edge⋈degree plane is localCheckpoint'ed
-  once; the score table is localCheckpoint'ed every ``check_every``
+  once; the score table is localCheckpoint'ed every ``CHECK_EVERY``
   rounds, so the live plan never exceeds a constant number of joins no
-  matter how many rounds run.  check_every also bounds the
-  re-execution that broadcasting an un-materialized score chain costs
-  (a broadcast runs its child plan independently), measured fastest at
-  2 on the bench fixture.
+  matter how many rounds run.
 - **O(1) driver state.** Convergence is detected from a one-row score
   fingerprint (sum of per-row hashes), never by collecting scores.
-- **Cycle-safe early stop.** The loop checks every ``check_every``
-  rounds and caps at ``max_rounds`` — a multiple of ``check_every`` —
+- **Cycle-safe early stop.** The loop checks every ``CHECK_EVERY``
+  rounds and caps at ``max_rounds`` — a multiple of ``CHECK_EVERY`` —
   so even if the integer dynamics fell into a short cycle instead of a
   fixed point, the early-stopped state equals the state after exactly
   ``max_rounds`` rounds (period divides the check interval, and the cap
@@ -29,10 +26,10 @@ module is the real loop, with the same discipline as
   ``max_rounds`` iterations unconditionally; both sides agree in every
   case.
 
-Scale shape per superstep: one equi-join edges ⋈ scores on src (scores
-is |V| rows — broadcast when small, shuffle-partitioned by src when
-not) plus one dst-keyed partial aggregate.  Dangling-node mass is
-dropped (standard simplification); damping d is applied as
+Scale shape per superstep: one equi-join edges ⋈ scores on src (the
+edge plane is hash-partitioned on src once at setup, so only the |V|-row
+score table moves) plus one dst-keyed partial aggregate.  Dangling-node
+mass is dropped (standard simplification); damping d is applied as
 (num * x) // den.
 """
 
@@ -44,6 +41,17 @@ from pyspark.sql import functions as F
 from .checkpoints import SESSION_SCOPE_LOCK, CheckpointJanitor
 
 PR_ONE = 1_000_000_000_000  # fixed-point 1.0
+# Rounds between score checkpoints and convergence checks (the r13
+# cadence A/B in SCALING.md found 1, 2 and 4 within host noise).
+CHECK_EVERY = 2
+# Session confs scoped to the loop (restored in a finally).  AQE would
+# materialize every exchange of every superstep as its own job, and with
+# the cardinalities known and constant (|V| rows per round) its runtime
+# re-planning buys nothing; 8 partitions fit the |V|-row score table.
+_LOOP_CONFS = {
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.shuffle.partitions": "8",
+}
 
 
 def _score_fingerprint(scores: DataFrame) -> int:
@@ -67,49 +75,28 @@ def pagerank_fixedpoint(
     damping_num: int = 85,
     damping_den: int = 100,
     max_rounds: int = 44,
-    check_every: int = 2,
-    broadcast_scores: bool = False,
-    adaptive: bool = False,
-    superstep_partitions: int | None = None,
 ) -> DataFrame:
     """Run integer PageRank to its exact fixed point (capped at
     ``max_rounds``).  Returns ``(node, score)`` with BIGINT fixed-point
     scores (PR_ONE == 1.0).
 
-    Plan choice (r13, the graph_pagerank_fixedpoint perf-weak fix):
-    the default is SHUFFLE-JOIN supersteps over edges hash-partitioned
-    on src ONCE at setup (LogicalRDD preserves the partitioning across
-    the localCheckpoint), so per round only the |V|-row score table and
-    the partial-aggregated inmass move — the classic Pregel plan, and
-    the right one at every scale: the edge plane never re-shuffles, and
-    unlike a broadcast the scores are not re-shipped to every executor
-    each round.  ``broadcast_scores=True`` keeps the old plan (scores
-    broadcast into the edge join) for node tables small enough that the
-    per-round broadcast beats a |V|-row exchange on a real cluster.
-
-    ``adaptive``/``superstep_partitions`` scope two session configs to
-    the loop (restored in a finally):  AQE materializes EVERY exchange
-    of every superstep as its own job, and with the cardinalities known
-    and constant (|V| rows per round) its runtime re-planning buys
-    nothing while multiplying scheduling latency — the r13 job-count
-    A/B measured 82 jobs / 10.8s (AQE on, broadcast) vs 32 jobs / 6.5s
-    (AQE off, shuffle, 8 partitions) on identical output
-    (scripts/ab_pagerank_jobs.py, fingerprints bit-identical).  Pass
-    ``superstep_partitions`` sized so |V| / partitions rows fit a task
-    comfortably; None leaves the session value untouched.  The scoped
-    value also governs the ONE-TIME edge setup (distinct/degree/
-    repartition), so for a huge edge plane either leave it None or
-    pre-shape the edges upstream before calling this.
+    The plan (r13, the graph_pagerank_fixedpoint perf-weak fix) is
+    SHUFFLE-JOIN supersteps over edges hash-partitioned on src ONCE at
+    setup (LogicalRDD preserves the partitioning across the
+    localCheckpoint), so per round only the |V|-row score table and the
+    partial-aggregated inmass move — the classic Pregel plan: the edge
+    plane never re-shuffles, and the scores are not re-shipped to every
+    executor each round.  The loop runs under ``_LOOP_CONFS``: the r13
+    job-count A/B measured 82 jobs / 10.8s for the broadcast plan with
+    AQE on against 32 jobs / 6.5s for this one, on identical output
+    (SCALING.md).  The scoped partition count also governs the ONE-TIME
+    edge setup (distinct/degree/repartition), so pre-shape a huge edge
+    plane upstream before calling this.
     """
-    if max_rounds % check_every:
-        raise ValueError("max_rounds must be a multiple of check_every")
+    if max_rounds % CHECK_EVERY:
+        raise ValueError("max_rounds must be a multiple of CHECK_EVERY")
     spark = edges.sparkSession
     saved: dict[str, str] = {}
-
-    def _scope(key: str, value: str) -> None:
-        saved[key] = spark.conf.get(key)
-        spark.conf.set(key, value)
-
     # Session confs are session-GLOBAL: the scope/restore below is only
     # sound while no concurrent query shares this SparkSession, so the
     # whole call serializes on SESSION_SCOPE_LOCK (which the checkpoint
@@ -120,10 +107,9 @@ def pagerank_fixedpoint(
     jan = CheckpointJanitor(spark)
     keep: set[str] = set()
     try:
-        if not adaptive:
-            _scope("spark.sql.adaptive.enabled", "false")
-        if superstep_partitions is not None:
-            _scope("spark.sql.shuffle.partitions", str(superstep_partitions))
+        for key, value in _LOOP_CONFS.items():
+            saved[key] = spark.conf.get(key)
+            spark.conf.set(key, value)
 
         e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         # One materialization of the (possibly expensive) edge lineage;
@@ -137,16 +123,11 @@ def pagerank_fixedpoint(
         )
         outdeg = e.groupBy("src").agg(F.count("*").alias("d"))
         # The per-edge contribution denominator is static: join it ONCE
-        # and checkpoint, so no superstep repeats the degree join.  In
-        # the shuffle-join plan (broadcast_scores=False) the checkpoint
-        # is taken AFTER hash-partitioning on src: LogicalRDD preserves
-        # the output partitioning, so every superstep's edges-side
-        # shuffle is elided — only the |V|-row score table moves per
-        # round.
-        ed = e.join(outdeg, "src")
-        if not broadcast_scores:
-            ed = ed.repartition(F.col("src"))
-        ed = ed.localCheckpoint()
+        # and checkpoint AFTER hash-partitioning on src, so no superstep
+        # repeats the degree join and every superstep's edges-side
+        # shuffle is elided (LogicalRDD preserves the output
+        # partitioning) — only the |V|-row score table moves per round.
+        ed = e.join(outdeg, "src").repartition(F.col("src")).localCheckpoint()
         jan.mark("setup")
 
         base = (PR_ONE * (damping_den - damping_num)) // damping_den
@@ -155,11 +136,10 @@ def pagerank_fixedpoint(
         )
         prev_fp = None
         round_tag = "setup"
-        for rnd in range(max_rounds // check_every):
-            for _ in range(check_every):
+        for rnd in range(max_rounds // CHECK_EVERY):
+            for _ in range(CHECK_EVERY):
                 scores = _superstep(
-                    ed, nodes, scores, base, damping_num, damping_den,
-                    broadcast_scores,
+                    ed, nodes, scores, base, damping_num, damping_den
                 )
             # Lazy checkpoint: the fingerprint action materializes it —
             # one job per check instead of two.
@@ -189,25 +169,16 @@ def _superstep(
     base: int,
     damping_num: int,
     damping_den: int,
-    broadcast_scores: bool = True,
 ) -> DataFrame:
     """One Pregel superstep: equi-join (edges⋈degree) ⋈ scores on src,
     dst-keyed partial aggregate, damped rebase over the node universe."""
-    s = scores.withColumnRenamed("node", "src")
-    if broadcast_scores:
-        s = F.broadcast(s)
     inmass = (
-        ed.join(s, "src")
+        ed.join(scores.withColumnRenamed("node", "src"), "src")
         .select("dst", F.expr("score div d").alias("contrib"))
         .groupBy("dst")
         .agg(F.sum("contrib").alias("inmass"))
     )
-    im = inmass.withColumnRenamed("dst", "node")
-    if broadcast_scores:
-        # inmass is |V| rows — broadcast it onto the node universe too,
-        # so the rebase left join is also shuffle-free.
-        im = F.broadcast(im)
-    return nodes.join(im, "node", "left").select(
+    return nodes.join(inmass.withColumnRenamed("dst", "node"), "node", "left").select(
         "node",
         (
             F.lit(base)

@@ -145,16 +145,17 @@ def checkpoint_capture(spark):
 
 
 # Run-dependent tokens of an analyzed plan string: exprIds, generated
-# CTE ids and PySpark lambda variable suffixes (both renumbered by first
-# appearance), common-subexpression names, file paths and the
-# core-derived repartition counts.
+# CTE ids (a recursive CTE's UnionLoop carries its CTE's id) and PySpark
+# lambda variable suffixes (both renumbered by first appearance),
+# common-subexpression names, file paths and the core-derived
+# repartition counts.
 _EXPR_ID = re.compile(r"#\d+")
 _COMMON_EXPR = re.compile(r"_common_expr_\d+")
 _FILE_PATH = re.compile(r"file:[^\s,\])]*")
 _REPARTITION_N = re.compile(
     r"^(.*(?:Repartition|RepartitionByExpression \[.*\],)) \d+", re.M)
 _RENUMBERED = (
-    re.compile(r"(CTERelation(?:Def|Ref) )(\d+)"),
+    re.compile(r"((?:CTERelation(?:Def|Ref)|UnionLoop(?:Ref)?) )(\d+)"),
     re.compile(r"(lambda \w+?_)(\d+)\b"),
 )
 

@@ -22,13 +22,13 @@ Three shapes:
 
 * ``institution_ancestors_lineage`` — the reference computes lineage
   with a RECURSIVE CTE (depth-d hierarchy = d sequential self-join
-  rounds).  Spark-first this is transitive closure by POINTER DOUBLING:
-  round k holds every (institution, ancestor) pair within distance 2^k,
-  so ROR-deep lineages resolve in ceil(log2 d) shuffle rounds — the same
-  large-step discipline as ``hierarchy_flatten_doubling`` but emitting
-  the FULL ancestor set with generation numbers, not just the root.  The
-  DuckDB oracle IS the reference's recursive CTE, so the log-round
-  rewrite is hash-checked against real recursion.
+  rounds).  Spark 4.1 can run that CTE too (``UNION ALL`` only), but
+  here it stays transitive closure by POINTER DOUBLING: round k holds
+  every (institution, ancestor) pair within distance 2^k, so ROR-deep
+  lineages resolve in ceil(log2 d) shuffle rounds, and a recursive
+  port measured slower for taking d (ROADMAP direction 1).  The DuckDB
+  oracle IS the reference's recursive CTE, so the log-round rewrite is
+  hash-checked against real recursion.
 
 Scores are constructed as exact 1e-4 multiples so ROUND(score, 4) is
 exact in both engines; the reference's FLOAT narrowing is skipped (a
@@ -394,7 +394,8 @@ def institution_ancestors_lineage(spark: SparkSession, sf_dir: str) -> DataFrame
     Round k closes every ancestor pair within distance 2^k: T_{{k+1}} =
     T_k ∪ compose(T_k, T_k), deduped per round.  Four rounds cover
     depth-16 lineage — ROR's real hierarchy tops out around 8 — in
-    ceil(log2 d) shuffle rounds where the reference's recursion takes d.
+    ceil(log2 d) shuffle rounds where the reference's recursion takes d;
+    a deeper lineage is cut at generation 16 without an error.
     The ROR-id URL-prefix strip, the 'parent'-only edge filter, and the
     merged-institution gates (BOTH endpoints, which also severs chains
     through a merged-away intermediate, matching the recursion) live in

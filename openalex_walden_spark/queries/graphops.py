@@ -20,10 +20,10 @@ as (85 * x) // 100.
 (both sides partitioned by the join key) plus one dst-keyed aggregate —
 the same two shuffles a Pregel superstep costs.  The loop itself lives
 in ``operators/pagerank.py``: runs to the exact integer fixed point
-(capped at 44 rounds), localCheckpoints every 2 rounds so lineage stays
+(capped at 32 rounds), localCheckpoints every 2 rounds so lineage stays
 constant-size, and detects convergence from a one-row score fingerprint
 — the ``operators/components.py`` loop discipline.  The oracle replays
-all 44 rounds as materialized CTEs; past the fixed point they are
+all 32 rounds as materialized CTEs; past the fixed point they are
 no-ops, so both engines agree whether or not Spark stopped early.
 """
 
@@ -40,7 +40,7 @@ _H_EXPR = "cast(conv(substr(md5({x}), 1, 15), 16, 10) as bigint)"
 _PR_NODES = 1024
 _PR_ONE = 1_000_000_000_000  # fixed-point 1.0
 # Fixture damping d = 0.70 (the operator's default stays the classic
-# 0.85): the per-superstep PLAN — one broadcast equi-join + one
+# 0.85): the per-superstep PLAN — one equi-join + one
 # dst-keyed partial aggregate — is identical at any damping, but the
 # spectral contraction is much faster, so the bench measures superstep
 # cost instead of 40 rounds of local[32] job overhead (round-6/7
@@ -109,14 +109,6 @@ def graph_pagerank_fixedpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         damping_num=_PR_NUM,
         damping_den=_PR_DEN,
         max_rounds=_PR_MAX_ROUNDS,
-        check_every=2,
-        # r13 perf fix (verdict #2): shuffle-join supersteps + AQE off
-        # + 8 superstep partitions — 32 jobs / 6.5s vs the broadcast
-        # plan's 82 jobs / 10.8s same-session, bit-identical scores
-        # (scripts/ab_pagerank_jobs.py; operator docstring).
-        broadcast_scores=False,
-        adaptive=False,
-        superstep_partitions=8,
     )
     return scores.select("node", F.col("score").alias("pagerank_fp"))
 
@@ -392,10 +384,13 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Hierarchy flattening by pointer doubling (the recursive-CTE replacement)
+# Hierarchy flattening as a recursive CTE (the oracle's formulation)
 # --------------------------------------------------------------------------
 _HIER_FANOUT = 10  # synthetic tree: parent(c) = c div 10, roots are 1..9
-_HIER_ROUNDS = 4  # doubling: 4 rounds resolve depth ≤ 2^4 (custkey ≤ 10^16)
+# A BIGINT key has at most 19 digits, so its walk ends by depth 18; the
+# loop needs one level more to come back empty (19 is the least level
+# that walks 2^63 - 1 to its root).
+_HIER_MAX_LEVEL = 19
 
 _HIER_SQL = f"""
 WITH RECURSIVE walk(node, cur, depth) AS (
@@ -408,6 +403,18 @@ SELECT node, cur::BIGINT AS root, depth::BIGINT AS depth
 FROM walk WHERE cur < {_HIER_FANOUT}
 """
 
+# The same walk in Spark's dialect.
+_HIER_SPARK_SQL = f"""
+WITH RECURSIVE walk(node, cur, depth) MAX RECURSION LEVEL {_HIER_MAX_LEVEL} AS (
+  SELECT c_custkey, c_custkey, 0 FROM customer
+  UNION ALL
+  SELECT node, cur div {_HIER_FANOUT}, depth + 1
+  FROM walk WHERE cur >= {_HIER_FANOUT}
+)
+SELECT node, CAST(cur AS BIGINT) AS root, CAST(depth AS BIGINT) AS depth
+FROM walk WHERE cur < {_HIER_FANOUT}
+"""
+
 
 @register(
     "hierarchy_flatten_doubling",
@@ -416,65 +423,24 @@ FROM walk WHERE cur < {_HIER_FANOUT}
     tables=("customer",),
 )
 def hierarchy_flatten_doubling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flatten a parent-pointer hierarchy to (node, root, depth) —
-    the recursive-CTE workload Spark cannot express directly (DuckDB's
-    oracle here IS a recursive CTE), done Spark-first with POINTER
-    DOUBLING: each round joins the ancestor table with itself, so the
-    known-ancestor distance doubles per round and a depth-d hierarchy
-    resolves in ceil(log2 d) equi-join rounds instead of d chained
-    joins.  Four unrolled rounds cover depth 16 — every custkey up to
-    10^16 under the synthetic ``parent(c) = c div 10`` tree (roots are
-    1..9, the fixture construction; the operator itself works on any
-    parent table).
+    """Flatten a parent-pointer hierarchy to (node, root, depth) under
+    the synthetic ``parent(c) = c div 10`` tree (roots are the keys below
+    10, negative keys included).  The name is historical (it was a
+    pointer-doubling driver loop).  Spark 4.1 runs the oracle's own
+    ``WITH RECURSIVE ... UNION ALL`` as one plan (``UnionLoop``), which
+    builds without a Spark job and walks every key to its root, whether
+    or not its parent key is a row.
 
-    Scale shape: each round is ONE equi-join of the frontier with
-    itself on the ancestor key (shuffle on that key, AQE-broadcastable
-    as the unresolved frontier shrinks) — the naive per-level walk
-    would take O(depth) passes over the full node set and is the shape
-    that dies on deep hierarchies; this is the same large-step
-    discipline as the large-star/small-star components operator
-    (operators/components.py).  Each round's lineage is truncated with
-    localCheckpoint (r15, guide §2.4/§7.2): the self-join references the
-    frontier TWICE, so the unrolled plan instantiated round k-1 twice
-    inside round k — 2^4 = 16 executions of the seed by round 4 —
-    where the checkpointed loop executes every round exactly once
-    (same lifecycle janitor as pagerank/connected-components).
+    Two bounds hold the walk, and both fail loudly instead of truncating:
+
+    - ``MAX RECURSION LEVEL`` (``_HIER_MAX_LEVEL`` = 19) is the deepest
+      walk any BIGINT key can take, plus the empty closing level.
+    - ``spark.sql.cteRecursionRowLimit`` (default 1,000,000) caps the
+      rows the walk accumulates, Σ(depth + 1) over the keys: 63,894 at
+      sf0.1 and 788,895 at sf1.  Past it the query raises
+      ``RECURSION_ROW_LIMIT_EXCEEDED``.
+
+    Scale shape: one filtered projection per level over the rows still
+    walking, no join; every level runs at execution time, none at build.
     """
-    from openalex_walden_spark.operators.checkpoints import run_truncated_loop
-
-    def seed() -> DataFrame:
-        c = spark.table("customer").select(F.col("c_custkey").alias("node"))
-        is_root = F.col("node") < _HIER_FANOUT
-        return c.select(
-            "node",
-            F.when(is_root, F.col("node"))
-            .otherwise(F.expr(f"node div {_HIER_FANOUT}"))
-            .cast("bigint")
-            .alias("anc"),
-            F.when(is_root, F.lit(0)).otherwise(F.lit(1)).cast("bigint").alias("dist"),
-            is_root.alias("done"),
-        )
-
-    def double(t: DataFrame) -> DataFrame:
-        up = t.select(
-            F.col("node").alias("anc"),
-            F.col("anc").alias("anc2"),
-            F.col("dist").alias("dist2"),
-            F.col("done").alias("done2"),
-        )
-        return (
-            t.join(up, "anc")
-            .select(
-                "node",
-                F.when(F.col("done"), F.col("anc")).otherwise(F.col("anc2")).alias("anc"),
-                F.when(F.col("done"), F.col("dist"))
-                .otherwise(F.col("dist") + F.col("dist2"))
-                .alias("dist"),
-                (F.col("done") | F.col("done2")).alias("done"),
-            )
-        )
-
-    t = run_truncated_loop(spark, seed, double, _HIER_ROUNDS)
-    return t.select(
-        "node", F.col("anc").alias("root"), F.col("dist").cast("bigint").alias("depth")
-    )
+    return spark.sql(_HIER_SPARK_SQL)

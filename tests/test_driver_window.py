@@ -123,6 +123,7 @@ def test_plan_fingerprint_is_deterministic(spark, sf_dir) -> None:
     names = ["blue_planet_parse_awards",  # CTEs
              "d5_counts_by_year",  # PySpark lambdas
              "graph_pagerank_fixedpoint",  # localCheckpoint sub-plans
+             "hierarchy_flatten_doubling",  # recursive CTE (UnionLoop ids)
              "nomis_parse_projects"]  # spread scan
     first = {n: _fingerprint(spark, sf_dir, n) for n in names}
     second = {n: _fingerprint(spark, sf_dir, n) for n in reversed(names)}

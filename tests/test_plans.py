@@ -425,41 +425,25 @@ def test_session_window_single_exchange(spark, sf_dir):
 
 
 def test_pagerank_supersteps_stay_equi_join(spark, sf_dir):
-    """Every superstep is an equi-join + keyed aggregate; no cartesian
-    anywhere, and the contribution aggregate combines map-side
-    (partial_sum) before the dst exchange.  Asserted on ONE superstep's
-    plan (the final query plan is a checkpointed-RDD scan — see
-    test_pagerank_lineage_stays_bounded)."""
-    from pyspark.sql import functions as F
+    """The supersteps graph_pagerank_fixedpoint runs, read from the
+    checkpoints it froze: the edge⋈degree plane is checkpointed once,
+    hash-partitioned on src, so no round re-shuffles it; each superstep
+    is an equi-join plus a dst-keyed aggregate that combines map-side
+    (partial_sum) before its one exchange, at the loop's 8 partitions
+    with AQE off; no cartesian anywhere."""
+    import re as _re
 
-    from openalex_walden_spark.operators.pagerank import PR_ONE, _superstep
-    from openalex_walden_spark.tables import register_views
-
-    register_views(spark, sf_dir, ("lineitem",))
-    li = spark.table("lineitem")
-    edges = (
-        li.select(
-            (F.col("l_orderkey") % 1024).alias("src"),
-            (F.col("l_partkey") % 1024).alias("dst"),
-        )
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    outdeg = edges.groupBy("src").agg(F.count("*").alias("d"))
-    ed = edges.join(outdeg, "src")
-    scores = nodes.select("node", F.lit(PR_ONE).cast("bigint").alias("score"))
-    step = _superstep(ed, nodes, scores, 150_000_000_000, 85, 100)
-    plan = step._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
-    assert "CartesianProduct" not in plan
-    assert "partial_sum" in plan
-    # broadcast-scores mode: the score and inmass joins are broadcast —
-    # the edge plane never shuffles for a join
-    assert plan.count("BroadcastHashJoin") >= 2
+    *frozen, _ = _plans_with_checkpoints(spark, sf_dir, "graph_pagerank_fixedpoint")
+    # setup freezes the edges, the node universe, then edge⋈degree
+    edge_plane, rounds = frozen[2], frozen[3:]
+    assert edge_plane.startswith("Exchange hashpartitioning(src#")
+    assert rounds
+    for plan in rounds:
+        assert "CartesianProduct" not in plan
+        assert "AdaptiveSparkPlan" not in plan
+        assert plan.count("partial_sum") == 2  # two supersteps per check
+        shuffles = _re.findall(r"\bExchange (\w+)\((\w+)#\d+L?, (\d+)\)", plan)
+        assert shuffles == [("hashpartitioning", "dst", "8")] * 2
 
 
 def test_scd2_single_exchange(spark, sf_dir):
@@ -592,17 +576,66 @@ def test_quantized_vectors_full_width_non_null(spark, sf_dir):
     assert n_null == 0
 
 
-def test_hierarchy_doubling_equi_joins_only(spark, sf_dir):
-    """Every doubling round is an equi-join on the ancestor key — no
-    cartesian, no per-level chained scans of the full node set.  Since
-    r15 the loop is checkpoint-truncated, so the returned plan reads the
-    final round's blocks instead of embedding 2^rounds copies of the
-    seed (zero parquet scans in the final plan)."""
-    plan = _plan(spark, sf_dir, "hierarchy_flatten_doubling")
+def test_hierarchy_doubling_equi_joins_only(spark, sf_dir, jobs_in):
+    """The walk is the oracle's recursive CTE run as ONE plan: a
+    UnionLoop, no cartesian, no checkpointed driver-loop round, and no
+    Spark job while the query is built."""
+    from openalex_walden_spark.tables import register_views
+
+    register_views(spark, sf_dir, ("customer",))  # infer the schema first
+    with jobs_in("hierarchy_build") as jobs:
+        df = q.CATALOG["hierarchy_flatten_doubling"].spark(spark, sf_dir)
+    assert jobs == []
+    plan = df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+    assert "UnionLoop" in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    assert "Scan ExistingRDD" in plan
-    assert "Scan parquet" not in plan
+    assert "Scan ExistingRDD" not in plan
+
+
+# Keys whose parent keys are not rows, down to 2^63 - 1: the deepest
+# walk a BIGINT key takes (depth 18).
+_SPARSE_DEEP_KEYS = [5, 42, 10**16 + 7, 98765432109876543,
+                     123456789012345678, 2**63 - 1]
+
+
+def _sparse_deep_customer(tmp_path) -> str:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table({"c_custkey": pa.array(_SPARSE_DEEP_KEYS, pa.int64())}),
+                   str(tmp_path / "customer.parquet"))
+    return str(tmp_path)
+
+
+def test_hierarchy_walk_matches_oracle_on_sparse_deep_keys(spark, tmp_path):
+    """Every node reaches its root, whether or not its parent key is a
+    row, at every depth a BIGINT key can take — as in the oracle."""
+    from openalex_walden_spark.oracle import compare, duckdb_connect
+
+    sf = _sparse_deep_customer(tmp_path)
+    spec = q.CATALOG["hierarchy_flatten_doubling"]
+    con = duckdb_connect(sf)
+    try:
+        res = compare(spec.name, spec.spark(spark, sf), con, spec.oracle)
+    finally:
+        con.close()
+    assert res.match, res.summary
+    assert res.rows_spark == len(_SPARSE_DEEP_KEYS)
+
+
+def test_hierarchy_walk_raises_past_the_row_limit(spark, tmp_path):
+    """Past spark.sql.cteRecursionRowLimit the walk fails instead of
+    returning a truncated hierarchy (these keys accumulate 74 rows)."""
+    sf = _sparse_deep_customer(tmp_path)
+    key = "spark.sql.cteRecursionRowLimit"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "50")
+    try:
+        with pytest.raises(Exception, match="RECURSION_ROW_LIMIT_EXCEEDED"):
+            q.CATALOG["hierarchy_flatten_doubling"].spark(spark, sf).collect()
+    finally:
+        spark.conf.set(key, saved)
 
 
 def test_ancestors_lineage_loop_truncated(spark, sf_dir):
@@ -659,7 +692,7 @@ def test_pagerank_converged_beyond_unrolled_demo(spark, sf_dir):
     src = (F.col("l_orderkey") % 1024).alias("src")
     dst = (F.col("l_partkey") % 1024).alias("dst")
     edges = li.select(src, dst).where(F.col("src") != F.col("dst")).distinct()
-    three = pagerank_fixedpoint(edges, max_rounds=4, check_every=4).toPandas()
+    three = pagerank_fixedpoint(edges, max_rounds=4).toPandas()
     conv = q.CATALOG["graph_pagerank_fixedpoint"].spark(spark, sf_dir).toPandas()
     merged = conv.merge(
         three.rename(columns={"score": "score3"}), on="node", how="inner"
@@ -682,19 +715,21 @@ def test_iterative_checkpoints_are_released(spark, sf_dir):
     from openalex_walden_spark.operators.components import connected_components
     from openalex_walden_spark.operators.pagerank import pagerank_fixedpoint
 
-    def persistent() -> int:
-        return spark.sparkContext._jsc.getPersistentRDDs().size()
+    def persistent() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
-    base = persistent()
+    # ids, not a count: the ContextCleaner may release an earlier test's
+    # blocks while this one runs
+    before = persistent()
     edges = spark.range(0, 1200).select(
         (F.col("id") % 300).alias("src"),
         ((F.col("id") * 7 + 3) % 300).alias("dst"),
     )
-    pr = pagerank_fixedpoint(edges, superstep_partitions=4)
-    assert persistent() == base + 1, "pagerank left intermediates pinned"
+    pr = pagerank_fixedpoint(edges)
+    assert len(persistent() - before) == 1, "pagerank left intermediates pinned"
     assert pr.count() == 300  # final checkpoint still readable
     cc = connected_components(edges)
-    assert persistent() == base + 3, "components left intermediates pinned"
+    assert len(persistent() - before) == 3, "components left intermediates pinned"
     assert cc.count() == 300  # raw + final round still readable
 
 
