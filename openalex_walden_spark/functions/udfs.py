@@ -2,10 +2,11 @@
 mapInPandas operators.
 
 The engine's policy: Python only where JVM expressions genuinely can't
-express the semantics (name parsing, per-row binary decode, model
-inference) — and then always Arrow-batched, never row-at-a-time
-(reference precedent: ``normalize.py:233-303`` pandas UDFs,
-``topics_inference.ipynb`` mapPartitions with a per-worker model cache).
+express the semantics (name parsing, per-row binary decode, a model
+that cannot be SQL) — and then always Arrow-batched, never
+row-at-a-time (reference precedent: ``normalize.py:233-303`` pandas
+UDFs).  A model the oracle states relationally runs in the plan
+instead: ``s8_model_inference``'s linear scorer is a SQL fold.
 """
 
 from __future__ import annotations
@@ -19,8 +20,6 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
-    BooleanType,
-    DoubleType,
     LongType,
     StringType,
     StructField,
@@ -177,31 +176,6 @@ BINARY_DOC_SCHEMA = StructType(
 
 
 # ---------------------------------------------------------------------------
-# S8: model-serving inference (mapInPandas with per-worker model cache)
-# ---------------------------------------------------------------------------
-SCORED_SCHEMA = StructType(
-    [
-        StructField("vec_id", LongType()),
-        StructField("score", DoubleType()),
-        StructField("positive", BooleanType()),
-    ]
-)
-
-_MODEL_CACHE: dict[int, list[float]] = {}
-
-
-def _load_model(dim: int) -> list[float]:
-    """Deterministic linear 'checkpoint': loaded once per Python worker
-    (the per-executor model cache pattern — topics_inference.ipynb
-    cell 5); a real model swaps in torch/onnx weights here."""
-    if dim not in _MODEL_CACHE:
-        _MODEL_CACHE[dim] = [
-            ((j * 2654435761) % 1000) / 1000.0 - 0.5 for j in range(dim)
-        ]
-    return _MODEL_CACHE[dim]
-
-
-# ---------------------------------------------------------------------------
 # P12: TEI-XML field extraction (real XML parser per Arrow batch)
 # ---------------------------------------------------------------------------
 TEI_SCHEMA = StructType(
@@ -235,27 +209,6 @@ def tei_extract_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]
                 "title": [r[0] for r in rows],
                 "author": [r[1] for r in rows],
                 "abstract_len": pd.Series([r[2] for r in rows], dtype="int64"),
-            }
-        )
-
-
-def model_score_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Score each embedding with the cached linear model.
-
-    The dot product folds sequentially (Python sum) so the score is
-    bit-identical to the oracle's list_sum fold — NOT numpy.dot, whose
-    pairwise/SIMD accumulation would differ in the last ulp.
-    """
-    for pdf in batches:
-        scores = []
-        for emb in pdf["embedding"]:
-            w = _load_model(len(emb))
-            scores.append(sum(float(x) * w[j] for j, x in enumerate(emb)))
-        yield pd.DataFrame(
-            {
-                "vec_id": pdf["vec_id"],
-                "score": pd.Series(scores, dtype="float64"),
-                "positive": [s > 0 for s in scores],
             }
         )
 

@@ -22,6 +22,9 @@ Both preserve connectivity and never increase the minimum label of a
 component; at fixpoint every component is a star centred on its minimum
 member, so labels fall out of the final edge set without a separate
 propagation pass.
+
+The rounds run in ``checkpoints.run_truncated_loop``, the one checkpointed
+loop this operator shares with PageRank and the truncated query loops.
 """
 
 from __future__ import annotations
@@ -29,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .checkpoints import SESSION_SCOPE_LOCK, CheckpointJanitor
+from .checkpoints import run_truncated_loop
 
 # 2^50 nodes is far beyond any realistic graph; the alternating-star round
 # bound is O(log^2 n) but observed convergence is ~log2(n) rounds.
@@ -77,21 +80,6 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def _edge_fingerprint(edges: DataFrame) -> int:
-    """Order-insensitive scalar fingerprint of the edge set (one driver
-    int per round — the convergence check stays O(1) driver-side)."""
-    # Sum at decimal(38,0): a BIGINT sum of xxhash64 values overflows, and
-    # the session runs ANSI mode where overflow raises.
-    row = edges.select(
-        F.coalesce(
-            F.sum(F.xxhash64(F.col("u"), F.col("v")).cast("decimal(38,0)")),
-            F.lit(0).cast("decimal(38,0)"),
-        ).alias("h"),
-        F.count("*").alias("n"),
-    ).first()
-    return hash((str(row["h"]), row["n"]))
-
-
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -108,47 +96,27 @@ def connected_components(
     propagation loop this replaces: Catalyst plans double per iteration
     otherwise).
     """
-    # Checkpoint the raw projection ONCE: both the iteration seed and the
-    # node universe derive from it, so the caller's (possibly expensive)
-    # edge lineage executes exactly one time.  Intermediate rounds are
-    # released before returning (CheckpointJanitor); `raw` and the final
-    # round stay pinned because the RETURNED lazy DataFrame still reads
-    # both — the caller may unpersist them after materializing.  The
-    # lock serializes the janitor's persistent-id attribution (sound
-    # only without concurrent persists in the same session).
-    spark = edges.sparkSession
-    with SESSION_SCOPE_LOCK:
-        jan = CheckpointJanitor(spark)
-        keep: set[str] = set()
-        try:
-            raw = edges.select(
-                F.col(src).alias("u"), F.col(dst).alias("v")
-            ).localCheckpoint()
-            jan.mark("raw")
-            cur = _dedup(raw).localCheckpoint()
-            prev_fp = _edge_fingerprint(cur)
-            jan.mark("seed")
-            round_tag = "seed"
-            for rnd in range(max_rounds):
-                # Lazy checkpoint: the fingerprint action right below
-                # both materializes the round and truncates lineage —
-                # one Spark job per round instead of two.
-                cur = _small_star(_large_star(cur)).localCheckpoint(
-                    eager=False)
-                fp = _edge_fingerprint(cur)
-                round_tag = f"round-{rnd}"
-                jan.mark(round_tag)
-                if fp == prev_fp:
-                    break
-                prev_fp = fp
-            else:  # pragma: no cover - 2^sqrt(50) nodes would be needed
-                raise RuntimeError(
-                    f"alternating-star did not converge in {max_rounds} "
-                    f"rounds"
-                )
-            keep = {"raw", round_tag}
-        finally:
-            jan.release(keep=keep)
+    # Checkpoint the raw projection ONCE, before the loop: both the seed
+    # and the node universe derive from it, so the caller's (possibly
+    # expensive) edge lineage executes exactly one time.  The loop
+    # releases the seed and every round but the last; `raw` and the
+    # final round stay pinned because the RETURNED lazy DataFrame still
+    # reads both — the caller may unpersist them after materializing.
+    # The seed is fingerprinted too, so an input that is already a star
+    # stops after round 0.
+    raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).localCheckpoint()
+    cur, converged = run_truncated_loop(
+        edges.sparkSession,
+        lambda: _dedup(raw).localCheckpoint(),
+        lambda e: _small_star(_large_star(e)),
+        max_rounds,
+        until=("u", "v"),
+        compare_seed=True,
+    )
+    if not converged:
+        raise RuntimeError(
+            f"alternating-star did not converge in {max_rounds} rounds"
+        )
     # Fixpoint edges form stars centred on component minima: every
     # non-root points at its root. Roots label themselves.
     nodes = (

@@ -2,8 +2,9 @@
 
 The round-5 query unrolled 3 supersteps — a demo of the plan shape, not
 the operator (a real centrality signal is the converged vector).  This
-module is the real loop, with the same discipline as
-``operators/components.py``:
+module is the real loop, driven by ``checkpoints.run_truncated_loop``,
+the one checkpointed loop it shares with ``connected_components`` and
+the truncated query loops:
 
 - **Integer state.** Scores are BIGINT fixed-point (1.0 == 10^12);
   contributions are exact integer divisions and integer sums commute, so
@@ -16,7 +17,7 @@ module is the real loop, with the same discipline as
   rounds, so the live plan never exceeds a constant number of joins no
   matter how many rounds run.
 - **O(1) driver state.** Convergence is detected from a one-row score
-  fingerprint (sum of per-row hashes), never by collecting scores.
+  fingerprint (``checkpoints.fingerprint``), never by collecting scores.
 - **Cycle-safe early stop.** The loop checks every ``CHECK_EVERY``
   rounds and caps at ``max_rounds`` — a multiple of ``CHECK_EVERY`` —
   so even if the integer dynamics fell into a short cycle instead of a
@@ -26,11 +27,14 @@ module is the real loop, with the same discipline as
   ``max_rounds`` iterations unconditionally; both sides agree in every
   case.
 
-Scale shape per superstep: one equi-join edges ⋈ scores on src (the
-edge plane is hash-partitioned on src once at setup, so only the |V|-row
-score table moves) plus one dst-keyed partial aggregate.  Dangling-node
-mass is dropped (standard simplification); damping d is applied as
-(num * x) // den.
+Scale shape per superstep: one equi-join (edges⋈degree) ⋈ scores on src
+plus one dst-keyed partial aggregate.  Below the session's
+``autoBroadcastJoinThreshold`` the planner broadcasts the edge⋈degree
+checkpoint into every superstep after the first (``BroadcastHashJoin
+... BuildLeft``; the first broadcasts the seed score table), measured at
+sf0.001, sf0.01 and sf0.1; above it, the setup's ``repartition(src)``
+serves the shuffle join, whose edge side then needs no exchange.  Dangling-node mass is dropped (standard simplification);
+damping d is applied as (num * x) // den.
 """
 
 from __future__ import annotations
@@ -38,34 +42,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .checkpoints import SESSION_SCOPE_LOCK, CheckpointJanitor
+from .checkpoints import run_truncated_loop, session_confs
 
 PR_ONE = 1_000_000_000_000  # fixed-point 1.0
 # Rounds between score checkpoints and convergence checks (the r13
 # cadence A/B in SCALING.md found 1, 2 and 4 within host noise).
 CHECK_EVERY = 2
-# Session confs scoped to the loop (restored in a finally).  AQE would
-# materialize every exchange of every superstep as its own job, and with
-# the cardinalities known and constant (|V| rows per round) its runtime
-# re-planning buys nothing; 8 partitions fit the |V|-row score table.
+# Session confs scoped to the loop.  AQE would materialize every
+# exchange of every superstep as its own job, and with the cardinalities
+# known and constant (|V| rows per round) its runtime re-planning buys
+# nothing; 8 partitions fit the |V|-row score table.
 _LOOP_CONFS = {
     "spark.sql.adaptive.enabled": "false",
     "spark.sql.shuffle.partitions": "8",
 }
-
-
-def _score_fingerprint(scores: DataFrame) -> int:
-    """Order-insensitive one-row fingerprint of the score table (same
-    pattern as components._edge_fingerprint: decimal sum of xxhash64,
-    because the session's ANSI mode raises on BIGINT sum overflow)."""
-    row = scores.select(
-        F.coalesce(
-            F.sum(F.xxhash64(F.col("node"), F.col("score")).cast("decimal(38,0)")),
-            F.lit(0).cast("decimal(38,0)"),
-        ).alias("h"),
-        F.count("*").alias("n"),
-    ).first()
-    return hash((str(row["h"]), row["n"]))
 
 
 def pagerank_fixedpoint(
@@ -77,40 +67,32 @@ def pagerank_fixedpoint(
     max_rounds: int = 44,
 ) -> DataFrame:
     """Run integer PageRank to its exact fixed point (capped at
-    ``max_rounds``).  Returns ``(node, score)`` with BIGINT fixed-point
-    scores (PR_ONE == 1.0).
+    ``max_rounds``; a capped run returns the state after ``max_rounds``).
+    Returns ``(node, score)`` with BIGINT fixed-point scores
+    (PR_ONE == 1.0).
 
-    The plan (r13, the graph_pagerank_fixedpoint perf-weak fix) is
-    SHUFFLE-JOIN supersteps over edges hash-partitioned on src ONCE at
-    setup (LogicalRDD preserves the partitioning across the
-    localCheckpoint), so per round only the |V|-row score table and the
-    partial-aggregated inmass move — the classic Pregel plan: the edge
-    plane never re-shuffles, and the scores are not re-shipped to every
-    executor each round.  The loop runs under ``_LOOP_CONFS``: the r13
-    job-count A/B measured 82 jobs / 10.8s for the broadcast plan with
-    AQE on against 32 jobs / 6.5s for this one, on identical output
-    (SCALING.md).  The scoped partition count also governs the ONE-TIME
-    edge setup (distinct/degree/repartition), so pre-shape a huge edge
-    plane upstream before calling this.
+    Setup checkpoints the edges, the node universe and the edge⋈degree
+    plane, hash-partitioned on src (LogicalRDD preserves the
+    partitioning across the localCheckpoint).  Each loop step runs
+    ``CHECK_EVERY`` supersteps.  At fixture scale the edge⋈degree plane
+    is under the session's ``autoBroadcastJoinThreshold``, so every
+    superstep after the first broadcasts it (``BroadcastHashJoin ...
+    BuildLeft``; the first broadcasts the seed score table) and only the
+    dst-keyed partial aggregate shuffles; above the threshold
+    the src partitioning lets the shuffle join move only the |V|-row
+    score table.  The planner chooses by size, so the repartition stays.
+    The loop runs under ``_LOOP_CONFS``: the r13 job-count A/B measured
+    82 jobs / 10.8s with AQE on against 32 jobs / 6.5s with it off, on
+    identical output (SCALING.md).  The scoped partition count also
+    governs the ONE-TIME edge setup (distinct/degree/repartition), so
+    pre-shape a huge edge plane upstream before calling this.
     """
     if max_rounds % CHECK_EVERY:
         raise ValueError("max_rounds must be a multiple of CHECK_EVERY")
-    spark = edges.sparkSession
-    saved: dict[str, str] = {}
-    # Session confs are session-GLOBAL: the scope/restore below is only
-    # sound while no concurrent query shares this SparkSession, so the
-    # whole call serializes on SESSION_SCOPE_LOCK (which the checkpoint
-    # janitor's id attribution also relies on).  The repo's driver and
-    # bench are sequential; concurrent callers queue here instead of
-    # racing the conf mutation.
-    SESSION_SCOPE_LOCK.acquire()
-    jan = CheckpointJanitor(spark)
-    keep: set[str] = set()
-    try:
-        for key, value in _LOOP_CONFS.items():
-            saved[key] = spark.conf.get(key)
-            spark.conf.set(key, value)
+    base = (PR_ONE * (damping_den - damping_num)) // damping_den
+    plane: list[DataFrame] = []  # (ed, nodes), frozen by setup
 
+    def setup() -> DataFrame:
         e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         # One materialization of the (possibly expensive) edge lineage;
         # every superstep reuses it.
@@ -124,42 +106,22 @@ def pagerank_fixedpoint(
         outdeg = e.groupBy("src").agg(F.count("*").alias("d"))
         # The per-edge contribution denominator is static: join it ONCE
         # and checkpoint AFTER hash-partitioning on src, so no superstep
-        # repeats the degree join and every superstep's edges-side
-        # shuffle is elided (LogicalRDD preserves the output
-        # partitioning) — only the |V|-row score table moves per round.
+        # repeats the degree join.
         ed = e.join(outdeg, "src").repartition(F.col("src")).localCheckpoint()
-        jan.mark("setup")
+        plane.extend((ed, nodes))
+        return nodes.select("node", F.lit(PR_ONE).cast("bigint").alias("score"))
 
-        base = (PR_ONE * (damping_den - damping_num)) // damping_den
-        scores = nodes.select(
-            "node", F.lit(PR_ONE).cast("bigint").alias("score")
-        )
-        prev_fp = None
-        round_tag = "setup"
-        for rnd in range(max_rounds // CHECK_EVERY):
-            for _ in range(CHECK_EVERY):
-                scores = _superstep(
-                    ed, nodes, scores, base, damping_num, damping_den
-                )
-            # Lazy checkpoint: the fingerprint action materializes it —
-            # one job per check instead of two.
-            scores = scores.localCheckpoint(eager=False)
-            fp = _score_fingerprint(scores)
-            round_tag = f"round-{rnd}"
-            jan.mark(round_tag)
-            if fp == prev_fp:
-                break
-            prev_fp = fp
-        # The returned DataFrame is the final (already-materialized)
-        # checkpoint: its lineage is truncated to its own blocks, so the
-        # setup plane and every earlier round can be released now.
-        keep = {round_tag}
+    def step(scores: DataFrame) -> DataFrame:
+        for _ in range(CHECK_EVERY):
+            scores = _superstep(*plane, scores, base, damping_num, damping_den)
         return scores
-    finally:
-        jan.release(keep=keep)
-        for key, value in saved.items():
-            spark.conf.set(key, value)
-        SESSION_SCOPE_LOCK.release()
+
+    with session_confs(edges.sparkSession, _LOOP_CONFS):
+        scores, _ = run_truncated_loop(
+            edges.sparkSession, setup, step, max_rounds // CHECK_EVERY,
+            until=("node", "score"),
+        )
+    return scores
 
 
 def _superstep(

@@ -706,7 +706,7 @@ FROM stats t JOIN shift h ON h.cluster = t.cluster
 @register(
     "kmeans_lloyd_step",
     oracle=_KMEANS_SQL,
-    tags=("llmdata", "ann", "kmeans", "iterative"),
+    tags=("llmdata", "ann", "kmeans"),
     tables=("embeddings",),
 )
 def kmeans_lloyd_step(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1104,11 +1104,15 @@ _TR_IVF_SQL = (
 # bounded-watermark pattern as operators/identity.py's high-water mark).
 _TR_CACHE: dict[str, list[list[int]]] = {}
 
-# Shuffle partitions scoped to the trainer's (cell, dim) aggregate: its
+# Session confs scoped to the trainer's Lloyd loop: AQE off, and
+# shuffle partitions sized to its (cell, dim) aggregate, whose
 # post-shuffle cardinality is k x dim = 640 rows at ANY corpus size
 # (partial aggregation reduces map-side), so this is scale-independent —
 # the map-side parallelism still follows the input partitioning.
-_TR_AGG_PARTITIONS = 8
+_TR_LOOP_CONFS = {
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.shuffle.partitions": "8",
+}
 
 
 def _tr_quantized(spark: SparkSession) -> DataFrame:
@@ -1183,7 +1187,7 @@ def train_ivf_centroids(spark: SparkSession, sf_dir: str) -> list[list[int]]:
     """
     if sf_dir in _TR_CACHE:
         return _TR_CACHE[sf_dir]
-    from openalex_walden_spark.operators.checkpoints import SESSION_SCOPE_LOCK
+    from openalex_walden_spark.operators.checkpoints import session_confs
     from openalex_walden_spark.operators.guardrails import persist_fixed_width
 
     # r14 optimization — three loop-scoped changes, output-identical
@@ -1194,6 +1198,8 @@ def train_ivf_centroids(spark: SparkSession, sf_dir: str) -> list[list[int]]:
     #   scale that is _TR_T full corpus scans saved; MEMORY_AND_DISK
     #   spills instead of OOMing; unpersisted in the finally, so
     #   nothing outlives the call and each bench run re-pays the scan).
+    #   qx is a fixed 64-element bigint array — the fixed-width cache
+    #   contract (see guardrails.persist_fixed_width).
     # - AQE off for the loop (same rationale and mechanism as
     #   operators/pagerank.py: per-round cardinalities are known and
     #   constant, and AQE materializes every exchange as its own job —
@@ -1201,22 +1207,12 @@ def train_ivf_centroids(spark: SparkSession, sf_dir: str) -> list[list[int]]:
     # - the per-round aggregate's post-shuffle cardinality is EXACTLY
     #   k x dim = 640 rows at ANY corpus size (map-side partials do the
     #   reduction), so a small fixed partition count for the loop is
-    #   scale-independent; the session value is restored in the
-    #   finally.  Measured together: 10.6s -> 4.7s on the sf0.1 train
-    #   fixture (the _tr_cent_array literal fix is the other half).
-    saved: dict[str, str] = {}
-
-    def _scope(key: str, value: str) -> None:
-        saved[key] = spark.conf.get(key)
-        spark.conf.set(key, value)
-
-    with SESSION_SCOPE_LOCK:
-        # qx is a fixed 64-element bigint array — the fixed-width cache
-        # contract (see guardrails.persist_fixed_width)
-        pts = persist_fixed_width(_tr_quantized(spark))
-        try:
-            _scope("spark.sql.adaptive.enabled", "false")
-            _scope("spark.sql.shuffle.partitions", str(_TR_AGG_PARTITIONS))
+    #   scale-independent.  Measured together: 10.6s -> 4.7s on the
+    #   sf0.1 train fixture (the _tr_cent_array literal fix is the
+    #   other half).
+    pts = persist_fixed_width(_tr_quantized(spark))
+    try:
+        with session_confs(spark, _TR_LOOP_CONFS):
             cents = [
                 [int(v) for v in r["qx"]]
                 for r in sorted(
@@ -1242,10 +1238,8 @@ def train_ivf_centroids(spark: SparkSession, sf_dir: str) -> list[list[int]]:
                 if new == cents:
                     break
                 cents = new
-        finally:
-            pts.unpersist()
-            for key, value in saved.items():
-                spark.conf.set(key, value)
+    finally:
+        pts.unpersist()
     _TR_CACHE[sf_dir] = cents
     return cents
 

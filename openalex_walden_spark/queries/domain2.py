@@ -619,7 +619,7 @@ def p11_oai_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# S8: model-serving source (queue → mapInPandas inference)
+# S8: model-serving source (queue → in-plan linear scorer)
 # --------------------------------------------------------------------------
 _S8_SQL = """
 WITH queue AS (
@@ -634,28 +634,39 @@ FROM queue
 """
 
 
+# The oracle's fold, term for term: the Knuth-hash ramp weight of
+# element i times the element, summed left to right from 0.0.  The D
+# suffixes keep the arithmetic DOUBLE (a bare 1000.0 is a DECIMAL).
+_S8_SCORE = (
+    "aggregate(transform(embedding, (x, i) -> CAST(x AS DOUBLE)"
+    " * (CAST((CAST(i AS BIGINT) * 2654435761) % 1000 AS DOUBLE) / 1000.0D - 0.5D)),"
+    " 0.0D, (acc, v) -> acc + v)"
+)
+
+
 @register("s8_model_inference", oracle=_S8_SQL, tags=("udf", "S8"), tables=("embeddings",))
 def s8_model_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Model-serving source shape (S8): drain a bounded inference queue
     (ORDER BY + LIMIT — topics_inference.ipynb cell 3 `.limit(3840000)`)
-    through mapInPandas with a per-worker model cache (the reference's
-    rdd.mapPartitions modernized, SURVEY.md §2.1).
+    through the model (the reference's rdd.mapPartitions over a
+    per-worker model cache, SURVEY.md §2.1).
 
     The 'model' is a fixed linear scorer (deterministic weights from a
-    Knuth-hash ramp) so the oracle can verify scores bit-exactly — the
-    weights load once per Python worker exactly like a real checkpoint.
+    Knuth-hash ramp), so it runs in the plan as the oracle's own fold:
+    no Python worker, no Arrow round trip, and a score bit-identical to
+    the oracle's sequential list_sum (``aggregate`` folds in element
+    order, as list_sum does).
     """
-    from openalex_walden_spark.deploy import ensure_shipped
-    from openalex_walden_spark.functions.udfs import model_score_batch, SCORED_SCHEMA
-
-    ensure_shipped(spark)
-    queue = (
+    # One projection over the limit, as in the oracle: the planner folds
+    # it into TakeOrderedAndProject (a second select on top would leave
+    # a full range-partitioned sort).
+    score = F.expr(_S8_SCORE)
+    return (
         spark.table("embeddings")
         .orderBy("vec_id")
         .limit(256)
-        .select("vec_id", "embedding")
+        .select("vec_id", score.alias("score"), (score > 0).alias("positive"))
     )
-    return queue.mapInPandas(model_score_batch, SCORED_SCHEMA)
 
 
 # --------------------------------------------------------------------------

@@ -380,11 +380,15 @@ FROM anc
 ORDER BY institution_id, generation
 """
 
+# Doubling rounds: round k closes every pair within 2^k generations.
+_LINEAGE_ROUNDS = 4
+_LINEAGE_CAP = 2**_LINEAGE_ROUNDS
+
 
 @register(
     "institution_ancestors_lineage",
     oracle=_ANCESTORS_ORACLE,
-    tags=("enrichmerge", "graph", "doubling"),
+    tags=("enrichmerge", "graph", "doubling", "iterative"),
     tables=("customer",),
 )
 def institution_ancestors_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -392,10 +396,15 @@ def institution_ancestors_lineage(spark: SparkSession, sf_dir: str) -> DataFrame
     (CreateInstitutionAncestors.ipynb — reference uses WITH RECURSIVE).
 
     Round k closes every ancestor pair within distance 2^k: T_{{k+1}} =
-    T_k ∪ compose(T_k, T_k), deduped per round.  Four rounds cover
-    depth-16 lineage — ROR's real hierarchy tops out around 8 — in
-    ceil(log2 d) shuffle rounds where the reference's recursion takes d;
-    a deeper lineage is cut at generation 16 without an error.
+    T_k ∪ compose(T_k, T_k), deduped per round.  Four rounds close
+    every pair up to generation 16 — ROR's real hierarchy tops out
+    around 8 — in ceil(log2 d) shuffle rounds where the reference's
+    recursion takes d.  A pair at generation 16 may stand for a deeper
+    lineage the rounds cut, so an in-plan ``assert_true(generation <
+    16)`` fails the job instead of returning a truncated closure.  The
+    refusal is conservative by one generation: a lineage exactly 16
+    deep is complete but refused too.  The fixtures reach at most
+    floor(log3(max c_custkey)) generations: 8 at sf0.1, 15 at sf100.
     The ROR-id URL-prefix strip, the 'parent'-only edge filter, and the
     merged-institution gates (BOTH endpoints, which also severs chains
     through a merged-away intermediate, matching the recursion) live in
@@ -408,7 +417,8 @@ def institution_ancestors_lineage(spark: SparkSession, sf_dir: str) -> DataFrame
     interleaved A/B at sf0.1: 5.6-11.8 s unrolled vs 2.2-2.4 s
     truncated (min-of-4, 10-32 s unrolled under host contention) —
     where the checkpointed loop executes every round exactly once
-    (same lifecycle janitor as pagerank/connected-components).
+    (``checkpoints.run_truncated_loop``, the loop pagerank and
+    connected components also run in).
     """
     from openalex_walden_spark.operators.checkpoints import run_truncated_loop
 
@@ -448,6 +458,7 @@ def institution_ancestors_lineage(spark: SparkSession, sf_dir: str) -> DataFrame
                 "ancestor_id",
                 F.lit(1).cast("int").alias("generation"),
             )
+            .localCheckpoint()
         )
 
     def close_round(t: DataFrame) -> DataFrame:
@@ -466,5 +477,18 @@ def institution_ancestors_lineage(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         return t.unionByName(composed).distinct()
 
-    t = run_truncated_loop(spark, base, close_round, 4)  # closes 2^4 = 16
-    return t.orderBy("institution_id", "generation")
+    t, _ = run_truncated_loop(spark, base, close_round, _LINEAGE_ROUNDS)
+    # A pair at the cap's generation may hide a deeper one: refuse it in
+    # the plan (assert_true returns NULL after checking, so the when()
+    # always takes the checked branch and keeps the guard unpruned).
+    guard = F.assert_true(
+        F.col("generation") < _LINEAGE_CAP,
+        F.lit(f"institution_ancestors_lineage: a lineage reaches generation "
+              f"{_LINEAGE_CAP}, the most {_LINEAGE_ROUNDS} doubling rounds "
+              f"close; deeper pairs would be missing"),
+    )
+    return t.select(
+        F.when(guard.isNull(), F.col("institution_id")).alias("institution_id"),
+        "ancestor_id",
+        "generation",
+    ).orderBy("institution_id", "generation")

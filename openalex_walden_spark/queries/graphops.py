@@ -361,6 +361,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .union(und.select(F.col("v").alias("node")))
             .distinct()
             .select("node", F.col("node").alias("lab"))
+            .localCheckpoint()
         )
 
     def superstep(labels: DataFrame) -> DataFrame:
@@ -379,7 +380,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             "node", F.coalesce("newlab", "lab").alias("lab")
         )
 
-    labels = run_truncated_loop(spark, seed, superstep, _LPA_ROUNDS)
+    labels, _ = run_truncated_loop(spark, seed, superstep, _LPA_ROUNDS)
     return labels.select("node", F.col("lab").alias("community"))
 
 
@@ -419,7 +420,7 @@ FROM walk WHERE cur < {_HIER_FANOUT}
 @register(
     "hierarchy_flatten_doubling",
     oracle=_HIER_SQL,
-    tags=("graph", "hierarchy", "iterative"),
+    tags=("graph", "hierarchy"),
     tables=("customer",),
 )
 def hierarchy_flatten_doubling(spark: SparkSession, sf_dir: str) -> DataFrame:

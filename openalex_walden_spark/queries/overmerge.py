@@ -162,7 +162,7 @@ def _density_pts(spark: SparkSession) -> DataFrame:
 @register(
     "overmerge_density_split",
     oracle=_density_sql(),
-    tags=("llmdata", "ann", "overmerge", "domain"),
+    tags=("llmdata", "ann", "overmerge", "domain", "iterative"),
     tables=("embeddings",),
 )
 def overmerge_density_split(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -578,7 +578,7 @@ susp AS MATERIALIZED (
         prefix=_SCREEN_PREFIX,
         pts_filter="WHERE label IN (SELECT g FROM susp)",
     ),
-    tags=("llmdata", "ann", "overmerge", "domain"),
+    tags=("llmdata", "ann", "overmerge", "domain", "iterative"),
     tables=("embeddings",),
 )
 def overmerge_screened_density(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -5,8 +5,9 @@ The reference's taxicab / parseland / grobid jobs are thin HTTP fan-out
 loops (driver-side ThreadPools against ECS services) wrapped around real
 relational data planes: candidate selection, reparse-queue resolution and
 retry bookkeeping.  The HTTP layer is the documented network seam (same
-class as the model-serving seam in ``domain2.s8_model_inference``); what
-this module ports is everything Spark actually plans:
+class as the reference's GPU model call in ``topics_inference.ipynb``,
+whose fixture stand-in ``domain2.s8_model_inference`` scores in the
+plan); what this module ports is everything Spark actually plans:
 
 * ``scraping/taxicab.ipynb`` cell 8 — the three-source candidate union
   (crossref first-DOI-url HOF pick, repo url-slice explode with endpoint

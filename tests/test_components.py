@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from collections import defaultdict
 
+import pytest
 from pyspark.sql import functions as F
 
 from openalex_walden_spark.operators.components import (
@@ -74,3 +75,27 @@ def test_string_ids_unsupported_shape_guard(spark):
     for r in out:
         comp[r["label"]].add(r["id"])
     assert dict(comp) == {"a": {"a", "b", "c"}, "x": {"x", "y"}}
+
+
+def test_unconverged_components_raise(spark):
+    """A round cap the path cannot converge under raises instead of
+    returning a partial labelling."""
+    df = spark.createDataFrame(
+        [(i, i + 1) for i in range(64)], "src long, dst long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        connected_components(df, max_rounds=1)
+
+
+def test_star_input_stops_after_round_zero(spark):
+    """The seed is fingerprinted too, so an input that is already a
+    star (every edge points from a member at its component minimum)
+    stops after round 0: three checkpoints, raw, seed and that one
+    round."""
+    from openalex_walden_spark.oracle import checkpoint_capture
+
+    df = spark.createDataFrame([(i, 0) for i in range(1, 6)], "src long, dst long")
+    with checkpoint_capture(spark) as frozen:
+        out = connected_components(df)
+    assert len(frozen) == 3
+    assert {r["label"] for r in out.collect()} == {0}

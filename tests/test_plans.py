@@ -427,10 +427,12 @@ def test_session_window_single_exchange(spark, sf_dir):
 def test_pagerank_supersteps_stay_equi_join(spark, sf_dir):
     """The supersteps graph_pagerank_fixedpoint runs, read from the
     checkpoints it froze: the edge⋈degree plane is checkpointed once,
-    hash-partitioned on src, so no round re-shuffles it; each superstep
-    is an equi-join plus a dst-keyed aggregate that combines map-side
-    (partial_sum) before its one exchange, at the loop's 8 partitions
-    with AQE off; no cartesian anywhere."""
+    hash-partitioned on src; each superstep is an equi-join on src plus
+    a dst-keyed aggregate that combines map-side (partial_sum) before
+    its one exchange, at the loop's 8 partitions with AQE off; no
+    cartesian anywhere.  Below autoBroadcastJoinThreshold the join
+    broadcasts: the first superstep the seed score table, every later
+    one the edge⋈degree checkpoint, so only the aggregate shuffles."""
     import re as _re
 
     *frozen, _ = _plans_with_checkpoints(spark, sf_dir, "graph_pagerank_fixedpoint")
@@ -438,12 +440,19 @@ def test_pagerank_supersteps_stay_equi_join(spark, sf_dir):
     edge_plane, rounds = frozen[2], frozen[3:]
     assert edge_plane.startswith("Exchange hashpartitioning(src#")
     assert rounds
+    builds = []
     for plan in rounds:
         assert "CartesianProduct" not in plan
         assert "AdaptiveSparkPlan" not in plan
         assert plan.count("partial_sum") == 2  # two supersteps per check
         shuffles = _re.findall(r"\bExchange (\w+)\((\w+)#\d+L?, (\d+)\)", plan)
         assert shuffles == [("hashpartitioning", "dst", "8")] * 2
+        joins = _re.findall(
+            r"BroadcastHashJoin \[(\w+)#\d+L?\], \[(\w+)#\d+L?\], Inner, (Build\w+)",
+            plan)
+        assert [j[:2] for j in joins] == [("src", "src")] * 2
+        builds += [j[2] for j in reversed(joins)]  # in superstep order
+    assert builds == ["BuildRight"] + ["BuildLeft"] * (len(builds) - 1)
 
 
 def test_scd2_single_exchange(spark, sf_dir):
@@ -647,6 +656,53 @@ def test_ancestors_lineage_loop_truncated(spark, sf_dir):
     assert "CartesianProduct" not in plan
     assert "Scan ExistingRDD" in plan
     assert "Scan parquet" not in plan
+
+
+def _power_of_three_customer(tmp_path, depth: int) -> str:
+    """Keys 3^0..3^depth: a parent chain depth generations deep (no key
+    is divisible by 5 or 37, so every edge is a kept 'parent' edge)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    keys = [3**k for k in range(depth + 1)]
+    pq.write_table(pa.table({"c_custkey": pa.array(keys, pa.int64())}),
+                   str(tmp_path / "customer.parquet"))
+    return str(tmp_path)
+
+
+def test_ancestors_lineage_refuses_past_its_cap(spark, tmp_path):
+    """A 17-generation chain is deeper than the four doubling rounds
+    close: the query fails instead of dropping the generation-17 pair
+    the oracle returns."""
+    sf = _power_of_three_customer(tmp_path, 17)
+    df = q.CATALOG["institution_ancestors_lineage"].spark(spark, sf)
+    with pytest.raises(Exception, match="reaches generation 16"):
+        df.collect()
+
+
+def test_ancestors_lineage_matches_oracle_below_its_cap(spark, tmp_path):
+    """A 14-generation chain is closed in full, as in the oracle."""
+    from openalex_walden_spark.oracle import compare, duckdb_connect
+
+    sf = _power_of_three_customer(tmp_path, 14)
+    spec = q.CATALOG["institution_ancestors_lineage"]
+    con = duckdb_connect(sf)
+    try:
+        res = compare(spec.name, spec.spark(spark, sf), con, spec.oracle)
+    finally:
+        con.close()
+    assert res.match, res.summary
+    assert res.rows_spark == 14 * 15 // 2
+
+
+def test_s8_scores_in_the_plan(spark, sf_dir):
+    """s8_model_inference's linear scorer is a SQL fold: no Python
+    worker in the plan, and the scoring projection rides the top-K
+    (one job, no range-partitioned sort of the whole table)."""
+    plan = _plan(spark, sf_dir, "s8_model_inference")
+    assert "MapInPandas" not in plan and "Python" not in plan
+    assert plan.startswith("TakeOrderedAndProject(limit=256")
+    assert "rangepartitioning" not in plan
 
 
 def test_prefix_filter_no_cartesian_no_unbounded_join(spark, sf_dir):
