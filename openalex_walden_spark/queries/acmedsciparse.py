@@ -46,6 +46,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from openalex_walden_spark.queries import sqlkit
 from openalex_walden_spark.queries.registry import register
 
 # acmedsci_to_s3.py:65-85
@@ -86,88 +87,22 @@ _T_NETWORK = ("(?i)^(.+?)\\\\s*\\\\(([^)]+)\\\\)\\\\s+and\\\\s+(.+?)"
 _PARENS = "\\\\([^)]*\\\\)"
 
 
-def _helpers(dialect: str):
-    if dialect == "spark":
-        g, S = "", "STRING"
+def _sql(dialect: str) -> str:
+    k = sqlkit.kit(dialect)
+    g, S, cs, bar, asize, elem = k.g, k.S, k.cs, k.bar, k.asize, k.elem
+    jn, like, rx, sl, splitws = k.jn, k.like, k.rx, k.sl, k.splitws
 
-        def elem(a: str, i: str) -> str:
-            return f"try_element_at({a}, {i})"
-
-        def asize(a: str) -> str:
-            return f"size({a})"
-
-        def sl(a: str, start: str, length: str) -> str:
-            return f"slice({a}, {start}, {length})"
-
-        def jn(a: str, n: str) -> str:
-            return f"array_join(slice({a}, 1, {n}), ' ')"
-
-        def jnsl(a: str, start: str, sep: str) -> str:
+    def jnsl(a: str, start: str, sep: str) -> str:
+        if dialect == "spark":
             length = f"{asize(a)} - ({start}) + 1"
             return f"array_join(slice({a}, {start}, {length}), {sep})"
+        return (f"array_to_string(list_slice({a}, {start}, "
+                f"{asize(a)}), {sep})")
 
-        def splitws(x: str) -> str:
-            return f"filter(split({x}, '\\\\s+'), t -> t <> '')"
-
-        def splitcomma(x: str) -> str:
-            return f"transform(split({x}, ','), t -> trim(t))"
-
-        def like(x: str, pat: str) -> str:
-            return f"{x} rlike '{pat}'"
-    else:
-        g, S = ", 'g'", "VARCHAR"
-
-        def elem(a: str, i: str) -> str:
-            return f"{a}[({i})]"
-
-        def asize(a: str) -> str:
-            return f"len({a})"
-
-        def sl(a: str, start: str, length: str) -> str:
-            return f"list_slice({a}, {start}, ({start}) + ({length}) - 1)"
-
-        def jn(a: str, n: str) -> str:
-            return f"array_to_string(list_slice({a}, 1, {n}), ' ')"
-
-        def jnsl(a: str, start: str, sep: str) -> str:
-            return (f"array_to_string(list_slice({a}, {start}, "
-                    f"{asize(a)}), {sep})")
-
-        def splitws(x: str) -> str:
-            return (f"list_filter(regexp_split_to_array({x}, '\\\\s+'), "
-                    f"t -> t <> '')")
-
-        def splitcomma(x: str) -> str:
-            return f"list_transform(string_split({x}, ','), t -> trim(t))"
-
-        def like(x: str, pat: str) -> str:
-            return f"regexp_matches({x}, '{pat}')"
-
-    return g, S, elem, asize, sl, jn, jnsl, splitws, splitcomma, like
-
-
-def _sql(dialect: str) -> str:
-    (g, S, elem, asize, sl, jn, jnsl, splitws, splitcomma,
-     like) = _helpers(dialect)
-
-    def cs(expr: str) -> str:
-        return f"CAST({expr} AS {S})"
-
-    def bar(name: str, prev: str, passthrough: list, cols: list) -> str:
+    def splitcomma(x: str) -> str:
         if dialect == "spark":
-            ns = ", ".join(f"'{c}', {e}" for c, e in cols)
-            sel = ", ".join(f"_s.{c} AS {c}" for c, _ in cols)
-            pt = ", ".join(f"_p.{c}" for c in passthrough)
-            return (f"{name} AS (\n  SELECT {pt}, {sel}\n  FROM {prev} _p\n"
-                    f"  LATERAL VIEW explode(array(named_struct({ns}))) "
-                    f"_bv AS _s\n)")
-        sel = ", ".join(f"{e} AS {c}" for c, e in cols)
-        pt = ", ".join(passthrough)
-        return (f"{name} AS MATERIALIZED (\n  SELECT {pt}, {sel}\n"
-                f"  FROM {prev}\n)")
-
-    def rx(srcv: str, pat: str, grp: int) -> str:
-        return f"nullif(regexp_extract({srcv}, '{pat}', {grp}), '')"
+            return f"transform(split({x}, ','), t -> trim(t))"
+        return f"list_transform(string_split({x}, ','), t -> trim(t))"
 
     def clean(x: str) -> str:
         """acmedsci clean (:97-101): ws collapse, strip, strip(','),
@@ -348,16 +283,9 @@ WHERE pi_family0 IS NOT NULL
 """
 
 
-def _build(dialect: str) -> str:
-    text = _sql(dialect)
-    if dialect == "duck":
-        text = text.replace("\\\\", "\\")
-    return text
-
-
 @register(
     "acmedsci_parse_awards",
-    oracle=_build("duck"),
+    oracle=sqlkit.build(_sql, "duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc=("Academy of Medical Sciences awards parse "
@@ -373,4 +301,4 @@ def acmedsci_parse_awards(spark: SparkSession, sf_dir: str) -> DataFrame:
     slugified ids.  One scan, one round-robin spread exchange under it
     (``spread`` in ``register`` — the single-row-group fixture scan is
     one task and this grammar cascade is regex-heavy), no Python."""
-    return spark.sql(_build("spark"))
+    return spark.sql(sqlkit.build(_sql, "spark"))

@@ -43,10 +43,10 @@ Python (reference semantics, independent of this SQL).
 
 from __future__ import annotations
 
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from openalex_walden_spark.queries import sqlkit
 from openalex_walden_spark.queries.registry import register
 
 _PREFIX_TITLES = ("'dr','prof','professor','mr','mrs','ms','miss',"
@@ -126,35 +126,9 @@ FROM orders
 
 
 def _sql(dialect: str) -> str:
-    if dialect == "spark":
-        stype, g = "STRING", ""
-        rl = lambda col, pat: f"{col} RLIKE '{pat}'"  # noqa: E731
-        asize, elem = "size", lambda a, i: f"try_element_at({a}, {i})"
-        arrslice = "slice"
-        joinsep = lambda a: f"array_join({a}, ' ')"  # noqa: E731
-        fmt = "format_string"
-        splitfn = lambda v: f"filter(split({v}, ' +'), x -> x <> '')"  # noqa: E731
-
-        def idx_transform(arr: str, cond: str) -> str:
-            return (f"zip_with({arr}, sequence(1, {asize}({arr})), "
-                    f"(t, i) -> CASE WHEN {cond} THEN i END)")
-        amax = "array_max"
-        amin = "array_min"
-    else:
-        stype, g = "VARCHAR", ", 'g'"
-        rl = lambda col, pat: f"regexp_matches({col}, '{pat}')"  # noqa: E731
-        asize, elem = "len", lambda a, i: f"{a}[{i}]"
-        arrslice = "list_slice"
-        joinsep = lambda a: f"list_aggr({a}, 'string_agg', ' ')"  # noqa: E731
-        fmt = "printf"
-        splitfn = lambda v: (  # noqa: E731
-            f"list_filter(regexp_split_to_array({v}, ' +'), x -> x <> '')")
-
-        def idx_transform(arr: str, cond: str) -> str:
-            return (f"list_transform({arr}, (t, i) -> "
-                    f"CASE WHEN {cond} THEN i END)")
-        amax = "list_max"
-        amin = "list_min"
+    k = sqlkit.kit(dialect)
+    g, S, asize, elem, fmt, head = k.g, k.S, k.asize, k.elem, k.fmt, k.head
+    idx_of, jnagg, rl, splitsp = k.idx_of, k.jnagg, k.rl, k.splitsp
 
     rows = (_ROWS_SPARK if dialect == "spark" else
             _ROWS_SPARK
@@ -163,9 +137,9 @@ def _sql(dialect: str) -> str:
                      "list_extract(['2021/22', '2022/23', '2023/24'],"))
 
     tok_norm = "lower(trim(BOTH ',.' FROM t))"
-    first_keep = (f"coalesce({amin}({idx_transform('toks', f'{tok_norm} NOT IN ({_PREFIX_TITLES})')}), "
-                  f"{asize}(toks) + 1)")
-    last_keep = (f"coalesce({amax}({idx_transform('toks', f'{tok_norm} NOT IN ({_DEGREE_SUFFIXES})')}), 0)")
+    first_keep = (f"coalesce({idx_of('toks', f'{tok_norm} NOT IN ({_PREFIX_TITLES})')}, "
+                  f"{asize('toks')} + 1)")
+    last_keep = (f"coalesce({idx_of('toks', f'{tok_norm} NOT IN ({_DEGREE_SUFFIXES})', 'array_max')}, 0)")
 
     completion_of = f"^{_PLACE}"
     completion_stem = f"^(of {_PLACE}|College London|College|London)"
@@ -199,7 +173,7 @@ named AS (
 ),
 tokenized AS (
   SELECT *,
-    {splitfn("replace(regexp_replace(pi_raw, '[(][^)]*[)]', ' '" + g + "), ',', ' ')")}
+    {splitsp("replace(regexp_replace(pi_raw, '[(][^)]*[)]', ' '" + g + "), ',', ' ')")}
       AS toks
   FROM named
 ),
@@ -216,11 +190,11 @@ sliced AS (
 ),
 splitn AS (
   SELECT *,
-    CASE WHEN {asize}(kept) > 1
-         THEN {joinsep(f"{arrslice}(kept, 1, {asize}(kept) - 1)")}
+    CASE WHEN {asize('kept')} > 1
+         THEN {jnagg(head('kept', asize('kept') + ' - 1'))}
          ELSE '' END AS given0,
-    CASE WHEN {asize}(kept) >= 1
-         THEN {elem("kept", f"{asize}(kept)")}
+    CASE WHEN {asize('kept')} >= 1
+         THEN {elem("kept", asize("kept"))}
          ELSE '' END AS family0
   FROM sliced
 ),
@@ -286,7 +260,7 @@ SELECT
     '{yr_pat}', ''{g}), '\\\\s+', ' '{g})) AS title,
   amount,
   CASE WHEN amount IS NOT NULL THEN 'GBP' END AS currency,
-  CAST(dur_months AS {stype}) AS duration_months,
+  CAST(dur_months AS {S}) AS duration_months,
   nullif(full_name, '') AS lead_full_name,
   nullif(given_name, '') AS lead_given_name,
   nullif(family_name, '') AS lead_family_name,
@@ -305,21 +279,9 @@ FROM measured
 """
 
 
-def _build(dialect: str) -> str:
-    text = _sql(dialect)
-    if dialect == "duck":
-        text = text.replace("\\\\", "\\")
-        text = text.replace('"toks"', "toks")
-        text = text.replace("split_part(report_period, '/', 1)",
-                            "split_part(report_period, '/', 1)")
-    else:
-        text = text.replace('"toks"', "toks")
-    return text
-
-
 @register(
     "bhf_parse_awards",
-    oracle=_build("duck"),
+    oracle=sqlkit.build(_sql, "duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc="BHF PDF-report grant parse stage (scripts/local/bhf_to_s3.py)",
@@ -328,8 +290,4 @@ def bhf_parse_awards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BHF annual-report award normalize (module docstring has the
     semantics map with reference line cites).  One scan + one per-ref
     keep-first window; everything else is column algebra."""
-    return spark.sql(_build("spark"))
-
-
-# keep flake quiet about the re import (used by sibling modules' style)
-_ = re
+    return spark.sql(sqlkit.build(_sql, "spark"))

@@ -59,6 +59,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from openalex_walden_spark.queries import sqlkit
 from openalex_walden_spark.queries.registry import register
 
 _ROWS_SPARK = """
@@ -125,34 +126,11 @@ _SUFFIX_SET = "('PhD','Ph.D','MD','M.D','DPhil','ScD','Jr','Sr','II','III','IV')
 
 
 def _sql(dialect: str) -> str:
-    if dialect == "spark":
-        stype = "STRING"
-        rows = _ROWS_SPARK
-        rl = lambda c, p: f"{c} RLIKE '{p}'"  # noqa: E731
-        asize, arrslice = "size", "slice"
-        elem = lambda a, i: f"try_element_at({a}, {i})"  # noqa: E731
-        joinsep = lambda a: f"array_join({a}, ' ')"  # noqa: E731
-        g = ""
-        splitws = lambda v: f"filter(split({v}, ' +'), x -> x <> '')"  # noqa: E731
-    else:
-        stype = "VARCHAR"
-        rows = _ROWS_SPARK.replace("AS STRING", "AS VARCHAR")
-        rl = lambda c, p: f"regexp_matches({c}, '{p}')"  # noqa: E731
-        asize, arrslice = "len", "list_slice"
-        elem = lambda a, i: f"{a}[{i}]"  # noqa: E731
-        joinsep = lambda a: f"list_aggr({a}, 'string_agg', ' ')"  # noqa: E731
-        g = ", 'g'"
-        splitws = lambda v: (  # noqa: E731
-            f"list_filter(regexp_split_to_array({v}, ' +'), x -> x <> '')")
-
-    def layer(name: str, prev: str, cols: list) -> str:
-        if dialect == "spark":
-            ns = ", ".join(f"'{c}', {e}" for c, e in cols)
-            sel = ", ".join(f"_s.{c} AS {c}" for c, _ in cols)
-            return (f"{name} AS (\n  SELECT _p.*, {sel}\n  FROM {prev} _p\n"
-                    f"  LATERAL VIEW explode(array(named_struct({ns}))) _bv AS _s\n)")
-        sel = ", ".join(f"{e} AS {c}" for c, e in cols)
-        return f"{name} AS MATERIALIZED (\n  SELECT *, {sel}\n  FROM {prev}\n)"
+    k = sqlkit.kit(dialect)
+    g, S, bar, asize, elem, head = k.g, k.S, k.bar, k.asize, k.elem, k.head
+    jnagg, rl, splitsp = k.jnagg, k.rl, k.splitsp
+    rows = (_ROWS_SPARK if dialect == "spark"
+            else _ROWS_SPARK.replace("AS STRING", "AS VARCHAR"))
 
     collapse = (lambda v: f"trim(regexp_replace({v}, '\\\\s+', ' '))"
                 if dialect == "spark"
@@ -162,7 +140,7 @@ def _sql(dialect: str) -> str:
     # suffix pop on rstrip('.') tokens, last token = family
     def name_toks(col: str) -> str:
         seg = f"trim(split_part(replace({col}, ';', ','), ',', 1))"
-        toks = splitws(seg)
+        toks = splitsp(seg)
         tok = "trim(TRAILING '.' FROM t)"
         if dialect == "spark":
             keep = (f"coalesce(array_max(zip_with({toks}, "
@@ -182,14 +160,14 @@ def _sql(dialect: str) -> str:
 
     chain = ",\n".join([
         # paren classification over the ORIGINAL heading
-        layer("parens", "raw", [
+        bar("parens", "raw", ["*"], [
             ("founding_paren",
              f"nullif(regexp_extract(raw_heading, '{_FOUND_PAREN}', 1), '')"),
             ("tail_paren",
              f"nullif(regexp_extract(raw_heading, '{_TAIL_PAREN}', 1), '')"),
             ("is_person", rl("raw_heading", _HONORIFIC)),
         ]),
-        layer("classified", "parens", [
+        bar("classified", "parens", ["*"], [
             ("country",
              f"CASE WHEN is_card THEN card_country "
              f"WHEN tail_paren IS NOT NULL "
@@ -197,7 +175,7 @@ def _sql(dialect: str) -> str:
              f"AND (is_person OR NOT {rl('tail_paren', _ACRONYM)}) "
              f"THEN tail_paren END"),
         ]),
-        layer("named", "classified", [
+        bar("named", "classified", ["*"], [
             # the CARD arm strips only the honorific (its parens stay in
             # the name — reference :336,348); section headings strip the
             # founding and country parens first
@@ -215,7 +193,7 @@ def _sql(dialect: str) -> str:
              f", '{_HONORIFIC}', ''))"),
         ]),
         # kind + marker removal in one layer (post = text after marker)
-        layer("kinded", "named", [
+        bar("kinded", "named", ["*"], [
             ("kind",
              f"CASE WHEN is_card THEN 'individual' "
              f"WHEN {rl('body_text', _BORN)} THEN 'individual' "
@@ -244,7 +222,7 @@ def _sql(dialect: str) -> str:
              f"THEN CAST(nullif(regexp_extract(founding_paren, "
              f"'(1[89][0-9][0-9]|20[0-2][0-9])', 1), '') AS INT) END"),
             ("post",
-             f"CASE WHEN is_card THEN CAST(NULL AS {stype}) "
+             f"CASE WHEN is_card THEN CAST(NULL AS {S}) "
              f"WHEN {rl('body_text', _BORN)} THEN trim(BOTH ' .,;:' FROM "
              f"regexp_replace(body_text, '^.*?{_BORN}', '')) "
              f"WHEN {rl('body_text', _LIFESPAN)} THEN trim(BOTH ' .,;:' FROM "
@@ -253,9 +231,9 @@ def _sql(dialect: str) -> str:
              f"regexp_replace(body_text, '^.*?{_FOUNDED}', '')) END"),
         ]),
         # the affiliation/contribution split
-        layer("affd", "kinded", [
+        bar("affd", "kinded", ["*"], [
             ("affiliation",
-             f"CASE WHEN post IS NULL THEN CAST(NULL AS {stype}) "
+             f"CASE WHEN post IS NULL THEN CAST(NULL AS {S}) "
              f"WHEN {rl('post', kw_pat)} "
              f"THEN trim(BOTH ' .,;:' FROM regexp_extract(post, "
              f"'{kw_pat}', 1)) "
@@ -265,7 +243,7 @@ def _sql(dialect: str) -> str:
              f"WHEN length(post) > 30 THEN trim(BOTH ' .,;:' FROM "
              f"substr(post, 1, 150)) END"),
             ("contribution",
-             f"CASE WHEN post IS NULL THEN CAST(NULL AS {stype}) "
+             f"CASE WHEN post IS NULL THEN CAST(NULL AS {S}) "
              f"WHEN {rl('post', kw_pat)} "
              f"THEN trim(BOTH ' .,;:' FROM substr(post, length("
              f"regexp_extract(post, '{kw_pat}', 1)) + 1)) "
@@ -302,20 +280,20 @@ final0 AS (
   FROM affd
 )
 SELECT
-  concat('blue-planet-', CAST(year AS {stype}), '-', anchor, '-',
+  concat('blue-planet-', CAST(year AS {S}), '-', anchor, '-',
          substr(trim(BOTH '-' FROM regexp_replace(lower(name_clean),
                 '[^a-z0-9]+', '-'{g})), 1, 60)) AS funder_award_id,
   year, anchor, name_clean, raw_heading,
-  CASE WHEN kind <> 'organization' AND {asize}({toks}) > 1
-       THEN {joinsep(f"{arrslice}({toks}, 1, {asize}({toks}) - 1)")}
+  CASE WHEN kind <> 'organization' AND {asize(toks)} > 1
+       THEN {jnagg(head(toks, asize(toks) + ' - 1'))}
   END AS given_name,
-  CASE WHEN kind <> 'organization' AND {asize}({toks}) >= 1
-       THEN {elem(toks, f"{asize}({toks})")}
+  CASE WHEN kind <> 'organization' AND {asize(toks)} >= 1
+       THEN {elem(toks, asize(toks))}
   END AS family_name,
   country, kind AS recipient_kind, birth_year, founding_year,
   CASE WHEN kind = 'organization' THEN name_clean
        ELSE affiliation END AS affiliation_name,
-  concat('Blue Planet Prize ', CAST(year AS {stype}), ' — ', name_clean)
+  concat('Blue Planet Prize ', CAST(year AS {S}), ' — ', name_clean)
     AS display_name,
   CASE
     WHEN contribution_f IS NOT NULL AND country IS NOT NULL
@@ -325,24 +303,17 @@ SELECT
   END AS description,
   CAST(500000.0 AS DOUBLE) AS amount,
   'USD' AS currency,
-  concat(CAST(year AS {stype}), '-01-01') AS start_date,
-  concat(CAST(year AS {stype}), '-12-31') AS end_date,
+  concat(CAST(year AS {S}), '-01-01') AS start_date,
+  concat(CAST(year AS {S}), '-12-31') AS end_date,
   landing_page_url,
   false AS declined
 FROM final0
 """
 
 
-def _build(dialect: str) -> str:
-    text = _sql(dialect)
-    if dialect == "duck":
-        text = text.replace("\\\\", "\\")
-    return text
-
-
 @register(
     "blue_planet_parse_awards",
-    oracle=_build("duck"),
+    oracle=sqlkit.build(_sql, "duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc=("Blue Planet Prize laureate parse "
@@ -353,4 +324,4 @@ def blue_planet_parse_awards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blue Planet Prize laureate normalize (module docstring has the
     full semantics map).  One scan through Generate layer barriers; no
     shuffle, no Python."""
-    return spark.sql(_build("spark"))
+    return spark.sql(sqlkit.build(_sql, "spark"))

@@ -52,6 +52,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from openalex_walden_spark.queries import sqlkit
 from openalex_walden_spark.queries.registry import register
 
 _SITE = "https://www.carlsbergfondet.dk"
@@ -82,95 +83,11 @@ _YEAR = "\\\\b((?:19|20)\\\\d{2})\\\\b"
 _TITLE_CUT = "\\\\s*\\\\|\\\\s*Carlsbergfondet.*$"
 
 
-def _helpers(dialect: str):
-    if dialect == "spark":
-        g, S = "", "STRING"
-
-        def rx(src: str, pat: str, grp: int) -> str:
-            return f"nullif(regexp_extract({src}, '{pat}', {grp}), '')"
-
-        def splitre(x: str, pat: str) -> str:
-            return f"split({x}, '{pat}')"
-
-        def elem(a: str, i: str) -> str:
-            return f"try_element_at({a}, {i})"
-
-        def asize(a: str) -> str:
-            return f"size({a})"
-
-        def sl(a: str, start: str, length: str) -> str:
-            return f"slice({a}, {start}, {length})"
-
-        def jn(a: str, n: str) -> str:
-            return f"array_join(slice({a}, 1, {n}), ' ')"
-
-        def overlap(a: str, b: str) -> str:
-            return f"arrays_overlap({a}, {b})"
-
-        def tx(a: str, e: str) -> str:
-            return f"transform({a}, t -> {e})"
-
-        def filt(a: str, c: str) -> str:
-            return f"filter({a}, t -> {c})"
-    else:
-        g, S = ", 'g'", "VARCHAR"
-
-        def rx(src: str, pat: str, grp: int) -> str:
-            return f"nullif(regexp_extract({src}, '{pat}', {grp}), '')"
-
-        def splitre(x: str, pat: str) -> str:
-            return f"regexp_split_to_array({x}, '{pat}')"
-
-        def elem(a: str, i: str) -> str:
-            return f"{a}[({i})]"
-
-        def asize(a: str) -> str:
-            return f"len({a})"
-
-        def sl(a: str, start: str, length: str) -> str:
-            return f"list_slice({a}, {start}, ({start}) + ({length}) - 1)"
-
-        def jn(a: str, n: str) -> str:
-            return f"array_to_string(list_slice({a}, 1, {n}), ' ')"
-
-        def overlap(a: str, b: str) -> str:
-            return f"list_has_any({a}, {b})"
-
-        def tx(a: str, e: str) -> str:
-            return f"list_transform({a}, t -> {e})"
-
-        def filt(a: str, c: str) -> str:
-            return f"list_filter({a}, t -> {c})"
-
-    def clean(x: str) -> str:
-        """clean_text (carlsberg:150-155) + NBSP shim."""
-        e = f"replace(replace({x}, '&amp;', '&'), '&nbsp;', ' ')"
-        e = f"replace({e}, chr(160), ' ')"
-        return f"nullif(trim(regexp_replace({e}, '\\\\s+', ' '{g})), '')"
-
-    return (g, S, rx, splitre, elem, asize, sl, jn, overlap, tx, filt,
-            clean)
-
-
 def _sql(dialect: str) -> str:
-    (g, S, rx, splitre, elem, asize, sl, jn, overlap, tx, filt,
-     clean) = _helpers(dialect)
-
-    def cs(expr: str) -> str:
-        return f"CAST({expr} AS {S})"
-
-    def bar(name: str, prev: str, passthrough: list, cols: list) -> str:
-        if dialect == "spark":
-            ns = ", ".join(f"'{c}', {e}" for c, e in cols)
-            sel = ", ".join(f"_s.{c} AS {c}" for c, _ in cols)
-            pt = ", ".join(f"_p.{c}" for c in passthrough)
-            return (f"{name} AS (\n  SELECT {pt}, {sel}\n  FROM {prev} _p\n"
-                    f"  LATERAL VIEW explode(array(named_struct({ns}))) "
-                    f"_bv AS _s\n)")
-        sel = ", ".join(f"{e} AS {c}" for c, e in cols)
-        pt = ", ".join(passthrough)
-        return (f"{name} AS MATERIALIZED (\n  SELECT {pt}, {sel}\n"
-                f"  FROM {prev}\n)")
+    k = sqlkit.kit(dialect)
+    g, S, cs, bar, arr, asize = k.g, k.S, k.cs, k.bar, k.arr, k.asize
+    clean_ent, elem, filt, jn = k.clean_ent, k.elem, k.filt, k.jn
+    overlap, rx, sl, splitre, tx = k.overlap, k.rx, k.sl, k.splitre, k.tx
 
     K = cs("k")
     markers = ", ".join(f"'{m}'" for m in _MARKERS)
@@ -274,15 +191,15 @@ WITH pages AS (
     ("canonical", f"CASE WHEN ok AND has_canonical THEN "
                   f"concat('{_SITE}/en/what-we-have-funded/', slug) END"),
     ("title", "CASE WHEN NOT ok THEN NULL "
-              "WHEN h1_raw IS NOT NULL THEN " + clean("h1_raw")
-              + " ELSE " + clean("regexp_replace(title_tag_raw, '"
+              "WHEN h1_raw IS NOT NULL THEN " + clean_ent("h1_raw")
+              + " ELSE " + clean_ent("regexp_replace(title_tag_raw, '"
                                  + _TITLE_CUT + "', ''" + g + ")")
               + " END"),
-    ("applicant_name", f"CASE WHEN ok THEN {clean('applicant_raw')} END"),
-    ("institution", f"CASE WHEN ok THEN {clean('inst_raw')} END"),
-    ("amount_raw", f"CASE WHEN ok THEN {clean('amount_raw_f')} END"),
-    ("year_raw", f"CASE WHEN ok THEN {clean('year_raw_f')} END"),
-    ("type_of_grant", f"CASE WHEN ok THEN {clean('type_raw')} END"),
+    ("applicant_name", f"CASE WHEN ok THEN {clean_ent('applicant_raw')} END"),
+    ("institution", f"CASE WHEN ok THEN {clean_ent('inst_raw')} END"),
+    ("amount_raw", f"CASE WHEN ok THEN {clean_ent('amount_raw_f')} END"),
+    ("year_raw", f"CASE WHEN ok THEN {clean_ent('year_raw_f')} END"),
+    ("type_of_grant", f"CASE WHEN ok THEN {clean_ent('type_raw')} END"),
 ])},
 {bar("parsed", "facts",
      ["k", "slug", "ok", "is_test", "url", "canonical", "title",
@@ -331,16 +248,9 @@ WHERE NOT (coalesce(upper(title) LIKE 'TEST %', false)
 """
 
 
-def _build(dialect: str) -> str:
-    text = _sql(dialect)
-    if dialect == "duck":
-        text = text.replace("\\\\", "\\")
-    return text
-
-
 @register(
     "carlsberg_parse_grants",
-    oracle=_build("duck"),
+    oracle=sqlkit.build(_sql, "duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc=("Carlsbergfondet grants parse "
@@ -353,4 +263,4 @@ def carlsberg_parse_grants(spark: SparkSession, sf_dir: str) -> DataFrame:
     title/degree name split, DKK-0 TEST-page skip, URL-only degraded
     rows.  One scan under one round-robin spread exchange, no
     Python."""
-    return spark.sql(_build("spark"))
+    return spark.sql(sqlkit.build(_sql, "spark"))

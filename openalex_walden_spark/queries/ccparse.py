@@ -43,10 +43,9 @@ tests/test_template_fidelity.py re-derives the expected rows in Python
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, SparkSession
 
+from openalex_walden_spark.queries import sqlkit
 from openalex_walden_spark.queries.registry import register
 
 _SUFFIXES = ("'phd','ph.d.','md','m.d.','dphil','frs','jr','jr.','sr','sr.',"
@@ -138,14 +137,10 @@ FROM orders WHERE o_orderkey % 2 = 1
 
 
 def _sql(dialect: str) -> str:
+    k = sqlkit.kit(dialect)
+    g, S, bar, elem, head, idx_of = k.g, k.S, k.bar, k.elem, k.head, k.idx_of
+    jnagg, rl = k.jnagg, k.rl
     if dialect == "spark":
-        stype, g = "STRING", ""
-        rl = lambda col, pat: f"{col} RLIKE '{pat}'"  # noqa: E731
-        asize = "size"
-        elem = lambda a, i: f"try_element_at({a}, {i})"  # noqa: E731
-        arrslice = "slice"
-        joinsep = lambda a: f"array_join({a}, ' ')"  # noqa: E731
-        amax = "array_max"
         explode_authors = (
             "LATERAL VIEW explode(split(authors_norm, ' *, +')) t AS one_author"
         )
@@ -154,13 +149,6 @@ def _sql(dialect: str) -> str:
         )
         pdf_rows, gg_rows = _PDF_ROWS, _GG_ROWS
     else:
-        stype, g = "VARCHAR", ", 'g'"
-        rl = lambda col, pat: f"regexp_matches({col}, '{pat}')"  # noqa: E731
-        asize = "len"
-        elem = lambda a, i: f"{a}[{i}]"  # noqa: E731
-        arrslice = "list_slice"
-        joinsep = lambda a: f"list_aggr({a}, 'string_agg', ' ')"  # noqa: E731
-        amax = "list_max"
         explode_authors = (
             ", unnest(regexp_split_to_array(authors_norm, ' *, +')) "
             "t(one_author)"
@@ -204,37 +192,8 @@ def _sql(dialect: str) -> str:
     for_x1 = "regexp_extract(np0, '(?i)^(.*?) ?\\\\bfor(?:/pour)?\\\\b (.+)$', 1)"
     for_x2 = "regexp_extract(np0, '(?i)^(.*?) ?\\\\bfor(?:/pour)?\\\\b (.+)$', 2)"
     tok_norm = "lower(trim(BOTH ',.' FROM t))"
-    if dialect == "spark":
-        last_keep = (
-            f"coalesce(array_max(zip_with(toks, sequence(1, size(toks)), "
-            f"(t, i) -> CASE WHEN {tok_norm} NOT IN ({_SUFFIXES}) "
-            f"THEN i END)), 0)"
-        )
-    else:
-        last_keep = (
-            f"coalesce(list_max(list_transform(toks, (t, i) -> "
-            f"CASE WHEN {tok_norm} NOT IN ({_SUFFIXES}) THEN i END)), 0)"
-        )
-
-    def layer(name: str, prev: str, cols: list) -> str:
-        """One derivation layer.  On the Spark side each layer is a
-        1:1 ``explode(array(named_struct(...)))`` Generate: Catalyst's
-        CollapseProject cannot merge across a Generate, so the chained
-        CASE/regex derivations stay LINEAR in plan size instead of
-        multiplying at every reference (the plain chained-CTE form
-        inlined to a 70 MB optimized plan).  Still no hash shuffle, still
-        whole-stage codegen.  DuckDB evaluates CTE columns without the
-        blowup, so its side keeps plain projections."""
-        if dialect == "spark":
-            ns = ", ".join(f"'{c}', {e}" for c, e in cols)
-            sel = ", ".join(f"_s.{c} AS {c}" for c, _ in cols)
-            return (f"{name} AS (\n  SELECT _p.*, {sel}\n  FROM {prev} _p\n"
-                    f"  LATERAL VIEW explode(array(named_struct({ns}))) _bv AS _s\n)")
-        # MATERIALIZED: DuckDB inlines CTEs too, and the chained
-        # derivations would re-evaluate exponentially per row (241 s at
-        # sf0.001 measured); materializing each layer keeps it linear.
-        sel = ", ".join(f"{e} AS {c}" for c, e in cols)
-        return f"{name} AS MATERIALIZED (\n  SELECT *, {sel}\n  FROM {prev}\n)"
+    last_keep = (f"coalesce({idx_of('toks', f'{tok_norm} NOT IN ({_SUFFIXES})', 'array_max')}"
+                 ", 0)")
 
     prize_prefix_pat = ("(?i)^(First Prize|Second Prize|Third Prize|"
                         "Honou?rable Mention|Special Prize) *[:-]")
@@ -246,7 +205,7 @@ def _sql(dialect: str) -> str:
               "{2,50})( |$)', @N@)")
 
     pdf_chain = ",\n".join([
-        layer("pdf_prefixed", "pdf_gated", [
+        bar("pdf_prefixed", "pdf_gated", ["*"], [
             ("cat0",
              f"CASE WHEN {rl('entry', prize_prefix_pat)} THEN "
              f"{clean(prize_prefix_x.replace('@N@', '1'))} END"),
@@ -254,20 +213,20 @@ def _sql(dialect: str) -> str:
              f"CASE WHEN {rl('entry', prize_prefix_pat)} THEN "
              f"{clean(prize_prefix_x.replace('@N@', '2'))} ELSE entry END"),
         ]),
-        layer("pdf_deparen", "pdf_prefixed", [
+        bar("pdf_deparen", "pdf_prefixed", ["*"], [
             ("np0",
              "coalesce(" +
              clean("regexp_replace(english, '[(][^)]*[)]', ' '" + g + ")") +
              ", '')"),
         ]),
-        layer("pdf_work", "pdf_deparen", [
+        bar("pdf_work", "pdf_deparen", ["*"], [
             ("work_title",
              f"CASE WHEN {rl('np0', for_pat)} THEN {clean(for_x2)} END"),
             ("np1",
              f"CASE WHEN {rl('np0', for_pat)} THEN "
              f"coalesce({clean(for_x1)}, '') ELSE np0 END"),
         ]),
-        layer("pdf_dash", "pdf_work", [
+        bar("pdf_dash", "pdf_work", ["*"], [
             ("np2",
              f"CASE WHEN {rl('np1', dash_pat)} THEN "
              f"coalesce({clean(dash_x.replace('@N@', '1'))}, '') ELSE np1 END"),
@@ -275,7 +234,7 @@ def _sql(dialect: str) -> str:
              f"CASE WHEN {rl('np1', dash_pat)} THEN "
              f"coalesce(cat0, {clean(dash_x.replace('@N@', '2'))}) ELSE cat0 END"),
         ]),
-        layer("pdf_comma", "pdf_dash", [
+        bar("pdf_comma", "pdf_dash", ["*"], [
             ("np3",
              "CASE WHEN np2 LIKE '%,%' THEN coalesce(" +
              clean("split_part(np2, ',', 1)") + ", '') ELSE np2 END"),
@@ -285,7 +244,7 @@ def _sql(dialect: str) -> str:
              clean("substr(np2, length(split_part(np2, ',', 1)) + 2)") +
              ", ''), 1, 120)) ELSE cat1 END"),
         ]),
-        layer("pdf_based", "pdf_comma", [
+        bar("pdf_based", "pdf_comma", ["*"], [
             ("base",
              "trim(regexp_replace(CASE WHEN np3 LIKE '%:%' THEN coalesce(" +
              clean("regexp_extract(np3, ':([^:]*)$', 1)") +
@@ -316,9 +275,9 @@ pdf_named AS (
 pdf_rows_out AS (
   SELECT rid, year, prize_slug, prize_name,
          'canada_council_pdf' AS source_type,
-         category, CAST(NULL AS {stype}) AS language,
+         category, CAST(NULL AS {S}) AS language,
          laureate_name, work_title,
-         CAST(NULL AS {stype}) AS publisher,
+         CAST(NULL AS {S}) AS publisher,
          entry AS raw_entry_text
   FROM pdf_named
   WHERE laureate_name IS NOT NULL
@@ -367,7 +326,7 @@ tokened AS (
 named_out AS (
   SELECT *,
     CASE WHEN toks IS NOT NULL AND {last_keep} > 1
-         THEN {joinsep(f"{arrslice}(toks, 1, {last_keep} - 1)")}
+         THEN {jnagg(head('toks', f'{last_keep} - 1'))}
     END AS laureate_given_name,
     CASE WHEN toks IS NOT NULL AND {last_keep} >= 1
          THEN {elem("toks", last_keep)}
@@ -375,7 +334,7 @@ named_out AS (
   FROM tokened
 )
 SELECT
-  concat_ws(':', 'canada-council', prize_slug, CAST(year AS {stype}),
+  concat_ws(':', 'canada-council', prize_slug, CAST(year AS {S}),
     {slug("coalesce(category, language, 'general')")},
     {slug("laureate_name")},
     {slug("coalesce(work_title, 'no-work')")}) AS funder_award_id,
@@ -390,21 +349,9 @@ FROM named_out
 """
 
 
-def _build(dialect: str) -> str:
-    text = _sql(dialect)
-    if dialect == "duck":
-        text = text.replace("\\\\", "\\")
-        text = re.sub(
-            r"regexp_matches\(([^,]+), ('(?:[^']|'')*')\)",
-            r"regexp_matches(\1, \2)",
-            text,
-        )
-    return text
-
-
 @register(
     "canada_council_prizes_parse",
-    oracle=_build("duck"),
+    oracle=sqlkit.build(_sql, "duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc=("Canada Council prize-archive + GGBooks parse stage "
@@ -416,4 +363,4 @@ def canada_council_prizes_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics map).  One scan per arm, a co-author explode, a 10-row
     broadcast label join; no hash shuffle (each arm's scan sits under
     one round-robin spread exchange), no Python."""
-    return spark.sql(_build("spark"))
+    return spark.sql(sqlkit.build(_sql, "spark"))

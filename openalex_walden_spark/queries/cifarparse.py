@@ -52,6 +52,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from openalex_walden_spark.queries import sqlkit
 from openalex_walden_spark.queries.registry import register
 
 # cifar_to_s3.py:118 defines PROVENANCE but the shipped parquet does NOT
@@ -94,105 +95,22 @@ _INSTITUTIONS = {
 _COUNTRIES = {601: "Canada", 602: "France"}
 
 
-def _helpers(dialect: str):
-    if dialect == "spark":
-        g, S = "", "STRING"
-
-        def arr(*items: str) -> str:
-            return (f"array({', '.join(items)})" if items
-                    else "slice(array(0), 1, 0)")
-
-        def elem(a: str, i: str) -> str:
-            return f"try_element_at({a}, {i})"
-
-        def asize(a: str) -> str:
-            return f"size({a})"
-
-        def tx(a: str, e: str) -> str:
-            return f"transform({a}, t -> {e})"
-
-        def filt(a: str, c: str) -> str:
-            return f"filter({a}, t -> {c})"
-
-        def jnsep(a: str, sep: str) -> str:
-            return f"array_join({a}, {sep})"
-
-        def splitws(x: str) -> str:
-            return f"filter(split({x}, '\\\\s+'), t -> t <> '')"
-
-        def pos0(a: str, v: str) -> str:
-            # Spark array_position: 1-based, 0 on miss
-            return f"array_position({a}, {v})"
-
-        def rev(a: str) -> str:
-            return f"reverse({a})"
-
-        def sl(a: str, start: str, length: str) -> str:
-            return f"slice({a}, {start}, {length})"
-    else:
-        g, S = ", 'g'", "VARCHAR"
-
-        def arr(*items: str) -> str:
-            return (f"[{', '.join(items)}]" if items
-                    else "list_slice([0], 1, 0)")
-
-        def elem(a: str, i: str) -> str:
-            return f"{a}[({i})]"
-
-        def asize(a: str) -> str:
-            return f"len({a})"
-
-        def tx(a: str, e: str) -> str:
-            return f"list_transform({a}, t -> {e})"
-
-        def filt(a: str, c: str) -> str:
-            return f"list_filter({a}, t -> {c})"
-
-        def jnsep(a: str, sep: str) -> str:
-            return f"array_to_string({a}, {sep})"
-
-        def splitws(x: str) -> str:
-            return (f"list_filter(regexp_split_to_array({x}, '\\\\s+'), "
-                    f"t -> t <> '')")
-
-        def pos0(a: str, v: str) -> str:
-            # duck list_position: 1-based, 0 on miss (matches Spark)
-            return f"list_position({a}, {v})"
-
-        def rev(a: str) -> str:
-            return f"list_reverse({a})"
-
-        def sl(a: str, start: str, length: str) -> str:
-            # duck list_slice takes an END index; equal to a LENGTH
-            # only because every call site starts at 1
-            return f"list_slice({a}, {start}, {length})"
-
-    return (g, S, arr, elem, asize, tx, filt, jnsep, splitws, pos0,
-            rev, sl)
-
-
 def _sql(dialect: str) -> str:
-    (g, S, arr, elem, asize, tx, filt, jnsep, splitws, pos0,
-     rev, sl) = _helpers(dialect)
+    k = sqlkit.kit(dialect)
+    cs, bar, arr, asize, elem = k.cs, k.bar, k.arr, k.asize, k.elem
+    filt, jn, jnsep, noints = k.filt, k.jn, k.jnsep, k.noints
+    splitws, sq, tx = k.splitws, k.sq, k.tx
 
-    def cs(expr: str) -> str:
-        return f"CAST({expr} AS {S})"
-
-    def bar(name: str, prev: str, passthrough: list, cols: list) -> str:
+    def pos0(a: str, v: str) -> str:
+        # 1-based, 0 on miss in both dialects
         if dialect == "spark":
-            ns = ", ".join(f"'{c}', {e}" for c, e in cols)
-            sel = ", ".join(f"_s.{c} AS {c}" for c, _ in cols)
-            pt = ", ".join(f"_p.{c}" for c in passthrough)
-            return (f"{name} AS (\n  SELECT {pt}, {sel}\n  FROM {prev} _p\n"
-                    f"  LATERAL VIEW explode(array(named_struct({ns}))) "
-                    f"_bv AS _s\n)")
-        sel = ", ".join(f"{e} AS {c}" for c, e in cols)
-        pt = ", ".join(passthrough)
-        return (f"{name} AS MATERIALIZED (\n  SELECT {pt}, {sel}\n"
-                f"  FROM {prev}\n)")
+            return f"array_position({a}, {v})"
+        return f"list_position({a}, {v})"
 
-    def sq(text: str) -> str:
-        return text.replace("'", "''")
+    def rev(a: str) -> str:
+        if dialect == "spark":
+            return f"reverse({a})"
+        return f"list_reverse({a})"
 
     def case_lookup(var: str, table: dict, pick) -> str:
         whens = " ".join(f"WHEN {i} THEN '{sq(pick(v))}'"
@@ -242,26 +160,26 @@ def _sql(dialect: str) -> str:
            {cs('o_orderkey % 9 + 1')}, '-1',
            {cs('o_orderkey % 9')}, 'T08:30:00') AS bio_date,
     CASE CAST(o_orderkey % 6 AS INT)
-      WHEN 0 THEN {arr()}
+      WHEN 0 THEN {noints()}
       WHEN 1 THEN {arr(p[901])}
       WHEN 2 THEN {arr(p[902], p[903])}
       WHEN 3 THEN {arr('999', p[904])}
       WHEN 4 THEN {arr('998')}
       ELSE {arr(p[905], p[901])} END AS prog_ids,
     CASE CAST(o_orderkey % 6 AS INT)
-      WHEN 0 THEN {arr()}
+      WHEN 0 THEN {noints()}
       WHEN 1 THEN {arr('801')}
       WHEN 2 THEN {arr('777', '802')}
       WHEN 3 THEN {arr('803', '801')}
       WHEN 4 THEN {arr('804')}
       ELSE {arr('805')} END AS role_ids,
     CASE CAST(o_orderkey % 4 AS INT)
-      WHEN 0 THEN {arr()}
+      WHEN 0 THEN {noints()}
       WHEN 1 THEN {arr('701')}
       WHEN 2 THEN {arr('702', '703')}
       ELSE {arr('777', '701')} END AS inst_ids,
     CASE CAST(o_orderkey % 3 AS INT)
-      WHEN 0 THEN {arr()}
+      WHEN 0 THEN {noints()}
       WHEN 1 THEN {arr('601')}
       ELSE {arr('602')} END AS country_ids"""
 
@@ -321,7 +239,7 @@ SELECT
   bio_slug,
   full_name AS researcher_full_name,
   CASE WHEN keep_n <= 1 THEN ''
-    ELSE {jnsep(sl("toks", "1", "keep_n - 1"), "' '")} END
+    ELSE {jn("toks", "keep_n - 1")} END
     AS researcher_given,
   CASE WHEN keep_n = 0 THEN ''
     ELSE {elem('toks', 'keep_n')} END AS researcher_family,
@@ -344,16 +262,9 @@ FROM split_done
 """
 
 
-def _build(dialect: str) -> str:
-    text = _sql(dialect)
-    if dialect == "duck":
-        text = text.replace("\\\\", "\\")
-    return text
-
-
 @register(
     "cifar_parse_appointments",
-    oracle=_build("duck"),
+    oracle=sqlkit.build(_sql, "duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc="CIFAR (bio x program) appointment parse (scripts/local/cifar_to_s3.py)",
@@ -364,4 +275,4 @@ def cifar_parse_appointments(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree-suffix name pop, advisory-over-research role classing,
     '|' roll-ups, string-typed schema with 'False' declined.  One
     scan + one Generate explode, zero exchanges, no Python."""
-    return spark.sql(_build("spark"))
+    return spark.sql(sqlkit.build(_sql, "spark"))

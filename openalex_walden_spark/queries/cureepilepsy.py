@@ -31,6 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from openalex_walden_spark.queries import sqlkit
 from openalex_walden_spark.queries.registry import register
 
 _TITLE_STRIP = "(?i)^(Professor|Prof|Dr|Mr|Mrs|Ms|Miss)\\\\.?\\\\s+"
@@ -39,69 +40,10 @@ _DEGREE_TAIL = ("(?i),?\\\\s*(PhD|MD|MBBS|DVM|PharmD|ScD|DO|MPH)"
 _FIRST_SPLIT = ";| and |&"
 
 
-def _helpers(dialect: str):
-    if dialect == "spark":
-        g, S = "", "STRING"
-
-        def elem(a: str, i: str) -> str:
-            return f"try_element_at({a}, {i})"
-
-        def asize(a: str) -> str:
-            return f"size({a})"
-
-        def jn(a: str, n: str) -> str:
-            return f"array_join(slice({a}, 1, {n}), ' ')"
-
-        def splitws(x: str) -> str:
-            return f"filter(split({x}, '\\\\s+'), t -> t <> '')"
-
-        def splitre(x: str, pat: str) -> str:
-            return f"split({x}, '{pat}')"
-    else:
-        g, S = ", 'g'", "VARCHAR"
-
-        def elem(a: str, i: str) -> str:
-            return f"{a}[({i})]"
-
-        def asize(a: str) -> str:
-            return f"len({a})"
-
-        def jn(a: str, n: str) -> str:
-            return f"array_to_string(list_slice({a}, 1, {n}), ' ')"
-
-        def splitws(x: str) -> str:
-            return (f"list_filter(regexp_split_to_array({x}, '\\\\s+'), "
-                    f"t -> t <> '')")
-
-        def splitre(x: str, pat: str) -> str:
-            return f"regexp_split_to_array({x}, '{pat}')"
-
-    def souptext(x: str) -> str:
-        e = f"regexp_replace({x}, '<[^>]+>', ' '{g})"
-        e = f"replace({e}, '&amp;', '&')"
-        return f"nullif(trim(regexp_replace({e}, '\\\\s+', ' '{g})), '')"
-
-    return g, S, elem, asize, jn, splitws, splitre, souptext
-
-
 def _sql(dialect: str) -> str:
-    g, S, elem, asize, jn, splitws, splitre, souptext = _helpers(dialect)
-
-    def cs(expr: str) -> str:
-        return f"CAST({expr} AS {S})"
-
-    def bar(name: str, prev: str, passthrough: list, cols: list) -> str:
-        if dialect == "spark":
-            ns = ", ".join(f"'{c}', {e}" for c, e in cols)
-            sel = ", ".join(f"_s.{c} AS {c}" for c, _ in cols)
-            pt = ", ".join(f"_p.{c}" for c in passthrough)
-            return (f"{name} AS (\n  SELECT {pt}, {sel}\n  FROM {prev} _p\n"
-                    f"  LATERAL VIEW explode(array(named_struct({ns}))) "
-                    f"_bv AS _s\n)")
-        sel = ", ".join(f"{e} AS {c}" for c, e in cols)
-        pt = ", ".join(passthrough)
-        return (f"{name} AS MATERIALIZED (\n  SELECT {pt}, {sel}\n"
-                f"  FROM {prev}\n)")
+    k = sqlkit.kit(dialect)
+    g, cs, bar, asize, elem, jn = k.g, k.cs, k.bar, k.asize, k.elem, k.jn
+    splitre, splitws, striphtml = k.splitre, k.splitws, k.striphtml
 
     pi_raw_expr = ("CASE WHEN NOT has_card OR pi_inst IS NULL THEN NULL "
                    "WHEN instr(pi_inst, '/') > 0 THEN "
@@ -156,8 +98,8 @@ WITH rest AS (
   FROM orders
 ),
 {bar("carded", "rest", _PT, [
-    ("title", souptext("title_html")),
-    ("description", souptext("excerpt_html")),
+    ("title", striphtml("title_html")),
+    ("description", striphtml("excerpt_html")),
     ("pi_raw", pi_raw_expr),
     ("institution", inst_expr),
 ])},
@@ -185,16 +127,9 @@ FROM toks
 """
 
 
-def _build(dialect: str) -> str:
-    text = _sql(dialect)
-    if dialect == "duck":
-        text = text.replace("\\\\", "\\")
-    return text
-
-
 @register(
     "cure_epilepsy_parse_grants",
-    oracle=_build("duck"),
+    oracle=sqlkit.build(_sql, "duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc=("CURE Epilepsy grants parse "
@@ -206,4 +141,4 @@ def cure_epilepsy_parse_grants(spark: SparkSession,
     missing arm, first-'/' PI/institution split, first-name-of-list
     pick with title strip and degree-tail regex, 'cure-{id}' ids.
     One scan, zero exchanges, no Python."""
-    return spark.sql(_build("spark"))
+    return spark.sql(sqlkit.build(_sql, "spark"))

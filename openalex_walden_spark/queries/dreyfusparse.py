@@ -34,6 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from openalex_walden_spark.queries import sqlkit
 from openalex_walden_spark.queries.registry import register
 
 # PROGRAMS (:129-170): scheme, label, funding_type, amount, currency.
@@ -85,32 +86,17 @@ FROM orders
 
 
 def _sql(dialect: str) -> str:
+    k = sqlkit.kit(dialect)
+    g, S, asize, elem, head = k.g, k.S, k.asize, k.elem, k.head
+    idx_of, jnagg, splitsp = k.idx_of, k.jnagg, k.splitsp
     if dialect == "spark":
-        stype, g = "STRING", ""
         rows = _ROWS_SPARK
-        asize = "size"
-        elem = lambda a, i: f"try_element_at({a}, {i})"  # noqa: E731
-        joinsep = lambda a: f"array_join({a}, ' ')"  # noqa: E731
-        splitfn = lambda v: f"filter(split({v}, ' +'), x -> x <> '')"  # noqa: E731
-        amin, amax = "array_min", "array_max"
-        idx = lambda arr, cond: (  # noqa: E731
-            f"zip_with({arr}, sequence(1, size({arr})), "
-            f"(t, i) -> CASE WHEN {cond} THEN i END)")
     else:
-        stype, g = "VARCHAR", ", 'g'"
         rows = (_ROWS_SPARK
                 .replace("AS STRING", "AS VARCHAR")
                 .replace("element_at(array(", "list_extract([")
                 .replace("'machine_learning_chemical_sciences'),",
                          "'machine_learning_chemical_sciences'],"))
-        asize = "len"
-        elem = lambda a, i: f"{a}[{i}]"  # noqa: E731
-        joinsep = lambda a: f"list_aggr({a}, 'string_agg', ' ')"  # noqa: E731
-        splitfn = lambda v: (  # noqa: E731
-            f"list_filter(regexp_split_to_array({v}, ' +'), x -> x <> '')")
-        amin, amax = "list_min", "list_max"
-        idx = lambda arr, cond: (  # noqa: E731
-            f"list_transform({arr}, (t, i) -> CASE WHEN {cond} THEN i END)")
 
     progs = ", ".join(
         "('{}', '{}', '{}', {}, {})".format(
@@ -127,10 +113,10 @@ def _sql(dialect: str) -> str:
 
     tok_pref = "trim(TRAILING '.' FROM t)"
     tok_suff = "trim(TRAILING '.,' FROM t)"
-    toks = splitfn("name")
-    first_keep = (f"coalesce({amin}({idx('toks', f'{tok_pref} NOT IN {_PREFIX_TITLES}')}), "
-                  f"{asize}(toks) + 1)")
-    last_keep = (f"coalesce({amax}({idx('toks', f'{tok_suff} NOT IN {_DEGREE_SUFFIXES}')}), 0)")
+    toks = splitsp("name")
+    first_keep = (f"coalesce({idx_of('toks', f'{tok_pref} NOT IN {_PREFIX_TITLES}')}, "
+                  f"{asize('toks')} + 1)")
+    last_keep = (f"coalesce({idx_of('toks', f'{tok_suff} NOT IN {_DEGREE_SUFFIXES}', 'array_max')}, 0)")
     kept = (f"slice(toks, {first_keep}, greatest({last_keep} - {first_keep} + 1, 0))"
             if dialect == "spark"
             else f"list_slice(toks, {first_keep}, {last_keep})")
@@ -144,7 +130,7 @@ slugged AS (
   FROM raw
 ),
 keyed AS (
-  SELECT *, concat('dreyfus-', scheme, '-', CAST(year AS {stype}), '-', slug)
+  SELECT *, concat('dreyfus-', scheme, '-', CAST(year AS {S}), '-', slug)
     AS funder_award_id
   FROM slugged
 ),
@@ -165,10 +151,10 @@ SELECT
   n.funder_award_id, n.slug, n.scheme,
   pm.scheme_label, pm.funding_type,
   n.year, n.name,
-  CASE WHEN {asize}(kept) > 1
-       THEN {joinsep(f"{('slice' if dialect == 'spark' else 'list_slice')}(kept, 1, {asize}(kept) - 1)")}
+  CASE WHEN {asize('kept')} > 1
+       THEN {jnagg(head('kept', asize('kept') + ' - 1'))}
   END AS given_name,
-  CASE WHEN {asize}(kept) >= 1 THEN {elem('kept', f"{asize}(kept)")}
+  CASE WHEN {asize('kept')} >= 1 THEN {elem('kept', asize('kept'))}
   END AS family_name,
   n.institution, n.research_title, n.profile_url,
   pm.amount, pm.currency, n.landing_page_url
@@ -176,13 +162,9 @@ FROM named n JOIN ({pmap}) pm ON pm.scheme = n.scheme
 """
 
 
-def _build(dialect: str) -> str:
-    return _sql(dialect)
-
-
 @register(
     "dreyfus_parse_awards",
-    oracle=_build("duck"),
+    oracle=sqlkit.build(_sql, "duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc="Dreyfus awardee parse stage (scripts/local/dreyfus_to_s3.py)",
@@ -191,4 +173,4 @@ def dreyfus_parse_awards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dreyfus awardee normalize (module docstring has the full
     semantics map).  One keep-first window + a 4-row broadcast
     registry; everything else column algebra."""
-    return spark.sql(_build("spark"))
+    return spark.sql(sqlkit.build(_sql, "spark"))

@@ -36,84 +36,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from openalex_walden_spark.queries import sqlkit
 from openalex_walden_spark.queries.registry import register
 
 _SUFFIXES = "'phd','md','dphil','dsc','scd','jr','sr','ii','iii','iv'"
 _PARTICLES = ("'von','van','der','den','de','del','della','di','da',"
               "'dos','das','le','la','du','do','ten','ter','zu','af',"
               "'al','bin','ibn','st','st.'")
-
-
-def _helpers(dialect: str):
-    if dialect == "spark":
-        g, stype = "", "STRING"
-        asize = "size"
-
-        def elem(a: str, i: str) -> str:
-            return f"try_element_at({a}, {i})"
-
-        def idxs(arr: str, cond: str, agg: str) -> str:
-            return (f"{agg}(zip_with({arr}, sequence(1, size({arr})), "
-                    f"(t, i) -> CASE WHEN {cond} THEN i END))")
-
-        def joinr(a: str, lo: str, hi: str) -> str:
-            return f"array_join(slice({a}, {lo}, ({hi}) - ({lo}) + 1), ' ')"
-    else:
-        g, stype = ", 'g'", "VARCHAR"
-        asize = "len"
-
-        def elem(a: str, i: str) -> str:
-            return f"{a}[{i}]"
-
-        def idxs(arr: str, cond: str, agg: str) -> str:
-            agg = {"array_min": "list_min", "array_max": "list_max"}[agg]
-            return (f"{agg}(list_transform({arr}, (t, i) -> "
-                    f"CASE WHEN {cond} THEN i END))")
-
-        def joinr(a: str, lo: str, hi: str) -> str:
-            return (f"list_aggr(list_slice({a}, {lo}, {hi}), "
-                    f"'string_agg', ' ')")
-
-    def particle_split(raw: str):
-        """suffix pop + leftward particle walk -> (given, family)."""
-        if dialect == "spark":
-            toks = (f"filter(split(coalesce({raw}, ''), ' +'), "
-                    f"x -> x <> '')")
-        else:
-            toks = (f"list_filter(regexp_split_to_array(coalesce({raw}, "
-                    f"''), ' +'), x -> x <> '')")
-        tok_norm = "lower(trim(BOTH '.,' FROM t))"
-        last = (f"coalesce({idxs(f'({toks})', f'{tok_norm} NOT IN ({_SUFFIXES})', 'array_max')}, 0)")
-        # fam_start: walk left from `last` while the PRECEDING token is
-        # a particle and at least one given token remains — i.e. the
-        # SMALLEST j in [2, last] such that tokens j..last-1 are all
-        # particles (contiguity enforced by taking the largest
-        # non-particle boundary below last)
-        part_cond = f"lower(t) NOT IN ({_PARTICLES})"
-        last_nonparticle_before = idxs(
-            f"({toks})",
-            f"{part_cond} AND i < ({last}) AND i >= 2", "array_max")
-        fam_start = (f"CASE WHEN ({last}) <= 1 THEN ({last}) "
-                     f"ELSE greatest(coalesce(({last_nonparticle_before})"
-                     f" + 1, 2), 2) END")
-        # but if the token directly below `last` is NOT a particle,
-        # fam_start stays at `last` (the walk never starts)
-        below = elem(f"({toks})", f"({last}) - 1")
-        fam_start = (f"CASE WHEN ({last}) <= 1 THEN ({last}) "
-                     f"WHEN lower(coalesce({below}, '')) NOT IN "
-                     f"({_PARTICLES}) THEN ({last}) "
-                     f"ELSE greatest(coalesce(({last_nonparticle_before})"
-                     f" + 1, 2), 2) END")
-        n_toks = f"{asize}(({toks}))"
-        given = (f"CASE WHEN ({last}) >= 2 AND ({fam_start}) >= 2 THEN "
-                 f"nullif({joinr(f'({toks})', '1', f'({fam_start}) - 1')},"
-                 f" '') END")
-        family = (f"CASE WHEN ({last}) >= 1 THEN "
-                  f"nullif({joinr(f'({toks})', f'({fam_start})', f'({last})')}, '') END")
-        _ = n_toks
-        return given, family
-
-    return g, stype, elem, particle_split
 
 
 # scas_former_fellows_to_s3.py:122-145 — the term-word vocabulary
@@ -151,7 +80,7 @@ HERTZ_DEGREES = ("PhD", "Ph.D", "MD", "M.D", "DPhil", "ScD", "Jr",
 HERTZ_AMOUNT_USD = 250000.0
 
 
-def _hertz_arm(dialect: str, cs, elem, bar) -> str:
+def _hertz_arm(dialect: str) -> str:
     """The Hertz Foundation fellows-directory arm
     (scripts/local/hertz_to_s3.py:283-525, FacetWP method-3, round 11).
 
@@ -170,7 +99,8 @@ def _hertz_arm(dialect: str, cs, elem, bar) -> str:
     the astype('string') renders (amount ships '250000.0').
     """
     sp = dialect == "spark"
-    S = "STRING" if sp else "VARCHAR"
+    k = sqlkit.kit(dialect)
+    S, cs, bar, elem = k.S, k.cs, k.bar, k.elem
     null_s = f"CAST(NULL AS {S})"
     if sp:
         toks = "filter(split(base_name, ' +'), x -> x <> '')"
@@ -281,7 +211,7 @@ hz_out AS (
 )"""
 
 
-def _scas_arm(dialect: str, cs, elem) -> str:
+def _scas_arm(dialect: str) -> str:
     """The SCAS former-fellows arm (scripts/local/
     scas_former_fellows_to_s3.py:169-575, round 11).
 
@@ -312,7 +242,9 @@ def _scas_arm(dialect: str, cs, elem) -> str:
     source_html_sha256 are runtime seams, not emitted.
     """
     sp = dialect == "spark"
-    S = "STRING" if sp else "VARCHAR"
+    k = sqlkit.kit(dialect)
+    g, S, cs, arr, asize, elem = k.g, k.S, k.cs, k.arr, k.asize, k.elem
+    rl, rxall, sl = k.rl, k.rxall, k.sl
     if sp:
         def tr(a: str, lam: str) -> str:
             return f"transform({a}, {lam})"
@@ -320,18 +252,10 @@ def _scas_arm(dialect: str, cs, elem) -> str:
         def fl(a: str, lam: str) -> str:
             return f"filter({a}, {lam})"
 
-        def rall(x: str, p: str) -> str:
-            return f"regexp_extract_all({x}, '{p}', 1)"
-
-        def rlk(x: str, p: str) -> str:
-            return f"{x} RLIKE '{p}'"
-
-        amin, amax, asize = "array_min", "array_max", "size"
+        amin, amax = "array_min", "array_max"
         ajoin = lambda a, sep: f"array_join({a}, '{sep}')"  # noqa: E731
-        aslice = lambda a, lo, n: f"slice({a}, {lo}, {n})"  # noqa: E731
         sc_lateral = "\n  LATERAL VIEW posexplode(terms) sc_l AS tseq0, term"
         sc_term, sc_tseq = "term", "CAST(tseq0 + 1 AS INT)"
-        arr = lambda *xs: "array(" + ", ".join(xs) + ")"  # noqa: E731
     else:
         def tr(a: str, lam: str) -> str:
             return f"list_transform({a}, {lam})"
@@ -339,28 +263,19 @@ def _scas_arm(dialect: str, cs, elem) -> str:
         def fl(a: str, lam: str) -> str:
             return f"list_filter({a}, {lam})"
 
-        def rall(x: str, p: str) -> str:
-            return f"regexp_extract_all({x}, '{p}', 1)"
-
-        def rlk(x: str, p: str) -> str:
-            return f"regexp_matches({x}, '{p}')"
-
-        amin, amax, asize = "list_min", "list_max", "len"
+        amin, amax = "list_min", "list_max"
         ajoin = lambda a, sep: (  # noqa: E731
             f"list_aggr({a}, 'string_agg', '{sep}')")
-        aslice = lambda a, lo, n: (  # noqa: E731
-            f"list_slice({a}, {lo}, ({lo}) + ({n}) - 1)")
         sc_lateral = ("\n  CROSS JOIN UNNEST(list_transform(terms, "
                       "(t, i) -> {'i': i, 'cell': t})) AS sc_l(u)")
         sc_term, sc_tseq = "u.cell", "CAST(u.i AS INT)"
-        arr = lambda *xs: "[" + ", ".join(xs) + "]"  # noqa: E731
 
     term_alt = "|".join(_SCAS_TERM_WORDS)
     # YEAR_RE without lookarounds (RE2): boundary classes; the fixture
     # has no >=5-digit runs, so the plain-class form is exact
-    has_year = lambda x: rlk(  # noqa: E731
+    has_year = lambda x: rl(  # noqa: E731
         x, "(^|[^0-9])[0-9][0-9][0-9][0-9]([^0-9]|$)")
-    has_term = lambda x: rlk(f"lower({x})", term_alt)  # noqa: E731
+    has_term = lambda x: rl(f"lower({x})", term_alt)  # noqa: E731
     termish = lambda x: f"({has_year(x)} OR {has_term(x)})"  # noqa: E731
 
     # ---- fixture: one flushed record buffer per orders row ------------
@@ -393,7 +308,7 @@ def _scas_arm(dialect: str, cs, elem) -> str:
             f"NOT {has_year('t')}))")
     clean = lambda x: (  # noqa: E731
         f"nullif(trim(regexp_replace({x}, '\\\\s+', ' '"
-        + ("" if sp else ", 'g'") + ")), '')")
+        + g + ")), '')")
     joined = clean(ajoin("lines", " "))
     rt = (lambda x, cset: f"trim(TRAILING '{cset}' FROM {x})") if sp \
         else (lambda x, cset: f"rtrim({x}, '{cset}')")
@@ -402,7 +317,7 @@ def _scas_arm(dialect: str, cs, elem) -> str:
     name_expr = clean(rt(elem("lines", "1"), " ,"))
     affil_all = clean(
         "regexp_replace(" + ajoin(
-            aslice("lines", "2", f"{asize}(lines) - 1"), " ")
+            sl("lines", "2", f"{asize('lines')} - 1"), " ")
         + ", '\\\\s*[(][^()]*[)]\\\\s*$', '')")
     affil = f"nullif({lt(affil_all, ' ,')}, '')"
 
@@ -416,10 +331,10 @@ def _scas_arm(dialect: str, cs, elem) -> str:
                 "p -> trim(p)"), "p -> p <> ''")
     p1, p2 = elem("cps", "1"), elem("cps", "2")
     comma_terms = f"""CASE
-      WHEN {asize}(cps) = 2 AND {rlk(p2, '^[0-9][0-9][0-9][0-9]$')}
+      WHEN {asize('cps')} = 2 AND {rl(p2, '^[0-9][0-9][0-9][0-9]$')}
            AND NOT {has_year(p1)}
         THEN {arr(f"concat({p1}, ', ', {p2})")}
-      WHEN {asize}(cps) = 2 AND NOT {has_year(p1)} AND {has_term(p1)}
+      WHEN {asize('cps')} = 2 AND NOT {has_year(p1)} AND {has_term(p1)}
            AND {has_year(p2)}
         THEN {arr(f"concat({p1}, ' ', regexp_extract({p2}, '([0-9][0-9][0-9][0-9])', 1))")}
       ELSE cps END"""
@@ -429,7 +344,7 @@ def _scas_arm(dialect: str, cs, elem) -> str:
                       "regexp_split_to_array(v, '(?i)\\\\s+and\\\\s+')",
                       "x -> trim(x)"), "x -> x <> ''")
     ap1, ap2 = elem(f"({and_parts})", "1"), elem(f"({and_parts})", "2")
-    and_split = (f"CASE WHEN {asize}(({and_parts})) = 2 AND "
+    and_split = (f"CASE WHEN {asize(f'({and_parts})')} = 2 AND "
                  f"{termish(ap1)} AND {termish(ap2)} "
                  f"THEN ({and_parts}) ELSE {arr('v')} END")
     terms_expr = (
@@ -445,7 +360,7 @@ def _scas_arm(dialect: str, cs, elem) -> str:
                "([0-9][0-9][0-9][0-9]|[0-9][0-9])([^0-9]|$)")
     rs = f"nullif(regexp_extract({norm}, '{rng_pat}', 2), '')"
     re_raw = f"nullif(regexp_extract({norm}, '{rng_pat}', 3), '')"
-    years_all = tr(rall(norm, "([0-9][0-9][0-9][0-9])"),
+    years_all = tr(rxall(norm, "([0-9][0-9][0-9][0-9])", 1),
                    "x -> CAST(x AS INT)")
     y_lo, y_hi = f"{amin}(({years_all}))", f"{amax}(({years_all}))"
     rng_end = (f"CASE WHEN length(re_raw) = 2 THEN "
@@ -467,7 +382,7 @@ def _scas_arm(dialect: str, cs, elem) -> str:
         # tail chars, exactly the ascii-ignore behavior
         folded = f"translate(lower({x}), 'éöåüá‐‑‒–—―', 'eoaua')"
         s1 = (f"trim(BOTH '-' FROM regexp_replace({folded}, "
-              f"'[^a-z0-9]+', '-'" + ("" if sp else ", 'g'") + "))")
+              f"'[^a-z0-9]+', '-'" + g + "))")
         s2 = f"trim(BOTH '-' FROM substr({s1}, 1, {maxlen}))"
         return f"coalesce(nullif({s2}, ''), 'unknown')"
 
@@ -633,7 +548,7 @@ _LI_TITLE_RE = "(?i)^(Professor|Prof|Dr|Mr|Mrs|Ms|Miss|Sir|Dame)\\\\.?\\\\s+"
 _LI_DEGREES = "\\\\b(PhD|MD|FMedSci|OBE|MBE|CBE|FRCP|FRS)\\\\b\\\\.?"
 
 
-def _lister_arm(dialect: str, cs, elem, bar) -> str:
+def _lister_arm(dialect: str) -> str:
     """The Lister Institute fellows-directory arm
     (scripts/local/lister_to_s3.py — round 12).
 
@@ -653,24 +568,9 @@ def _lister_arm(dialect: str, cs, elem, bar) -> str:
     (:163-165 — unique by construction post-merge, so the cumcount
     suffix branch is dead code in the reference too and is not
     ported); amounts NULL by source design (§6.7 waiver)."""
-    sp = dialect == "spark"
-    S = "STRING" if sp else "VARCHAR"
-    g = "" if sp else ", 'g'"
-
-    def splitws(x):
-        return (f"split({x}, '\\\\s+')" if sp
-                else f"regexp_split_to_array({x}, '\\\\s+')")
-
-    def filt_ne(a):
-        return (f"filter({a}, t -> t <> '')" if sp
-                else f"list_filter({a}, t -> t <> '')")
-
-    def asize(a):
-        return f"size({a})" if sp else f"len({a})"
-
-    def jn_head(a, n):
-        return (f"array_join(slice({a}, 1, {n}), ' ')" if sp
-                else f"array_to_string(list_slice({a}, 1, {n}), ' ')")
+    k = sqlkit.kit(dialect)
+    g, S, cs, bar, asize, elem = k.g, k.S, k.cs, k.bar, k.asize, k.elem
+    filt, jn, splitre = k.filt, k.jn, k.splitre
 
     key_expr = (f"trim(BOTH '-' FROM regexp_replace(lower("
                 f"regexp_replace(name, '{_LI_TITLE_RE}', ''{g})), "
@@ -699,6 +599,9 @@ def _lister_arm(dialect: str, cs, elem, bar) -> str:
       WHEN 0 THEN CASE CAST(p % 3 AS INT) WHEN 0 THEN 'Professor '
         WHEN 1 THEN 'Sir ' ELSE 'Dame ' END
       WHEN 1 THEN 'Dr. ' ELSE '' END"""
+
+    li_toks = filt(splitre(f"coalesce({first_expr}, '')", "\\\\s+"),
+                   "t <> ''")
 
     return f"""li_raw AS (
   SELECT o_orderkey AS k,
@@ -745,7 +648,7 @@ li_merged AS (
 {bar("li_named", "li_merged",
      ["k", "name", "key", "li_inst", "li_interests", "li_sy",
       "li_end"], [
-    ("li_toks", filt_ne(splitws(f"coalesce({first_expr}, '')"))),
+    ("li_toks", li_toks),
 ])},
 li_out AS (
   SELECT 'lister' AS member,
@@ -754,7 +657,7 @@ li_out AS (
                 ELSE '' END) AS funder_award_id,
     key AS slug, name AS fellow_name,
     CASE WHEN {asize('li_toks')} < 2 THEN NULL
-         ELSE {jn_head('li_toks', f"{asize('li_toks')} - 1")} END
+         ELSE {jn('li_toks', f"{asize('li_toks')} - 1")} END
       AS given_name,
     CASE WHEN {asize('li_toks')} = 0 THEN NULL
          WHEN {asize('li_toks')} = 1 THEN {elem('li_toks', '1')}
@@ -769,23 +672,51 @@ li_out AS (
 
 
 def _sql(dialect: str) -> str:
-    g, S, elem, particle_split = _helpers(dialect)
+    k = sqlkit.kit(dialect)
+    cs, bar, elem, idx_of = k.cs, k.bar, k.elem, k.idx_of
 
-    def cs(expr: str) -> str:
-        return f"CAST({expr} AS {S})"
-
-    def bar(name: str, prev: str, passthrough: list, cols: list) -> str:
+    def particle_split(raw: str):
+        """suffix pop + leftward particle walk -> (given, family)."""
         if dialect == "spark":
-            ns = ", ".join(f"'{c}', {e}" for c, e in cols)
-            sel = ", ".join(f"_s.{c} AS {c}" for c, _ in cols)
-            pt = ", ".join(f"_p.{c}" for c in passthrough)
-            return (f"{name} AS (\n  SELECT {pt}, {sel}\n  FROM {prev} _p\n"
-                    f"  LATERAL VIEW explode(array(named_struct({ns}))) "
-                    f"_bv AS _s\n)")
-        sel = ", ".join(f"{e} AS {c}" for c, e in cols)
-        pt = ", ".join(passthrough)
-        return (f"{name} AS MATERIALIZED (\n  SELECT {pt}, {sel}\n"
-                f"  FROM {prev}\n)")
+            toks = (f"filter(split(coalesce({raw}, ''), ' +'), "
+                    f"x -> x <> '')")
+        else:
+            toks = (f"list_filter(regexp_split_to_array(coalesce({raw}, "
+                    f"''), ' +'), x -> x <> '')")
+        tok_norm = "lower(trim(BOTH '.,' FROM t))"
+        last = (f"coalesce({idx_of(f'({toks})', f'{tok_norm} NOT IN ({_SUFFIXES})', 'array_max')}, 0)")
+        # fam_start: walk left from `last` while the PRECEDING token is
+        # a particle and at least one given token remains — i.e. the
+        # SMALLEST j in [2, last] such that tokens j..last-1 are all
+        # particles (contiguity enforced by taking the largest
+        # non-particle boundary below last)
+        part_cond = f"lower(t) NOT IN ({_PARTICLES})"
+        last_nonparticle_before = idx_of(
+            f"({toks})",
+            f"{part_cond} AND i < ({last}) AND i >= 2", "array_max")
+        fam_start = (f"CASE WHEN ({last}) <= 1 THEN ({last}) "
+                     f"ELSE greatest(coalesce(({last_nonparticle_before})"
+                     f" + 1, 2), 2) END")
+        # but if the token directly below `last` is NOT a particle,
+        # fam_start stays at `last` (the walk never starts)
+        below = elem(f"({toks})", f"({last}) - 1")
+        fam_start = (f"CASE WHEN ({last}) <= 1 THEN ({last}) "
+                     f"WHEN lower(coalesce({below}, '')) NOT IN "
+                     f"({_PARTICLES}) THEN ({last}) "
+                     f"ELSE greatest(coalesce(({last_nonparticle_before})"
+                     f" + 1, 2), 2) END")
+        given = (f"CASE WHEN ({last}) >= 2 AND ({fam_start}) >= 2 THEN "
+                 f"nullif({joinr(f'({toks})', '1', f'({fam_start}) - 1')},"
+                 f" '') END")
+        family = (f"CASE WHEN ({last}) >= 1 THEN "
+                  f"nullif({joinr(f'({toks})', f'({fam_start})', f'({last})')}, '') END")
+        return given, family
+
+    def joinr(a: str, lo: str, hi: str) -> str:
+        if dialect == "spark":
+            return f"array_join(slice({a}, {lo}, ({hi}) - ({lo}) + 1), ' ')"
+        return (f"list_aggr(list_slice({a}, {lo}, {hi}), "
+                f"'string_agg', ' ')")
 
     ks = cs("o_orderkey")
     gg_given, gg_family = particle_split("name")
@@ -850,9 +781,9 @@ rc_out AS (
       AS landing_page_url
   FROM rc_named
 ),
-{_scas_arm(dialect, cs, elem)},
-{_hertz_arm(dialect, cs, elem, bar)},
-{_lister_arm(dialect, cs, elem, bar)}
+{_scas_arm(dialect)},
+{_hertz_arm(dialect)},
+{_lister_arm(dialect)}
 SELECT member, funder_award_id, slug, fellow_name, given_name,
        family_name, start_year, landing_page_url, {_SCAS_NULLS},
        {_HZ_NULLS}
@@ -880,17 +811,9 @@ FROM li_out
 """
 
 
-def _build(dialect: str) -> str:
-    text = _sql(dialect)
-    if dialect == "duck":
-        text = text.replace("\\\\", "\\")
-        text = text.replace("AS STRING", "AS VARCHAR")
-    return text
-
-
 @register(
     "fellowship_directory_parse",
-    oracle=_build("duck"),
+    oracle=sqlkit.build(_sql, "duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc=("Fellowship-directory parse family (scripts/local/"
@@ -904,4 +827,4 @@ def fellowship_directory_parse(spark: SparkSession,
     shared particle-aware name split (module docstring has the map).
     Two barriered scan arms + the radcliffe (slug, year) keep-first
     window; no Python."""
-    return spark.sql(_build("spark"))
+    return spark.sql(sqlkit.build(_sql, "spark"))

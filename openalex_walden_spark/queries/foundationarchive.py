@@ -62,6 +62,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from openalex_walden_spark.queries import sqlkit
 from openalex_walden_spark.queries.registry import register
 
 _US_STATES = ("'AL','AK','AZ','AR','CA','CO','CT','DE','DC','FL','GA',"
@@ -74,32 +75,10 @@ _US_STATES = ("'AL','AK','AZ','AR','CA','CO','CT','DE','DC','FL','GA',"
 _COSTECH_SUFFIXES = "'PhD','MD','DPhil','Jr.','Sr.','II','III','IV'"
 
 
-def _helpers(dialect: str):
-    if dialect == "spark":
-        g, stype = "", "STRING"
-
-        def rl(col: str, pat: str) -> str:
-            return f"{col} RLIKE '{pat}'"
-
-        def elem(a: str, i: str) -> str:
-            return f"try_element_at({a}, {i})"
-        fmt = "format_string"
-    else:
-        g, stype = ", 'g'", "VARCHAR"
-
-        def rl(col: str, pat: str) -> str:
-            return f"regexp_matches({col}, '{pat}')"
-
-        def elem(a: str, i: str) -> str:
-            return f"{a}[{i}]"
-        fmt = "printf"
-
-    def rx(src: str, pat: str, grp: int) -> str:
-        return f"nullif(regexp_extract({src}, '{pat}', {grp}), '')"
-
-    def clean(x: str) -> str:
-        c = f"regexp_replace(replace({x}, chr(160), ' '), '\\\\s+', ' '{g})"
-        return f"nullif(trim({c}), '')"
+def _sql(dialect: str) -> str:
+    k = sqlkit.kit(dialect)
+    g, S, cs, bar, clean_ws, elem = k.g, k.S, k.cs, k.bar, k.clean_ws, k.elem
+    fmt, nullcols, rl, rx = k.fmt, k.nullcols, k.rl, k.rx
 
     def slugify(x: str, max_len: int) -> str:
         s = (f"regexp_replace(lower(coalesce({x}, '')), '[^a-z0-9]+', "
@@ -120,33 +99,6 @@ def _helpers(dialect: str):
         m = rx(f"coalesce({x}, '')",
                "([0-9][0-9,]*(?:\\\\.[0-9]+)?)", 1)
         return f"replace({m}, ',', '')"
-
-    return (g, stype, rl, elem, fmt, rx, clean, slugify, display_name,
-            amt_first_num)
-
-
-def _sql(dialect: str) -> str:
-    (g, S, rl, elem, fmt, rx, clean, slugify, display_name,
-     amt_first_num) = _helpers(dialect)
-
-    def cs(expr: str) -> str:
-        return f"CAST({expr} AS {S})"
-
-    def nullcols(*names: str) -> str:
-        return ", ".join(f"CAST(NULL AS {S}) AS {n}" for n in names)
-
-    def bar(name: str, prev: str, passthrough: list, cols: list) -> str:
-        if dialect == "spark":
-            ns = ", ".join(f"'{c}', {e}" for c, e in cols)
-            sel = ", ".join(f"_s.{c} AS {c}" for c, _ in cols)
-            pt = ", ".join(f"_p.{c}" for c in passthrough)
-            return (f"{name} AS (\n  SELECT {pt}, {sel}\n  FROM {prev} _p\n"
-                    f"  LATERAL VIEW explode(array(named_struct({ns}))) "
-                    f"_bv AS _s\n)")
-        sel = ", ".join(f"{e} AS {c}" for c, e in cols)
-        pt = ", ".join(passthrough)
-        return (f"{name} AS MATERIALIZED (\n  SELECT {pt}, {sel}\n"
-                f"  FROM {prev}\n)")
 
     ks = cs("o_orderkey")
 
@@ -199,10 +151,10 @@ ah_raw AS (
   FROM orders
 ),
 ah_clean AS (
-  SELECT *, {clean('loc_raw')} AS loc_clean,
-    {clean('desc_raw')} AS description,
-    {clean('grantee_raw')} AS grantee_name,
-    coalesce({clean('fy_raw')}, section_year) AS fiscal_year
+  SELECT *, {clean_ws('loc_raw')} AS loc_clean,
+    {clean_ws('desc_raw')} AS description,
+    {clean_ws('grantee_raw')} AS grantee_name,
+    coalesce({clean_ws('fy_raw')}, section_year) AS fiscal_year
   FROM ah_raw
 ),
 {bar("ah_parsed", "ah_clean",
@@ -225,7 +177,7 @@ ah_out AS (
     grantee_url AS recipient_url, post_id AS source_record_id,
     amount,
     CASE WHEN amount IS NOT NULL THEN 'USD' END AS currency,
-    {clean('program_raw')} AS program_area, fiscal_year,
+    {clean_ws('program_raw')} AS program_area, fiscal_year,
     loc_clean AS recipient_location, recipient_city, recipient_region,
     CASE WHEN recipient_region IN ({_US_STATES}) THEN 'US' END
       AS recipient_country,
@@ -326,9 +278,9 @@ co_raw AS (
   FROM orders
 ),
 co_clean AS (
-  SELECT *, {clean('researcher_raw')} AS name_clean,
-    {clean('program_raw')} AS program_name,
-    {clean('subprogram_raw')} AS subprogram_name
+  SELECT *, {clean_ws('researcher_raw')} AS name_clean,
+    {clean_ws('program_raw')} AS program_name,
+    {clean_ws('subprogram_raw')} AS subprogram_name
   FROM co_raw
 ),
 {bar("co_parsed", "co_clean",
@@ -342,8 +294,8 @@ co_clean AS (
 co_out AS (
   SELECT 'costech' AS member,
     concat('nfast-', project_id) AS funder_award_id,
-    {clean('title_raw')} AS display_name,
-    coalesce({clean('background_raw')}, {clean('objective_raw')})
+    {clean_ws('title_raw')} AS display_name,
+    coalesce({clean_ws('background_raw')}, {clean_ws('objective_raw')})
       AS description,
     name_clean AS recipient_name, CAST(NULL AS {S}) AS recipient_url,
     project_id AS source_record_id, amount,
@@ -360,13 +312,13 @@ co_out AS (
          ELSE '' END AS funder_scheme,
     CASE WHEN lower(coalesce(program_name, '')) = 'research program'
          THEN 'research' ELSE 'grant' END AS funding_type,
-    {clean('start_raw')} AS start_date, {clean('end_raw')} AS end_date,
-    substr({clean('start_raw')}, 1, 4) AS source_year,
+    {clean_ws('start_raw')} AS start_date, {clean_ws('end_raw')} AS end_date,
+    substr({clean_ws('start_raw')}, 1, 4) AS source_year,
     given_name AS lead_given_name, family_name AS lead_family_name,
-    {clean('objective_raw')} AS objective, {clean('result_raw')}
+    {clean_ws('objective_raw')} AS objective, {clean_ws('result_raw')}
       AS result,
-    subprogram_name, {clean('sector_raw')} AS sector_name,
-    {clean('status_raw')} AS status_name,
+    subprogram_name, {clean_ws('sector_raw')} AS sector_name,
+    {clean_ws('status_raw')} AS status_name,
     {nullcols('source_column_year', 'source_row_number')},
     concat('https://www.costech.or.tz/projects/costech-funded/',
            project_id) AS landing_page_url,
@@ -475,10 +427,10 @@ kb_out AS (
     lum_d = ("^([0-9]{1,2})/([0-9]{1,2})/([0-9]{4})$")
 
     def lum_date(x: str) -> str:
-        return (f"CASE WHEN {rl(clean(x), lum_d)} THEN concat("
-                f"{rx(clean(x), lum_d, 3)}, '-', "
-                f"lpad({rx(clean(x), lum_d, 1)}, 2, '0'), '-', "
-                f"lpad({rx(clean(x), lum_d, 2)}, 2, '0')) END")
+        return (f"CASE WHEN {rl(clean_ws(x), lum_d)} THEN concat("
+                f"{rx(clean_ws(x), lum_d, 3)}, '-', "
+                f"lpad({rx(clean_ws(x), lum_d, 1)}, 2, '0'), '-', "
+                f"lpad({rx(clean_ws(x), lum_d, 2)}, 2, '0')) END")
 
     lum_range_pat = "(?i)\\\\s+through\\\\s+"
     if dialect == "spark":
@@ -515,9 +467,9 @@ lu_raw AS (
   FROM orders
 ),
 lu_clean AS (
-  SELECT *, {clean('range_raw')} AS range_clean,
-    {clean('recip_raw')} AS recipient_name,
-    {clean('desc_raw')} AS description
+  SELECT *, {clean_ws('range_raw')} AS range_clean,
+    {clean_ws('recip_raw')} AS recipient_name,
+    {clean_ws('desc_raw')} AS description
   FROM lu_raw
 ),
 {bar("lu_parsed", "lu_clean",
@@ -544,7 +496,7 @@ lu_out AS (
     'source_record_id')},
     amount, CASE WHEN amount IS NOT NULL THEN 'USD' END AS currency,
     {nullcols('program_area', 'fiscal_year')},
-    {clean('loc_raw')} AS recipient_location,
+    {clean_ws('loc_raw')} AS recipient_location,
     {nullcols('recipient_city', 'recipient_region',
               'recipient_country', 'source_section_year',
               'source_section_total_amount', 'source_category',
@@ -609,14 +561,14 @@ thf_kept AS (
   SELECT * FROM (
     SELECT *, row_number() OVER (PARTITION BY slug ORDER BY k) AS rn
     FROM thf_cards
-    WHERE has_href AND {clean('title_raw')} IS NOT NULL) x
+    WHERE has_href AND {clean_ws('title_raw')} IS NOT NULL) x
   WHERE rn = 1
 ),
 thf_out AS (
   SELECT 'thf' AS member,
     concat('thf-', slug) AS funder_award_id,
-    {clean('title_raw')} AS display_name,
-    substr({clean('summary_raw')}, 1, 300) AS description,
+    {clean_ws('title_raw')} AS display_name,
+    substr({clean_ws('summary_raw')}, 1, 300) AS description,
     {nullcols('recipient_name', 'recipient_url', 'source_record_id',
               'amount', 'currency', 'program_area', 'fiscal_year',
               'recipient_location', 'recipient_city',
@@ -660,17 +612,9 @@ UNION ALL SELECT {cols} FROM thf_out
 """
 
 
-def _build(dialect: str) -> str:
-    text = _sql(dialect)
-    if dialect == "duck":
-        text = text.replace("\\\\", "\\")
-        text = text.replace("AS STRING", "AS VARCHAR")
-    return text
-
-
 @register(
     "foundation_archive_parse",
-    oracle=_build("duck"),
+    oracle=sqlkit.build(_sql, "duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc=("Foundation-archive scraper family (scripts/local/{ahmanson,"
@@ -683,4 +627,4 @@ def foundation_archive_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     preserved and the kirby sha1->sha256 digest deviation).  Four
     barriered scan arms + the kirby year-column explode; no hash
     shuffle, one round-robin spread exchange per scan."""
-    return spark.sql(_build("spark"))
+    return spark.sql(sqlkit.build(_sql, "spark"))

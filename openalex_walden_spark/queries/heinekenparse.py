@@ -45,6 +45,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from openalex_walden_spark.queries import sqlkit
 from openalex_walden_spark.queries.registry import register
 
 # heineken_prizes_to_s3.py:114-128
@@ -86,109 +87,20 @@ _PRE_ANY = "^(.*?)\\\\b(?:19|20)[0-9]{2}\\\\b"
 _TITLE_STRIP = "(?i)^(?:Sir|Dame|Prof\\\\.?|Professor|Dr\\\\.?)\\\\s+"
 
 
-def _helpers(dialect: str):
-    if dialect == "spark":
-        g, S = "", "STRING"
-
-        def arr(*items: str) -> str:
-            return (f"array({', '.join(items)})" if items
-                    else "slice(array(0), 1, 0)")
-
-        def elem(a: str, i: str) -> str:
-            return f"try_element_at({a}, {i})"
-
-        def asize(a: str) -> str:
-            return f"size({a})"
-
-        def sl(a: str, start: str, length: str) -> str:
-            return f"slice({a}, {start}, {length})"
-
-        def jnsl(a: str, start: str, length: str) -> str:
-            return f"array_join(slice({a}, {start}, {length}), ' ')"
-
-        def splitws(x: str) -> str:
-            return f"filter(split({x}, '\\\\s+'), t -> t <> '')"
-
-        def filt(a: str, c: str) -> str:
-            return f"filter({a}, t -> {c})"
-
-        def amin(a: str) -> str:
-            return f"array_min({a})"
-
-        def overlap(a: str, b: str) -> str:
-            return f"arrays_overlap({a}, {b})"
-    else:
-        g, S = ", 'g'", "VARCHAR"
-
-        def arr(*items: str) -> str:
-            return (f"[{', '.join(items)}]" if items
-                    else "list_slice([0], 1, 0)")
-
-        def elem(a: str, i: str) -> str:
-            return f"{a}[({i})]"
-
-        def asize(a: str) -> str:
-            return f"len({a})"
-
-        def sl(a: str, start: str, length: str) -> str:
-            return f"list_slice({a}, {start}, ({start}) + ({length}) - 1)"
-
-        def jnsl(a: str, start: str, length: str) -> str:
-            return (f"array_to_string(list_slice({a}, {start}, "
-                    f"({start}) + ({length}) - 1), ' ')")
-
-        def splitws(x: str) -> str:
-            return (f"list_filter(regexp_split_to_array({x}, '\\\\s+'), "
-                    f"t -> t <> '')")
-
-        def filt(a: str, c: str) -> str:
-            return f"list_filter({a}, t -> {c})"
-
-        def amin(a: str) -> str:
-            return f"list_min({a})"
-
-        def overlap(a: str, b: str) -> str:
-            return f"list_has_any({a}, {b})"
-
-    def clean(x: str) -> str:
-        e = f"replace({x}, chr(160), ' ')"
-        return f"nullif(trim(regexp_replace({e}, '\\\\s+', ' '{g})), '')"
+def _sql(dialect: str) -> str:
+    k = sqlkit.kit(dialect)
+    g, cs, bar, amin, arr, asize = k.g, k.cs, k.bar, k.amin, k.arr, k.asize
+    clean_ws, elem, filt, jnspan = k.clean_ws, k.elem, k.filt, k.jnspan
+    noints, overlap, rx, splitws = k.noints, k.overlap, k.rx, k.splitws
 
     def htmltext(x: str) -> str:
         # html_to_text (:166-171): BS path only when angle brackets
         # present; the tag-free path does NOT unescape entities
-        bs = clean(f"replace(regexp_replace({x}, '<[^>]+>', ' '{g}), "
+        bs = clean_ws(f"replace(regexp_replace({x}, '<[^>]+>', ' '{g}), "
                    f"'&amp;', '&')")
         return (f"CASE WHEN {x} IS NULL THEN NULL "
                 f"WHEN instr({x}, '<') > 0 OR instr({x}, '>') > 0 "
-                f"THEN {bs} ELSE {clean(x)} END")
-
-    return (g, S, arr, elem, asize, sl, jnsl, splitws, filt, amin,
-            overlap, clean, htmltext)
-
-
-def _sql(dialect: str) -> str:
-    (g, S, arr, elem, asize, sl, jnsl, splitws, filt, amin, overlap,
-     clean, htmltext) = _helpers(dialect)
-
-    def cs(expr: str) -> str:
-        return f"CAST({expr} AS {S})"
-
-    def bar(name: str, prev: str, passthrough: list, cols: list) -> str:
-        if dialect == "spark":
-            ns = ", ".join(f"'{c}', {e}" for c, e in cols)
-            sel = ", ".join(f"_s.{c} AS {c}" for c, _ in cols)
-            pt = ", ".join(f"_p.{c}" for c in passthrough)
-            return (f"{name} AS (\n  SELECT {pt}, {sel}\n  FROM {prev} _p\n"
-                    f"  LATERAL VIEW explode(array(named_struct({ns}))) "
-                    f"_bv AS _s\n)")
-        sel = ", ".join(f"{e} AS {c}" for c, e in cols)
-        pt = ", ".join(passthrough)
-        return (f"{name} AS MATERIALIZED (\n  SELECT {pt}, {sel}\n"
-                f"  FROM {prev}\n)")
-
-    def rx(srcv: str, pat: str, grp: int) -> str:
-        return f"nullif(regexp_extract({srcv}, '{pat}', {grp}), '')"
+                f"THEN {bs} ELSE {clean_ws(x)} END")
 
     prize_arr = arr(*[str(i) for i in sorted(_PRIZE_IDS)])
     hysa_arr = arr(*[str(i) for i in sorted(_HYSA_IDS)])
@@ -227,9 +139,9 @@ def _sql(dialect: str) -> str:
     last1 = elem("toks", n_)
     last2 = elem("toks", f"{n_} - 1")
     last3 = elem("toks", f"{n_} - 2")
-    fam3 = jnsl("toks", f"{n_} - 2", "3")
-    fam2 = jnsl("toks", f"{n_} - 1", "2")
-    giv_for = lambda keep: jnsl("toks", "1", keep)  # noqa: E731
+    fam3 = jnspan("toks", f"{n_} - 2", "3")
+    fam2 = jnspan("toks", f"{n_} - 1", "2")
+    giv_for = lambda keep: jnspan("toks", "1", keep)  # noqa: E731
 
     idv26 = ("o_orderkey div 26" if dialect == "spark"
              else "o_orderkey // 26")
@@ -245,7 +157,7 @@ def _sql(dialect: str) -> str:
       WHEN 2 THEN {arr('301')}
       WHEN 3 THEN {arr('302', '15')}
       WHEN 4 THEN {arr('999')}
-      WHEN 5 THEN {arr()}
+      WHEN 5 THEN {noints()}
       ELSE {arr('14', '888')} END AS cat_ids,
     CASE CAST(o_orderkey % 6 AS INT)
       WHEN 0 THEN concat('<h2>Prof. Bernard Feringa',
@@ -312,8 +224,8 @@ gated AS (
             "year_tail", "year"], [
     ("scheme",
      f"CASE WHEN year_tail IS NOT NULL THEN coalesce("
-     f"{clean(f_strip_tail)}, excerpt) "
-     f"ELSE coalesce({clean(f_pre_any)}, excerpt) END"),
+     f"{clean_ws(f_strip_tail)}, excerpt) "
+     f"ELSE coalesce({clean_ws(f_pre_any)}, excerpt) END"),
     ("toks", splitws(
         f"regexp_replace(nm, '{_TITLE_STRIP}', ''{g})")),
 ])}
@@ -356,16 +268,9 @@ FROM schemed
 """
 
 
-def _build(dialect: str) -> str:
-    text = _sql(dialect)
-    if dialect == "duck":
-        text = text.replace("\\\\", "\\")
-    return text
-
-
 @register(
     "heineken_parse_prizes",
-    oracle=_build("duck"),
+    oracle=sqlkit.build(_sql, "duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc=("Heineken Prizes laureates parse "
@@ -377,4 +282,4 @@ def heineken_parse_prizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     resolution (live map over hardcoded table), trailing-else-anywhere
     year with the scheme-prefix quirk, program-rule amounts, Dutch
     particle name splitting.  One scan, zero exchanges, no Python."""
-    return spark.sql(_build("spark"))
+    return spark.sql(sqlkit.build(_sql, "spark"))

@@ -43,6 +43,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from openalex_walden_spark.queries import sqlkit
 from openalex_walden_spark.queries.registry import register
 
 # hilton_to_s3.py:139-144
@@ -65,50 +66,9 @@ _BARE_YEAR = "\\\\b(19\\\\d{2}|20\\\\d{2})\\\\b"
 _DIGITS = "(\\\\d+)"
 
 
-def _helpers(dialect: str):
-    if dialect == "spark":
-        g, S = "", "STRING"
-
-        def titlecase(x: str) -> str:
-            return f"initcap({x})"
-    else:
-        g, S = ", 'g'", "VARCHAR"
-
-        def titlecase(x: str) -> str:
-            # DuckDB has no initcap; the inputs are single-to-three
-            # lowercase a-z words (slug-derived), so a per-word
-            # first-letter upper reproduces Python str.title()
-            return (f"array_to_string(list_transform("
-                    f"string_split({x}, ' '), "
-                    f"t -> upper(t[1]) || t[2:]), ' ')")
-
-    def unesc(x: str) -> str:
-        return f"replace({x}, '&amp;', '&')"
-
-    return g, S, titlecase, unesc
-
-
 def _sql(dialect: str) -> str:
-    g, S, titlecase, unesc = _helpers(dialect)
-
-    def cs(expr: str) -> str:
-        return f"CAST({expr} AS {S})"
-
-    def bar(name: str, prev: str, passthrough: list, cols: list) -> str:
-        if dialect == "spark":
-            ns = ", ".join(f"'{c}', {e}" for c, e in cols)
-            sel = ", ".join(f"_s.{c} AS {c}" for c, _ in cols)
-            pt = ", ".join(f"_p.{c}" for c in passthrough)
-            return (f"{name} AS (\n  SELECT {pt}, {sel}\n  FROM {prev} _p\n"
-                    f"  LATERAL VIEW explode(array(named_struct({ns}))) "
-                    f"_bv AS _s\n)")
-        sel = ", ".join(f"{e} AS {c}" for c, e in cols)
-        pt = ", ".join(passthrough)
-        return (f"{name} AS MATERIALIZED (\n  SELECT {pt}, {sel}\n"
-                f"  FROM {prev}\n)")
-
-    def rx(srcv: str, pat: str, grp: int) -> str:
-        return f"nullif(regexp_extract({srcv}, '{pat}', {grp}), '')"
+    k = sqlkit.kit(dialect)
+    cs, bar, rx, titlecase, unesc = k.cs, k.bar, k.rx, k.titlecase, k.unesc
 
     months = ", ".join(f"'{m}'" for m in _MONTHS)
 
@@ -224,16 +184,9 @@ FROM parsed
 """
 
 
-def _build(dialect: str) -> str:
-    text = _sql(dialect)
-    if dialect == "duck":
-        text = text.replace("\\\\", "\\")
-    return text
-
-
 @register(
     "hilton_parse_grants",
-    oracle=_build("duck"),
+    oracle=sqlkit.build(_sql, "duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc="Hilton Foundation grants parse (scripts/local/hilton_to_s3.py)",
@@ -244,4 +197,4 @@ def hilton_parse_grants(spark: SparkSession, sf_dir: str) -> DataFrame:
     awarded-date fallback, taxonomy-else-titlecased program/area,
     org-level rows (no PI by source design).  One scan, zero
     exchanges, no Python."""
-    return spark.sql(_build("spark"))
+    return spark.sql(sqlkit.build(_sql, "spark"))

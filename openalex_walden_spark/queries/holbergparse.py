@@ -48,6 +48,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from openalex_walden_spark.queries import sqlkit
 from openalex_walden_spark.queries.registry import register
 
 # holberg_to_s3.py:62-68 — slug -> (display name, amount NOK)
@@ -65,87 +66,15 @@ _CITE = ("(?is)(?:Holbergprisen|Nils Klim-prisen)\\\\s+\\\\d{4}"
          "\\\\s+tildeles\\\\s+[^.]*?\\\\s+for\\\\s+(.+?)\\\\.")
 
 
-def _helpers(dialect: str):
-    if dialect == "spark":
-        g, S = "", "STRING"
-
-        def arr(*items: str) -> str:
-            return f"array({', '.join(items)})" if items else "array()"
-
-        def contains(a: str, v: str) -> str:
-            return f"array_contains({a}, {v})"
-
-        def elem(a: str, i: str) -> str:
-            return f"try_element_at({a}, {i})"
-
-        def asize(a: str) -> str:
-            return f"size({a})"
-
-        def sl(a: str, start: str, length: str) -> str:
-            return f"slice({a}, {start}, {length})"
-
-        def jn(a: str, n: str) -> str:
-            return f"array_join(slice({a}, 1, {n}), ' ')"
-
-        def splitws(x: str) -> str:
-            return f"filter(split({x}, '\\\\s+'), t -> t <> '')"
-    else:
-        g, S = ", 'g'", "VARCHAR"
-
-        def arr(*items: str) -> str:
-            return f"[{', '.join(items)}]" if items else "[]::VARCHAR[]"
-
-        def contains(a: str, v: str) -> str:
-            return f"list_contains({a}, {v})"
-
-        def elem(a: str, i: str) -> str:
-            return f"{a}[({i})]"
-
-        def asize(a: str) -> str:
-            return f"len({a})"
-
-        def sl(a: str, start: str, length: str) -> str:
-            return f"list_slice({a}, {start}, ({start}) + ({length}) - 1)"
-
-        def jn(a: str, n: str) -> str:
-            return f"array_to_string(list_slice({a}, 1, {n}), ' ')"
-
-        def splitws(x: str) -> str:
-            return (f"list_filter(regexp_split_to_array({x}, '\\\\s+'), "
-                    f"t -> t <> '')")
-
-    def unesc(x: str) -> str:
-        # html.unescape over the fixture-complete entity subset
-        return f"replace({x}, '&amp;', '&')"
-
-    def striphtml(x: str) -> str:
-        # holberg _strip_html (:305-308): tags->space, unescape, collapse
-        e = f"regexp_replace({x}, '<[^>]+>', ' '{g})"
-        e = unesc(e)
-        return f"nullif(trim(regexp_replace({e}, '\\\\s+', ' '{g})), '')"
-
-    return g, S, arr, contains, elem, asize, sl, jn, splitws, unesc, striphtml
-
-
 def _sql(dialect: str) -> str:
-    (g, S, arr, contains, elem, asize, sl, jn, splitws, unesc,
-     striphtml) = _helpers(dialect)
+    k = sqlkit.kit(dialect)
+    cs, bar, arr, asize, elem, jn = k.cs, k.bar, k.arr, k.asize, k.elem, k.jn
+    sl, splitws, striphtml, unesc = k.sl, k.splitws, k.striphtml, k.unesc
 
-    def cs(expr: str) -> str:
-        return f"CAST({expr} AS {S})"
-
-    def bar(name: str, prev: str, passthrough: list, cols: list) -> str:
+    def contains(a: str, v: str) -> str:
         if dialect == "spark":
-            ns = ", ".join(f"'{c}', {e}" for c, e in cols)
-            sel = ", ".join(f"_s.{c} AS {c}" for c, _ in cols)
-            pt = ", ".join(f"_p.{c}" for c in passthrough)
-            return (f"{name} AS (\n  SELECT {pt}, {sel}\n  FROM {prev} _p\n"
-                    f"  LATERAL VIEW explode(array(named_struct({ns}))) "
-                    f"_bv AS _s\n)")
-        sel = ", ".join(f"{e} AS {c}" for c, e in cols)
-        pt = ", ".join(passthrough)
-        return (f"{name} AS MATERIALIZED (\n  SELECT {pt}, {sel}\n"
-                f"  FROM {prev}\n)")
+            return f"array_contains({a}, {v})"
+        return f"list_contains({a}, {v})"
 
     suffixes = ", ".join(f"'{s}'" for s in _SUFFIXES)
 
@@ -263,16 +192,9 @@ WHERE prize_slug IS NOT NULL
 """
 
 
-def _build(dialect: str) -> str:
-    text = _sql(dialect)
-    if dialect == "duck":
-        text = text.replace("\\\\", "\\")
-    return text
-
-
 @register(
     "holberg_parse_laureates",
-    oracle=_build("duck"),
+    oracle=sqlkit.build(_sql, "duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc=("Holberg + Nils Klim laureates parse "
@@ -283,4 +205,4 @@ def holberg_parse_laureates(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the teaching-program exclusion, Norwegian citation extraction,
     suffix-only name split with empty-string given names, PRIZE_META
     amount attach.  One scan, zero exchanges, no Python."""
-    return spark.sql(_build("spark"))
+    return spark.sql(sqlkit.build(_sql, "spark"))

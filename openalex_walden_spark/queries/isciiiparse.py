@@ -35,6 +35,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from openalex_walden_spark.queries import sqlkit
 from openalex_walden_spark.queries.registry import register
 
 _ROWS_SPARK = """
@@ -94,15 +95,13 @@ FROM orders
 
 
 def _sql(dialect: str) -> str:
+    k = sqlkit.kit(dialect)
+    g, rl = k.g, k.rl
     if dialect == "spark":
-        stype = "STRING"
         rows = _ROWS_SPARK
-        rl = lambda col, pat: f"{col} RLIKE '{pat}'"  # noqa: E731
         initcap = lambda x: f"initcap({x})"  # noqa: E731
     else:
-        stype = "VARCHAR"
         rows = _ROWS_SPARK.replace("AS STRING", "AS VARCHAR")
-        rl = lambda col, pat: f"regexp_matches({col}, '{pat}')"  # noqa: E731
 
         # DuckDB 1.0 has no initcap; emulate Python str.title() over
         # space-delimited words (the fixture's only word boundary).
@@ -128,7 +127,6 @@ def _sql(dialect: str) -> str:
                 f" '%d/%m/%Y'), '%Y-%m-%d')")
 
     # the European amount grammar over the symbol-stripped cell
-    g = "" if dialect == "spark" else ", 'g'"
     ac = f"regexp_replace(coalesce(amount_raw, ''), '[^0-9.,]', ''{g})"
     amount = f"""
     CASE
@@ -191,16 +189,9 @@ FROM dated
 """
 
 
-def _build(dialect: str) -> str:
-    text = _sql(dialect)
-    if dialect == "duck":
-        text = text.replace("\\\\", "\\")
-    return text
-
-
 @register(
     "isciii_parse_awards",
-    oracle=_build("duck"),
+    oracle=sqlkit.build(_sql, "duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc="ISCIII Portal-FIS project parse stage (scripts/local/isciii_to_s3.py)",
@@ -209,4 +200,4 @@ def isciii_parse_awards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ISCIII project-detail normalize (module docstring has the full
     semantics map).  One scan, pure column algebra; no shuffle, no
     Python."""
-    return spark.sql(_build("spark"))
+    return spark.sql(sqlkit.build(_sql, "spark"))

@@ -50,6 +50,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from openalex_walden_spark.queries import sqlkit
 from openalex_walden_spark.queries.registry import register
 
 # Fixture taxonomy vocabularies (runtime DATA in the reference — the
@@ -60,49 +61,10 @@ _STRATEGIES = {501: "Entrepreneurship", 502: "Education",
 _GRANT_TYPES = {601: "Grant", 602: "Program-Related Investment"}
 
 
-def _helpers(dialect: str):
-    if dialect == "spark":
-        g, S = "", "STRING"
-
-        def arr(*items: str) -> str:
-            return (f"array({', '.join(items)})" if items
-                    else "slice(array(0), 1, 0)")
-
-        def elem(a: str, i: str) -> str:
-            return f"try_element_at({a}, {i})"
-
-        def asize(a: str) -> str:
-            return f"size({a})"
-
-        def tx(a: str, e: str) -> str:
-            return f"transform({a}, t -> {e})"
-
-        def filt(a: str, c: str) -> str:
-            return f"filter({a}, t -> {c})"
-
-        def jnsep(a: str, sep: str) -> str:
-            return f"array_join({a}, {sep})"
-    else:
-        g, S = ", 'g'", "VARCHAR"
-
-        def arr(*items: str) -> str:
-            return (f"[{', '.join(items)}]" if items
-                    else "list_slice([0], 1, 0)")
-
-        def elem(a: str, i: str) -> str:
-            return f"{a}[({i})]"
-
-        def asize(a: str) -> str:
-            return f"len({a})"
-
-        def tx(a: str, e: str) -> str:
-            return f"list_transform({a}, t -> {e})"
-
-        def filt(a: str, c: str) -> str:
-            return f"list_filter({a}, t -> {c})"
-
-        def jnsep(a: str, sep: str) -> str:
-            return f"array_to_string({a}, {sep})"
+def _sql(dialect: str) -> str:
+    k = sqlkit.kit(dialect)
+    g, cs, bar, arr, asize, elem = k.g, k.cs, k.bar, k.arr, k.asize, k.elem
+    filt, jnsep, noints, sq, tx = k.filt, k.jnsep, k.noints, k.sq, k.tx
 
     def striptags(x: str) -> str:
         # _strip_tags (:156-160): tags -> space, ws-collapse, unescape,
@@ -112,32 +74,6 @@ def _helpers(dialect: str):
         e = f"trim(regexp_replace({e}, '\\\\s+', ' '{g}))"
         e = f"replace(replace({e}, '&amp;', '&'), '&amp;', '&')"
         return f"nullif({e}, '')"
-
-    return g, S, arr, elem, asize, tx, filt, jnsep, striptags
-
-
-def _sql(dialect: str) -> str:
-    (g, S, arr, elem, asize, tx, filt, jnsep,
-     striptags) = _helpers(dialect)
-
-    def cs(expr: str) -> str:
-        return f"CAST({expr} AS {S})"
-
-    def bar(name: str, prev: str, passthrough: list, cols: list) -> str:
-        if dialect == "spark":
-            ns = ", ".join(f"'{c}', {e}" for c, e in cols)
-            sel = ", ".join(f"_s.{c} AS {c}" for c, _ in cols)
-            pt = ", ".join(f"_p.{c}" for c in passthrough)
-            return (f"{name} AS (\n  SELECT {pt}, {sel}\n  FROM {prev} _p\n"
-                    f"  LATERAL VIEW explode(array(named_struct({ns}))) "
-                    f"_bv AS _s\n)")
-        sel = ", ".join(f"{e} AS {c}" for c, e in cols)
-        pt = ", ".join(passthrough)
-        return (f"{name} AS MATERIALIZED (\n  SELECT {pt}, {sel}\n"
-                f"  FROM {prev}\n)")
-
-    def sq(text: str) -> str:
-        return text.replace("'", "''")
 
     def case_lookup(table: dict) -> str:
         whens = " ".join(f"WHEN {i} THEN '{sq(v)}'"
@@ -208,16 +144,16 @@ def _sql(dialect: str) -> str:
       ELSE concat('https://grantee-', {cs('o_orderkey % 50')}, '.org')
       END AS grantee_url,
     CASE CAST(o_orderkey % 4 AS INT)
-      WHEN 0 THEN {arr()}
+      WHEN 0 THEN {noints()}
       WHEN 1 THEN {arr('401')}
       WHEN 2 THEN {arr('402', '401')}
       ELSE {arr('499', '403')} END AS state_ids,
     CASE CAST(o_orderkey % 3 AS INT)
-      WHEN 0 THEN {arr()}
+      WHEN 0 THEN {noints()}
       WHEN 1 THEN {arr('501')}
       ELSE {arr('502', '503')} END AS strategy_ids,
     CASE CAST(o_orderkey % 4 AS INT)
-      WHEN 0 THEN {arr()}
+      WHEN 0 THEN {noints()}
       WHEN 1 THEN {arr('601')}
       WHEN 2 THEN {arr('699', '602')}
       ELSE {arr('601', '602')} END AS gtype_ids"""
@@ -282,16 +218,9 @@ FROM coerced
 """
 
 
-def _build(dialect: str) -> str:
-    text = _sql(dialect)
-    if dialect == "duck":
-        text = text.replace("\\\\", "\\")
-    return text
-
-
 @register(
     "kauffman_parse_grants",
-    oracle=_build("duck"),
+    oracle=sqlkit.build(_sql, "duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc="Kauffman Foundation grants parse (scripts/local/kauffman_to_s3.py)",
@@ -302,4 +231,4 @@ def kauffman_parse_grants(spark: SparkSession, sf_dir: str) -> DataFrame:
     guarded year/float coercions, strategy-over-grant-type scheme
     fallback, ', ' taxonomy roll-ups, org-only grantee modelling.
     One scan, one exchange, no Python."""
-    return spark.sql(_build("spark"))
+    return spark.sql(sqlkit.build(_sql, "spark"))

@@ -47,6 +47,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from openalex_walden_spark.queries import sqlkit
 from openalex_walden_spark.queries.registry import register
 
 # keck_to_s3.py:81-83
@@ -78,92 +79,21 @@ _CATEGORY = ("(?i)^(Civic (and|&) Community|Arts (and|&) Culture|"
 _PI_SPLIT = "\\\\s*[,&]\\\\s*"
 
 
-def _helpers(dialect: str):
-    if dialect == "spark":
-        g, S = "", "STRING"
+def _sql(dialect: str) -> str:
+    k = sqlkit.kit(dialect)
+    g, cs, bar, arr, asize, elem = k.g, k.cs, k.bar, k.arr, k.asize, k.elem
+    filt, jn, like, rx, splitws = k.filt, k.jn, k.like, k.rx, k.splitws
 
-        def arr(*items: str) -> str:
-            return f"array({', '.join(items)})" if items else "array()"
-
-        def elem(a: str, i: str) -> str:
-            return f"try_element_at({a}, {i})"
-
-        def asize(a: str) -> str:
-            return f"size({a})"
-
-        def jn(a: str, n: str) -> str:
-            return f"array_join(slice({a}, 1, {n}), ' ')"
-
-        def splitws(x: str) -> str:
-            return f"filter(split({x}, '\\\\s+'), t -> t <> '')"
-
-        def filt(a: str, c: str) -> str:
-            return f"filter({a}, t -> {c})"
-
-        def like(x: str, pat: str) -> str:
-            return f"{x} rlike '{pat}'"
-
-        def first_idx(a: str, cond_t: str) -> str:
-            # 1-based index of the first element satisfying cond (on S)
+    def first_idx(a: str, cond_t: str) -> str:
+        # 1-based index of the first element satisfying cond (on S)
+        if dialect == "spark":
             c = cond_t.replace("S", "_x")
             return (f"try_element_at(filter(transform({a}, "
                     f"(_x, _i) -> CASE WHEN {c} THEN _i + 1 END), "
                     f"t -> t IS NOT NULL), 1)")
-    else:
-        g, S = ", 'g'", "VARCHAR"
-
-        def arr(*items: str) -> str:
-            return f"[{', '.join(items)}]" if items else "[]::VARCHAR[]"
-
-        def elem(a: str, i: str) -> str:
-            return f"{a}[({i})]"
-
-        def asize(a: str) -> str:
-            return f"len({a})"
-
-        def jn(a: str, n: str) -> str:
-            return f"array_to_string(list_slice({a}, 1, {n}), ' ')"
-
-        def splitws(x: str) -> str:
-            return (f"list_filter(regexp_split_to_array({x}, '\\\\s+'), "
-                    f"t -> t <> '')")
-
-        def filt(a: str, c: str) -> str:
-            return f"list_filter({a}, t -> {c})"
-
-        def like(x: str, pat: str) -> str:
-            return f"regexp_matches({x}, '{pat}')"
-
-        def first_idx(a: str, cond_t: str) -> str:
-            c = cond_t.replace("S", f"({a})[_i]")
-            return (f"(list_filter(range(1, {asize(a)} + 1), "
-                    f"_i -> {c}))[1]")
-
-    return g, S, arr, elem, asize, jn, splitws, filt, like, first_idx
-
-
-def _sql(dialect: str) -> str:
-    (g, S, arr, elem, asize, jn, splitws, filt, like,
-     first_idx) = _helpers(dialect)
-
-    def cs(expr: str) -> str:
-        return f"CAST({expr} AS {S})"
-
-    def bar(name: str, prev: str, passthrough: list, cols: list) -> str:
-        if dialect == "spark":
-            ns = ", ".join(f"'{c}', {e}" for c, e in cols)
-            sel = ", ".join(f"_s.{c} AS {c}" for c, _ in cols)
-            pt = ", ".join(f"_p.{c}" for c in passthrough)
-            return (f"{name} AS (\n  SELECT {pt}, {sel}\n  FROM {prev} _p\n"
-                    f"  LATERAL VIEW explode(array(named_struct({ns}))) "
-                    f"_bv AS _s\n)")
-        sel = ", ".join(f"{e} AS {c}" for c, e in cols)
-        pt = ", ".join(passthrough)
-        return (f"{name} AS MATERIALIZED (\n  SELECT {pt}, {sel}\n"
-                f"  FROM {prev}\n)")
-
-    def rx(srcv: str, pat: str, grp: int) -> str:
-        return f"nullif(regexp_extract({srcv}, '{pat}', {grp}), '')"
+        c = cond_t.replace("S", f"({a})[_i]")
+        return (f"(list_filter(range(1, {asize(a)} + 1), "
+                f"_i -> {c}))[1]")
 
     title_expr = ("CASE WHEN trim(cand) <> '' AND trim(nxt) = '' "
                   "AND NOT (" + like("trim(cand)", _AMOUNT) + ") "
@@ -301,16 +231,9 @@ FROM named
 """
 
 
-def _build(dialect: str) -> str:
-    text = _sql(dialect)
-    if dialect == "duck":
-        text = text.replace("\\\\", "\\")
-    return text
-
-
 @register(
     "keck_parse_grants",
-    oracle=_build("duck"),
+    oracle=sqlkit.build(_sql, "duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc="Keck Foundation PDF grants parse (scripts/local/keck_to_s3.py)",
@@ -322,4 +245,4 @@ def keck_parse_grants(spark: SparkSession, sf_dir: str) -> DataFrame:
     short-line title gate with month-year rejection, md5[:10] native
     ids (exact — both engines have md5).  One scan, zero exchanges,
     no Python."""
-    return spark.sql(_build("spark"))
+    return spark.sql(sqlkit.build(_sql, "spark"))

@@ -40,80 +40,32 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from openalex_walden_spark.queries import sqlkit
 from openalex_walden_spark.queries.registry import register
 
 
-def _helpers(dialect: str):
-    if dialect == "spark":
-        g, S = "", "STRING"
+def _sql(dialect: str) -> str:
+    k = sqlkit.kit(dialect)
+    g, cs, bar, arr, asize, elem = k.g, k.cs, k.bar, k.arr, k.asize, k.elem
+    jn, splitws = k.jn, k.splitws
 
-        def elem(a: str, i: str) -> str:
-            return f"try_element_at({a}, {i})"
+    isdigits = ("rlike '^[0-9]+$'" if dialect == "spark"
+                else "SIMILAR TO '[0-9]+'")
 
-        def asize(a: str) -> str:
-            return f"size({a})"
-
-        def jn(a: str, n: str) -> str:
-            return f"array_join(slice({a}, 1, {n}), ' ')"
-
-        def splitws(x: str) -> str:
-            return f"filter(split({x}, '\\\\s+'), t -> t <> '')"
-
-        def map_from(keys: str, vals: str) -> str:
+    def map_from(keys: str, vals: str) -> str:
+        if dialect == "spark":
             return f"map_from_arrays({keys}, {vals})"
+        return f"map({keys}, {vals})"
 
-        def map_get(m: str, k: str) -> str:
-            return f"try_element_at({m}, {k})"
-    else:
-        g, S = ", 'g'", "VARCHAR"
-
-        def elem(a: str, i: str) -> str:
-            return f"{a}[({i})]"
-
-        def asize(a: str) -> str:
-            return f"len({a})"
-
-        def jn(a: str, n: str) -> str:
-            return f"array_to_string(list_slice({a}, 1, {n}), ' ')"
-
-        def splitws(x: str) -> str:
-            return (f"list_filter(regexp_split_to_array({x}, '\\\\s+'), "
-                    f"t -> t <> '')")
-
-        def map_from(keys: str, vals: str) -> str:
-            return f"map({keys}, {vals})"
-
-        def map_get(m: str, k: str) -> str:
-            # duck map_extract returns a LIST ([] on miss)
-            return f"(map_extract({m}, {k}))[1]"
+    def map_get(m: str, key: str) -> str:
+        if dialect == "spark":
+            return f"try_element_at({m}, {key})"
+        return f"(map_extract({m}, {key}))[1]"
 
     def totext(x: str) -> str:
         # html_to_text (lasker:101-104) — no unescape by design
         e = f"regexp_replace({x}, '<[^>]+>', ' '{g})"
         return f"trim(regexp_replace({e}, '\\\\s+', ' '{g}))"
-
-    return g, S, elem, asize, jn, splitws, map_from, map_get, totext
-
-
-def _sql(dialect: str) -> str:
-    (g, S, elem, asize, jn, splitws, map_from, map_get,
-     totext) = _helpers(dialect)
-
-    def cs(expr: str) -> str:
-        return f"CAST({expr} AS {S})"
-
-    def bar(name: str, prev: str, passthrough: list, cols: list) -> str:
-        if dialect == "spark":
-            ns = ", ".join(f"'{c}', {e}" for c, e in cols)
-            sel = ", ".join(f"_s.{c} AS {c}" for c, _ in cols)
-            pt = ", ".join(f"_p.{c}" for c in passthrough)
-            return (f"{name} AS (\n  SELECT {pt}, {sel}\n  FROM {prev} _p\n"
-                    f"  LATERAL VIEW explode(array(named_struct({ns}))) "
-                    f"_bv AS _s\n)")
-        sel = ", ".join(f"{e} AS {c}" for c, e in cols)
-        pt = ", ".join(passthrough)
-        return (f"{name} AS MATERIALIZED (\n  SELECT {pt}, {sel}\n"
-                f"  FROM {prev}\n)")
 
     # laureate-term explode: per-dialect
     if dialect == "spark":
@@ -124,11 +76,6 @@ def _sql(dialect: str) -> str:
                     "len(laureate_terms) + 1), _i -> struct_pack("
                     "lpos := _i - 1, lt := laureate_terms[_i]))) "
                     "AS _lv(_z)")
-
-    def arr(*items: str) -> str:
-        if dialect == "spark":
-            return f"array({', '.join(items)})" if items else "array()"
-        return f"[{', '.join(items)}]" if items else "[]::VARCHAR[]"
 
     # fixture laureate term-name pools (reference terms are
     # 'Family, Given'; one comma-less arm exercises the fallback)
@@ -231,7 +178,7 @@ SELECT
   url,
   wp_date,
   award_name,
-  CASE WHEN year_name IS NOT NULL AND year_name rlike '^[0-9]+$'
+  CASE WHEN year_name IS NOT NULL AND year_name {isdigits}
     THEN CAST(year_name AS INT) END AS year,
   achievement_title,
   lt AS laureate_name,
@@ -246,18 +193,9 @@ FROM named
 """
 
 
-def _build(dialect: str) -> str:
-    text = _sql(dialect)
-    if dialect == "duck":
-        text = text.replace("\\\\", "\\")
-        text = text.replace("rlike '^[0-9]+$'",
-                            "SIMILAR TO '[0-9]+'")
-    return text
-
-
 @register(
     "lasker_parse_awards",
-    oracle=_build("duck"),
+    oracle=sqlkit.build(_sql, "duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc="Lasker Awards parse (scripts/local/lasker_to_s3.py)",
@@ -268,4 +206,4 @@ def lasker_parse_awards(spark: SparkSession, sf_dir: str) -> DataFrame:
     token, 'Family, Given' first-comma split with the comma-less
     fallback, content[:1500] excerpt.  One scan + one Generate, zero
     exchanges, no Python."""
-    return spark.sql(_build("spark"))
+    return spark.sql(sqlkit.build(_sql, "spark"))

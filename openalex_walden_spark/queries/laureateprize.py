@@ -155,6 +155,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from openalex_walden_spark.queries import sqlkit
 from openalex_walden_spark.queries.registry import register
 
 # kyoto_prize_to_s3.py:112-116
@@ -196,61 +197,17 @@ _BR_RULE_URL = "https://brainprize.org/about-the-brain-prize"
 _KF_RULE_URL = "https://kingfaisalprize.org/nominations/"
 
 
-def _helpers(dialect: str):
-    if dialect == "spark":
-        g, S, fmt, bref = "", "STRING", "format_string", "$"
+def _sql(dialect: str) -> str:
+    k = sqlkit.kit(dialect)
+    g, S, cs, bar, asize, elem = k.g, k.S, k.cs, k.bar, k.asize, k.elem
+    fmt, idx_of, jnspan, nullcols = k.fmt, k.idx_of, k.jnspan, k.nullcols
+    rx, slugify = k.rx, k.slugify
+    bref = "$" if dialect == "spark" else "\\"
+    suffixes = ", ".join(f"'{s}'" for s in KIT_SUFFIXES)
+    prefixes = ", ".join(f"'{p}'" for p in BRAIN_PREFIXES)
 
-        def elem(a: str, i: str) -> str:
-            return f"try_element_at({a}, {i})"
-
-        def asize(a: str) -> str:
-            return f"size({a})"
-
-        def splitws(x: str) -> str:
-            return f"filter(split(coalesce({x}, ''), '\\\\s+'), t -> t <> '')"
-
-        def zmax(toks: str, cond: str) -> str:
-            return (f"coalesce(array_max(zip_with({toks}, "
-                    f"sequence(1, size({toks})), (t, i) -> "
-                    f"CASE WHEN {cond} THEN i END)), 0)")
-
-        def zmin(toks: str, cond: str) -> str:
-            return (f"coalesce(array_min(zip_with({toks}, "
-                    f"sequence(1, size({toks})), (t, i) -> "
-                    f"CASE WHEN {cond} THEN i END)), "
-                    f"size({toks}) + 1)")
-
-        def jslice(a: str, start: str, length: str) -> str:
-            return f"array_join(slice({a}, {start}, {length}), ' ')"
-    else:
-        g, S, fmt, bref = ", 'g'", "VARCHAR", "printf", "\\"
-
-        def elem(a: str, i: str) -> str:
-            return f"{a}[({i})]"
-
-        def asize(a: str) -> str:
-            return f"len({a})"
-
-        def splitws(x: str) -> str:
-            return (f"list_filter(regexp_split_to_array(coalesce({x}, "
-                    f"''), '\\\\s+'), t -> t <> '')")
-
-        def zmax(toks: str, cond: str) -> str:
-            return (f"coalesce(list_max(list_transform({toks}, "
-                    f"(t, i) -> CASE WHEN {cond} THEN i END)), 0)")
-
-        def zmin(toks: str, cond: str) -> str:
-            return (f"coalesce(list_min(list_transform({toks}, "
-                    f"(t, i) -> CASE WHEN {cond} THEN i END)), "
-                    f"len({toks}) + 1)")
-
-        def jslice(a: str, start: str, length: str) -> str:
-            # duck list_slice takes an END index, not a length
-            return (f"array_to_string(list_slice({a}, {start}, "
-                    f"({start}) + ({length}) - 1), ' ')")
-
-    def rx(src: str, pat: str, grp: int) -> str:
-        return f"nullif(regexp_extract({src}, '{pat}', {grp}), '')"
+    def splitws(x: str) -> str:
+        return k.splitws(f"coalesce({x}, '')")
 
     def collapse(x: str, wide: bool = False) -> str:
         """collapse_text: (NBSP/U+3000 for kyoto,) ws collapse,
@@ -262,61 +219,28 @@ def _helpers(dialect: str):
         e = f"regexp_replace({e}, '\\\\s+([,;.:])', '{bref}1'{g})"
         return f"nullif(trim({e}), '')"
 
-    def slugify(x: str) -> str:
-        s = f"regexp_replace(lower(coalesce({x}, '')), '[^a-z0-9]+', '-'{g})"
-        return f"coalesce(nullif(trim(BOTH '-' FROM {s}), ''), 'unknown')"
-
     def rstrip0(x: str) -> str:
         r = f"regexp_replace({x}, '0+$', ''{g})"
         return f"regexp_replace({r}, '[.]$', ''{g})"
-
-    suffixes = ", ".join(f"'{s}'" for s in KIT_SUFFIXES)
-    prefixes = ", ".join(f"'{p}'" for p in BRAIN_PREFIXES)
 
     def split_parts(raw: str, pop_prefixes: bool = False):
         """The kit splitter: tokens = .split(); optional front prefix
         pops (brain), tail suffix pops; (given, family) with NULLs."""
         toks = splitws(raw)
         notsuf = f"lower(trim(BOTH '.,' FROM t)) NOT IN ({suffixes})"
-        end = zmax(toks, notsuf)
+        end = f"coalesce({idx_of(toks, notsuf, 'array_max')}, 0)"
         if pop_prefixes:
             notpre = f"lower(trim(BOTH '.,' FROM t)) NOT IN ({prefixes})"
-            start = zmin(toks, notpre)
+            start = (f"coalesce({idx_of(toks, notpre)}, "
+                     f"{asize(toks)} + 1)")
         else:
             start = "1"
-        head = jslice(toks, f"({start})", f"({end}) - ({start})")
+        head = jnspan(toks, f"({start})", f"({end}) - ({start})")
         last = elem(toks, f"({end})")
         given = (f"CASE WHEN ({end}) - ({start}) >= 1 THEN "
                  f"nullif({head}, '') END")
         family = f"CASE WHEN ({end}) >= ({start}) THEN {last} END"
         return given, family
-
-    return (g, S, fmt, bref, elem, asize, splitws, zmax, zmin, jslice,
-            rx, collapse, slugify, rstrip0, split_parts)
-
-
-def _sql(dialect: str) -> str:
-    (g, S, fmt, bref, elem, asize, splitws, zmax, zmin, jslice, rx,
-     collapse, slugify, rstrip0, split_parts) = _helpers(dialect)
-
-    def cs(expr: str) -> str:
-        return f"CAST({expr} AS {S})"
-
-    def nullcols(*names: str) -> str:
-        return ", ".join(f"CAST(NULL AS {S}) AS {n}" for n in names)
-
-    def bar(name: str, prev: str, passthrough: list, cols: list) -> str:
-        if dialect == "spark":
-            ns = ", ".join(f"'{c}', {e}" for c, e in cols)
-            sel = ", ".join(f"_s.{c} AS {c}" for c, _ in cols)
-            pt = ", ".join(f"_p.{c}" for c in passthrough)
-            return (f"{name} AS (\n  SELECT {pt}, {sel}\n  FROM {prev} _p\n"
-                    f"  LATERAL VIEW explode(array(named_struct({ns}))) "
-                    f"_bv AS _s\n)")
-        sel = ", ".join(f"{e} AS {c}" for c, e in cols)
-        pt = ", ".join(passthrough)
-        return (f"{name} AS MATERIALIZED (\n  SELECT {pt}, {sel}\n"
-                f"  FROM {prev}\n)")
 
     def g12(x: str) -> str:
         """f'{x:.12g}' for the value ranges the arms produce (portions
@@ -1044,7 +968,7 @@ kf_out AS (
     ke_toks = splitws(ke_strip_degree("name_final"))
     ke_n = asize(ke_toks)
     ke_split_given = (f"CASE WHEN ({ke_n}) >= 2 THEN "
-                      f"{jslice(ke_toks, '1', f'({ke_n}) - 1')} END")
+                      f"{jnspan(ke_toks, '1', f'({ke_n}) - 1')} END")
     ke_split_family = (f"CASE WHEN ({ke_n}) >= 1 THEN "
                        f"{elem(ke_toks, f'({ke_n})')} END")
 
@@ -1184,8 +1108,8 @@ ke_out AS (
     ib_toks = splitws("name_final")
     ib_n = asize(ib_toks)
     ib_t1 = elem(ib_toks, "1")
-    ib_head = jslice(ib_toks, "1", f"({ib_n}) - 1")
-    ib_rest = jslice(ib_toks, "2", f"({ib_n}) - 1")
+    ib_head = jnspan(ib_toks, "1", f"({ib_n}) - 1")
+    ib_rest = jnspan(ib_toks, "2", f"({ib_n}) - 1")
     ib_tlast = elem(ib_toks, f"({ib_n})")
     ib_isupper = (f"({ib_t1} = upper({ib_t1}) AND "
                   f"lower({ib_t1}) <> upper({ib_t1}))")
@@ -1268,9 +1192,9 @@ ke_out AS (
     ib_tt = splitws("tail_nt")
     ib_tn = asize(ib_tt)
     ib_first2_words = (f"CASE WHEN ({ib_tn}) >= 2 THEN "
-                       f"{jslice(ib_tt, '1', '2')} ELSE tail_nt END")
+                       f"{jnspan(ib_tt, '1', '2')} ELSE tail_nt END")
     ib_after2_words = (f"CASE WHEN ({ib_tn}) >= 2 THEN "
-                       f"nullif({jslice(ib_tt, '3', f'({ib_tn}) - 2')},"
+                       f"nullif({jnspan(ib_tt, '3', f'({ib_tn}) - 2')},"
                        f" '') END")
 
     ib = f"""
@@ -1546,7 +1470,7 @@ wl_out AS (
     {cs('yr')} AS award_year,
     full_name AS laureate_name,
     CASE WHEN keep_n <= 1 THEN NULL
-      ELSE {jslice('(' + wl_toks + ')', '1', 'keep_n - 1')} END
+      ELSE {jnspan('(' + wl_toks + ')', '1', 'keep_n - 1')} END
       AS given_name,
     CASE WHEN keep_n = 0 THEN NULL
       ELSE {elem('(' + wl_toks + ')', 'keep_n')} END AS family_name,
@@ -1687,7 +1611,7 @@ ma_out AS (
     {cs('year_i')} AS award_year,
     full_name AS laureate_name,
     CASE WHEN keep_n <= 1 THEN NULL
-      ELSE {jslice('(' + wl_toks + ')', '1', 'keep_n - 1')} END
+      ELSE {jnspan('(' + wl_toks + ')', '1', 'keep_n - 1')} END
       AS given_name,
     CASE WHEN keep_n = 0 THEN NULL
       ELSE {elem('(' + wl_toks + ')', 'keep_n')} END AS family_name,
@@ -1775,16 +1699,9 @@ UNION ALL {arm_select('ma_out', ma_extras)}
 """
 
 
-def _build(dialect: str) -> str:
-    text = _sql(dialect)
-    if dialect == "duck":
-        text = text.replace("\\\\", "\\")
-    return text
-
-
 @register(
     "laureate_prize_parse",
-    oracle=_build("duck"),
+    oracle=sqlkit.build(_sql, "duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc=("Laureate-prize scraper family (scripts/local/{kyoto_prize,"
@@ -1801,4 +1718,4 @@ def laureate_prize_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     under a round-robin spread exchange (``spread`` in ``register``):
     the single-row-group fixture scan is one task per arm, and the
     regex-heavy parse ran on 8 cores for 8 arms while the rest idled."""
-    return spark.sql(_build("spark"))
+    return spark.sql(sqlkit.build(_sql, "spark"))

@@ -62,6 +62,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from openalex_walden_spark.queries import sqlkit
 from openalex_walden_spark.queries.registry import register
 
 # letten_prize_to_s3.py:121-127
@@ -101,141 +102,56 @@ _T_AFF_2021 = "affiliated with the\\\\s+(.+?)\\\\s+where"
 _T_AFF_2018 = "is affiliated with the\\\\s+(.+?)\\\\.\\\\s+"
 
 
-def _helpers(dialect: str):
-    if dialect == "spark":
-        g, S = "", "STRING"
+def _sql(dialect: str) -> str:
+    k = sqlkit.kit(dialect)
+    g, cs, bar, asize, elem, filt = k.g, k.cs, k.bar, k.asize, k.elem, k.filt
+    jnall, jnspan, like, rxall, sl = k.jnall, k.jnspan, k.like, k.rxall, k.sl
+    splitws, tx = k.splitws, k.tx
 
-        def elem(a: str, i: str) -> str:
-            return f"try_element_at({a}, {i})"
-
-        def asize(a: str) -> str:
-            return f"size({a})"
-
-        def sl(a: str, start: str, length: str) -> str:
-            return f"slice({a}, {start}, {length})"
-
-        def jn(a: str, sep: str) -> str:
-            return f"array_join({a}, {sep})"
-
-        def splitws(x: str) -> str:
-            return f"filter(split({x}, '\\\\s+'), t -> t <> '')"
-
-        def splitchr1(x: str) -> str:
+    def splitchr1(x: str) -> str:
+        if dialect == "spark":
             rep = f"regexp_replace({x}, '([.!?]) ', concat('$1', char(1)))"
             return f"split({rep}, char(1))"
+        rep = (f"regexp_replace({x}, '([.!?]) ', "
+               f"'\\\\1' || chr(1), 'g')")
+        return f"string_split({rep}, chr(1))"
 
-        def rxall(x: str, pat: str) -> str:
-            return f"regexp_extract_all({x}, '{pat}', 1)"
-
-        def like(x: str, pat: str) -> str:
-            return f"{x} rlike '{pat}'"
-
-        def sel_first2_or(a: str, cond_s: str) -> str:
+    def sel_first2_or(a: str, cond_s: str) -> str:
+        if dialect == "spark":
             c = cond_s.replace("S", "_x")
             return f"filter({a}, (_x, _i) -> _i < 2 OR ({c}))"
+        c = cond_s.replace("S", f"({a})[_i]")
+        return (f"list_transform(list_filter(range(1, {asize(a)} + 1), "
+                f"_i -> _i <= 2 OR ({c})), _i -> ({a})[_i])")
 
-        def cap900(a: str) -> str:
-            # keep element i iff i == 1 OR the joined length of the
-            # first i-1 selected sentences is <= 900
+    def cap900(a: str) -> str:
+        # keep element i iff i == 1 OR the joined length of the
+        # first i-1 selected sentences is <= 900
+        if dialect == "spark":
             run = (f"aggregate(slice({a}, 1, _i), 0, "
                    f"(_a, _s) -> _a + length(_s) + 1) - 1")
             return f"filter({a}, (_x, _i) -> _i = 0 OR ({run}) <= 900)"
+        run = (f"coalesce(list_sum(list_transform(list_slice({a}, 1, "
+               f"_i - 1), _s -> length(_s) + 1)), 0) - 1")
+        return (f"list_transform(list_filter(range(1, {asize(a)} + 1), "
+                f"_i -> _i = 1 OR ({run}) <= 900), "
+                f"_i -> ({a})[_i])")
 
-        def tx(a: str, e: str) -> str:
-            return f"transform({a}, t -> {e})"
-
-        def filt(a: str, c: str) -> str:
-            return f"filter({a}, t -> {c})"
-
-        def sha12(x: str) -> str:
+    def sha12(x: str) -> str:
+        if dialect == "spark":
             return f"substring(sha2({x}, 256), 1, 12)"
+        return f"substring(sha256({x}), 1, 12)"
 
-        def idiv(a: str, b: str) -> str:
+    def idiv(a: str, b: str) -> str:
+        if dialect == "spark":
             return f"({a} div {b})"
-    else:
-        g, S = ", 'g'", "VARCHAR"
-
-        def elem(a: str, i: str) -> str:
-            return f"{a}[({i})]"
-
-        def asize(a: str) -> str:
-            return f"len({a})"
-
-        def sl(a: str, start: str, length: str) -> str:
-            return f"list_slice({a}, {start}, ({start}) + ({length}) - 1)"
-
-        def jn(a: str, sep: str) -> str:
-            return f"array_to_string({a}, {sep})"
-
-        def splitws(x: str) -> str:
-            return (f"list_filter(regexp_split_to_array({x}, '\\\\s+'), "
-                    f"t -> t <> '')")
-
-        def splitchr1(x: str) -> str:
-            rep = (f"regexp_replace({x}, '([.!?]) ', "
-                   f"'\\\\1' || chr(1), 'g')")
-            return f"string_split({rep}, chr(1))"
-
-        def rxall(x: str, pat: str) -> str:
-            return f"regexp_extract_all({x}, '{pat}', 1)"
-
-        def like(x: str, pat: str) -> str:
-            return f"regexp_matches({x}, '{pat}')"
-
-        def sel_first2_or(a: str, cond_s: str) -> str:
-            c = cond_s.replace("S", f"({a})[_i]")
-            return (f"list_transform(list_filter(range(1, {asize(a)} + 1), "
-                    f"_i -> _i <= 2 OR ({c})), _i -> ({a})[_i])")
-
-        def cap900(a: str) -> str:
-            run = (f"coalesce(list_sum(list_transform(list_slice({a}, 1, "
-                   f"_i - 1), _s -> length(_s) + 1)), 0) - 1")
-            return (f"list_transform(list_filter(range(1, {asize(a)} + 1), "
-                    f"_i -> _i = 1 OR ({run}) <= 900), "
-                    f"_i -> ({a})[_i])")
-
-        def tx(a: str, e: str) -> str:
-            return f"list_transform({a}, t -> {e})"
-
-        def filt(a: str, c: str) -> str:
-            return f"list_filter({a}, t -> {c})"
-
-        def sha12(x: str) -> str:
-            return f"substring(sha256({x}), 1, 12)"
-
-        def idiv(a: str, b: str) -> str:
-            return f"({a} // {b})"
+        return f"({a} // {b})"
 
     def clean(x: str) -> str:
         """clean_text (letten:135-146) + the NBSP shim."""
         e = f"replace(replace({x}, '&amp;', '&'), '&nbsp;', ' ')"
         e = f"regexp_replace({e}, '<[^>]+>', ' '{g})"
         return f"nullif(trim(regexp_replace({e}, '\\\\s+', ' '{g})), '')"
-
-    return (g, S, elem, asize, sl, jn, splitws, splitchr1, rxall, like,
-            sel_first2_or, cap900, tx, filt, sha12, idiv, clean)
-
-
-def _sql(dialect: str) -> str:
-    (g, S, elem, asize, sl, jn, splitws, splitchr1, rxall, like,
-     sel_first2_or, cap900, tx, filt, sha12, idiv, clean) = \
-        _helpers(dialect)
-
-    def cs(expr: str) -> str:
-        return f"CAST({expr} AS {S})"
-
-    def bar(name: str, prev: str, passthrough: list, cols: list) -> str:
-        if dialect == "spark":
-            ns = ", ".join(f"'{c}', {e}" for c, e in cols)
-            sel = ", ".join(f"_s.{c} AS {c}" for c, _ in cols)
-            pt = ", ".join(f"_p.{c}" for c in passthrough)
-            return (f"{name} AS (\n  SELECT {pt}, {sel}\n  FROM {prev} _p\n"
-                    f"  LATERAL VIEW explode(array(named_struct({ns}))) "
-                    f"_bv AS _s\n)")
-        sel = ", ".join(f"{e} AS {c}" for c, e in cols)
-        pt = ", ".join(passthrough)
-        return (f"{name} AS MATERIALIZED (\n  SELECT {pt}, {sel}\n"
-                f"  FROM {prev}\n)")
 
     # ---- canonical-winner explode (letten:121-127) -------------------
     if dialect == "spark":
@@ -271,7 +187,7 @@ def _sql(dialect: str) -> str:
             f"ELSE t0 END")
 
     strong_cands = tx(rxall("content_rendered",
-                            "<strong[^>]*>([^<]*)</strong>"),
+                            "<strong[^>]*>([^<]*)</strong>", 1),
                       clean("t"))
     strong_pick = elem(
         filt(strong_cands,
@@ -398,12 +314,12 @@ SELECT
     AS display_name,
   CASE WHEN text IS NULL THEN NULL
     WHEN length(text) <= 1200 THEN text
-    ELSE coalesce(nullif(trim(regexp_replace({jn('kept', "' '")},
+    ELSE coalesce(nullif(trim(regexp_replace({jnall('kept')},
                  '\\\\s+', ' '{g})), ''), substring(text, 1, 1200)) END
     AS description,
   laureate AS laureate_name,
   CASE WHEN {asize('nt')} <= 1 THEN {elem('nt', '1')}
-    ELSE {jn(sl('nt', '1', f"{asize('nt')} - 1"), "' '")} END
+    ELSE {jnspan('nt', '1', f"{asize('nt')} - 1")} END
     AS given_name,
   CASE WHEN {asize('nt')} <= 1 THEN NULL
     ELSE {elem('nt', asize('nt'))} END AS family_name,
@@ -431,16 +347,9 @@ FROM descd
 """
 
 
-def _build(dialect: str) -> str:
-    text = _sql(dialect)
-    if dialect == "duck":
-        text = text.replace("\\\\", "\\")
-    return text
-
-
 @register(
     "letten_parse_laureates",
-    oracle=_build("duck"),
+    oracle=sqlkit.build(_sql, "duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     spread=("orders",),
@@ -455,4 +364,4 @@ def letten_parse_laureates(spark: SparkSession, sf_dir: str) -> DataFrame:
     directly under it (``spread`` in ``register``: the single-row-group
     fixture scan is one task and this parse does ~100 µs/row of regex
     work), no Python."""
-    return spark.sql(_build("spark"))
+    return spark.sql(sqlkit.build(_sql, "spark"))

@@ -93,6 +93,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from openalex_walden_spark.queries import sqlkit
 from openalex_walden_spark.queries.registry import register
 
 # fritz/novo/rj variant: both-end pop, titles in the set
@@ -103,106 +104,6 @@ _SUFFIX_B = "'phd','md','dphil','dsc','scd','jr','sr','ii','iii','iv'"
 
 _MONTHS = ("january,february,march,april,may,june,july,august,september,"
            "october,november,december")
-
-
-def _helpers(dialect: str):
-    if dialect == "spark":
-        g, stype = "", "STRING"
-        asize = "size"
-
-        def rl(col: str, pat: str) -> str:
-            return f"{col} RLIKE '{pat}'"
-
-        def elem(a: str, i: str) -> str:
-            return f"try_element_at({a}, {i})"
-
-        def arr_filter(a: str, cond: str) -> str:
-            return f"filter({a}, t -> {cond})"
-
-        def arr_join(a: str, sep: str) -> str:
-            return f"array_join({a}, '{sep}')"
-
-        def month_no(x: str) -> str:
-            return (f"array_position(split('{_MONTHS}', ','), lower({x}))")
-
-        def dparse(x: str, fmt_spark: str, fmt_duck: str) -> str:
-            return (f"date_format(try_to_timestamp({x}, '{fmt_spark}'), "
-                    f"'yyyy-MM-dd')")
-
-        fmt = "format_string"
-    else:
-        g, stype = ", 'g'", "VARCHAR"
-        asize = "len"
-
-        def rl(col: str, pat: str) -> str:
-            return f"regexp_matches({col}, '{pat}')"
-
-        def elem(a: str, i: str) -> str:
-            return f"{a}[{i}]"
-
-        def arr_filter(a: str, cond: str) -> str:
-            return f"list_filter({a}, t -> {cond})"
-
-        def arr_join(a: str, sep: str) -> str:
-            return f"list_aggr({a}, 'string_agg', '{sep}')"
-
-        def month_no(x: str) -> str:
-            return (f"list_position(str_split('{_MONTHS}', ','), "
-                    f"lower({x}))")
-
-        def dparse(x: str, fmt_spark: str, fmt_duck: str) -> str:
-            return (f"strftime(try_strptime({x}, '{fmt_duck}'), "
-                    f"'%Y-%m-%d')")
-
-        fmt = "printf"
-
-    def rx(src: str, pat: str, grp: int) -> str:
-        return f"nullif(regexp_extract({src}, '{pat}', {grp}), '')"
-
-    def split_name(raw: str, suffixes: str, both_ends: bool):
-        """(given, family) via the index-transform pop idiom."""
-        if dialect == "spark":
-            toks = (f"filter(split(coalesce({raw}, ''), '\\\\s+'), "
-                    f"x -> x <> '')")
-
-            def idxs(cond: str, agg: str) -> str:
-                return (f"{agg}(zip_with(({toks}), sequence(1, "
-                        f"size(({toks}))), (t, i) -> CASE WHEN {cond} "
-                        f"THEN i END))")
-            join_head = "array_join(slice(@T@, @S@, @E@ - @S@), ' ')"
-        else:
-            toks = (f"list_filter(regexp_split_to_array(coalesce({raw}, "
-                    f"''), '\\s+'), x -> x <> '')")
-
-            def idxs(cond: str, agg: str) -> str:
-                agg = "list_min" if agg == "min" else "list_max"
-                return (f"{agg}(list_transform(({toks}), (t, i) -> "
-                        f"CASE WHEN {cond} THEN i END))")
-            join_head = "list_aggr(list_slice(@T@, @S@, @E@ - 1), 'string_agg', ' ')"
-        tok_norm = "lower(trim(BOTH '.,' FROM t))"
-        if dialect == "spark":
-            first = (f"coalesce({idxs(f'{tok_norm} NOT IN ({suffixes})', 'array_min')}, "
-                     f"size(({toks})) + 1)") if both_ends else "1"
-            last = (f"coalesce({idxs(f'{tok_norm} NOT IN ({suffixes})', 'array_max')}, 0)")
-        else:
-            first = (f"coalesce({idxs(f'{tok_norm} NOT IN ({suffixes})', 'min')}, "
-                     f"len(({toks})) + 1)") if both_ends else "1"
-            last = (f"coalesce({idxs(f'{tok_norm} NOT IN ({suffixes})', 'max')}, 0)")
-        n_kept = f"greatest(({last}) - ({first}) + 1, 0)"
-        kept_last = elem(f"({toks})", f"({last})")
-        head = (join_head.replace("@T@", f"({toks})")
-                .replace("@S@", f"({first})").replace("@E@", f"({last})"))
-        given = f"CASE WHEN {n_kept} >= 2 THEN nullif({head}, '') END"
-        family = f"CASE WHEN {n_kept} >= 1 THEN {kept_last} END"
-        return given, family
-
-    def slugify(x: str) -> str:
-        s = (f"regexp_replace(lower(coalesce({x}, '')), '[^a-z0-9]+', "
-             f"'-'{g})")
-        return f"trim(BOTH '-' FROM {s})"
-
-    return (g, stype, asize, rl, elem, arr_filter, arr_join, month_no,
-            dparse, fmt, rx, split_name, slugify)
 
 
 _COLS = (
@@ -273,7 +174,7 @@ _AOS_PROJ_PAT = ("(?i)(?:Joint project title|Project title|Project)"
                  "|[”\"]?$)")
 
 
-def _aos_arm(dialect: str, g, S, cs, nullcols, rl, rx, elem) -> str:
+def _aos_arm(dialect: str) -> str:
     """The AOS arm: three page shapes (heading walk, paragraph-Kessel
     walk, the hardcoded laccr_2023 specs), re-expressed as exploded
     node rows + per-page windows (the reference walks each page's
@@ -303,33 +204,24 @@ def _aos_arm(dialect: str, g, S, cs, nullcols, rl, rx, elem) -> str:
     retrieved_at is a runtime seam, not emitted.
     """
     sp = dialect == "spark"
+    k = sqlkit.kit(dialect)
+    g, S, cs, clean_ws, elem, filt = k.g, k.S, k.cs, k.clean_ws, k.elem, k.filt
+    nullcols, rl, tagtext = k.nullcols, k.rl, k.tagtext
     if sp:
         node_lateral = ("\n  LATERAL VIEW posexplode(nodes) _n AS "
                         "idx0, nd")
         idx_expr, tag_expr, text_expr = ("CAST(idx0 + 1 AS INT)",
                                          "nd.tag", "nd.text")
-
-        def st(tag: str, text: str) -> str:
-            return f"named_struct('tag', '{tag}', 'text', {text})"
-
         arr = lambda *xs: "array(" + ",\n      ".join(xs) + ")"  # noqa: E731
-        afilter = lambda a, c: f"filter({a}, t -> {c})"  # noqa: E731
     else:
         node_lateral = ("\n  CROSS JOIN UNNEST(list_transform(nodes, "
                         "(t, i) -> {'i': i, 'nd': t})) AS _n(u)")
         idx_expr, tag_expr, text_expr = ("CAST(u.i AS INT)",
                                          "u.nd.tag", "u.nd.text")
-
-        def st(tag: str, text: str) -> str:
-            return f"{{'tag': '{tag}', 'text': {text}}}"
-
         arr = lambda *xs: "[" + ",\n      ".join(xs) + "]"  # noqa: E731
-        afilter = lambda a, c: f"list_filter({a}, t -> {c})"  # noqa: E731
 
     # clean_text: ws collapse + trim (the HTML strip is the seam)
-    clean = lambda x: (  # noqa: E731
-        f"nullif(trim(regexp_replace(replace(coalesce({x}, ''), "
-        f"chr(160), ' '), '\\\\s+', ' '{g})), '')")
+    clean = lambda x: clean_ws(f"coalesce({x}, '')")  # noqa: E731
     # strip_name_title (:164-169)
     snt = lambda x: (  # noqa: E731
         "trim(BOTH ' ,' FROM regexp_replace(regexp_replace("
@@ -372,40 +264,40 @@ def _aos_arm(dialect: str, g, S, cs, nullcols, rl, rx, elem) -> str:
                 f"ELSE 'Read the announcement for details.' END")
 
     heading_nodes = arr(
-        st("h1", "concat('AOS ', year, ' Research Awards')"),
-        st("p", "CASE WHEN o_orderkey % 5 <> 0 THEN concat('15 March '"
+        tagtext("h1", "concat('AOS ', year, ' Research Awards')"),
+        tagtext("p", "CASE WHEN o_orderkey % 5 <> 0 THEN concat('15 March '"
                 ", year) ELSE 'Announcement intro text.' END"),
         # a record BEFORE any transition rides the page default scheme
-        "CASE WHEN o_orderkey % 8 = 0 THEN " + st(
+        "CASE WHEN o_orderkey % 8 = 0 THEN " + tagtext(
             "h3", f"concat('Alex Early', {kk})") + " END",
-        "CASE WHEN o_orderkey % 8 = 0 THEN " + st(
+        "CASE WHEN o_orderkey % 8 = 0 THEN " + tagtext(
             "p", "'Early-section recipient affiliation'") + " END",
-        st("h2", kessel_head),
-        st("h3", "name1"),
-        st("p", f"concat('PhD Candidate, University ', {kk})"),
-        st("p", "proj1"),
-        st("h3", "'Congratulations'"),
-        st("h2", laccr_head),
-        st("h3", "name2"),
-        st("p", f"concat('Conservation biologist, Reserve ', {kk})"),
-        st("p", "proj2"),
-        st("h2", "'Related Posts'"),
-        st("p", "'Some related announcements.'"),
+        tagtext("h2", kessel_head),
+        tagtext("h3", "name1"),
+        tagtext("p", f"concat('PhD Candidate, University ', {kk})"),
+        tagtext("p", "proj1"),
+        tagtext("h3", "'Congratulations'"),
+        tagtext("h2", laccr_head),
+        tagtext("h3", "name2"),
+        tagtext("p", f"concat('Conservation biologist, Reserve ', {kk})"),
+        tagtext("p", "proj2"),
+        tagtext("h2", "'Related Posts'"),
+        tagtext("p", "'Some related announcements.'"),
     )
     # heading_nodes evaluates over aos_hp_raw, where the key is `pk`
     heading_nodes = heading_nodes.replace("o_orderkey", "pk")
     para_nodes = arr(
-        st("h1", f"concat('Kessel Fellowship Winners ', {y16})"),
-        st("p", f"concat('5 June ', {y16})"),
-        st("p", f"concat('Dr. Alan Turner', {kk}, ', University of "
+        tagtext("h1", f"concat('Kessel Fellowship Winners ', {y16})"),
+        tagtext("p", f"concat('5 June ', {y16})"),
+        tagtext("p", f"concat('Dr. Alan Turner', {kk}, ', University of "
                 f"Chicago')"),
-        st("p", f"concat('Project: “Migration genomics ', {kk}, '”')"),
-        st("p", "'Dr. Brina Montoya, Example University'"),
-        st("p", "'Project: \"An excluded project\"'"),
-        "CASE WHEN o_orderkey % 3 = 0 THEN " + st(
+        tagtext("p", f"concat('Project: “Migration genomics ', {kk}, '”')"),
+        tagtext("p", "'Dr. Brina Montoya, Example University'"),
+        tagtext("p", "'Project: \"An excluded project\"'"),
+        "CASE WHEN o_orderkey % 3 = 0 THEN " + tagtext(
             "p", f"concat('Dr. Maria Stone', {kk}, ', Cornell Lab')")
         + " END",
-        "CASE WHEN o_orderkey % 3 = 0 THEN " + st(
+        "CASE WHEN o_orderkey % 3 = 0 THEN " + tagtext(
             "p", "'An unrelated closing paragraph.'") + " END",
     )
 
@@ -434,7 +326,7 @@ def _aos_arm(dialect: str, g, S, cs, nullcols, rl, rx, elem) -> str:
                       '|', coalesce(project_title, ''))), 1, 10)
       AS source_hash"""
 
-    name_toks = afilter(
+    name_toks = filt(
         "split(clean_name_v, ' +')" if sp else
         "regexp_split_to_array(clean_name_v, ' +')", "t <> ''")
     n_toks = ("size" if sp else "len") + f"(({name_toks}))"
@@ -459,7 +351,7 @@ aos_hp_pages AS (
            '-research-awards-', {cs('pk')}, '/') AS url,
     concat(year, ' Research Awards - American Ornithological Society')
       AS page_title,
-    {afilter("nodes_raw", "t IS NOT NULL")} AS nodes
+    {filt("nodes_raw", "t IS NOT NULL")} AS nodes
   FROM (SELECT *, {heading_nodes} AS nodes_raw FROM aos_hp_raw) z
 ),
 aos_h_nodes AS (
@@ -554,7 +446,7 @@ aos_pp_pages AS (
            '-kessel-winners-', {cs('o_orderkey')}, '/') AS url,
     concat('Kessel Fellowship Winners ', {y16},
            ' - American Ornithological Society') AS page_title,
-    {afilter("nodes_raw", "t IS NOT NULL")} AS nodes
+    {filt("nodes_raw", "t IS NOT NULL")} AS nodes
   FROM (SELECT o_orderkey, {y16} AS year, {para_nodes} AS nodes_raw
         FROM orders WHERE o_orderkey % 2 = 1) z
 ),
@@ -694,27 +586,69 @@ aos_out AS (
 
 
 def _sql(dialect: str) -> str:
-    (g, S, asize, rl, elem, arr_filter, arr_join, month_no, dparse, fmt,
-     rx, split_name, slugify) = _helpers(dialect)
+    k = sqlkit.kit(dialect)
+    g, cs, bar, elem, filt = k.g, k.cs, k.bar, k.elem, k.filt
+    nullcols, rl, rx = k.nullcols, k.rl, k.rx
 
-    def cs(expr: str) -> str:
-        return f"CAST({expr} AS {S})"
-
-    def nullcols(*names: str) -> str:
-        return ", ".join(f"CAST(NULL AS {S}) AS {n}" for n in names)
-
-    def bar(name: str, prev: str, passthrough: list, cols: list) -> str:
+    def arr_join(a: str, sep: str) -> str:
         if dialect == "spark":
-            ns = ", ".join(f"'{c}', {e}" for c, e in cols)
-            sel = ", ".join(f"_s.{c} AS {c}" for c, _ in cols)
-            pt = ", ".join(f"_p.{c}" for c in passthrough)
-            return (f"{name} AS (\n  SELECT {pt}, {sel}\n  FROM {prev} _p\n"
-                    f"  LATERAL VIEW explode(array(named_struct({ns}))) "
-                    f"_bv AS _s\n)")
-        sel = ", ".join(f"{e} AS {c}" for c, e in cols)
-        pt = ", ".join(passthrough)
-        return (f"{name} AS MATERIALIZED (\n  SELECT {pt}, {sel}\n"
-                f"  FROM {prev}\n)")
+            return f"array_join({a}, '{sep}')"
+        return f"list_aggr({a}, 'string_agg', '{sep}')"
+
+    def month_no(x: str) -> str:
+        if dialect == "spark":
+            return (f"array_position(split('{_MONTHS}', ','), lower({x}))")
+        return (f"list_position(str_split('{_MONTHS}', ','), "
+                f"lower({x}))")
+
+    def dparse(x: str, fmt_spark: str, fmt_duck: str) -> str:
+        if dialect == "spark":
+            return (f"date_format(try_to_timestamp({x}, '{fmt_spark}'), "
+                    f"'yyyy-MM-dd')")
+        return (f"strftime(try_strptime({x}, '{fmt_duck}'), "
+                f"'%Y-%m-%d')")
+
+    def split_name(raw: str, suffixes: str, both_ends: bool):
+        """(given, family) via the index-transform pop idiom."""
+        if dialect == "spark":
+            toks = (f"filter(split(coalesce({raw}, ''), '\\\\s+'), "
+                    f"x -> x <> '')")
+
+            def idxs(cond: str, agg: str) -> str:
+                return (f"{agg}(zip_with(({toks}), sequence(1, "
+                        f"size(({toks}))), (t, i) -> CASE WHEN {cond} "
+                        f"THEN i END))")
+            join_head = "array_join(slice(@T@, @S@, @E@ - @S@), ' ')"
+        else:
+            toks = (f"list_filter(regexp_split_to_array(coalesce({raw}, "
+                    f"''), '\\s+'), x -> x <> '')")
+
+            def idxs(cond: str, agg: str) -> str:
+                agg = "list_min" if agg == "min" else "list_max"
+                return (f"{agg}(list_transform(({toks}), (t, i) -> "
+                        f"CASE WHEN {cond} THEN i END))")
+            join_head = "list_aggr(list_slice(@T@, @S@, @E@ - 1), 'string_agg', ' ')"
+        tok_norm = "lower(trim(BOTH '.,' FROM t))"
+        if dialect == "spark":
+            first = (f"coalesce({idxs(f'{tok_norm} NOT IN ({suffixes})', 'array_min')}, "
+                     f"size(({toks})) + 1)") if both_ends else "1"
+            last = (f"coalesce({idxs(f'{tok_norm} NOT IN ({suffixes})', 'array_max')}, 0)")
+        else:
+            first = (f"coalesce({idxs(f'{tok_norm} NOT IN ({suffixes})', 'min')}, "
+                     f"len(({toks})) + 1)") if both_ends else "1"
+            last = (f"coalesce({idxs(f'{tok_norm} NOT IN ({suffixes})', 'max')}, 0)")
+        n_kept = f"greatest(({last}) - ({first}) + 1, 0)"
+        kept_last = elem(f"({toks})", f"({last})")
+        head = (join_head.replace("@T@", f"({toks})")
+                .replace("@S@", f"({first})").replace("@E@", f"({last})"))
+        given = f"CASE WHEN {n_kept} >= 2 THEN nullif({head}, '') END"
+        family = f"CASE WHEN {n_kept} >= 1 THEN {kept_last} END"
+        return given, family
+
+    def slugify(x: str) -> str:
+        s = (f"regexp_replace(lower(coalesce({x}, '')), '[^a-z0-9]+', "
+             f"'-'{g})")
+        return f"trim(BOTH '-' FROM {s})"
 
     ks = cs("o_orderkey")
     # AMOUNT_NUMBER_RE (mott/helmsley/wt): \$\s*([0-9,]+(\.[0-9]+)?)
@@ -1086,7 +1020,7 @@ me_out AS (
         if dialect == "spark" else
         f"{rl('t', nv_prize_pat)} AND length(trim({nv_seg_head})) > 3 "
         f"AND NOT contains(lower({nv_seg_head}), lower(name))")
-    nv_hits = arr_filter("segs", nv_seg_cond)
+    nv_hits = filt("segs", nv_seg_cond)
     nv_letter1 = "substr('ABCDEFGHIJKLMNOPQRSTUVWXYZ', CAST(o_orderkey % 26 AS INT) + 1, 1)"
     nv_letter2 = ("substr('ABCDEFGHIJKLMNOPQRSTUVWXYZ', "
                   "CAST(CAST(floor(o_orderkey / 26.0) AS INT) % 26 AS INT)"
@@ -1238,7 +1172,7 @@ rj_gated AS (
       "amount_raw", "funding_program", "subject", "year_field"], [
     ("amount", cs(rj_amt).replace("rj.", "")),
     ("description",
-     f"substr({arr_join(arr_filter('paras', rj_paras_cond), ' ')}, "
+     f"substr({arr_join(filt('paras', rj_paras_cond), ' ')}, "
      f"1, 5000)"),
     ("given_name", rj_given), ("family_name", rj_family),
 ])},
@@ -1556,7 +1490,7 @@ sc_out AS (
   FROM sc_split
 )"""
 
-    aos = _aos_arm(dialect, g, S, cs, nullcols, rl, rx, elem)
+    aos = _aos_arm(dialect)
     aos_nulls = nullcols(*_AOS_EXTRA_COLS)
     aos_extras = ", ".join(_AOS_EXTRA_COLS)
 
@@ -1574,17 +1508,9 @@ UNION ALL SELECT {_COLS}, {aos_nulls} FROM sc_out
 """
 
 
-def _build(dialect: str) -> str:
-    text = _sql(dialect)
-    if dialect == "duck":
-        text = text.replace("\\\\", "\\")
-        text = text.replace("AS STRING", "AS VARCHAR")
-    return text
-
-
 @register(
     "method5_parse_awards",
-    oracle=_build("duck"),
+    oracle=sqlkit.build(_sql, "duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders", "region"),
     doc=("Method-5 static-HTML scraper family (scripts/local/{mott,"
@@ -1599,4 +1525,4 @@ def method5_parse_awards(spark: SparkSession, sf_dir: str) -> DataFrame:
     collision) so the only exchanges are the AOS arm's per-page
     windows — plus the round-robin spread exchange under each arm's
     single-row-group fixture scan (``spread`` in ``register``)."""
-    return spark.sql(_build("spark"))
+    return spark.sql(sqlkit.build(_sql, "spark"))

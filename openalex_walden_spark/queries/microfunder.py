@@ -69,6 +69,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from openalex_walden_spark.queries import sqlkit
 from openalex_walden_spark.queries.registry import register
 
 _LCRF_INST_KEY = ("(?i)(Universit|College|Institute|Hospital|School|"
@@ -99,62 +100,20 @@ _BRUK_FUND_TYPES = ("'fellowship','project grant','phd studentship',"
                     "'studentship','research grant'")
 
 
-def _helpers(dialect: str):
-    if dialect == "spark":
-        g, stype = "", "STRING"
-        asize = "size"
+def _sql(dialect: str) -> str:
+    k = sqlkit.kit(dialect)
+    g, S, cs, bar, asize, clean = k.g, k.S, k.cs, k.bar, k.asize, k.clean
+    elem, idx_of, nullcols, rl, rx = k.elem, k.idx_of, k.nullcols, k.rl, k.rx
+    slug = k.slug
 
-        def rl(col: str, pat: str) -> str:
-            return f"{col} RLIKE '{pat}'"
-
-        def elem(a: str, i: str) -> str:
-            return f"try_element_at({a}, {i})"
-
-        def idx_of(arr: str, cond: str, agg: str = "array_min") -> str:
-            return (f"{agg}(zip_with({arr}, sequence(1, size({arr})), "
-                    f"(t, i) -> CASE WHEN {cond} THEN i END))")
-
-        def arrlit(*items: str) -> str:
+    def arrlit(*items: str) -> str:
+        if dialect == "spark":
             body = ",\n      ".join(items)
             return (f"filter(array(\n      {body}\n    ), "
                     f"x -> x IS NOT NULL)")
-
-        def split_arr(x: str, pat: str) -> str:
-            return f"split({x}, '{pat}')"
-    else:
-        g, stype = ", 'g'", "VARCHAR"
-        asize = "len"
-
-        def rl(col: str, pat: str) -> str:
-            return f"regexp_matches({col}, '{pat}')"
-
-        def elem(a: str, i: str) -> str:
-            return f"{a}[{i}]"
-
-        def idx_of(arr: str, cond: str, agg: str = "array_min") -> str:
-            agg = "list_min" if agg == "array_min" else "list_max"
-            return (f"{agg}(list_transform({arr}, (t, i) -> "
-                    f"CASE WHEN {cond} THEN i END))")
-
-        def arrlit(*items: str) -> str:
-            body = ",\n      ".join(items)
-            return (f"list_filter([\n      {body}\n    ], "
-                    f"x -> x IS NOT NULL)")
-
-        def split_arr(x: str, pat: str) -> str:
-            return f"regexp_split_to_array({x}, '{pat}')"
-
-    def rx(src: str, pat: str, grp: int) -> str:
-        return f"nullif(regexp_extract({src}, '{pat}', {grp}), '')"
-
-    def clean(x: str) -> str:
-        return (f"nullif(trim(regexp_replace(coalesce({x}, ''), "
-                f"'\\\\s+', ' '{g})), '')")
-
-    def slug(x: str) -> str:
-        s = (f"regexp_replace(lower(coalesce({x}, '')), '[^a-z0-9]+', "
-             f"'-'{g})")
-        return f"substr(trim(BOTH '-' FROM {s}), 1, 90)"
+        body = ",\n      ".join(items)
+        return (f"list_filter([\n      {body}\n    ], "
+                f"x -> x IS NOT NULL)")
 
     def mono_split(n: str):
         """tokens of a pre-stripped name; mono keeps family."""
@@ -167,39 +126,11 @@ def _helpers(dialect: str):
                     f"''), ' +'), x -> x <> '')")
             head = (f"list_aggr(list_slice(({toks}), 1, len(({toks})) - "
                     f"1), 'string_agg', ' ')")
-        n_toks = f"{asize}(({toks}))"
+        n_toks = asize(f"({toks})")
         last = elem(f"({toks})", n_toks)
         given = f"CASE WHEN {n_toks} >= 2 THEN nullif({head}, '') END"
         family = f"CASE WHEN {n_toks} >= 1 THEN {last} END"
         return given, family
-
-    return (g, stype, asize, rl, elem, idx_of, arrlit, split_arr, rx,
-            clean, slug, mono_split)
-
-
-def _sql(dialect: str) -> str:
-    (g, S, asize, rl, elem, idx_of, arrlit, split_arr, rx, clean, slug,
-     mono_split) = _helpers(dialect)
-
-    def cs(expr: str) -> str:
-        return f"CAST({expr} AS {S})"
-
-    def nullcols(*names: str) -> str:
-        return ", ".join(f"CAST(NULL AS {S}) AS {n}" for n in names)
-
-    def bar(name: str, prev: str, passthrough: list, cols: list,
-            where: str = "") -> str:
-        if dialect == "spark":
-            ns = ", ".join(f"'{c}', {e}" for c, e in cols)
-            sel = ", ".join(f"_s.{c} AS {c}" for c, _ in cols)
-            pt = ", ".join(f"_p.{c}" for c in passthrough)
-            return (f"{name} AS (\n  SELECT {pt}, {sel}\n  FROM {prev} _p\n"
-                    f"  LATERAL VIEW explode(array(named_struct({ns}))) "
-                    f"_bv AS _s\n{where})")
-        sel = ", ".join(f"{e} AS {c}" for c, e in cols)
-        pt = ", ".join(passthrough)
-        return (f"{name} AS MATERIALIZED (\n  SELECT {pt}, {sel}\n"
-                f"  FROM {prev}\n{where})")
 
     ks = cs("o_orderkey")
     title_strip = lambda x, pat: (  # noqa: E731
@@ -301,22 +232,22 @@ lc_yeared AS (
   FROM lc_parted
 ),
 lc_routed AS (
-  SELECT *, {asize}(parts) AS np,
-    {elem('parts', f'{asize}(parts)')} AS last_part,
-    {elem('parts', f'{asize}(parts) - 1')} AS second_last
+  SELECT *, {asize('parts')} AS np,
+    {elem('parts', asize('parts'))} AS last_part,
+    {elem('parts', asize('parts') + ' - 1')} AS second_last
   FROM lc_yeared
 ),
 lc_fields AS (
   SELECT *,
-    CASE WHEN {asize}(parts0) < 2 THEN NULL
+    CASE WHEN {asize('parts0')} < 2 THEN NULL
          WHEN {rl('last_part', _LCRF_INST_KEY)}
               AND NOT {rl('last_part', _LCRF_DEGREE)} THEN NULL
          WHEN np >= 2 THEN last_part END AS pi_part,
-    CASE WHEN {asize}(parts0) < 2 THEN NULL
+    CASE WHEN {asize('parts0')} < 2 THEN NULL
          WHEN {rl('last_part', _LCRF_INST_KEY)}
               AND NOT {rl('last_part', _LCRF_DEGREE)} THEN last_part
          WHEN np >= 2 THEN second_last END AS inst_part,
-    CASE WHEN {asize}(parts0) < 2 THEN NULL
+    CASE WHEN {asize('parts0')} < 2 THEN NULL
          WHEN {rl('last_part', _LCRF_INST_KEY)}
               AND NOT {rl('last_part', _LCRF_DEGREE)}
            THEN {('array_join(slice(parts, 1, np - 1), ' if dialect == 'spark' else 'list_aggr(list_slice(parts, 1, np - 1), ,SA, ')} ' - ')
@@ -465,13 +396,13 @@ nt_raw AS (
 ),
 nt_classified AS (
   SELECT *,
-    CASE WHEN {asize}(vals) = 4 THEN {elem('vals', '1')}
+    CASE WHEN {asize('vals')} = 4 THEN {elem('vals', '1')}
          ELSE {nt_study_h} END AS study_val,
-    CASE WHEN {asize}(vals) = 4 THEN {elem('vals', '2')}
+    CASE WHEN {asize('vals')} = 4 THEN {elem('vals', '2')}
          ELSE {nt_pi_h} END AS pi_val,
-    CASE WHEN {asize}(vals) = 4 THEN {elem('vals', '3')}
+    CASE WHEN {asize('vals')} = 4 THEN {elem('vals', '3')}
          ELSE {nt_inst_h} END AS inst_val,
-    CASE WHEN {asize}(vals) = 4 THEN {elem('vals', '4')}
+    CASE WHEN {asize('vals')} = 4 THEN {elem('vals', '4')}
          ELSE {nt_loc_h} END AS loc_val
   FROM nt_raw
 ),
@@ -926,17 +857,9 @@ UNION ALL SELECT {cols} FROM ci_out
 """
 
 
-def _build(dialect: str) -> str:
-    text = _sql(dialect)
-    if dialect == "duck":
-        text = text.replace("\\\\", "\\")
-        text = text.replace("AS STRING", "AS VARCHAR")
-    return text
-
-
 @register(
     "microfunder_parse_awards",
-    oracle=_build("duck"),
+    oracle=sqlkit.build(_sql, "duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc=("Micro-funder scraper kit (scripts/local/{eruk,lcrf,fmfc,ntap,"
@@ -948,4 +871,4 @@ def microfunder_parse_awards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Eight micro-funder ingests in one union plan (module docstring
     has the per-member semantics map).  Line-array scans with the
     established HOF idioms; two keep-first windows, no Python."""
-    return spark.sql(_build("spark"))
+    return spark.sql(sqlkit.build(_sql, "spark"))

@@ -60,6 +60,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from openalex_walden_spark.queries import sqlkit
 from openalex_walden_spark.queries.registry import register
 
 _BASE = "https://www.michaeljfox.org"
@@ -69,75 +70,17 @@ _FUNDER_NAME = "Michael J. Fox Foundation for Parkinson's Research"
 _SUFFIXES = ("phd", "md", "dphil", "dsc", "scd", "jr.", "sr.", "ii",
              "iii", "iv", "jr", "sr")
 
-# mjff_to_s3.py:246 / :249-250 (doubled backslashes, see _build)
+# mjff_to_s3.py:246 / :249-250 (doubled backslashes, see sqlkit.build)
 _PROG_YEAR = "^(.+?),\\\\s*(\\\\d{4})$"
 _YEAR_SEARCH = "\\\\b((?:19|20)\\\\d{2})\\\\b"
 _YEAR_STRIP = ",?\\\\s*\\\\b(?:19|20)\\\\d{2}\\\\b"
 
 
-def _helpers(dialect: str):
-    if dialect == "spark":
-        g, S = "", "STRING"
-
-        def rx(src: str, pat: str, grp: int) -> str:
-            return f"nullif(regexp_extract({src}, '{pat}', {grp}), '')"
-
-        def splitws(x: str) -> str:
-            return f"split({x}, '\\\\s+')"
-
-        def elem(a: str, i: str) -> str:
-            return f"try_element_at({a}, {i})"
-
-        def asize(a: str) -> str:
-            return f"size({a})"
-
-        def jn_head(a: str, n: str) -> str:
-            return f"array_join(slice({a}, 1, {n}), ' ')"
-    else:
-        g, S = ", 'g'", "VARCHAR"
-
-        def rx(src: str, pat: str, grp: int) -> str:
-            return f"nullif(regexp_extract({src}, '{pat}', {grp}), '')"
-
-        def splitws(x: str) -> str:
-            return f"regexp_split_to_array({x}, '\\\\s+')"
-
-        def elem(a: str, i: str) -> str:
-            return f"{a}[({i})]"
-
-        def asize(a: str) -> str:
-            return f"len({a})"
-
-        def jn_head(a: str, n: str) -> str:
-            return f"array_to_string(list_slice({a}, 1, {n}), ' ')"
-
-    def clean(x: str) -> str:
-        """clean_text (mjff:131-137)."""
-        e = f"replace(replace({x}, '&amp;', '&'), '&nbsp;', ' ')"
-        e = f"replace({e}, chr(160), ' ')"
-        return f"nullif(trim(regexp_replace({e}, '\\\\s+', ' '{g})), '')"
-
-    return g, S, rx, splitws, elem, asize, jn_head, clean
-
-
 def _sql(dialect: str) -> str:
-    g, S, rx, splitws, elem, asize, jn_head, clean = _helpers(dialect)
-
-    def cs(expr: str) -> str:
-        return f"CAST({expr} AS {S})"
-
-    def bar(name: str, prev: str, passthrough: list, cols: list) -> str:
-        if dialect == "spark":
-            ns = ", ".join(f"'{c}', {e}" for c, e in cols)
-            sel = ", ".join(f"_s.{c} AS {c}" for c, _ in cols)
-            pt = ", ".join(f"_p.{c}" for c in passthrough)
-            return (f"{name} AS (\n  SELECT {pt}, {sel}\n  FROM {prev} _p\n"
-                    f"  LATERAL VIEW explode(array(named_struct({ns}))) "
-                    f"_bv AS _s\n)")
-        sel = ", ".join(f"{e} AS {c}" for c, e in cols)
-        pt = ", ".join(passthrough)
-        return (f"{name} AS MATERIALIZED (\n  SELECT {pt}, {sel}\n"
-                f"  FROM {prev}\n)")
+    k = sqlkit.kit(dialect)
+    g, S, cs, bar, asize = k.g, k.S, k.cs, k.bar, k.asize
+    clean_ent, elem, jn, rx = k.clean_ent, k.elem, k.jn, k.rx
+    splitre = k.splitre
 
     K = cs("k")
 
@@ -182,6 +125,8 @@ def _sql(dialect: str) -> str:
                    f"THEN list_slice({out}, 1, {asize(out)} - 1) "
                    f"ELSE {out} END")
         return out
+
+    lead_toks = splitre("trim(split_part(lead_name_raw, ',', 1))", "\\\\s+")
 
     return f"""
 WITH cards AS (
@@ -261,9 +206,9 @@ fixture AS (
       "s_publication", "s_relevance", "tag_program", "tag_year",
       "has_keywords", "prof_position", "prof_location_line",
       "prof_bio"], [
-    ("meta_c", clean("meta_raw")),
-    ("title", clean("title_raw")),
-    ("listing_summary", clean("summary_raw")),
+    ("meta_c", clean_ent("meta_raw")),
+    ("title", clean_ent("title_raw")),
+    ("listing_summary", clean_ent("summary_raw")),
 ])},
 {bar("progyear", "metaed",
      ["k", "slug", "title", "listing_summary", "meta_c", "name1",
@@ -275,13 +220,13 @@ fixture AS (
     ("prog_m", rx("meta_c", _PROG_YEAR, 1)),
     ("year_m", rx("meta_c", _PROG_YEAR, 2)),
     ("year_f", rx("meta_c", _YEAR_SEARCH, 1)),
-    ("prog_f", clean(f"regexp_replace(coalesce(meta_c, ''), "
+    ("prog_f", clean_ent(f"regexp_replace(coalesce(meta_c, ''), "
                      f"'{_YEAR_STRIP}', ''{g})")),
 ])},
 researchers AS (
   SELECT *,
     CASE WHEN meta_c IS NULL THEN NULL
-         WHEN year_m IS NOT NULL THEN {clean('prog_m')}
+         WHEN year_m IS NOT NULL THEN {clean_ent('prog_m')}
          ELSE prog_f END AS source_program0,
     CASE WHEN meta_c IS NULL THEN NULL
          WHEN year_m IS NOT NULL THEN year_m
@@ -291,7 +236,7 @@ researchers AS (
     CASE WHEN n_detail IN (1, 3) THEN 'Boston, MA'
          WHEN n_detail = 2 THEN 'Lund, Sweden' END AS rloc1,
     CASE WHEN n_detail = 2 THEN 'Kyoto, Japan' END AS rloc2,
-    {clean('detail_title_raw')} AS detail_title
+    {clean_ent('detail_title_raw')} AS detail_title
   FROM progyear
 ),
 leads AS (
@@ -313,14 +258,13 @@ leads AS (
       "tag_program", "tag_year", "has_keywords", "prof_position",
       "prof_location_line", "prof_bio", "lead_name_raw", "lead_url",
       "lead_entry_loc"], [
-    ("toks", strip_tail(splitws("trim(split_part(lead_name_raw, ',', 1))"),
-                        2)),
+    ("toks", strip_tail(lead_toks, 2)),
 ])},
 splitn AS (
   SELECT *,
     CASE WHEN lead_name_raw IS NULL OR {asize('toks')} = 0 THEN NULL
          WHEN {asize('toks')} = 1 THEN NULL
-         ELSE {jn_head('toks', f"{asize('toks')} - 1")} END
+         ELSE {jn('toks', f"{asize('toks')} - 1")} END
       AS lead_given_name,
     CASE WHEN lead_name_raw IS NULL OR {asize('toks')} = 0 THEN NULL
          ELSE {elem('toks', asize('toks'))} END AS lead_family_name
@@ -331,12 +275,12 @@ profiled AS (
     CASE WHEN lead_url IS NOT NULL THEN
       CASE WHEN prof_location_line IS NOT NULL
              AND lower(prof_location_line) LIKE 'location:%'
-           THEN {clean("replace(prof_location_line, 'Location:', '')")}
+           THEN {clean_ent("replace(prof_location_line, 'Location:', '')")}
       END
     ELSE lead_entry_loc END AS lead_location,
     CASE WHEN lead_url IS NOT NULL THEN prof_position END
       AS lead_position_affiliation,
-    CASE WHEN lead_url IS NOT NULL THEN {clean('prof_bio')} END
+    CASE WHEN lead_url IS NOT NULL THEN {clean_ent('prof_bio')} END
       AS lead_bio,
     CASE WHEN lead_url IS NOT NULL THEN name1 END AS lead_profile_name,
     lead_url AS lead_profile_url
@@ -344,13 +288,13 @@ profiled AS (
 ),
 sections AS (
   SELECT *,
-    CASE WHEN k % 4 <> 0 THEN {clean('s_objective_text')} END AS s_obj,
-    CASE WHEN k % 4 = 0 THEN {clean('s_objective_text')} END AS s_study,
-    {clean('s_project')} AS s_proj,
-    {clean('s_relevance')} AS s_rel,
-    {clean('s_anticipated')} AS s_ant,
-    {clean('s_final')} AS s_fin,
-    {clean('s_publication')} AS s_pub,
+    CASE WHEN k % 4 <> 0 THEN {clean_ent('s_objective_text')} END AS s_obj,
+    CASE WHEN k % 4 = 0 THEN {clean_ent('s_objective_text')} END AS s_study,
+    {clean_ent('s_project')} AS s_proj,
+    {clean_ent('s_relevance')} AS s_rel,
+    {clean_ent('s_anticipated')} AS s_ant,
+    {clean_ent('s_final')} AS s_fin,
+    {clean_ent('s_publication')} AS s_pub,
     CASE WHEN has_keywords THEN
       concat('[\"alpha-synuclein ', {cs('k % 5')},
              '\", \"biomarkers\"]') ELSE '[]' END AS kw_json
@@ -395,7 +339,7 @@ SELECT
   listing_summary,
   concat('{_BASE}/grant/', slug) AS grant_url,
   slug AS grant_slug,
-  listing_rj AS listing_researchers_json0,
+  listing_rj AS listing_researchers_json,
   detail_title,
   {jobj_opt([
       ("anticipated_outcome", "s_ant", jstr("s_ant")),
@@ -413,7 +357,7 @@ SELECT
   s_ant AS anticipated_outcome,
   s_fin AS final_outcome,
   s_pub AS publication_based_on_mjff_funding,
-  detail_rj AS detail_researchers_json0,
+  detail_rj AS detail_researchers_json,
   CASE WHEN n_detail > 0 THEN detail_rj
        WHEN n_listing > 0 THEN listing_rj ELSE '[]' END
     AS all_researchers_json,
@@ -452,25 +396,9 @@ FROM jsons
 """
 
 
-def _postprocess(text: str) -> str:
-    """Rename the two *_json0 working columns to their final names
-    (kept distinct inside the query to avoid duck/spark alias-scope
-    differences)."""
-    return text.replace("listing_researchers_json0",
-                        "listing_researchers_json").replace(
-        "detail_researchers_json0", "detail_researchers_json")
-
-
-def _build(dialect: str) -> str:
-    text = _postprocess(_sql(dialect))
-    if dialect == "duck":
-        text = text.replace("\\\\", "\\")
-    return text
-
-
 @register(
     "mjff_parse_grants",
-    oracle=_build("duck"),
+    oracle=sqlkit.build(_sql, "duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc=("MJFF funded-studies parse (scripts/local/mjff_to_s3.py)"),
@@ -480,4 +408,4 @@ def mjff_parse_grants(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MJFF card/detail/profile derivation cascades, wolf-family name
     split, JSON renders.  One scan under one round-robin spread
     exchange, no Python."""
-    return spark.sql(_build("spark"))
+    return spark.sql(sqlkit.build(_sql, "spark"))

@@ -66,12 +66,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from openalex_walden_spark.queries import sqlkit
 from openalex_walden_spark.queries.registry import register
 
 _BASE = "https://mmw.wallenberg.org"
 
 # mmw_to_s3.py:203 — the reference compiles without flags but
-# searches with re.IGNORECASE (doubled backslashes; _build halves)
+# searches with re.IGNORECASE (doubled backslashes; sqlkit.build halves)
 _AMT_CI = "(?i)SEK\\\\s+([0-9][0-9\\\\s.,]*)(?:\\\\s*(million|m))?"
 _TITLE = ("(?i)project(?:\\\\s+entitled|:)?\\\\s*[“”\"]([^\"“”]+)[“”\"]")
 _KEYWORD_CUT = ("(?i)\\\\b(?:grant|funding|awarded grant|"
@@ -86,98 +87,25 @@ _INST_CLEAN = "(?i)\\\\s+Project\\\\s*:?.*$"
 _SUFFIXES = ("PhD", "MD", "DPhil", "Jr.", "Sr.", "II", "III", "IV")
 
 
-def _helpers(dialect: str):
-    if dialect == "spark":
-        g, S = "", "STRING"
+def _sql(dialect: str) -> str:
+    k = sqlkit.kit(dialect)
+    g, S, cs, bar, asize, clean_ws = k.g, k.S, k.cs, k.bar, k.asize, k.clean_ws
+    elem, jn, rl, rx, sl, splitre = k.elem, k.jn, k.rl, k.rx, k.sl, k.splitre
 
-        def rx(src: str, pat: str, grp: int) -> str:
-            return f"nullif(regexp_extract({src}, '{pat}', {grp}), '')"
-
-        def rl(col: str, pat: str) -> str:
-            return f"{col} RLIKE '{pat}'"
-
-        def splitws(x: str) -> str:
-            return f"split({x}, '\\\\s+')"
-
-        def splitlit(x: str, sep: str) -> str:
+    def splitlit(x: str, sep: str) -> str:
+        if dialect == "spark":
             return f"split({x}, '{sep}')"
+        return f"string_split({x}, '{sep}')"
 
-        def elem(a: str, i: str) -> str:
-            return f"try_element_at({a}, {i})"
-
-        def asize(a: str) -> str:
-            return f"size({a})"
-
-        def sl(a: str, start: str, length: str) -> str:
-            return f"slice({a}, {start}, {length})"
-
-        def jn(a: str, n: str) -> str:
-            return f"array_join(slice({a}, 1, {n}), ' ')"
-
-        def dig(x: str) -> str:
+    def dig(x: str) -> str:
+        if dialect == "spark":
             return f"substr(sha2({x}, 256), 1, 12)"
-    else:
-        g, S = ", 'g'", "VARCHAR"
-
-        def rx(src: str, pat: str, grp: int) -> str:
-            return f"nullif(regexp_extract({src}, '{pat}', {grp}), '')"
-
-        def rl(col: str, pat: str) -> str:
-            return f"regexp_matches({col}, '{pat}')"
-
-        def splitws(x: str) -> str:
-            return f"regexp_split_to_array({x}, '\\\\s+')"
-
-        def splitlit(x: str, sep: str) -> str:
-            return f"string_split({x}, '{sep}')"
-
-        def elem(a: str, i: str) -> str:
-            return f"{a}[({i})]"
-
-        def asize(a: str) -> str:
-            return f"len({a})"
-
-        def sl(a: str, start: str, length: str) -> str:
-            return f"list_slice({a}, {start}, ({start}) + ({length}) - 1)"
-
-        def jn(a: str, n: str) -> str:
-            return f"array_to_string(list_slice({a}, 1, {n}), ' ')"
-
-        def dig(x: str) -> str:
-            return f"substr(sha256({x}), 1, 12)"
-
-    def clean(x: str) -> str:
-        """clean_text (mmw:158-163): NBSP, collapse, strip/NULL."""
-        e = f"replace({x}, chr(160), ' ')"
-        return f"nullif(trim(regexp_replace({e}, '\\\\s+', ' '{g})), '')"
+        return f"substr(sha256({x}), 1, 12)"
 
     def strip_quotes(x: str) -> str:
         """strip_outer_quotes (mmw:166-170)."""
-        return clean(f"trim(BOTH ' \"''“”' FROM coalesce({clean(x)}, ''))")
-
-    return (g, S, rx, rl, splitws, splitlit, elem, asize, sl, jn, dig,
-            clean, strip_quotes)
-
-
-def _sql(dialect: str) -> str:
-    (g, S, rx, rl, splitws, splitlit, elem, asize, sl, jn, dig, clean,
-     strip_quotes) = _helpers(dialect)
-
-    def cs(expr: str) -> str:
-        return f"CAST({expr} AS {S})"
-
-    def bar(name: str, prev: str, passthrough: list, cols: list) -> str:
-        if dialect == "spark":
-            ns = ", ".join(f"'{c}', {e}" for c, e in cols)
-            sel = ", ".join(f"_s.{c} AS {c}" for c, _ in cols)
-            pt = ", ".join(f"_p.{c}" for c in passthrough)
-            return (f"{name} AS (\n  SELECT {pt}, {sel}\n  FROM {prev} _p\n"
-                    f"  LATERAL VIEW explode(array(named_struct({ns}))) "
-                    f"_bv AS _s\n)")
-        sel = ", ".join(f"{e} AS {c}" for c, e in cols)
-        pt = ", ".join(passthrough)
-        return (f"{name} AS MATERIALIZED (\n  SELECT {pt}, {sel}\n"
-                f"  FROM {prev}\n)")
+        return clean_ws(
+            f"trim(BOTH ' \"''“”' FROM coalesce({clean_ws(x)}, ''))")
 
     K, G = cs("k"), cs("g")
 
@@ -193,7 +121,7 @@ def _sql(dialect: str) -> str:
         return f"CAST(round({v}) AS BIGINT)"
 
     def amt_text(src: str) -> str:
-        return clean(f"regexp_extract({src}, '{_AMT_CI}', 0)")
+        return clean_ws(f"regexp_extract({src}, '{_AMT_CI}', 0)")
 
     # split_person_name (mmw:173-191): honorific strip, suffix pop
     # (rstrip(',') membership only), family = last token
@@ -243,7 +171,7 @@ def _sql(dialect: str) -> str:
                       "link_text_raw", "has_anchor", "section",
                       "dt_title", "dt_project", "dt_pi", "dt_inst",
                       "dt_amount_line", "co1", "co2", "dp1", "dp2"], [
-        ("text", clean("text_raw")),
+        ("text", clean_ws("text_raw")),
     ])
 
     gated_bar = bar("gated", "parsed",
@@ -259,7 +187,7 @@ def _sql(dialect: str) -> str:
                  f"AND {amt_value('text')} IS NOT NULL"),
     ])
 
-    before_kw = clean(
+    before_kw = clean_ws(
         f"trim(BOTH ' ,' FROM trim(regexp_replace(text, "
         f"'{_KEYWORD_CUT}', ''{g})))")
 
@@ -272,11 +200,11 @@ def _sql(dialect: str) -> str:
         ("amount_text0", amt_text("text")),
         ("proj_title", rx("text", _TITLE, 1)),
         ("before_parts", splitlit(f"coalesce({before_kw}, '')", ",")),
-        ("link_text", clean("link_text_raw")),
+        ("link_text", clean_ws("link_text_raw")),
     ])
 
-    p1 = clean(elem("before_parts", "1"))
-    p2 = clean(elem("before_parts", "2"))
+    p1 = clean_ws(elem("before_parts", "1"))
+    p2 = clean_ws(elem("before_parts", "2"))
     parts_bar = bar("classified", "extracted",
                     ["k", "g", "yr", "has_detail", "detail_url",
                      "link_text", "has_anchor", "section", "text",
@@ -287,7 +215,7 @@ def _sql(dialect: str) -> str:
         ("part2", p2),
     ])
 
-    inst_clean = clean(f"regexp_replace(part_inst, '{_INST_CLEAN}', "
+    inst_clean = clean_ws(f"regexp_replace(part_inst, '{_INST_CLEAN}', "
                        f"''{g})")
     class_bar = bar("listingf", "classified",
                     ["k", "g", "yr", "has_detail", "detail_url",
@@ -328,18 +256,18 @@ def _sql(dialect: str) -> str:
                     f"{amt_value('dt_amount_line')} END, "
                     + amt_value("text") + ")"),
         ("descr", f"CASE WHEN has_detail THEN "
-                  + clean("concat_ws(' ', dp1, dp2)") + " END"),
+                  + clean_ws("concat_ws(' ', dp1, dp2)") + " END"),
         ("co_raw", f"CASE WHEN has_detail THEN {co_join} END"),
     ])
 
     # split_person_name on the CLEANED merged PI
-    nm0 = clean(f"regexp_replace(pi_name, '{_HONORIFIC_STRIP}', ''{g})")
+    nm0 = clean_ws(f"regexp_replace(pi_name, '{_HONORIFIC_STRIP}', ''{g})")
     named_bar = bar("named", "merged",
                     ["k", "g", "yr", "detail_url", "section", "text",
                      "amount_text0", "dt_amount_text", "dt_amount",
                      "amount1", "display0", "display1_pre", "project1",
                      "inst0", "inst1_pre", "descr", "co_raw", "pi1"], [
-        ("pi_name", clean("pi1")),
+        ("pi_name", clean_ws("pi1")),
     ])
 
     toks_bar = bar("toks_cte", "named",
@@ -347,7 +275,7 @@ def _sql(dialect: str) -> str:
                     "amount_text0", "dt_amount_text", "dt_amount",
                     "amount1", "display0", "display1_pre", "project1",
                     "inst0", "inst1_pre", "descr", "co_raw", "pi_name"], [
-        ("toks", pop_suffix(splitws(f"coalesce({nm0}, '')"), 2)),
+        ("toks", pop_suffix(splitre(f"coalesce({nm0}, '')", "\\\\s+"), 2)),
     ])
 
     slug_src = ("coalesce(display_name, project_title, institution, "
@@ -478,16 +406,9 @@ FROM final
 """
 
 
-def _build(dialect: str) -> str:
-    text = _sql(dialect)
-    if dialect == "duck":
-        text = text.replace("\\\\", "\\")
-    return text
-
-
 @register(
     "mmw_parse_grants",
-    oracle=_build("duck"),
+    oracle=sqlkit.build(_sql, "duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc=("MMW Wallenberg grants parse (scripts/local/mmw_to_s3.py)"),
@@ -498,4 +419,4 @@ def mmw_parse_grants(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyword-cut institution/PI classification, quoted-title extract),
     detail-page merge cascades, ordered collision-suffix ids.  One
     scan, one native-id exchange, no Python."""
-    return spark.sql(_build("spark"))
+    return spark.sql(sqlkit.build(_sql, "spark"))

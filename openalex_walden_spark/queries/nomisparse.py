@@ -35,6 +35,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from openalex_walden_spark.queries import sqlkit
 from openalex_walden_spark.queries.registry import register
 
 _PROVENANCE = "nomis_projects"
@@ -45,53 +46,10 @@ _ORGS = (("ETH Zurich", "eth-zurich"),
          ("Santa Fe Institute", "santa-fe-institute"))
 
 
-def _helpers(dialect: str):
-    if dialect == "spark":
-        g, S = "", "STRING"
-
-        def arr(*items: str) -> str:
-            return f"array({', '.join(items)})" if items else "array()"
-
-        def elem(a: str, i: str) -> str:
-            return f"try_element_at({a}, {i})"
-
-        def asize(a: str) -> str:
-            return f"size({a})"
-
-        def tx(a: str, e: str) -> str:
-            return f"transform({a}, t -> {e})"
-
-        def jnsep(a: str, sep: str) -> str:
-            return f"array_join({a}, {sep})"
-
-        def rxall(x: str, pat: str) -> str:
-            return f"regexp_extract_all({x}, '{pat}', 1)"
-
-        def amin(a: str) -> str:
-            return f"array_min({a})"
-    else:
-        g, S = ", 'g'", "VARCHAR"
-
-        def arr(*items: str) -> str:
-            return f"[{', '.join(items)}]" if items else "[]::VARCHAR[]"
-
-        def elem(a: str, i: str) -> str:
-            return f"{a}[({i})]"
-
-        def asize(a: str) -> str:
-            return f"len({a})"
-
-        def tx(a: str, e: str) -> str:
-            return f"list_transform({a}, t -> {e})"
-
-        def jnsep(a: str, sep: str) -> str:
-            return f"array_to_string({a}, {sep})"
-
-        def rxall(x: str, pat: str) -> str:
-            return f"regexp_extract_all({x}, '{pat}', 1)"
-
-        def amin(a: str) -> str:
-            return f"list_min({a})"
+def _sql(dialect: str) -> str:
+    k = sqlkit.kit(dialect)
+    g, cs, bar, amin, arr, asize = k.g, k.cs, k.bar, k.amin, k.arr, k.asize
+    elem, jnsep, rxall, tx = k.elem, k.jnsep, k.rxall, k.tx
 
     def striphtml(x: str) -> str:
         e = f"regexp_replace({x}, '<[^>]+>', ' '{g})"
@@ -103,30 +61,6 @@ def _helpers(dialect: str):
         return (f"CASE WHEN {asize(a)} = 0 THEN NULL "
                 f"ELSE concat('[', "
                 f"{jnsep(quoted, chr(39) + ', ' + chr(39))}, ']') END")
-
-    return (g, S, arr, elem, asize, tx, jnsep, rxall, amin, striphtml,
-            jsonlist)
-
-
-def _sql(dialect: str) -> str:
-    (g, S, arr, elem, asize, tx, jnsep, rxall, amin, striphtml,
-     jsonlist) = _helpers(dialect)
-
-    def cs(expr: str) -> str:
-        return f"CAST({expr} AS {S})"
-
-    def bar(name: str, prev: str, passthrough: list, cols: list) -> str:
-        if dialect == "spark":
-            ns = ", ".join(f"'{c}', {e}" for c, e in cols)
-            sel = ", ".join(f"_s.{c} AS {c}" for c, _ in cols)
-            pt = ", ".join(f"_p.{c}" for c in passthrough)
-            return (f"{name} AS (\n  SELECT {pt}, {sel}\n  FROM {prev} _p\n"
-                    f"  LATERAL VIEW explode(array(named_struct({ns}))) "
-                    f"_bv AS _s\n)")
-        sel = ", ".join(f"{e} AS {c}" for c, e in cols)
-        pt = ", ".join(passthrough)
-        return (f"{name} AS MATERIALIZED (\n  SELECT {pt}, {sel}\n"
-                f"  FROM {prev}\n)")
 
     on = [f"'{n}'" for n, _ in _ORGS]
     osl = [f"'{s}'" for _, s in _ORGS]
@@ -200,7 +134,7 @@ WITH rest AS (
     ("content_text", striphtml("content_html")),
 ])},
 {bar("dated", "texted", _PT + ["title", "content_text"], [
-    ("cand_years", rxall("substring(content_text, 1, 3000)", _YEAR)),
+    ("cand_years", rxall("substring(content_text, 1, 3000)", _YEAR, 1)),
     ("page_year", page_year),
 ])},
 {bar("yeared", "dated",
@@ -228,16 +162,9 @@ FROM yeared
 """
 
 
-def _build(dialect: str) -> str:
-    text = _sql(dialect)
-    if dialect == "duck":
-        text = text.replace("\\\\", "\\")
-    return text
-
-
 @register(
     "nomis_parse_projects",
-    oracle=_build("duck"),
+    oracle=sqlkit.build(_sql, "duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc=("NOMIS Foundation projects parse "
@@ -250,4 +177,4 @@ def nomis_parse_projects(spark: SparkSession, sf_dir: str) -> DataFrame:
     titles preserved, NULL-when-empty JSON org lists, 'nomis-{slug}'
     ids, §6.7 NULL amounts by source design.  One scan, zero
     exchanges, no Python."""
-    return spark.sql(_build("spark"))
+    return spark.sql(sqlkit.build(_sql, "spark"))

@@ -42,6 +42,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from openalex_walden_spark.queries import sqlkit
 from openalex_walden_spark.queries.registry import register
 
 _CURRENCY = "GBP"
@@ -74,111 +75,20 @@ _T_MONTH_YEAR = ("(?i)(January|February|March|April|May|June|July|August|"
                  "September|October|November|December)\\\\s+([0-9]{4})")
 
 
-def _helpers(dialect: str):
-    if dialect == "spark":
-        g, S = "", "STRING"
+def _sql(dialect: str) -> str:
+    k = sqlkit.kit(dialect)
+    g, cs, bar, asize, elem, filt = k.g, k.cs, k.bar, k.asize, k.elem, k.filt
+    jn, jnsep, rx, rxall, sl = k.jn, k.jnsep, k.rx, k.rxall, k.sl
+    splitws, striphtml, tx, unesc = k.splitws, k.striphtml, k.tx, k.unesc
 
-        def elem(a: str, i: str) -> str:
-            return f"try_element_at({a}, {i})"
-
-        def asize(a: str) -> str:
-            return f"size({a})"
-
-        def sl(a: str, start: str, length: str) -> str:
-            return f"slice({a}, {start}, {length})"
-
-        def jn(a: str, n: str) -> str:
-            return f"array_join(slice({a}, 1, {n}), ' ')"
-
-        def jnsep(a: str, sep: str) -> str:
-            return f"array_join({a}, {sep})"
-
-        def splitws(x: str) -> str:
-            return f"filter(split({x}, '\\\\s+'), t -> t <> '')"
-
-        def filt(a: str, c: str) -> str:
-            return f"filter({a}, t -> {c})"
-
-        def tx(a: str, e: str) -> str:
-            return f"transform({a}, t -> {e})"
-
-        def rxall(x: str, pat: str, grp: int) -> str:
-            return f"regexp_extract_all({x}, '{pat}', {grp})"
-
-        def zip2(a: str, b: str, e: str) -> str:
+    def zip2(a: str, b: str, e: str) -> str:
+        if dialect == "spark":
             body = e.replace("__CA__", "_za").replace("__TB__", "_zb")
             return f"zip_with({a}, {b}, (_za, _zb) -> {body})"
-    else:
-        g, S = ", 'g'", "VARCHAR"
-
-        def elem(a: str, i: str) -> str:
-            return f"{a}[({i})]"
-
-        def asize(a: str) -> str:
-            return f"len({a})"
-
-        def sl(a: str, start: str, length: str) -> str:
-            return f"list_slice({a}, {start}, ({start}) + ({length}) - 1)"
-
-        def jn(a: str, n: str) -> str:
-            return f"array_to_string(list_slice({a}, 1, {n}), ' ')"
-
-        def jnsep(a: str, sep: str) -> str:
-            return f"array_to_string({a}, {sep})"
-
-        def splitws(x: str) -> str:
-            return (f"list_filter(regexp_split_to_array({x}, '\\\\s+'), "
-                    f"t -> t <> '')")
-
-        def filt(a: str, c: str) -> str:
-            return f"list_filter({a}, t -> {c})"
-
-        def tx(a: str, e: str) -> str:
-            return f"list_transform({a}, t -> {e})"
-
-        def rxall(x: str, pat: str, grp: int) -> str:
-            return f"regexp_extract_all({x}, '{pat}', {grp})"
-
-        def zip2(a: str, b: str, e: str) -> str:
-            body = (e.replace("__CA__", f"({a})[_i]")
-                    .replace("__TB__", f"({b})[_i]"))
-            return (f"list_transform(range(1, {asize(a)} + 1), "
-                    f"_i -> {body})")
-
-    def unesc(x: str) -> str:
-        return f"replace({x}, '&amp;', '&')"
-
-    def striphtml(x: str) -> str:
-        e = f"regexp_replace({x}, '<[^>]+>', ' '{g})"
-        e = unesc(e)
-        return f"nullif(trim(regexp_replace({e}, '\\\\s+', ' '{g})), '')"
-
-    return (g, S, elem, asize, sl, jn, jnsep, splitws, filt, tx, rxall,
-            zip2, unesc, striphtml)
-
-
-def _sql(dialect: str) -> str:
-    (g, S, elem, asize, sl, jn, jnsep, splitws, filt, tx, rxall, zip2,
-     unesc, striphtml) = _helpers(dialect)
-
-    def cs(expr: str) -> str:
-        return f"CAST({expr} AS {S})"
-
-    def bar(name: str, prev: str, passthrough: list, cols: list) -> str:
-        if dialect == "spark":
-            ns = ", ".join(f"'{c}', {e}" for c, e in cols)
-            sel = ", ".join(f"_s.{c} AS {c}" for c, _ in cols)
-            pt = ", ".join(f"_p.{c}" for c in passthrough)
-            return (f"{name} AS (\n  SELECT {pt}, {sel}\n  FROM {prev} _p\n"
-                    f"  LATERAL VIEW explode(array(named_struct({ns}))) "
-                    f"_bv AS _s\n)")
-        sel = ", ".join(f"{e} AS {c}" for c, e in cols)
-        pt = ", ".join(passthrough)
-        return (f"{name} AS MATERIALIZED (\n  SELECT {pt}, {sel}\n"
-                f"  FROM {prev}\n)")
-
-    def rx(srcv: str, pat: str, grp: int) -> str:
-        return f"nullif(regexp_extract({srcv}, '{pat}', {grp}), '')"
+        body = (e.replace("__CA__", f"({a})[_i]")
+                .replace("__TB__", f"({b})[_i]"))
+        return (f"list_transform(range(1, {asize(a)} + 1), "
+                f"_i -> {body})")
 
     # ---- theme walk: zip class/text arrays, filter, first ------------
     icons = ", ".join(f"'{i}'" for i in _NON_THEME_ICONS)
@@ -364,16 +274,9 @@ FROM named
 """
 
 
-def _build(dialect: str) -> str:
-    text = _sql(dialect)
-    if dialect == "duck":
-        text = text.replace("\\\\", "\\")
-    return text
-
-
 @register(
     "nuffield_parse_projects",
-    oracle=_build("duck"),
+    oracle=sqlkit.build(_sql, "duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc=("Nuffield Foundation projects parse "
@@ -387,4 +290,4 @@ def nuffield_parse_projects(spark: SparkSession, sf_dir: str) -> DataFrame:
     Month-YYYY date-range formatting, title+degree name peels with
     empty-string lead fields.  One scan under one round-robin spread
     exchange, no Python."""
-    return spark.sql(_build("spark"))
+    return spark.sql(sqlkit.build(_sql, "spark"))

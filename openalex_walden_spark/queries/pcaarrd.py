@@ -84,11 +84,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from openalex_walden_spark.queries import sqlkit
 from openalex_walden_spark.queries.registry import register
 
 # NOTE on backslash convention (repo-wide): every regex constant below
 # carries DOUBLED backslashes — the Spark SQL parser consumes one level
-# inside string literals, and ``_build("duck")`` halves them for RE2.
+# inside string literals, and ``sqlkit.build`` halves them for RE2.
 
 # pcaarrd_to_s3.py:213-220 — applied in dict order, before the
 # form-feed replace and the whitespace collapse.
@@ -178,90 +179,34 @@ _FUNDER_NAME = (
 )
 
 
-def _helpers(dialect: str):
-    if dialect == "spark":
-        g, S, asize = "", "STRING", "size"
+def _sql(dialect: str) -> str:
+    k = sqlkit.kit(dialect)
+    g, cs, bar, asize, elem, filt = k.g, k.cs, k.bar, k.asize, k.elem, k.filt
+    idx_of, jnall, rl, sl, tx = k.idx_of, k.jnall, k.rl, k.sl, k.tx
 
-        def rl(col: str, pat: str) -> str:
-            return f"{col} RLIKE '{pat}'"
-
-        def elem(a: str, i: str) -> str:
-            return f"try_element_at({a}, {i})"
-
-        def idx_of(arr: str, cond: str, agg: str = "array_min") -> str:
-            return (f"{agg}(zip_with({arr}, sequence(1, size({arr})), "
-                    f"(t, i) -> CASE WHEN {cond} THEN i END))")
-
-        def tx(arr: str, expr: str) -> str:
-            return f"transform({arr}, t -> {expr})"
-
-        def filt(arr: str, cond: str) -> str:
-            return f"filter({arr}, t -> {cond})"
-
-        def sl(arr: str, start: str, length: str) -> str:
-            return f"slice({arr}, {start}, {length})"
-
-        def jn(arr: str) -> str:
-            return f"array_join({arr}, ' ')"
-
-        def app(arr: str, x: str) -> str:
+    def app(arr: str, x: str) -> str:
+        if dialect == "spark":
             return f"concat({arr}, array({x}))"
+        return f"list_concat({arr}, [{x}])"
 
-        def mkarr(items: list) -> str:
+    def mkarr(items: list) -> str:
+        if dialect == "spark":
             return "array(" + ", ".join(items) + ")"
+        return "[" + ", ".join(items) + "]"
 
-        def fmt2(x: str) -> str:
-            return f"format_string('%.2f', CAST({x} AS DOUBLE))"
-
-        def dig(x: str) -> str:
+    def dig(x: str) -> str:
+        if dialect == "spark":
             return f"substr(sha2({x}, 256), 1, 16)"
+        return f"substr(sha256({x}), 1, 16)"
 
-        def dt(x: str) -> str:
+    def dt(x: str) -> str:
+        if dialect == "spark":
             return (f"coalesce(date_format(try_to_date({x}, 'd-MMM-yy'), "
                     f"'yyyy-MM-dd'), date_format(try_to_date({x}, "
                     f"'d-MMM-yyyy'), 'yyyy-MM-dd'))")
-    else:
-        g, S, asize = ", 'g'", "VARCHAR", "len"
-
-        def rl(col: str, pat: str) -> str:
-            return f"regexp_matches({col}, '{pat}')"
-
-        def elem(a: str, i: str) -> str:
-            return f"{a}[({i})]"
-
-        def idx_of(arr: str, cond: str, agg: str = "array_min") -> str:
-            agg = "list_min" if agg == "array_min" else "list_max"
-            return (f"{agg}(list_transform({arr}, (t, i) -> "
-                    f"CASE WHEN {cond} THEN i END))")
-
-        def tx(arr: str, expr: str) -> str:
-            return f"list_transform({arr}, t -> {expr})"
-
-        def filt(arr: str, cond: str) -> str:
-            return f"list_filter({arr}, t -> {cond})"
-
-        def sl(arr: str, start: str, length: str) -> str:
-            return f"list_slice({arr}, {start}, ({start}) + ({length}) - 1)"
-
-        def jn(arr: str) -> str:
-            return f"array_to_string({arr}, ' ')"
-
-        def app(arr: str, x: str) -> str:
-            return f"list_concat({arr}, [{x}])"
-
-        def mkarr(items: list) -> str:
-            return "[" + ", ".join(items) + "]"
-
-        def fmt2(x: str) -> str:
-            return f"printf('%.2f', CAST({x} AS DOUBLE))"
-
-        def dig(x: str) -> str:
-            return f"substr(sha256({x}), 1, 16)"
-
-        def dt(x: str) -> str:
-            return (f"coalesce(strftime(try_strptime({x}, '%d-%b-%y'), "
-                    f"'%Y-%m-%d'), strftime(try_strptime({x}, '%d-%b-%Y'), "
-                    f"'%Y-%m-%d'))")
+        return (f"coalesce(strftime(try_strptime({x}, '%d-%b-%y'), "
+                f"'%Y-%m-%d'), strftime(try_strptime({x}, '%d-%b-%Y'), "
+                f"'%Y-%m-%d'))")
 
     def clean(x: str) -> str:
         """clean_text (pcaarrd:209-225): mojibake map in order, form
@@ -303,33 +248,10 @@ def _helpers(dialect: str):
             f"AND NOT {rl(v, _PAGE_LINE)}"
         )
 
-    return (g, S, asize, rl, elem, idx_of, tx, filt, sl, jn, app, mkarr,
-            dig, dt, clean, money, nk, keep_pred)
-
-
-def _sql(dialect: str) -> str:
-    (g, S, asize, rl, elem, idx_of, tx, filt, sl, jn, app, mkarr, dig, dt,
-     clean, money, nk, keep_pred) = _helpers(dialect)
-
-    def cs(expr: str) -> str:
-        return f"CAST({expr} AS {S})"
-
-    def bar(name: str, prev: str, passthrough: list, cols: list) -> str:
-        """One derivation layer behind a Generate barrier (Spark) /
-        MATERIALIZED CTE (DuckDB) — the tiny-funder plan-size
-        discipline; the plain chained form multiplies under
-        CollapseProject."""
+    def fmt2(x: str) -> str:
         if dialect == "spark":
-            ns = ", ".join(f"'{c}', {e}" for c, e in cols)
-            sel = ", ".join(f"_s.{c} AS {c}" for c, _ in cols)
-            pt = ", ".join(f"_p.{c}" for c in passthrough)
-            return (f"{name} AS (\n  SELECT {pt}, {sel}\n  FROM {prev} _p\n"
-                    f"  LATERAL VIEW explode(array(named_struct({ns}))) "
-                    f"_bv AS _s\n)")
-        sel = ", ".join(f"{e} AS {c}" for c, e in cols)
-        pt = ", ".join(passthrough)
-        return (f"{name} AS MATERIALIZED (\n  SELECT {pt}, {sel}\n"
-                f"  FROM {prev}\n)")
+            return f"format_string('%.2f', CAST({x} AS DOUBLE))"
+        return f"printf('%.2f', CAST({x} AS DOUBLE))"
 
     C = cs("c")
     months = "'JanFebMarAprMayJunJulAugSepOctNovDec'"
@@ -473,12 +395,12 @@ def _sql(dialect: str) -> str:
     pre_kra_expr = (f"CASE WHEN kidx IS NULL THEN content "
                     f"ELSE {sl('content', '1', 'kidx - 1')} END")
     tailk_expr = (f"CASE WHEN kidx IS NULL THEN {sl('content', '1', '0')} "
-                  f"ELSE {sl('content', 'kidx', f'{asize}(content) - kidx + 1')}"
+                  f"ELSE {sl('content', 'kidx', asize('content') + ' - kidx + 1')}"
                   f" END")
 
     d0_expr = ("CASE WHEN kidx IS NULL THEN NULL ELSE coalesce("
                + idx_of("tailk", f"i >= 2 AND {rl('t', _DESC_START)}")
-               + f" - 1, least(2, {asize}(tailk))) END")
+               + f" - 1, least(2, {asize('tailk')})) END")
 
     indexed_bar = bar("indexed", "sliced",
                       ["k", "c", "yr", "start_raw", "end_raw", "status_g",
@@ -491,15 +413,15 @@ def _sql(dialect: str) -> str:
                      ["k", "c", "yr", "start_raw", "end_raw", "status_g",
                       "total_g", "gia_g", "kidx", "d0"], [
         ("program", "CASE WHEN pidx IS NOT NULL THEN "
-                    + clean(jn(sl("pre_kra", "1", "pidx - 1"))) + " END"),
+                    + clean(jnall(sl("pre_kra", "1", "pidx - 1"))) + " END"),
         ("project_raw",
-         jn(sl("pre_kra", "coalesce(pidx, 1)",
-               f"{asize}(pre_kra) - coalesce(pidx, 1) + 1"))),
+         jnall(sl("pre_kra", "coalesce(pidx, 1)",
+               f"{asize('pre_kra')} - coalesce(pidx, 1) + 1"))),
         ("kra", "CASE WHEN kidx IS NOT NULL THEN "
-                + clean(jn(sl("tailk", "1", "d0"))) + " END"),
+                + clean(jnall(sl("tailk", "1", "d0"))) + " END"),
         ("remainder",
          f"CASE WHEN kidx IS NULL THEN {sl('tailk', '1', '0')} "
-         f"ELSE {sl('tailk', 'd0 + 1', f'{asize}(tailk) - d0')} END"),
+         f"ELSE {sl('tailk', 'd0 + 1', asize('tailk') + ' - d0')} END"),
     ])
 
     outputs_bar = bar("outputs", "titled",
@@ -510,7 +432,7 @@ def _sql(dialect: str) -> str:
                           f"'{_EMBEDDED_KRA}.*$', ''{g})")),
         ("o0", "CASE WHEN kidx IS NULL THEN NULL ELSE coalesce("
                + idx_of("remainder", rl("t", _OUTPUT_START))
-               + f" - 1, least({asize}(remainder), 8)) END"),
+               + f" - 1, least({asize('remainder')}, 8)) END"),
     ])
 
     described_bar = bar("described", "outputs",
@@ -518,10 +440,10 @@ def _sql(dialect: str) -> str:
                          "status_g", "total_g", "gia_g", "kidx", "program",
                          "project", "kra"], [
         ("description", "CASE WHEN kidx IS NOT NULL THEN "
-                        + clean(jn(sl("remainder", "1", "o0"))) + " END"),
+                        + clean(jnall(sl("remainder", "1", "o0"))) + " END"),
         ("t35_pre",
          f"CASE WHEN kidx IS NULL THEN {sl('remainder', '1', '0')} "
-         f"ELSE {sl('remainder', 'o0 + 1', f'{asize}(remainder) - o0')} "
+         f"ELSE {sl('remainder', 'o0 + 1', asize('remainder') + ' - o0')} "
          f"END"),
     ])
 
@@ -529,8 +451,8 @@ def _sql(dialect: str) -> str:
                        ["k", "c", "yr", "start_raw", "end_raw", "status_g",
                         "total_g", "gia_g", "program", "project", "kra",
                         "description"], [
-        ("t35", sl("t35_pre", f"greatest({asize}(t35_pre) - 34, 1)",
-                   f"least({asize}(t35_pre), 35)")),
+        ("t35", sl("t35_pre", f"greatest({asize('t35_pre')} - 34, 1)",
+                   f"least({asize('t35_pre')}, 35)")),
     ])
 
     scanned_bar = bar("scanned", "agencies",
@@ -600,15 +522,15 @@ def _sql(dialect: str) -> str:
     ])
 
     bl_start = "bi + nparts"
-    bl_len = f"{asize}(t35) - bi - nparts + 1"
+    bl_len = f"{asize('t35')} - bi - nparts + 1"
     bl_arr = sl("t35", bl_start, bl_len)
     benef_expr = (
-        f"CASE WHEN {asize}(t35) = 0 THEN NULL "
+        f"CASE WHEN {asize('t35')} = 0 THEN NULL "
         f"WHEN bi IS NULL THEN "
-        + clean(jn(sl("t35", f"greatest({asize}(t35) - 5, 1)",
-                      f"least({asize}(t35), 6)")))
+        + clean(jnall(sl("t35", f"greatest({asize('t35')} - 5, 1)",
+                      f"least({asize('t35')}, 6)")))
         + " ELSE "
-        + clean(jn(sl(bl_arr, f"greatest(({bl_len}) - 9, 1)",
+        + clean(jnall(sl(bl_arr, f"greatest(({bl_len}) - 9, 1)",
                       f"least({bl_len}, 10)")))
         + " END")
 
@@ -757,16 +679,9 @@ FROM latest l
     return sql
 
 
-def _build(dialect: str) -> str:
-    text = _sql(dialect)
-    if dialect == "duck":
-        text = text.replace("\\\\", "\\")
-    return text
-
-
 @register(
     "pcaarrd_parse_projects",
-    oracle=_build("duck"),
+    oracle=sqlkit.build(_sql, "duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc=("DOST-PCAARRD GIA transparency-PDF parse "
@@ -778,4 +693,4 @@ def pcaarrd_parse_projects(spark: SparkSession, sf_dir: str) -> DataFrame:
     docstring has the semantics map; note the documented sha1->sha256
     digest deviation).  One scan, barrier-layered column algebra, one
     award-id shuffle."""
-    return spark.sql(_build("spark"))
+    return spark.sql(sqlkit.build(_sql, "spark"))

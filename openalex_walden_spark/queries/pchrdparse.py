@@ -36,6 +36,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from openalex_walden_spark.queries import sqlkit
 from openalex_walden_spark.queries.registry import register
 
 _FUNDER_ID = "4320335609"
@@ -52,77 +53,15 @@ _AGENCIES = ("University of the Philippines Manila",
              "De La Salle University", "DOST Regional Office")
 
 
-def _helpers(dialect: str):
-    if dialect == "spark":
-        g, S = "", "STRING"
-
-        def arr(*items: str) -> str:
-            return f"array({', '.join(items)})" if items else "array()"
-
-        def elem(a: str, i: str) -> str:
-            return f"try_element_at({a}, {i})"
-
-        def asize(a: str) -> str:
-            return f"size({a})"
-
-        def tx(a: str, e: str) -> str:
-            return f"transform({a}, t -> {e})"
-
-        def jnsep(a: str, sep: str) -> str:
-            return f"array_join({a}, {sep})"
-    else:
-        g, S = ", 'g'", "VARCHAR"
-
-        def arr(*items: str) -> str:
-            return f"[{', '.join(items)}]" if items else "[]::VARCHAR[]"
-
-        def elem(a: str, i: str) -> str:
-            return f"{a}[({i})]"
-
-        def asize(a: str) -> str:
-            return f"len({a})"
-
-        def tx(a: str, e: str) -> str:
-            return f"list_transform({a}, t -> {e})"
-
-        def jnsep(a: str, sep: str) -> str:
-            return f"array_to_string({a}, {sep})"
-
-    def clean(x: str) -> str:
-        e = f"regexp_replace({x}, '<[^>]+>', ' '{g})"
-        e = f"replace({e}, '&amp;', '&')"
-        return f"nullif(trim(regexp_replace({e}, '\\\\s+', ' '{g})), '')"
+def _sql(dialect: str) -> str:
+    k = sqlkit.kit(dialect)
+    S, cs, bar, arr, asize, elem = k.S, k.cs, k.bar, k.arr, k.asize, k.elem
+    jnsep, rx, striphtml, tx = k.jnsep, k.rx, k.striphtml, k.tx
 
     def jsonlist(a: str) -> str:
         quoted = tx(a, "concat('\"', t, '\"')")
         return (f"CASE WHEN {asize(a)} = 0 THEN '[]' "
                 f"ELSE concat('[', {jnsep(quoted, chr(39) + ', ' + chr(39))}, ']') END")
-
-    return g, S, arr, elem, asize, tx, jnsep, clean, jsonlist
-
-
-def _sql(dialect: str) -> str:
-    (g, S, arr, elem, asize, tx, jnsep, clean,
-     jsonlist) = _helpers(dialect)
-
-    def cs(expr: str) -> str:
-        return f"CAST({expr} AS {S})"
-
-    def bar(name: str, prev: str, passthrough: list, cols: list) -> str:
-        if dialect == "spark":
-            ns = ", ".join(f"'{c}', {e}" for c, e in cols)
-            sel = ", ".join(f"_s.{c} AS {c}" for c, _ in cols)
-            pt = ", ".join(f"_p.{c}" for c in passthrough)
-            return (f"{name} AS (\n  SELECT {pt}, {sel}\n  FROM {prev} _p\n"
-                    f"  LATERAL VIEW explode(array(named_struct({ns}))) "
-                    f"_bv AS _s\n)")
-        sel = ", ".join(f"{e} AS {c}" for c, e in cols)
-        pt = ", ".join(passthrough)
-        return (f"{name} AS MATERIALIZED (\n  SELECT {pt}, {sel}\n"
-                f"  FROM {prev}\n)")
-
-    def rx(srcv: str, pat: str, grp: int) -> str:
-        return f"nullif(regexp_extract({srcv}, '{pat}', {grp}), '')"
 
     idiv50 = ("o_orderkey div 50" if dialect == "spark"
               else "o_orderkey // 50")
@@ -172,9 +111,9 @@ kept AS (
   SELECT * FROM rest WHERE trim(wp_id) <> ''
 ),
 {bar("parsed", "kept", _PT, [
-    ("display_name", clean("title_html")),
-    ("description", clean("content_html")),
-    ("slug", clean("slug_raw")),
+    ("display_name", striphtml("title_html")),
+    ("description", striphtml("content_html")),
+    ("slug", striphtml("slug_raw")),
     ("source_date", rx("wp_date", _DATE, 1)),
     ("modified_date", rx("wp_modified", _DATE, 1)),
 ])}
@@ -202,16 +141,9 @@ FROM parsed
 """
 
 
-def _build(dialect: str) -> str:
-    text = _sql(dialect)
-    if dialect == "duck":
-        text = text.replace("\\\\", "\\")
-    return text
-
-
 @register(
     "pchrd_parse_projects",
-    oracle=_build("duck"),
+    oracle=sqlkit.build(_sql, "duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc="PCHRD ongoing projects parse (scripts/local/pchrd_to_s3.py)",
@@ -221,4 +153,4 @@ def pchrd_parse_projects(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalization with year slice, first-term scalars + JSON-array
     taxonomy lists, §6.7 NULL amounts, fixed funder columns.  One
     scan, zero exchanges, no Python."""
-    return spark.sql(_build("spark"))
+    return spark.sql(sqlkit.build(_sql, "spark"))

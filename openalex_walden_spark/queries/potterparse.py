@@ -60,6 +60,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from openalex_walden_spark.queries import sqlkit
 from openalex_walden_spark.queries.registry import register
 
 _PAGE = "https://www.potterfoundation.com/grant_recipients.html"
@@ -75,39 +76,10 @@ _COUNTRY = {
 }
 
 
-def _helpers(dialect: str):
-    if dialect == "spark":
-        g, stype, fmt = "", "STRING", "format_string"
-
-        def iso(x: str) -> str:
-            return f"date_format(try_cast({x} AS TIMESTAMP), 'yyyy-MM-dd')"
-
-        def trunc_int(x: str) -> str:
-            return f"CAST({x} AS BIGINT)"
-
-        def date_add(days: str) -> str:
-            return f"date_add(DATE '1899-12-30', CAST({days} AS INT))"
-
-        def datefmt(d: str) -> str:
-            return f"date_format({d}, 'yyyy-MM-dd')"
-    else:
-        g, stype, fmt = ", 'g'", "VARCHAR", "printf"
-
-        def iso(x: str) -> str:
-            return f"strftime(try_cast({x} AS TIMESTAMP), '%Y-%m-%d')"
-
-        def trunc_int(x: str) -> str:
-            return f"CAST(trunc({x}) AS BIGINT)"
-
-        def date_add(days: str) -> str:
-            return f"(DATE '1899-12-30' + CAST(trunc({days}) AS INT))"
-
-        def datefmt(d: str) -> str:
-            return f"strftime({d}, '%Y-%m-%d')"
-
-    def clean_ws(x: str) -> str:
-        c = f"regexp_replace(replace({x}, chr(160), ' '), '\\\\s+', ' '{g})"
-        return f"nullif(trim({c}), '')"
+def _sql(dialect: str) -> str:
+    k = sqlkit.kit(dialect)
+    g, S, cs, clean_ws, fmt, iso = k.g, k.S, k.cs, k.clean_ws, k.fmt, k.iso
+    trunc_int = k.trunc_int
 
     def slugify(x: str, max_len: int) -> str:
         s = (f"regexp_replace(lower(coalesce({clean_ws(x)}, 'unknown')), "
@@ -146,16 +118,15 @@ def _helpers(dialect: str):
                 f"WHEN {is_serial} AND {serial} IS NOT NULL THEN {serial} "
                 f"ELSE {iso(c)} END")
 
-    return g, stype, fmt, iso, trunc_int, clean_ws, slugify, amt_str, \
-        country, parse_date
+    def date_add(days: str) -> str:
+        if dialect == "spark":
+            return f"date_add(DATE '1899-12-30', CAST({days} AS INT))"
+        return f"(DATE '1899-12-30' + CAST(trunc({days}) AS INT))"
 
-
-def _sql(dialect: str) -> str:
-    (g, S, fmt, iso, trunc_int, clean_ws, slugify, amt_str, country,
-     parse_date) = _helpers(dialect)
-
-    def cs(expr: str) -> str:
-        return f"CAST({expr} AS {S})"
+    def datefmt(d: str) -> str:
+        if dialect == "spark":
+            return f"date_format({d}, 'yyyy-MM-dd')"
+        return f"strftime({d}, '%Y-%m-%d')"
 
     # ---- workbook arm ------------------------------------------------
     wb_award = parse_date("wb.adate_raw")
@@ -340,17 +311,9 @@ UNION ALL SELECT * FROM ht_out
 """
 
 
-def _build(dialect: str) -> str:
-    text = _sql(dialect)
-    if dialect == "duck":
-        text = text.replace("\\\\", "\\")
-        text = text.replace("AS STRING", "AS VARCHAR")
-    return text
-
-
 @register(
     "potter_parse_awards",
-    oracle=_build("duck"),
+    oracle=sqlkit.build(_sql, "duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc=("Potter Foundation dual-arm grants parse "
@@ -362,4 +325,4 @@ def potter_parse_awards(spark: SparkSession, sf_dir: str) -> DataFrame:
     docstring has the semantics map; note the documented sha1->sha256
     digest deviation).  Two scan arms, each under one round-robin
     spread exchange, no hash shuffle, no Python."""
-    return spark.sql(_build("spark"))
+    return spark.sql(sqlkit.build(_sql, "spark"))

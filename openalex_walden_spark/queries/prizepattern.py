@@ -80,6 +80,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from openalex_walden_spark.queries import sqlkit
 from openalex_walden_spark.queries.registry import register
 
 _ORG_HINTS = ("'academy','agency','alliance','association','center',"
@@ -272,111 +273,6 @@ SWP_DEGREES = ("PhD", "Ph.D", "MD", "M.D", "DPhil", "ScD", "Jr", "Sr",
                "II", "III", "IV")
 
 
-def _helpers(dialect: str):
-    if dialect == "spark":
-        g, stype = "", "STRING"
-        asize = "size"
-
-        def rl(col: str, pat: str) -> str:
-            return f"{col} RLIKE '{pat}'"
-
-        def elem(a: str, i: str) -> str:
-            return f"try_element_at({a}, {i})"
-
-        def afilter(a: str, cond: str) -> str:
-            return f"filter({a}, t -> {cond})"
-
-        def ajoin(a: str) -> str:
-            return f"array_join({a}, ' ')"
-
-        def idx_of(arr: str, cond: str) -> str:
-            return (f"array_min(zip_with({arr}, sequence(1, size({arr})), "
-                    f"(t, i) -> CASE WHEN {cond} THEN i END))")
-
-        def zipped_filter(arr: str, cond: str, val: str = "t") -> str:
-            """values of elements whose (t, i) satisfy cond."""
-            return (f"filter(zip_with({arr}, sequence(1, size({arr})), "
-                    f"(t, i) -> CASE WHEN {cond} THEN {val} END), "
-                    f"x -> x IS NOT NULL)")
-        fmt = "format_string"
-    else:
-        g, stype = ", 'g'", "VARCHAR"
-        asize = "len"
-
-        def rl(col: str, pat: str) -> str:
-            return f"regexp_matches({col}, '{pat}')"
-
-        def elem(a: str, i: str) -> str:
-            return f"{a}[{i}]"
-
-        def afilter(a: str, cond: str) -> str:
-            return f"list_filter({a}, t -> {cond})"
-
-        def ajoin(a: str) -> str:
-            return f"list_aggr({a}, 'string_agg', ' ')"
-
-        def idx_of(arr: str, cond: str) -> str:
-            return (f"list_min(list_transform({arr}, (t, i) -> "
-                    f"CASE WHEN {cond} THEN i END))")
-
-        def zipped_filter(arr: str, cond: str, val: str = "t") -> str:
-            return (f"list_filter(list_transform({arr}, (t, i) -> "
-                    f"CASE WHEN {cond} THEN {val} END), "
-                    f"x -> x IS NOT NULL)")
-        fmt = "printf"
-
-    def rx(src: str, pat: str, grp: int) -> str:
-        return f"nullif(regexp_extract({src}, '{pat}', {grp}), '')"
-
-    def collapse(x: str) -> str:
-        """collapse_text: NBSP, ws runs, space-before-punct fix."""
-        c = f"regexp_replace(replace({x}, chr(160), ' '), '\\\\s+', ' '{g})"
-        c = f"regexp_replace({c}, '\\\\s+([,;.:])', '$1'{g})" \
-            if dialect == "spark" else \
-            f"regexp_replace({c}, '\\s+([,;.:])', '\\1'{g})"
-        return f"nullif(trim({c}), '')"
-
-    def slugify(x: str) -> str:
-        s = (f"regexp_replace(lower(coalesce({x}, '')), '[^a-z0-9]+', "
-             f"'-'{g})")
-        return f"coalesce(nullif(trim(BOTH '-' FROM {s}), ''), 'unknown')"
-
-    def split_nf(raw: str):
-        """Tail-suffix split (crafoord_prize_to_s3.py:137-151)."""
-        if dialect == "spark":
-            toks = (f"filter(split(coalesce({raw}, ''), ' +'), "
-                    f"x -> x <> '')")
-            last_keep = (f"coalesce(array_max(zip_with(({toks}), "
-                         f"sequence(1, size(({toks}))), (t, i) -> "
-                         f"CASE WHEN lower(trim(BOTH '.,' FROM t)) "
-                         f"NOT IN ({_SUFFIXES}) THEN i END)), 0)")
-            head = (f"array_join(slice(({toks}), 1, ({last_keep}) - 1), "
-                    f"' ')")
-        else:
-            toks = (f"list_filter(regexp_split_to_array(coalesce({raw}, "
-                    f"''), ' +'), x -> x <> '')")
-            last_keep = (f"coalesce(list_max(list_transform(({toks}), "
-                         f"(t, i) -> CASE WHEN lower(trim(BOTH '.,' FROM "
-                         f"t)) NOT IN ({_SUFFIXES}) THEN i END)), 0)")
-            head = (f"list_aggr(list_slice(({toks}), 1, ({last_keep}) - "
-                    f"1), 'string_agg', ' ')")
-        kept_last = elem(f"({toks})", f"({last_keep})")
-        given = (f"CASE WHEN ({last_keep}) >= 2 "
-                 f"THEN nullif({head}, '') END")
-        family = f"CASE WHEN ({last_keep}) >= 1 THEN {kept_last} END"
-        return given, family
-
-    def amount_render(expr: str) -> str:
-        """f'{amount:.6f}'.rstrip('0').rstrip('.')."""
-        r = f"{fmt}('%.6f', CAST({expr} AS DOUBLE))"
-        r = f"regexp_replace({r}, '0+$', ''{g})"
-        return f"regexp_replace({r}, '[.]$', ''{g})"
-
-    return (g, stype, asize, rl, elem, afilter, ajoin, idx_of,
-            zipped_filter, fmt, rx, collapse, slugify, split_nf,
-            amount_render)
-
-
 # wolf_to_s3.py:74-84 — the 9-entry English field-category map
 WOLF_FIELD_CATEGORIES = {
     85: "Physics", 81: "Mathematics", 87: "Medicine", 83: "Chemistry",
@@ -389,7 +285,7 @@ WOLF_SUFFIXES = ("phd", "md", "dphil", "dsc", "scd", "jr.", "sr.",
                  "ii", "iii", "iv", "jr", "sr")
 
 
-def _wolf_arm(dialect: str, cs, nullcols, S: str, g: str) -> str:
+def _wolf_arm(dialect: str) -> str:
     """The Wolf Prize winners arm (scripts/local/wolf_to_s3.py, round
     12).  The WP REST category fetch is the seam; the fixture delivers
     each post's (id, slug, link, date, rendered title, categories
@@ -409,6 +305,9 @@ def _wolf_arm(dialect: str, cs, nullcols, S: str, g: str) -> str:
     inventing one; the ``categories`` LIST ships to_json-rendered
     (driver-canon, nihr precedent)."""
     sp = dialect == "spark"
+    k = sqlkit.kit(dialect)
+    g, S, cs, asize, elem, head = k.g, k.S, k.cs, k.asize, k.elem, k.head
+    jn, nullcols = k.jn, k.nullcols
     ids = ", ".join(str(i) for i in WOLF_FIELD_CATEGORIES)
     whens = " ".join(
         "WHEN " + str(i) + " THEN '" + n.replace("'", "''") + "'"
@@ -422,16 +321,6 @@ def _wolf_arm(dialect: str, cs, nullcols, S: str, g: str) -> str:
                    "107, 114, 124, 47), CAST(o_orderkey % 9 AS INT) + 1)"
                    " AS INT))")
         one_arr, three_arr = "array(27)", "array(27, 114, 85)"
-        asz = "size"
-
-        def el(a: str, i: str) -> str:
-            return f"try_element_at({a}, {i})"
-
-        def sl1(a: str, n: str) -> str:
-            return f"slice({a}, 1, {n})"
-
-        def jn(a: str) -> str:
-            return f"array_join({a}, ' ')"
     else:
         first_fld = f"(list_filter(cats, c -> c IN ({ids})))[1]"
         cats_json = ("concat('[', array_to_string(list_transform(cats, "
@@ -440,16 +329,6 @@ def _wolf_arm(dialect: str, cs, nullcols, S: str, g: str) -> str:
         fld_arr = ("[27, [85, 81, 87, 83, 91, 107, 114, 124, 47]"
                    "[CAST(o_orderkey % 9 AS INT) + 1]]")
         one_arr, three_arr = "[27]", "[27, 114, 85]"
-        asz = "len"
-
-        def el(a: str, i: str) -> str:
-            return f"{a}[({i})]"
-
-        def sl1(a: str, n: str) -> str:
-            return f"list_slice({a}, 1, {n})"
-
-        def jn(a: str) -> str:
-            return f"array_to_string({a}, ' ')"
 
     def h2t(x: str) -> str:
         e = f"regexp_replace({x}, '<[^>]+>', ' '{g})"
@@ -470,10 +349,10 @@ def _wolf_arm(dialect: str, cs, nullcols, S: str, g: str) -> str:
     def pop(arr: str, rounds: int) -> str:
         out = arr
         for _ in range(rounds):
-            out = (f"CASE WHEN {asz}({out}) > 0 AND "
-                   f"trim(BOTH ',.' FROM lower({el(out, f'{asz}({out})')}))"
+            out = (f"CASE WHEN {asize(out)} > 0 AND "
+                   f"trim(BOTH ',.' FROM lower({elem(out, asize(out))}))"
                    f" IN ({sufs}) "
-                   f"THEN {sl1(out, f'{asz}({out}) - 1')} ELSE {out} END")
+                   f"THEN {head(out, asize(out) + ' - 1')} ELSE {out} END")
         return out
 
     year_re = "^\\\\d{4}"
@@ -549,11 +428,11 @@ wf_out AS (
     {cs('wf_year')} AS award_year,
     wf_name AS laureate_name,
     CAST(NULL AS {S}) AS laureate_type,
-    CASE WHEN {asz}(wf_toks) < 2 THEN NULL
-         ELSE {jn(sl1('wf_toks', f'{asz}(wf_toks) - 1'))} END
+    CASE WHEN {asize('wf_toks')} < 2 THEN NULL
+         ELSE {jn('wf_toks', asize('wf_toks') + ' - 1')} END
       AS given_name,
-    CASE WHEN {asz}(wf_toks) = 0 THEN NULL
-         ELSE {el('wf_toks', f'{asz}(wf_toks)')} END AS family_name,
+    CASE WHEN {asize('wf_toks')} = 0 THEN NULL
+         ELSE {elem('wf_toks', asize('wf_toks'))} END AS family_name,
     {nullcols('edition_label', 'winner_position')},
     wf_field AS award_category,
     {nullcols('prize_category_slug', 'research_topic')},
@@ -580,27 +459,64 @@ wf_out AS (
 
 
 def _sql(dialect: str) -> str:
-    (g, S, asize, rl, elem, afilter, ajoin, idx_of, zipped_filter, fmt,
-     rx, collapse, slugify, split_nf, amount_render) = _helpers(dialect)
+    k = sqlkit.kit(dialect)
+    g, S, cs, bar, elem, filt = k.g, k.S, k.cs, k.bar, k.elem, k.filt
+    fmt, idx_of, nullcols, rl, rx = k.fmt, k.idx_of, k.nullcols, k.rl, k.rx
+    slugify, tagtext = k.slugify, k.tagtext
 
-    def cs(expr: str) -> str:
-        return f"CAST({expr} AS {S})"
-
-    def nullcols(*names: str) -> str:
-        return ", ".join(f"CAST(NULL AS {S}) AS {n}" for n in names)
-
-    def bar(name: str, prev: str, passthrough: list, cols: list) -> str:
+    def ajoin(a: str) -> str:
         if dialect == "spark":
-            ns = ", ".join(f"'{c}', {e}" for c, e in cols)
-            sel = ", ".join(f"_s.{c} AS {c}" for c, _ in cols)
-            pt = ", ".join(f"_p.{c}" for c in passthrough)
-            return (f"{name} AS (\n  SELECT {pt}, {sel}\n  FROM {prev} _p\n"
-                    f"  LATERAL VIEW explode(array(named_struct({ns}))) "
-                    f"_bv AS _s\n)")
-        sel = ", ".join(f"{e} AS {c}" for c, e in cols)
-        pt = ", ".join(passthrough)
-        return (f"{name} AS MATERIALIZED (\n  SELECT {pt}, {sel}\n"
-                f"  FROM {prev}\n)")
+            return f"array_join({a}, ' ')"
+        return f"list_aggr({a}, 'string_agg', ' ')"
+
+    def zipped_filter(arr: str, cond: str, val: str = "t") -> str:
+        """values of elements whose (t, i) satisfy cond."""
+        if dialect == "spark":
+            return (f"filter(zip_with({arr}, sequence(1, size({arr})), "
+                    f"(t, i) -> CASE WHEN {cond} THEN {val} END), "
+                    f"x -> x IS NOT NULL)")
+        return (f"list_filter(list_transform({arr}, (t, i) -> "
+                f"CASE WHEN {cond} THEN {val} END), "
+                f"x -> x IS NOT NULL)")
+
+    def collapse(x: str) -> str:
+        """collapse_text: NBSP, ws runs, space-before-punct fix."""
+        c = f"regexp_replace(replace({x}, chr(160), ' '), '\\\\s+', ' '{g})"
+        c = f"regexp_replace({c}, '\\\\s+([,;.:])', '$1'{g})" \
+            if dialect == "spark" else \
+            f"regexp_replace({c}, '\\s+([,;.:])', '\\1'{g})"
+        return f"nullif(trim({c}), '')"
+
+    def split_nf(raw: str):
+        """Tail-suffix split (crafoord_prize_to_s3.py:137-151)."""
+        if dialect == "spark":
+            toks = (f"filter(split(coalesce({raw}, ''), ' +'), "
+                    f"x -> x <> '')")
+            last_keep = (f"coalesce(array_max(zip_with(({toks}), "
+                         f"sequence(1, size(({toks}))), (t, i) -> "
+                         f"CASE WHEN lower(trim(BOTH '.,' FROM t)) "
+                         f"NOT IN ({_SUFFIXES}) THEN i END)), 0)")
+            head = (f"array_join(slice(({toks}), 1, ({last_keep}) - 1), "
+                    f"' ')")
+        else:
+            toks = (f"list_filter(regexp_split_to_array(coalesce({raw}, "
+                    f"''), ' +'), x -> x <> '')")
+            last_keep = (f"coalesce(list_max(list_transform(({toks}), "
+                         f"(t, i) -> CASE WHEN lower(trim(BOTH '.,' FROM "
+                         f"t)) NOT IN ({_SUFFIXES}) THEN i END)), 0)")
+            head = (f"list_aggr(list_slice(({toks}), 1, ({last_keep}) - "
+                    f"1), 'string_agg', ' ')")
+        kept_last = elem(f"({toks})", f"({last_keep})")
+        given = (f"CASE WHEN ({last_keep}) >= 2 "
+                 f"THEN nullif({head}, '') END")
+        family = f"CASE WHEN ({last_keep}) >= 1 THEN {kept_last} END"
+        return given, family
+
+    def amount_render(expr: str) -> str:
+        """f'{amount:.6f}'.rstrip('0').rstrip('.')."""
+        r = f"{fmt}('%.6f', CAST({expr} AS DOUBLE))"
+        r = f"regexp_replace({r}, '0+$', ''{g})"
+        return f"regexp_replace({r}, '[.]$', ''{g})"
 
     ks = cs("o_orderkey")
 
@@ -632,12 +548,6 @@ def _sql(dialect: str) -> str:
                 "t.text LIKE 'Edificio San%')")
     bb_mode_hdr = "upper(t.text) IN ('BIO', 'CONTRIBUTION', 'INTERVIEW', 'MORE')"
 
-    def st(tag: str, text_expr: str) -> str:
-        """A {tag, text} element struct literal, per dialect."""
-        if dialect == "spark":
-            return f"named_struct('tag', '{tag}', 'text', {text_expr})"
-        return f"{{'tag': '{tag}', 'text': {text_expr}}}"
-
     def arrlit(*items: str) -> str:
         body = ",\n      ".join(items)
         if dialect == "spark":
@@ -668,19 +578,19 @@ bb_raw AS (
     concat('https://www.frontiersofknowledgeawards-fbbva.es/laureate/',
            'laureate-', {ks}, '/') AS href,
     {arrlit(
-        st('h1', "'Laureate name'"),
-        st('p', bb_cat_fixture),
-        st('p', f"concat({cs('o_orderkey % 18 + 1')}, 'th Edition')"),
-        st('p', f"concat('Frontiers of Knowledge Award in case ', {ks})"),
-        st('h3', "'BIO'"),
-        st('p', f"concat('Born researcher profile ', {ks})"),
-        st('p', "'Second bio paragraph.'"),
-        st('h3', "'CONTRIBUTION'"),
-        st('p', f"concat('Pioneered the field, case ', "
+        tagtext('h1', "'Laureate name'"),
+        tagtext('p', bb_cat_fixture),
+        tagtext('p', f"concat({cs('o_orderkey % 18 + 1')}, 'th Edition')"),
+        tagtext('p', f"concat('Frontiers of Knowledge Award in case ', {ks})"),
+        tagtext('h3', "'BIO'"),
+        tagtext('p', f"concat('Born researcher profile ', {ks})"),
+        tagtext('p', "'Second bio paragraph.'"),
+        tagtext('h3', "'CONTRIBUTION'"),
+        tagtext('p', f"concat('Pioneered the field, case ', "
                 f"{cs('o_orderkey % 11')})"),
-        st('h3', "'INTERVIEW'"),
-        st('p', "'Interview text ignored'"),
-        st('p', "'With the collaboration of partners'"))} AS els
+        tagtext('h3', "'INTERVIEW'"),
+        tagtext('p', "'Interview text ignored'"),
+        tagtext('p', "'With the collaboration of partners'"))} AS els
   FROM orders
 )
 """
@@ -881,7 +791,7 @@ dd_raw AS (
   FROM orders
 ),
 dd_clean AS (
-  SELECT *, {afilter('later_ps', 't IS NOT NULL')} AS ps FROM dd_raw
+  SELECT *, {filt('later_ps', 't IS NOT NULL')} AS ps FROM dd_raw
 ),
 {bar("dd_parsed", "dd_clean",
      ["k", "year", "name_raw", "topic", "affiliation",
@@ -889,7 +799,7 @@ dd_clean AS (
     ("given_name", dd_given.replace("dd.", "")),
     ("family_name", dd_family.replace("dd.", "")),
     ("profile_description",
-     collapse(ajoin(afilter("ps", dd_desc_cond)))),
+     collapse(ajoin(filt("ps", dd_desc_cond)))),
 ])},
 dd_out AS (
   SELECT 'dan_david_prize' AS member,
@@ -973,7 +883,7 @@ ml_raw AS (
 ),
 ml_parts AS (
   SELECT *, {ml_parts.replace('ml.', '')} AS parts,
-    {afilter('profile_tail_raw', 't IS NOT NULL')} AS profile_tail
+    {filt('profile_tail_raw', 't IS NOT NULL')} AS profile_tail
   FROM ml_raw
 ),
 ml_exploded AS (
@@ -1476,7 +1386,7 @@ swp_out AS (
             "press_release_id, current_format_note, source_url, "
             "amount_rule_url, " + pa_extras)
     legacy_cols = cols.rsplit(", " + pa_extras, 1)[0]
-    wolf = _wolf_arm(dialect, cs, nullcols, S, g)
+    wolf = _wolf_arm(dialect)
     wf_extras = "wf_wp_date, wf_categories_json"
     wf_extra_nulls = nullcols("wf_wp_date", "wf_categories_json")
 
@@ -1497,17 +1407,9 @@ UNION ALL SELECT {legacy_cols}, {pa_extra_nulls}, {swp_extra_nulls},
 """
 
 
-def _build(dialect: str) -> str:
-    text = _sql(dialect)
-    if dialect == "duck":
-        text = text.replace("\\\\", "\\")
-        text = text.replace("AS STRING", "AS VARCHAR")
-    return text
-
-
 @register(
     "prize_pattern_parse",
-    oracle=_build("duck"),
+    oracle=sqlkit.build(_sql, "duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc=("Prize-pattern scraper family (scripts/local/{bbva_frontiers,"
@@ -1519,4 +1421,4 @@ def prize_pattern_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Four prize ingests in one union plan (module docstring has the
     per-member semantics map).  Share-count windows are the only
     exchanges; the millennium arm explodes multi-laureate rows."""
-    return spark.sql(_build("spark"))
+    return spark.sql(sqlkit.build(_sql, "spark"))

@@ -63,10 +63,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from openalex_walden_spark.queries import sqlkit
 from openalex_walden_spark.queries.registry import register
 
 # Backslash convention: doubled for the Spark string parser;
-# _build("duck") halves them.
+# sqlkit.build halves them for DuckDB.
 
 # rfbr_to_s3.py:229-233 — over \s+-normalized HTML; (.*?) DOTALL is
 # irrelevant post-normalization (no newlines survive)
@@ -96,43 +97,17 @@ _ENTITIES = (
 _BASE_URL = "https://www.rfbr.ru"
 
 
-def _helpers(dialect: str):
-    if dialect == "spark":
-        g, S = "", "STRING"
+def _sql(dialect: str) -> str:
+    k = sqlkit.kit(dialect)
+    g, cs, bar, asize, elem, rx = k.g, k.cs, k.bar, k.asize, k.elem, k.rx
+    splitre = k.splitre
 
-        def rx(src: str, pat: str, grp: int) -> str:
-            return f"nullif(regexp_extract({src}, '{pat}', {grp}), '')"
-
-        def splitws(x: str) -> str:
-            return f"split({x}, '\\\\s+')"
-
-        def elem(a: str, i: str) -> str:
-            return f"try_element_at({a}, {i})"
-
-        def asize(a: str) -> str:
-            return f"size({a})"
-
-        def sl_join(a: str, start: str) -> str:
+    def sl_join(a: str, start: str) -> str:
+        if dialect == "spark":
             return (f"array_join(slice({a}, {start}, "
                     f"size({a}) - ({start}) + 1), ' ')")
-    else:
-        g, S = ", 'g'", "VARCHAR"
-
-        def rx(src: str, pat: str, grp: int) -> str:
-            return f"nullif(regexp_extract({src}, '{pat}', {grp}), '')"
-
-        def splitws(x: str) -> str:
-            return f"regexp_split_to_array({x}, '\\\\s+')"
-
-        def elem(a: str, i: str) -> str:
-            return f"{a}[({i})]"
-
-        def asize(a: str) -> str:
-            return f"len({a})"
-
-        def sl_join(a: str, start: str) -> str:
-            return (f"array_to_string(list_slice({a}, {start}, "
-                    f"len({a})), ' ')")
+        return (f"array_to_string(list_slice({a}, {start}, "
+                f"len({a})), ' ')")
 
     def clean(x: str) -> str:
         """_clean (rfbr:245-250): br, tags, entities, NBSP, collapse."""
@@ -146,29 +121,6 @@ def _helpers(dialect: str):
 
     def cleann(x: str) -> str:
         return f"nullif({clean(x)}, '')"
-
-    return g, S, rx, splitws, elem, asize, sl_join, clean, cleann
-
-
-def _sql(dialect: str) -> str:
-    g, S, rx, splitws, elem, asize, sl_join, clean, cleann = \
-        _helpers(dialect)
-
-    def cs(expr: str) -> str:
-        return f"CAST({expr} AS {S})"
-
-    def bar(name: str, prev: str, passthrough: list, cols: list) -> str:
-        if dialect == "spark":
-            ns = ", ".join(f"'{c}', {e}" for c, e in cols)
-            sel = ", ".join(f"_s.{c} AS {c}" for c, _ in cols)
-            pt = ", ".join(f"_p.{c}" for c in passthrough)
-            return (f"{name} AS (\n  SELECT {pt}, {sel}\n  FROM {prev} _p\n"
-                    f"  LATERAL VIEW explode(array(named_struct({ns}))) "
-                    f"_bv AS _s\n)")
-        sel = ", ".join(f"{e} AS {c}" for c, e in cols)
-        pt = ", ".join(passthrough)
-        return (f"{name} AS MATERIALIZED (\n  SELECT {pt}, {sel}\n"
-                f"  FROM {prev}\n)")
 
     K = cs("k")
 
@@ -225,7 +177,7 @@ def _sql(dialect: str) -> str:
         f"{K}, '.</p>') END")
 
     # ---- name split (split_pi_ru, rfbr:311-321) -----------------------
-    toks = splitws("nm")
+    toks = splitre("nm", "\\\\s+")
     given = (f"CASE WHEN nm IS NULL OR nm = '' THEN NULL "
              f"WHEN {asize('toks')} = 1 THEN NULL "
              f"ELSE {sl_join('toks', '2')} END")
@@ -336,16 +288,9 @@ FROM split_cte
 """
 
 
-def _build(dialect: str) -> str:
-    text = _sql(dialect)
-    if dialect == "duck":
-        text = text.replace("\\\\", "\\")
-    return text
-
-
 @register(
     "rfbr_parse_projects",
-    oracle=_build("duck"),
+    oracle=sqlkit.build(_sql, "duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc=("RFBR legacy-portal projects parse "
@@ -356,4 +301,4 @@ def rfbr_parse_projects(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFBR listing+detail grammar, keep-earliest dedupe (pre-filter
     quirk preserved), supported-only filter, Russian PI split.  One
     scan, one grant-number exchange, no Python."""
-    return spark.sql(_build("spark"))
+    return spark.sql(sqlkit.build(_sql, "spark"))

@@ -46,6 +46,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from openalex_walden_spark.queries import sqlkit
 from openalex_walden_spark.queries.registry import register
 
 _ROWS_SPARK = """
@@ -121,19 +122,16 @@ _HONORIFIC = "(?i)^(Prof(essor)?|Dr|Mr|Mrs|Ms|Miss|Ir)[.]? +"
 
 
 def _sql(dialect: str) -> str:
+    k = sqlkit.kit(dialect)
+    g, S, asize, elem, fmt, head = k.g, k.S, k.asize, k.elem, k.fmt, k.head
+    rl = k.rl
     if dialect == "spark":
-        stype, g = "STRING", ""
         rows = _ROWS_SPARK
-        rl = lambda c, p: f"{c} RLIKE '{p}'"  # noqa: E731
-        fmt = "format_string"
-        asize, arrslice = "size", "slice"
-        elem = lambda a, i: f"try_element_at({a}, {i})"  # noqa: E731
         joinsep = lambda a, s: f"array_join({a}, '{s}')"  # noqa: E731
         transform = "transform"
         distinct = "array_distinct"
         splitfn = lambda v, p: f"filter(split({v}, '{p}'), x -> trim(x) <> '')"  # noqa: E731
     else:
-        stype, g = "VARCHAR", ", 'g'"
         rows = (_ROWS_SPARK
                 .replace("AS STRING", "AS VARCHAR")
                 .replace("'.\\n\\n\\n\\nSecond\\tparagraph  here.'",
@@ -141,10 +139,6 @@ def _sql(dialect: str) -> str:
                          "|| 'Second' || chr(9) || 'paragraph  here.'")
                 .replace("'\\nProf B Lee; Dr A Chan'",
                          "chr(10) || 'Prof B Lee; Dr A Chan'"))
-        rl = lambda c, p: f"regexp_matches({c}, '{p}')"  # noqa: E731
-        fmt = "printf"
-        asize, arrslice = "len", "list_slice"
-        elem = lambda a, i: f"{a}[{i}]"  # noqa: E731
         joinsep = lambda a, s: f"list_aggr({a}, 'string_agg', '{s}')"  # noqa: E731
         transform = "list_transform"
         distinct = "list_distinct"
@@ -184,9 +178,9 @@ def _sql(dialect: str) -> str:
              "coalesce(fund_approved, ''), ',', ''), 'HK$', ''),"
              " '$', '')), '') AS DOUBLE)")
     amt_render = (
-        f"CASE WHEN {amt_v} IS NULL OR {amt_v} <= 0 THEN CAST(NULL AS {stype}) "
+        f"CASE WHEN {amt_v} IS NULL OR {amt_v} <= 0 THEN CAST(NULL AS {S}) "
         f"WHEN {amt_v} = floor({amt_v}) "
-        f"THEN CAST(CAST({amt_v} AS BIGINT) AS {stype}) "
+        f"THEN CAST(CAST({amt_v} AS BIGINT) AS {S}) "
         f"ELSE regexp_replace(regexp_replace({fmt}('%.2f', {amt_v}),"
         f" '0+$', ''{g}), '[.]$', '') END"
     )
@@ -206,7 +200,7 @@ def _sql(dialect: str) -> str:
         toks = splitfn(base, " +")
         if dialect == "spark":
             keep = (f"coalesce(array_max(zip_with({toks}, "
-                    f"sequence(1, {asize}({toks})), (t, i) -> "
+                    f"sequence(1, {asize(toks)}), (t, i) -> "
                     f"IF(trim(BOTH ',' FROM t) NOT IN "
                     f"('Jr','Jr.','Sr','Sr.','II','III','IV'), i, 0))), 0)")
         else:
@@ -214,16 +208,16 @@ def _sql(dialect: str) -> str:
                     f"CASE WHEN trim(BOTH ',' FROM t) NOT IN "
                     f"('Jr','Jr.','Sr','Sr.','II','III','IV') THEN i END)),"
                     f" 0)")
-        kept = f"{arrslice}({toks}, 1, {keep} - 0)" \
+        kept = f"list_slice({toks}, 1, {keep} - 0)" \
             if dialect == "duck" else f"slice({toks}, 1, {keep})"
         detok = (f"{transform}({kept}, t -> trim(BOTH ',' FROM t))"
                  if True else kept)
         return f"""
-    CASE WHEN {compact(col)} IS NULL THEN CAST(NULL AS {stype})
+    CASE WHEN {compact(col)} IS NULL THEN CAST(NULL AS {S})
          WHEN {base} LIKE '%,%'
            THEN nullif(trim(split_part({base}, ',', 2)), '')
-         WHEN {asize}({detok}) > 1
-           THEN {joinsep(f"{arrslice}({detok}, 1, {asize}({detok}) - 1)", " ")}
+         WHEN {asize(detok)} > 1
+           THEN {joinsep(head(detok, f"{asize(detok)} - 1"), " ")}
     END"""
 
     def person_family(col: str) -> str:
@@ -231,7 +225,7 @@ def _sql(dialect: str) -> str:
         toks = splitfn(base, " +")
         if dialect == "spark":
             keep = (f"coalesce(array_max(zip_with({toks}, "
-                    f"sequence(1, {asize}({toks})), (t, i) -> "
+                    f"sequence(1, {asize(toks)}), (t, i) -> "
                     f"IF(trim(BOTH ',' FROM t) NOT IN "
                     f"('Jr','Jr.','Sr','Sr.','II','III','IV'), i, 0))), 0)")
             kept = f"slice({toks}, 1, {keep})"
@@ -243,11 +237,11 @@ def _sql(dialect: str) -> str:
             kept = f"list_slice({toks}, 1, {keep})"
         detok = f"{transform}({kept}, t -> trim(BOTH ',' FROM t))"
         return f"""
-    CASE WHEN {compact(col)} IS NULL THEN CAST(NULL AS {stype})
+    CASE WHEN {compact(col)} IS NULL THEN CAST(NULL AS {S})
          WHEN {base} LIKE '%,%'
            THEN nullif(trim(split_part({base}, ',', 1)), '')
-         WHEN {asize}({detok}) >= 1
-           THEN {elem(detok, f"{asize}({detok})")}
+         WHEN {asize(detok)} >= 1
+           THEN {elem(detok, asize(detok))}
     END"""
 
     # split_people over the co-investigator cell: newline/';' split,
@@ -317,10 +311,10 @@ SELECT
   {person_family('pi_raw')} AS pi_family_name,
   {compact('department')} AS department,
   {compact('institution')} AS institution,
-  CASE WHEN {asize}(co_names) > 0 THEN concat('[',
+  CASE WHEN {asize('co_names')} > 0 THEN concat('[',
     {names_json},
     ']') END AS co_investigators_json,
-  CASE WHEN {asize}(co_names) > 0 THEN concat('[',
+  CASE WHEN {asize('co_names')} > 0 THEN concat('[',
     {structs_json},
     ']') END AS co_investigators_struct_json,
   {compact('panel')} AS panel,
@@ -344,13 +338,9 @@ FROM shaped
 """
 
 
-def _build(dialect: str) -> str:
-    return _sql(dialect)
-
-
 @register(
     "rgc_hk_parse_awards",
-    oracle=_build("duck"),
+    oracle=sqlkit.build(_sql, "duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc="RGC Hong Kong project-enquiry parse (scripts/local/rgc_hk_to_s3.py)",
@@ -360,4 +350,4 @@ def rgc_hk_parse_awards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RGC HK detail-record normalize (module docstring has the full
     semantics map).  One scan under one round-robin spread exchange,
     HOF column algebra, no hash shuffle, no Python."""
-    return spark.sql(_build("spark"))
+    return spark.sql(sqlkit.build(_sql, "spark"))

@@ -28,6 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from openalex_walden_spark.queries import sqlkit
 from openalex_walden_spark.queries.registry import register
 
 _PREFIX_TITLES = "('Dr','Prof','Professor')"
@@ -65,37 +66,18 @@ FROM orders
 
 
 def _sql(dialect: str) -> str:
-    if dialect == "spark":
-        stype, g = "STRING", ""
-        rows = _ROWS_SPARK
-        asize = "size"
-        elem = lambda a, i: f"try_element_at({a}, {i})"  # noqa: E731
-        joinsep = lambda a: f"array_join({a}, ' ')"  # noqa: E731
-        splitfn = lambda v: f"filter(split({v}, ' +'), x -> x <> '')"  # noqa: E731
-        amin, amax = "array_min", "array_max"
-        idx = lambda arr, cond: (  # noqa: E731
-            f"zip_with({arr}, sequence(1, size({arr})), "
-            f"(t, i) -> CASE WHEN {cond} THEN i END)")
-        arrslice = "slice"
-    else:
-        stype, g = "VARCHAR", ", 'g'"
-        rows = _ROWS_SPARK.replace("AS STRING", "AS VARCHAR")
-        asize = "len"
-        elem = lambda a, i: f"{a}[{i}]"  # noqa: E731
-        joinsep = lambda a: f"list_aggr({a}, 'string_agg', ' ')"  # noqa: E731
-        splitfn = lambda v: (  # noqa: E731
-            f"list_filter(regexp_split_to_array({v}, ' +'), x -> x <> '')")
-        amin, amax = "list_min", "list_max"
-        idx = lambda arr, cond: (  # noqa: E731
-            f"list_transform({arr}, (t, i) -> CASE WHEN {cond} THEN i END)")
-        arrslice = "list_slice"
+    k = sqlkit.kit(dialect)
+    g, S, asize, elem, head = k.g, k.S, k.asize, k.elem, k.head
+    idx_of, jnagg, splitsp = k.idx_of, k.jnagg, k.splitsp
+    rows = (_ROWS_SPARK if dialect == "spark"
+            else _ROWS_SPARK.replace("AS STRING", "AS VARCHAR"))
 
     tok_pref = "trim(TRAILING '.' FROM t)"
     tok_suff = "trim(TRAILING '.,' FROM t)"
-    toks = splitfn("name")
-    first_keep = (f"coalesce({amin}({idx('toks', f'{tok_pref} NOT IN {_PREFIX_TITLES}')}), "
-                  f"{asize}(toks) + 1)")
-    last_keep = (f"coalesce({amax}({idx('toks', f'{tok_suff} NOT IN {_DEGREE_SUFFIXES}')}), 0)")
+    toks = splitsp("name")
+    first_keep = (f"coalesce({idx_of('toks', f'{tok_pref} NOT IN {_PREFIX_TITLES}')}, "
+                  f"{asize('toks')} + 1)")
+    last_keep = (f"coalesce({idx_of('toks', f'{tok_suff} NOT IN {_DEGREE_SUFFIXES}', 'array_max')}, 0)")
     kept = (f"slice(toks, {first_keep}, greatest({last_keep} - {first_keep} + 1, 0))"
             if dialect == "spark"
             else f"list_slice(toks, {first_keep}, {last_keep})")
@@ -106,7 +88,7 @@ eligible AS (
   SELECT * FROM raw WHERE name IS NOT NULL AND year IS NOT NULL
 ),
 keyed AS (
-  SELECT *, concat('searle-', CAST(year AS {stype}), '-',
+  SELECT *, concat('searle-', CAST(year AS {S}), '-',
     trim(BOTH '-' FROM regexp_replace(lower(name), '[^a-z0-9]+', '-'{g})))
     AS funder_award_id,
     trim(BOTH '-' FROM regexp_replace(lower(name), '[^a-z0-9]+', '-'{g}))
@@ -125,11 +107,11 @@ named AS (
 )
 SELECT
   funder_award_id, slug, year, name,
-  CASE WHEN {asize}(kept) > 1
-       THEN nullif({joinsep(f"{arrslice}(kept, 1, {asize}(kept) - 1)")}, '')
+  CASE WHEN {asize('kept')} > 1
+       THEN nullif({jnagg(head('kept', asize('kept') + ' - 1'))}, '')
   END AS given_name,
-  CASE WHEN {asize}(kept) >= 1
-       THEN nullif({elem('kept', f"{asize}(kept)")}, '') END AS family_name,
+  CASE WHEN {asize('kept')} >= 1
+       THEN nullif({elem('kept', asize('kept'))}, '') END AS family_name,
   institution, research_title, profile_url,
   CAST(300000.0 AS DOUBLE) AS amount,
   'USD' AS currency,
@@ -139,13 +121,9 @@ FROM named
 """
 
 
-def _build(dialect: str) -> str:
-    return _sql(dialect)
-
-
 @register(
     "searle_parse_scholars",
-    oracle=_build("duck"),
+    oracle=sqlkit.build(_sql, "duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc=("Searle Scholars parse stage "
@@ -154,4 +132,4 @@ def _build(dialect: str) -> str:
 def searle_parse_scholars(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Searle Scholars normalize (module docstring has the semantics
     map).  One keep-first window; everything else column algebra."""
-    return spark.sql(_build("spark"))
+    return spark.sql(sqlkit.build(_sql, "spark"))

@@ -41,6 +41,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from openalex_walden_spark.queries import sqlkit
 from openalex_walden_spark.queries.registry import register
 
 # region_to_country tables (sloan_to_s3.py:169-189), as data.
@@ -120,21 +121,14 @@ FROM orders
 
 
 def _sql(dialect: str) -> str:
+    k = sqlkit.kit(dialect)
+    S, asize, elem, head, idx_of = k.S, k.asize, k.elem, k.head, k.idx_of
+    jnagg, rl, splitsp = k.jnagg, k.rl, k.splitsp
     if dialect == "spark":
-        stype, g = "STRING", ""
         rows = _ROWS_SPARK
-        rl = lambda c, p: f"{c} RLIKE '{p}'"  # noqa: E731
-        asize, arrslice = "size", "slice"
-        elem = lambda a, i: f"try_element_at({a}, {i})"  # noqa: E731
         joinsep = lambda a, s: f"array_join({a}, '{s}')"  # noqa: E731
-        splitfn = lambda v: f"filter(split({v}, ' +'), x -> x <> '')"  # noqa: E731
-        amin, amax = "array_min", "array_max"
-        idx = lambda arr, cond: (  # noqa: E731
-            f"zip_with({arr}, sequence(1, size({arr})), "
-            f"(t, i) -> CASE WHEN {cond} THEN i END)")
         csplit = lambda v: f"split({v}, ',')"  # noqa: E731
     else:
-        stype, g = "VARCHAR", ", 'g'"
         rows = (_ROWS_SPARK
                 .replace("AS STRING", "AS VARCHAR")
                 .replace(
@@ -144,15 +138,7 @@ def _sql(dialect: str) -> str:
                     "list_extract(['Research', 'Higher Education', "
                     "'Technology',\n                   'Public Understanding"
                     " of Science and Technology'],"))
-        rl = lambda c, p: f"regexp_matches({c}, '{p}')"  # noqa: E731
-        asize, arrslice = "len", "list_slice"
-        elem = lambda a, i: f"{a}[{i}]"  # noqa: E731
         joinsep = lambda a, s: f"list_aggr({a}, 'string_agg', '{s}')"  # noqa: E731
-        splitfn = lambda v: (  # noqa: E731
-            f"list_filter(regexp_split_to_array({v}, ' +'), x -> x <> '')")
-        amin, amax = "list_min", "list_max"
-        idx = lambda arr, cond: (  # noqa: E731
-            f"list_transform({arr}, (t, i) -> CASE WHEN {cond} THEN i END)")
         csplit = lambda v: f"string_split({v}, ',')"  # noqa: E731
 
     states = ", ".join(f"'{s}'" for s in US_STATE_CODES)
@@ -163,10 +149,10 @@ def _sql(dialect: str) -> str:
 
     tok_pref = "lower(trim(TRAILING '.' FROM t))"
     tok_suff = "lower(trim(TRAILING '.,' FROM t))"
-    toks = splitfn("investigator")
-    first_keep = (f"coalesce({amin}({idx('toks', f'{tok_pref} NOT IN ({_PREFIX_TITLES})')}), "
-                  f"{asize}(toks) + 1)")
-    last_keep = (f"coalesce({amax}({idx('toks', f'{tok_suff} NOT IN ({_DEGREE_SUFFIXES})')}), 0)")
+    toks = splitsp("investigator")
+    first_keep = (f"coalesce({idx_of('toks', f'{tok_pref} NOT IN ({_PREFIX_TITLES})')}, "
+                  f"{asize('toks')} + 1)")
+    last_keep = (f"coalesce({idx_of('toks', f'{tok_suff} NOT IN ({_DEGREE_SUFFIXES})', 'array_max')}, 0)")
     kept = (f"slice(toks, {first_keep}, greatest({last_keep} - {first_keep} + 1, 0))"
             if dialect == "spark"
             else f"list_slice(toks, {first_keep}, {last_keep})")
@@ -193,7 +179,7 @@ named AS (
 ),
 located AS (
   SELECT *,
-    CASE WHEN year_field RLIKE '^(19|20)[0-9][0-9]$'
+    CASE WHEN {rl('year_field', '^(19|20)[0-9][0-9]$')}
          THEN CAST(year_field AS INT)
          WHEN regexp_extract(funder_award_id, '(19|20)[0-9][0-9]', 0) <> ''
          THEN CAST(regexp_extract(funder_award_id,
@@ -204,12 +190,12 @@ located AS (
          THEN try_cast(replace(regexp_extract(amount_raw,
               '-?[$]? *([0-9,]+)', 1), ',', '') AS BIGINT)
     END AS amount,
-    CASE WHEN city_raw IS NULL THEN CAST(NULL AS {stype})
+    CASE WHEN city_raw IS NULL THEN CAST(NULL AS {S})
          WHEN city_raw NOT LIKE '%,%' THEN nullif(trim(city_raw), '')
-         ELSE nullif(trim({joinsep(f"{arrslice}({csplit('city_raw')}, 1, {asize}({csplit('city_raw')}) - 1)", ",")}), '')
+         ELSE nullif(trim({joinsep(head(csplit('city_raw'), asize(csplit('city_raw')) + ' - 1'), ",")}), '')
     END AS city,
     CASE WHEN city_raw LIKE '%,%'
-         THEN nullif(trim({elem(csplit('city_raw'), f"{asize}({csplit('city_raw')})")}), '')
+         THEN nullif(trim({elem(csplit('city_raw'), asize(csplit('city_raw')))}), '')
     END AS region
   FROM named
 )
@@ -219,11 +205,11 @@ SELECT
   l.grantee AS grantee_org,
   coalesce(l.investigator, l.grantee) AS lead_name,
   l.investigator,
-  CASE WHEN l.investigator IS NOT NULL AND {asize}(kept) > 1
-       THEN {joinsep(f"{arrslice}(kept, 1, {asize}(kept) - 1)", " ")}
+  CASE WHEN l.investigator IS NOT NULL AND {asize('kept')} > 1
+       THEN {jnagg(head('kept', asize('kept') + ' - 1'))}
   END AS given_name,
-  CASE WHEN l.investigator IS NOT NULL AND {asize}(kept) >= 1
-       THEN {elem('kept', f"{asize}(kept)")}
+  CASE WHEN l.investigator IS NOT NULL AND {asize('kept')} >= 1
+       THEN {elem('kept', asize('kept'))}
   END AS family_name,
   l.amount,
   CASE WHEN l.amount IS NOT NULL THEN 'USD' END AS currency,
@@ -237,18 +223,9 @@ LEFT JOIN ({cmap}) cm ON cm.cname = lower(trim(l.region))
 """
 
 
-def _build(dialect: str) -> str:
-    text = _sql(dialect)
-    if dialect == "duck":
-        text = text.replace("year_field RLIKE '^(19|20)[0-9][0-9]$'",
-                            "regexp_matches(year_field, "
-                            "'^(19|20)[0-9][0-9]$')")
-    return text
-
-
 @register(
     "sloan_parse_grants",
-    oracle=_build("duck"),
+    oracle=sqlkit.build(_sql, "duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc="Sloan grants-database parse stage (scripts/local/sloan_to_s3.py)",
@@ -257,4 +234,4 @@ def sloan_parse_grants(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sloan grant-card normalize (module docstring has the full
     semantics map).  One keep-first window on the slug, a ~30-row
     broadcast country-map join; everything else column algebra."""
-    return spark.sql(_build("spark"))
+    return spark.sql(sqlkit.build(_sql, "spark"))

@@ -36,75 +36,17 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from openalex_walden_spark.queries import sqlkit
 from openalex_walden_spark.queries.registry import register
 
 _RANGE = "([0-9]{6})\\\\s*[-–]\\\\s*([0-9]{6})"
 _YY = "^([0-9]{2})([0-9]{2})([0-9]{2})$"
 
 
-def _helpers(dialect: str):
-    if dialect == "spark":
-        g, S = "", "STRING"
-
-        def elem(a: str, i: str) -> str:
-            return f"try_element_at({a}, {i})"
-
-        def asize(a: str) -> str:
-            return f"size({a})"
-
-        def jn(a: str, n: str) -> str:
-            return f"array_join(slice({a}, 1, {n}), ' ')"
-
-        def splitws(x: str) -> str:
-            return f"filter(split({x}, '\\\\s+'), t -> t <> '')"
-
-        def initcap_words(x: str) -> str:
-            return f"initcap({x})"
-    else:
-        g, S = ", 'g'", "VARCHAR"
-
-        def elem(a: str, i: str) -> str:
-            return f"{a}[({i})]"
-
-        def asize(a: str) -> str:
-            return f"len({a})"
-
-        def jn(a: str, n: str) -> str:
-            return f"array_to_string(list_slice({a}, 1, {n}), ' ')"
-
-        def splitws(x: str) -> str:
-            return (f"list_filter(regexp_split_to_array({x}, '\\\\s+'), "
-                    f"t -> t <> '')")
-
-        def initcap_words(x: str) -> str:
-            return (f"array_to_string(list_transform("
-                    f"string_split({x}, ' '), "
-                    f"t -> upper(t[1]) || t[2:]), ' ')")
-
-    return g, S, elem, asize, jn, splitws, initcap_words
-
-
 def _sql(dialect: str) -> str:
-    g, S, elem, asize, jn, splitws, initcap_words = _helpers(dialect)
-
-    def cs(expr: str) -> str:
-        return f"CAST({expr} AS {S})"
-
-    def bar(name: str, prev: str, passthrough: list, cols: list) -> str:
-        if dialect == "spark":
-            ns = ", ".join(f"'{c}', {e}" for c, e in cols)
-            sel = ", ".join(f"_s.{c} AS {c}" for c, _ in cols)
-            pt = ", ".join(f"_p.{c}" for c in passthrough)
-            return (f"{name} AS (\n  SELECT {pt}, {sel}\n  FROM {prev} _p\n"
-                    f"  LATERAL VIEW explode(array(named_struct({ns}))) "
-                    f"_bv AS _s\n)")
-        sel = ", ".join(f"{e} AS {c}" for c, e in cols)
-        pt = ", ".join(passthrough)
-        return (f"{name} AS MATERIALIZED (\n  SELECT {pt}, {sel}\n"
-                f"  FROM {prev}\n)")
-
-    def rx(srcv: str, pat: str, grp: int) -> str:
-        return f"nullif(regexp_extract({srcv}, '{pat}', {grp}), '')"
+    k = sqlkit.kit(dialect)
+    g, S, cs, bar, asize, elem = k.g, k.S, k.cs, k.bar, k.asize, k.elem
+    jn, rx, splitws, titlecase = k.jn, k.rx, k.splitws, k.titlecase
 
     def ymd(tok: str) -> str:
         """yymmdd_to_date (:56-63): yy<=40 pivot, no validation."""
@@ -121,7 +63,7 @@ def _sql(dialect: str) -> str:
         prog = "regexp_replace(call_slug, '-([0-9]{4})$', ' $1')"
     else:
         prog = "regexp_replace(call_slug, '-([0-9]{4})$', ' \\\\1')"
-    prog = initcap_words(f"trim(replace({prog}, '-', ' '))")
+    prog = titlecase(f"trim(replace({prog}, '-', ' '))")
 
     fixture_cols = f"""
     concat(
@@ -218,16 +160,9 @@ FROM named
 """
 
 
-def _build(dialect: str) -> str:
-    text = _sql(dialect)
-    if dialect == "duck":
-        text = text.replace("\\\\", "\\")
-    return text
-
-
 @register(
     "ssf_parse_grants",
-    oracle=_build("duck"),
+    oracle=sqlkit.build(_sql, "duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc="SSF grants parse (scripts/local/ssf_to_s3.py)",
@@ -237,4 +172,4 @@ def ssf_parse_grants(spark: SparkSession, sf_dir: str) -> DataFrame:
     'Lastname, Firstname' PI split with comma-less fallbacks,
     digits-only SEK amounts, '-YYYY'-detached title-cased programmes,
     DNr-else-positional ids.  One scan, zero exchanges, no Python."""
-    return spark.sql(_build("spark"))
+    return spark.sql(sqlkit.build(_sql, "spark"))

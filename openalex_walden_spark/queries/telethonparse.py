@@ -48,6 +48,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from openalex_walden_spark.queries import sqlkit
 from openalex_walden_spark.queries.registry import register
 
 # telethon_to_s3.py:85-90
@@ -69,76 +70,19 @@ _YEARS = "\\\\b(?:19|20)\\\\d{2}\\\\b"
 _PAPER_GATE = "europepmc|doi\\\\.org|ncbi\\\\.nlm|pubmed"
 
 
-def _helpers(dialect: str):
-    if dialect == "spark":
-        g, S = "", "STRING"
+def _sql(dialect: str) -> str:
+    k = sqlkit.kit(dialect)
+    g, cs, bar, arr, asize, elem = k.g, k.cs, k.bar, k.arr, k.asize, k.elem
+    filt, jnall, jnsep, jnspan = k.filt, k.jnall, k.jnsep, k.jnspan
+    like, rxall, splitws = k.like, k.rxall, k.splitws
 
-        def elem(a: str, i: str) -> str:
-            return f"try_element_at({a}, {i})"
-
-        def asize(a: str) -> str:
-            return f"size({a})"
-
-        def sl(a: str, start: str, length: str) -> str:
-            return f"slice({a}, {start}, {length})"
-
-        def jn(a: str, sep: str) -> str:
-            return f"array_join({a}, {sep})"
-
-        def splitws(x: str) -> str:
-            return f"filter(split({x}, '\\\\s+'), t -> t <> '')"
-
-        def filt(a: str, c: str) -> str:
-            return f"filter({a}, t -> {c})"
-
-        def rxall(x: str, pat: str) -> str:
-            return f"regexp_extract_all({x}, '{pat}', 0)"
-
-        def like(x: str, pat: str) -> str:
-            return f"{x} rlike '{pat}'"
-
-        def dedupe_keep_first(a: str) -> str:
+    def dedupe_keep_first(a: str) -> str:
+        if dialect == "spark":
             return (f"filter({a}, (_x, _i) -> "
                     f"NOT array_contains(slice({a}, 1, _i), _x))")
-
-        def arr(*items: str) -> str:
-            return f"array({', '.join(items)})" if items else "array()"
-    else:
-        g, S = ", 'g'", "VARCHAR"
-
-        def elem(a: str, i: str) -> str:
-            return f"{a}[({i})]"
-
-        def asize(a: str) -> str:
-            return f"len({a})"
-
-        def sl(a: str, start: str, length: str) -> str:
-            return f"list_slice({a}, {start}, ({start}) + ({length}) - 1)"
-
-        def jn(a: str, sep: str) -> str:
-            return f"array_to_string({a}, {sep})"
-
-        def splitws(x: str) -> str:
-            return (f"list_filter(regexp_split_to_array({x}, '\\\\s+'), "
-                    f"t -> t <> '')")
-
-        def filt(a: str, c: str) -> str:
-            return f"list_filter({a}, t -> {c})"
-
-        def rxall(x: str, pat: str) -> str:
-            return f"regexp_extract_all({x}, '{pat}', 0)"
-
-        def like(x: str, pat: str) -> str:
-            return f"regexp_matches({x}, '{pat}')"
-
-        def dedupe_keep_first(a: str) -> str:
-            # duck list_position returns 0 (not NULL) when absent
-            return (f"list_transform(list_filter(range(1, {asize(a)} + 1), "
-                    f"_i -> coalesce(list_position(list_slice({a}, 1, "
-                    f"_i - 1), ({a})[_i]), 0) = 0), _i -> ({a})[_i])")
-
-        def arr(*items: str) -> str:
-            return f"[{', '.join(items)}]" if items else "[]::VARCHAR[]"
+        return (f"list_transform(list_filter(range(1, {asize(a)} + 1), "
+                f"_i -> coalesce(list_position(list_slice({a}, 1, "
+                f"_i - 1), ({a})[_i]), 0) = 0), _i -> ({a})[_i])")
 
     def clean(x: str) -> str:
         """telethon clean (:105-112): ws join + absent markers -> NULL."""
@@ -152,30 +96,6 @@ def _helpers(dialect: str):
         e = f"replace({x}, '&amp;', '&')"
         return clean(f"regexp_replace({e}, '<[^>]+>', ' '{g})")
 
-    return (g, S, elem, asize, sl, jn, splitws, filt, rxall, like,
-            dedupe_keep_first, arr, clean, soup_text)
-
-
-def _sql(dialect: str) -> str:
-    (g, S, elem, asize, sl, jn, splitws, filt, rxall, like,
-     dedupe_keep_first, arr, clean, soup_text) = _helpers(dialect)
-
-    def cs(expr: str) -> str:
-        return f"CAST({expr} AS {S})"
-
-    def bar(name: str, prev: str, passthrough: list, cols: list) -> str:
-        if dialect == "spark":
-            ns = ", ".join(f"'{c}', {e}" for c, e in cols)
-            sel = ", ".join(f"_s.{c} AS {c}" for c, _ in cols)
-            pt = ", ".join(f"_p.{c}" for c in passthrough)
-            return (f"{name} AS (\n  SELECT {pt}, {sel}\n  FROM {prev} _p\n"
-                    f"  LATERAL VIEW explode(array(named_struct({ns}))) "
-                    f"_bv AS _s\n)")
-        sel = ", ".join(f"{e} AS {c}" for c, e in cols)
-        pt = ", ".join(passthrough)
-        return (f"{name} AS MATERIALIZED (\n  SELECT {pt}, {sel}\n"
-                f"  FROM {prev}\n)")
-
     toks = ", ".join(f"'{t}'" for t in sorted(
         {t.strip(".") for t in _TITLE_TOKENS}))
 
@@ -183,7 +103,7 @@ def _sql(dialect: str) -> str:
     raw_toks = splitws("pi_clean")
     kept0 = filt(raw_toks, f"trim(BOTH '.' FROM lower(t)) NOT IN ({toks})")
 
-    years = rxall("anni_label", _YEARS)
+    years = rxall("anni_label", _YEARS, 0)
 
     # amount digits: the matched run, every non-digit stripped
     amt_run = f"regexp_extract(amount_strong, '{_AMOUNT}', 1)"
@@ -292,9 +212,9 @@ SELECT
   concat('{_PROVENANCE}-', {cs('wp_id')}) AS funder_award_id,
   title,
   CASE WHEN pi_clean IS NULL THEN NULL
-    ELSE {jn('kept', "' '")} END AS pi_full,
+    ELSE {jnall('kept')} END AS pi_full,
   CASE WHEN pi_clean IS NULL OR {asize('kept')} <= 1 THEN NULL
-    ELSE {jn(sl('kept', '1', f"{asize('kept')} - 1"), "' '")} END
+    ELSE {jnspan('kept', '1', f"{asize('kept')} - 1")} END
     AS pi_given,
   CASE WHEN pi_clean IS NULL THEN NULL
     ELSE {elem('kept', asize('kept'))} END AS pi_family,
@@ -306,27 +226,20 @@ SELECT
     THEN concat(start_year, '-01-01') END AS start_date_raw,
   CASE WHEN end_year IS NOT NULL
     THEN concat(end_year, '-12-31') END AS end_date_raw,
-  nullif({jn(filt(arr(
+  nullif({jnsep(filt(arr(
       "CASE WHEN disease IS NOT NULL THEN concat('Malattie: ', disease) END",
       "CASE WHEN status IS NOT NULL THEN concat('Stato progetto: ', status) END",
       "abstract",
-      f"CASE WHEN {asize('papers')} > 0 THEN concat('Pubblicazioni: ', {jn('papers', chr(39) + ' ; ' + chr(39))}) END"),
+      f"CASE WHEN {asize('papers')} > 0 THEN concat('Pubblicazioni: ', {jnsep('papers', chr(39) + ' ; ' + chr(39))}) END"),
       "t IS NOT NULL"), nl2)}, '') AS description,
   concat('{_DETAIL}', slug, '/') AS landing_page_url
 FROM named2
 """
 
 
-def _build(dialect: str) -> str:
-    text = _sql(dialect)
-    if dialect == "duck":
-        text = text.replace("\\\\", "\\")
-    return text
-
-
 @register(
     "telethon_parse_grants",
-    oracle=_build("duck"),
+    oracle=sqlkit.build(_sql, "duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc=("Fondazione Telethon grants parse "
@@ -338,4 +251,4 @@ def telethon_parse_grants(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-honorific fallback, gated+deduped publication links, packed
     description, EN->IT->H1 title preference.  One scan, zero
     exchanges, no Python."""
-    return spark.sql(_build("spark"))
+    return spark.sql(sqlkit.build(_sql, "spark"))

@@ -71,6 +71,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from openalex_walden_spark.queries import sqlkit
 from openalex_walden_spark.queries.registry import register
 
 # wolfson_to_s3.py:132-137 — lower-lookup, no preprocessing
@@ -204,19 +205,21 @@ def _prog_raw(expr: str = "o_orderkey") -> str:
 # ---------------------------------------------------------------------------
 
 
-def _helpers(dialect: str):
-    if dialect == "spark":
-        g = ""
-        stype = "STRING"
+_COLS = (
+    "member, funder_award_id, source_identifier, title, description, "
+    "amount, amount_raw, currency, award_date, start_date, end_date, "
+    "start_year, end_year, duration_months, grant_programme, "
+    "grant_programme_url, recipient_org, recipient_org_identifier, "
+    "recipient_city, recipient_country, recipient_country_iso, "
+    "recipient_charity_number, recipient_street_address, line_no, "
+    "financial_reference, funding_org, funding_org_identifier, "
+    "source_year, registry_identifier, source_workbook_url"
+)
 
-        def iso(x: str) -> str:
-            return f"date_format(try_cast({x} AS TIMESTAMP), 'yyyy-MM-dd')"
-    else:
-        g = ", 'g'"
-        stype = "VARCHAR"
 
-        def iso(x: str) -> str:
-            return f"strftime(try_cast({x} AS TIMESTAMP), '%Y-%m-%d')"
+def _sql(dialect: str) -> str:
+    k = sqlkit.kit(dialect)
+    g, S, cs, iso = k.g, k.S, k.cs, k.iso
 
     def cw(x: str, extra_na: str = "") -> str:
         """Workbook clean_text (garfield_weston_to_s3.py:185-196)."""
@@ -234,7 +237,7 @@ def _helpers(dialect: str):
         return f"CASE WHEN {v} > 0 THEN {v} END"
 
     def amt_str(x: str) -> str:
-        return f"CAST({amt_num(x)} AS {stype})"
+        return f"CAST({amt_num(x)} AS {S})"
 
     def yr(iso_expr: str) -> str:
         return f"substr({iso_expr}, 1, 4)"
@@ -242,7 +245,7 @@ def _helpers(dialect: str):
     def pint(x: str) -> str:
         """parse_int: first digit run, int-rendered."""
         d = f"nullif(regexp_extract(coalesce({x}, ''), '\\\\d+', 0), '')"
-        return f"CAST(CAST({d} AS INT) AS {stype})"
+        return f"CAST(CAST({d} AS INT) AS {S})"
 
     def in_map(expr: str, table: dict) -> str:
         whens = " ".join(
@@ -253,30 +256,6 @@ def _helpers(dialect: str):
     def upper_iff(cur: str, amount: str) -> str:
         return (f"CASE WHEN {amount} IS NOT NULL AND {cur} IS NOT NULL "
                 f"THEN upper({cur}) END")
-
-    return g, stype, iso, cw, amt_num, amt_str, yr, pint, in_map, upper_iff
-
-
-_COLS = (
-    "member, funder_award_id, source_identifier, title, description, "
-    "amount, amount_raw, currency, award_date, start_date, end_date, "
-    "start_year, end_year, duration_months, grant_programme, "
-    "grant_programme_url, recipient_org, recipient_org_identifier, "
-    "recipient_city, recipient_country, recipient_country_iso, "
-    "recipient_charity_number, recipient_street_address, line_no, "
-    "financial_reference, funding_org, funding_org_identifier, "
-    "source_year, registry_identifier, source_workbook_url"
-)
-
-
-def _sql(dialect: str) -> str:
-    g, stype, iso, cw, amt_num, amt_str, yr, pint, in_map, upper_iff = (
-        _helpers(dialect)
-    )
-    S = stype
-
-    def cs(expr: str) -> str:
-        return f"CAST({expr} AS {S})"
 
     # --- garfield_weston ---------------------------------------------------
     gw_amt = amt_num("gw.amt_raw")
@@ -730,17 +709,9 @@ UNION ALL SELECT {_COLS} FROM vv_out
 """
 
 
-def _build(dialect: str) -> str:
-    text = _sql(dialect)
-    if dialect == "duck":
-        text = text.replace("\\\\", "\\")
-        text = text.replace("AS STRING", "AS VARCHAR")
-    return text
-
-
 @register(
     "threesixty_simple_parse",
-    oracle=_build("duck"),
+    oracle=sqlkit.build(_sql, "duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc=("360Giving workbook-parse family, simple column-map publishers "
@@ -752,4 +723,4 @@ def threesixty_simple_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seven 360Giving publishers in one union plan (module docstring
     has the per-member semantics map).  Column algebra + two keep-one
     windows + one DISTINCT, all keyed on the award id."""
-    return spark.sql(_build("spark"))
+    return spark.sql(sqlkit.build(_sql, "spark"))

@@ -60,39 +60,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from openalex_walden_spark.queries import sqlkit
 from openalex_walden_spark.queries.registry import register
 
 _ARCADIA_PAGE = "https://arcadiafund.org.uk/grants-awarded"
-
-
-def _helpers(dialect: str):
-    if dialect == "spark":
-        g, stype = "", "STRING"
-
-        def iso(x: str) -> str:
-            return f"date_format(try_cast({x} AS TIMESTAMP), 'yyyy-MM-dd')"
-
-        def trunc_int(x: str) -> str:
-            return f"CAST({x} AS BIGINT)"
-
-        fmt = "format_string"
-    else:
-        g, stype = ", 'g'", "VARCHAR"
-
-        def iso(x: str) -> str:
-            return f"strftime(try_cast({x} AS TIMESTAMP), '%Y-%m-%d')"
-
-        def trunc_int(x: str) -> str:
-            return f"CAST(trunc({x}) AS BIGINT)"
-
-        fmt = "printf"
-
-    def clean_ws(x: str) -> str:
-        """Arcadia clean_text: NBSP to space, all ws runs to one."""
-        c = f"regexp_replace(replace({x}, chr(160), ' '), '\\\\s+', ' '{g})"
-        return f"nullif(trim({c}), '')"
-
-    return g, stype, iso, trunc_int, fmt, clean_ws
 
 
 # ---------------------------------------------------------------------------
@@ -101,10 +72,8 @@ def _helpers(dialect: str):
 
 
 def _arcadia_sql(dialect: str) -> str:
-    g, S, iso, trunc_int, fmt, clean_ws = _helpers(dialect)
-
-    def cs(expr: str) -> str:
-        return f"CAST({expr} AS {S})"
+    k = sqlkit.kit(dialect)
+    cs, clean_ws, fmt, trunc_int = k.cs, k.clean_ws, k.fmt, k.trunc_int
 
     amt_num = ("CASE WHEN try_cast(replace(replace(ar.amt_raw, ',', ''), "
                "'$', '') AS DOUBLE) > 0 THEN "
@@ -195,10 +164,8 @@ FROM ar
 
 
 def _wellcome_sql(dialect: str) -> str:
-    g, S, iso, trunc_int, fmt, clean_ws = _helpers(dialect)
-
-    def cs(expr: str) -> str:
-        return f"CAST({expr} AS {S})"
+    k = sqlkit.kit(dialect)
+    cs, iso = k.cs, k.iso
 
     # grant_ref: Internal ID stripped; NULL/blank falls back to the
     # 360G identifier with prefix dropped and '_' restored to '/'
@@ -289,17 +256,9 @@ FROM wc_first
 """
 
 
-def _build(which: str, dialect: str) -> str:
-    text = (_arcadia_sql if which == "arcadia" else _wellcome_sql)(dialect)
-    if dialect == "duck":
-        text = text.replace("\\\\", "\\")
-        text = text.replace("AS STRING", "AS VARCHAR")
-    return text
-
-
 @register(
     "arcadia_parse_grants",
-    oracle=_build("arcadia", "duck"),
+    oracle=sqlkit.build(_arcadia_sql, "duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc="Arcadia Fund 360Giving CSV parse (scripts/local/arcadia_to_s3.py)",
@@ -309,12 +268,12 @@ def arcadia_parse_grants(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arcadia normalize (module docstring has the semantics map):
     single scan of column algebra, the fractional-vs-integral amount
     render and the synthetic year-bound dates preserved."""
-    return spark.sql(_build("arcadia", "spark"))
+    return spark.sql(sqlkit.build(_arcadia_sql, "spark"))
 
 
 @register(
     "wellcome_parse_grants",
-    oracle=_build("wellcome", "duck"),
+    oracle=sqlkit.build(_wellcome_sql, "duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc=("Wellcome Trust 360Giving workbook parse "
@@ -324,4 +283,4 @@ def wellcome_parse_grants(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wellcome normalize: the citable Internal-ID award key with the
     360G-derived fallback, keep-first dedup on grant_ref, DOUBLE
     amounts; one scan + one keep-first window."""
-    return spark.sql(_build("wellcome", "spark"))
+    return spark.sql(sqlkit.build(_wellcome_sql, "spark"))

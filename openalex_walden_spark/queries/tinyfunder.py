@@ -64,6 +64,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from openalex_walden_spark.queries import sqlkit
 from openalex_walden_spark.queries.registry import register
 
 _TITLE_RE = "(?i)^(Dr|Prof|Professor|Mr|Mrs|Ms|Miss)\\\\.?\\\\s+"
@@ -74,60 +75,13 @@ _RNB_ROW = ("^([^-–]{4,60})\\\\s[-–]\\\\s(.+?)\\\\s[-–]\\\\s"
             "\\\\$?([0-9,]+)\\\\s*$")
 
 
-def _helpers(dialect: str):
-    if dialect == "spark":
-        g, stype = "", "STRING"
-        asize = "size"
-
-        def rl(col: str, pat: str) -> str:
-            return f"{col} RLIKE '{pat}'"
-
-        def elem(a: str, i: str) -> str:
-            return f"try_element_at({a}, {i})"
-
-        def idx_of(arr: str, cond: str, agg: str = "array_min") -> str:
-            return (f"{agg}(zip_with({arr}, sequence(1, size({arr})), "
-                    f"(t, i) -> CASE WHEN {cond} THEN i END))")
-
-        def filt(arr: str, cond: str) -> str:
-            return f"filter({arr}, t -> {cond})"
-    else:
-        g, stype = ", 'g'", "VARCHAR"
-        asize = "len"
-
-        def rl(col: str, pat: str) -> str:
-            return f"regexp_matches({col}, '{pat}')"
-
-        def elem(a: str, i: str) -> str:
-            return f"{a}[{i}]"
-
-        def idx_of(arr: str, cond: str, agg: str = "array_min") -> str:
-            agg = "list_min" if agg == "array_min" else "list_max"
-            return (f"{agg}(list_transform({arr}, (t, i) -> "
-                    f"CASE WHEN {cond} THEN i END))")
-
-        def filt(arr: str, cond: str) -> str:
-            return f"list_filter({arr}, t -> {cond})"
-
-    def clean(x: str) -> str:
-        """clean (bacp_to_s3.py:36-39): ws collapse, strip, NULL."""
-        return (f"nullif(trim(regexp_replace(coalesce({x}, ''), "
-                f"'\\\\s+', ' '{g})), '')")
-
-    def slug(x: str) -> str:
-        """slug (bacp_to_s3.py:50): lower non-alnum runs, strip, [:90]."""
-        s = (f"regexp_replace(lower(coalesce({x}, '')), '[^a-z0-9]+', "
-             f"'-'{g})")
-        return f"substr(trim(BOTH '-' FROM {s}), 1, 90)"
-
-    return g, stype, asize, rl, elem, idx_of, filt, clean, slug
-
-
 def _split_common(dialect: str, raw: str, *, strip_title: bool,
                   cut: str | None, degree_tail: bool = False,
                   min2max4: bool = True, mono_family: bool = False):
     """The kit's split_name variants as (given, family) SQL pair."""
-    g, stype, asize, rl, elem, idx_of, filt, clean, slug = _helpers(dialect)
+    k = sqlkit.kit(dialect)
+    g, asize, clean, elem, head = k.g, k.asize, k.clean, k.elem, k.head
+    jnagg = k.jnagg
     n = clean(raw)
     if strip_title:
         n = f"regexp_replace({n}, '{_TITLE_RE}', ''{g})"
@@ -143,24 +97,22 @@ def _split_common(dialect: str, raw: str, *, strip_title: bool,
     n = f"trim(coalesce({n}, ''))"
     if dialect == "spark":
         toks = f"filter(split({n}, '\\\\s+'), x -> x <> '')"
-        join_head = (f"array_join(slice(toks, 1, {asize}(toks) - 1), ' ')")
     else:
         toks = f"list_filter(regexp_split_to_array({n}, '\\s+'), x -> x <> '')"
-        join_head = (f"list_aggr(list_slice(toks, 1, {asize}(toks) - 1), "
-                     f"'string_agg', ' ')")
-    last = elem("toks", f"{asize}(toks)")
+    join_head = jnagg(head("toks", asize("toks") + " - 1"))
+    last = elem("toks", asize("toks"))
     if min2max4:
-        given = (f"CASE WHEN {asize}(toks) BETWEEN 2 AND 4 "
+        given = (f"CASE WHEN {asize('toks')} BETWEEN 2 AND 4 "
                  f"THEN {join_head} END")
-        family = (f"CASE WHEN {asize}(toks) BETWEEN 2 AND 4 "
+        family = (f"CASE WHEN {asize('toks')} BETWEEN 2 AND 4 "
                   f"THEN {last} END")
     elif mono_family:
-        given = f"CASE WHEN {asize}(toks) >= 2 THEN {join_head} END"
-        family = f"CASE WHEN {asize}(toks) >= 1 THEN {last} END"
+        given = f"CASE WHEN {asize('toks')} >= 2 THEN {join_head} END"
+        family = f"CASE WHEN {asize('toks')} >= 1 THEN {last} END"
     else:  # gla: <2 tokens -> (None, tok0-or-None)
-        given = f"CASE WHEN {asize}(toks) >= 2 THEN {join_head} END"
-        family = (f"CASE WHEN {asize}(toks) >= 2 THEN {last} "
-                  f"WHEN {asize}(toks) = 1 THEN {elem('toks', '1')} END")
+        given = f"CASE WHEN {asize('toks')} >= 2 THEN {join_head} END"
+        family = (f"CASE WHEN {asize('toks')} >= 2 THEN {last} "
+                  f"WHEN {asize('toks')} = 1 THEN {elem('toks', '1')} END")
     # inline the token-array expression (no tokenized stage per arm)
     given = given.replace("toks", f"({toks})")
     family = family.replace("toks", f"({toks})")
@@ -168,10 +120,10 @@ def _split_common(dialect: str, raw: str, *, strip_title: bool,
 
 
 def _sql(dialect: str) -> str:
-    g, S, asize, rl, elem, idx_of, filt, clean, slug = _helpers(dialect)
-
-    def cs(expr: str) -> str:
-        return f"CAST({expr} AS {S})"
+    k = sqlkit.kit(dialect)
+    g, S, cs, bar, asize, clean = k.g, k.S, k.cs, k.bar, k.asize, k.clean
+    elem, filt, idx_of, rl, rx = k.elem, k.filt, k.idx_of, k.rl, k.rx
+    slug = k.slug
 
     if dialect == "spark":
         def arr(*items: str) -> str:
@@ -309,8 +261,8 @@ def _sql(dialect: str) -> str:
         "'Donate'")
     # candidates: following nodes (positions 2..) >10 chars, not NAME_DEG
     gla_cand = filt(
-        f"slice(lines, 2, {asize}(lines) - 1)" if dialect == "spark"
-        else f"list_slice(lines, 2, {asize}(lines))",
+        f"slice(lines, 2, {asize('lines')} - 1)" if dialect == "spark"
+        else f"list_slice(lines, 2, {asize('lines')})",
         f"length(t) > 10 AND NOT {rl('t', _NAME_DEG)}")
     _, gla_given, gla_family = _split_common(
         dialect, "heading", strip_title=False, cut=",", min2max4=False)
@@ -390,27 +342,6 @@ def _sql(dialect: str) -> str:
     _, rnb_given, rnb_family = _split_common(
         dialect, "name_cap", strip_title=True, cut=None, min2max4=False,
         mono_family=True)
-
-    def rx(src: str, pat: str, grp: int) -> str:
-        return f"nullif(regexp_extract({src}, '{pat}', {grp}), '')"
-
-    def bar(name: str, prev: str, passthrough: list, cols: list) -> str:
-        """One derivation layer behind a 1:1 explode(array(named_struct))
-        Generate barrier (Spark) / MATERIALIZED (DuckDB) so the heavy
-        token-split and window-scan expressions are evaluated once and
-        CollapseProject cannot multiply them into the keyed/out layers
-        (the plain chained form inlined to a 270 KB optimized plan)."""
-        if dialect == "spark":
-            ns = ", ".join(f"'{c}', {e}" for c, e in cols)
-            sel = ", ".join(f"_s.{c} AS {c}" for c, _ in cols)
-            pt = ", ".join(f"_p.{c}" for c in passthrough)
-            return (f"{name} AS (\n  SELECT {pt}, {sel}\n  FROM {prev} _p\n"
-                    f"  LATERAL VIEW explode(array(named_struct({ns}))) "
-                    f"_bv AS _s\n)")
-        sel = ", ".join(f"{e} AS {c}" for c, e in cols)
-        pt = ", ".join(passthrough)
-        return (f"{name} AS MATERIALIZED (\n  SELECT {pt}, {sel}\n"
-                f"  FROM {prev}\n)")
 
     return f"""
 WITH bacp_pages AS (
@@ -611,17 +542,9 @@ UNION ALL SELECT * FROM rnb_out
 """
 
 
-def _build(dialect: str) -> str:
-    text = _sql(dialect)
-    if dialect == "duck":
-        text = text.replace("\\\\", "\\")
-        text = text.replace("AS STRING", "AS VARCHAR")
-    return text
-
-
 @register(
     "tinyfunder_parse_awards",
-    oracle=_build("duck"),
+    oracle=sqlkit.build(_sql, "duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc=("Tiny-funder line-scan scraper kit (scripts/local/{bacp,bdsra,"
@@ -632,4 +555,4 @@ def tinyfunder_parse_awards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Five line-scan scrapers in one union plan (module docstring has
     the per-member semantics map).  Array-HOF window scans; the only
     exchanges are the five per-member keep-first windows."""
-    return spark.sql(_build("spark"))
+    return spark.sql(sqlkit.build(_sql, "spark"))

@@ -50,6 +50,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from openalex_walden_spark.queries import sqlkit
 from openalex_walden_spark.queries.registry import register
 
 # Trailing name suffixes (twas_awards_to_s3.py:131) — compared on
@@ -103,16 +104,11 @@ FROM orders
 
 
 def _sql(dialect: str) -> str:
-    if dialect == "spark":
-        stype, br = "STRING", "$1"
-        fmt = "format_string"
-        rl = lambda col, pat: f"{col} RLIKE '{pat}'"  # noqa: E731
-        twas_word = "(?i)\\\\bTWAS\\\\b"
-    else:
-        stype, br = "VARCHAR", "\\1"
-        fmt = "printf"
-        rl = lambda col, pat: f"regexp_matches({col}, '{pat}')"  # noqa: E731
-        twas_word = "(?i)\\bTWAS\\b"
+    k = sqlkit.kit(dialect)
+    g, S, bar, asize, elem, fmt = k.g, k.S, k.bar, k.asize, k.elem, k.fmt
+    head, jnagg, rl, slugify = k.head, k.jnagg, k.rl, k.slugify
+    br = "$1" if dialect == "spark" else "\\1"
+    twas_word = "(?i)\\\\bTWAS\\\\b"
     rows = (_ROWS_SPARK if dialect == "spark"
             else _ROWS_SPARK.replace("AS STRING", "AS VARCHAR"))
 
@@ -147,40 +143,13 @@ def _sql(dialect: str) -> str:
         )
         return f"list_slice({arr}, 1, {keep})"
 
-    joinsep = (lambda a: f"array_join({a}, ' ')") if dialect == "spark" \
-        else (lambda a: f"list_aggr({a}, 'string_agg', ' ')")
-    asize = "size" if dialect == "spark" else "len"
-    elem = (lambda a, i: f"try_element_at({a}, {i})") if dialect == "spark" \
-        else (lambda a, i: f"{a}[{i}]")
-
     # amount_per_laureate / portion_for trimmed renders
     def trim_num(expr: str, places: int) -> str:
-        return (
-            f"CASE WHEN {expr} = floor({expr}) "
-            f"THEN CAST(CAST({expr} AS BIGINT) AS {stype}) "
-            f"ELSE regexp_replace(regexp_replace("
-            f"{fmt}('%.{places}f', {expr}), '0+$', ''), '[.]$', '') END"
-            if dialect == "spark" else
-            f"CASE WHEN {expr} = floor({expr}) "
-            f"THEN CAST(CAST({expr} AS BIGINT) AS {stype}) "
-            f"ELSE regexp_replace(regexp_replace("
-            f"{fmt}('%.{places}f', {expr}), '0+$', '', 'g'), '[.]$', '') END"
-        )
-
-    def layer(name: str, prev: str, cols: list) -> str:
-        """One derivation layer: a 1:1 explode(array(named_struct(...)))
-        Generate on the Spark side so CollapseProject cannot multiply
-        the chained regex derivations across layers (the plain chained
-        form inlined to a 167 KB plan that fell out of whole-stage
-        codegen); MATERIALIZED on the DuckDB side for the same reason
-        (DuckDB inlines CTEs and re-evaluates per reference)."""
-        if dialect == "spark":
-            ns = ", ".join(f"'{c}', {e}" for c, e in cols)
-            sel = ", ".join(f"_s.{c} AS {c}" for c, _ in cols)
-            return (f"{name} AS (\n  SELECT _p.*, {sel}\n  FROM {prev} _p\n"
-                    f"  LATERAL VIEW explode(array(named_struct({ns}))) _bv AS _s\n)")
-        sel = ", ".join(f"{e} AS {c}" for c, e in cols)
-        return f"{name} AS MATERIALIZED (\n  SELECT *, {sel}\n  FROM {prev}\n)"
+        return (f"CASE WHEN {expr} = floor({expr}) "
+                f"THEN CAST(CAST({expr} AS BIGINT) AS {S}) "
+                f"ELSE regexp_replace(regexp_replace("
+                f"{fmt}('%.{places}f', {expr}), '0+$', ''{g}), '[.]$', '') "
+                f"END")
 
     for_cite = "(?i),? (for .*)$"
     for_cite_x = "regexp_extract(raw_text, '(?i)^(.*?),? (for .*)$', @N@)"
@@ -213,7 +182,7 @@ def _sql(dialect: str) -> str:
         # split_citation: the ', for ...' clause first, else the
         # honoured/recognized clause whose citation keeps its leading
         # comma (reference quirk, twas_awards_to_s3.py:258-271).
-        layer("cited", "texts", [
+        bar("cited", "texts", ["*"], [
             ("before_part",
              f"CASE WHEN {rl('raw_text', for_cite)} THEN "
              f"{collapse(n(for_cite_x, 1))} "
@@ -226,14 +195,14 @@ def _sql(dialect: str) -> str:
              f"{collapse(n(hon_cite_x, 2))} END"),
         ]),
         # parse_name_country input: strip 'Winner:' + leading asterisks
-        layer("named", "cited", [
+        bar("named", "cited", ["*"], [
             ("p",
              "trim(BOTH ' ,' FROM regexp_replace(regexp_replace("
              "coalesce(before_part, ''), '(?i)^Winner: *', ''),"
              " '^[*]+ *', ''))"),
         ]),
         # the three announcement styles in reference order
-        layer("styled", "named", [
+        bar("styled", "named", ["*"], [
             ("laureate_name",
              f"CASE WHEN {rl('p', sa)} THEN {collapse(n(sa_x, 1))} "
              f"WHEN {rl('p', sb)} THEN {collapse(n(sb_x, 1))} "
@@ -244,14 +213,14 @@ def _sql(dialect: str) -> str:
              f"WHEN {rl('p', sb)} THEN {collapse(n(sb_x, 2))} "
              f"WHEN {rl('p', sc)} THEN {collapse(n(sc_x, 2))} END"),
             ("affiliation",
-             f"CASE WHEN {rl('p', sa)} THEN CAST(NULL AS {stype}) "
-             f"WHEN {rl('p', sb)} THEN CAST(NULL AS {stype}) "
+             f"CASE WHEN {rl('p', sa)} THEN CAST(NULL AS {S}) "
+             f"WHEN {rl('p', sb)} THEN CAST(NULL AS {S}) "
              f"WHEN {rl('p', sc)} THEN " +
              collapse("regexp_replace(" + n(sc_x, 3) + ", '^[, ]+', '')") +
              " END"),
         ]),
         # clean_field + the USD amount extraction
-        layer("fielded", "styled", [
+        bar("fielded", "styled", ["*"], [
             ("award_field",
              f"CASE WHEN field_c IS NOT NULL THEN "
              f"CASE {field_clean} "
@@ -262,7 +231,7 @@ def _sql(dialect: str) -> str:
              "'(?i)USD *([0-9][0-9,]*)', 1), ',', ''), '')"),
         ]),
         # award_name_for + name tokens + shared-prize arithmetic
-        layer("shaped0", "fielded", [
+        bar("shaped0", "fielded", ["*"], [
             ("award_name",
              f"CASE WHEN label_c IS NOT NULL AND {rl('label_c', twas_word)} "
              f"THEN trim(regexp_replace(label_c, '(?i), *shared$', '')) "
@@ -298,16 +267,16 @@ shaped AS (
   SELECT * FROM shaped0 WHERE laureate_name IS NOT NULL
 )
 SELECT
-  concat('twas-awards-', CAST(year AS {stype}), '-',
-         {_sql_slug_placeholder("award_field", "slug")}, '-',
-         {_sql_slug_placeholder("laureate_name", "slug")}) AS funder_award_id,
-  CAST(year AS {stype}) AS award_year,
+  concat('twas-awards-', CAST(year AS {S}), '-',
+         {slugify("award_field")}, '-',
+         {slugify("laureate_name")}) AS funder_award_id,
+  CAST(year AS {S}) AS award_year,
   award_name, award_field, laureate_name,
-  CASE WHEN {asize}(name_tokens) > 1
-       THEN {joinsep(f"{('slice' if dialect == 'spark' else 'list_slice')}(name_tokens, 1, {asize}(name_tokens) - 1)")}
+  CASE WHEN {asize('name_tokens')} > 1
+       THEN {jnagg(head('name_tokens', asize('name_tokens') + ' - 1'))}
   END AS laureate_given_name,
-  CASE WHEN {asize}(name_tokens) >= 1
-       THEN {elem("name_tokens", f"{asize}(name_tokens)")}
+  CASE WHEN {asize('name_tokens')} >= 1
+       THEN {elem("name_tokens", asize("name_tokens"))}
   END AS laureate_family_name,
   country AS laureate_country_or_nationality,
   nullif(affiliation, '') AS laureate_affiliation_or_context,
@@ -317,7 +286,7 @@ SELECT
   CASE WHEN amt_per IS NOT NULL THEN {trim_num("amt_per", 6)} END
     AS amount_per_laureate,
   CASE WHEN source_award_amount IS NOT NULL THEN 'USD' END AS currency,
-  CAST(group_size AS {stype}) AS award_group_size,
+  CAST(group_size AS {S}) AS award_group_size,
   {trim_num("portion_v", 8)} AS portion,
   source_url AS landing_page_url,
   source_page_title,
@@ -326,48 +295,9 @@ FROM shaped
 """
 
 
-def _sql_slug_placeholder(col: str, _tag: str) -> str:  # pragma: no cover
-    raise NotImplementedError  # replaced below; keeps the template readable
-
-
-# The slug spelling differs per dialect; build both texts by formatting
-# the template with the right slug() lambda bound.
-def _build(dialect: str) -> str:
-    g = "" if dialect == "spark" else ", 'g'"
-
-    def slug(col: str) -> str:
-        return (
-            f"coalesce(nullif(trim(BOTH '-' FROM regexp_replace("
-            f"lower(coalesce({col}, '')), '[^a-z0-9]+', '-'{g})), ''),"
-            f" 'unknown')"
-        )
-
-    global _sql_slug_placeholder
-    saved = _sql_slug_placeholder
-    _sql_slug_placeholder = lambda col, _tag: slug(col)  # noqa: E731
-    try:
-        text = _sql(dialect)
-    finally:
-        _sql_slug_placeholder = saved
-    if dialect == "duck":
-        # Spark string literals are backslash-escaped, DuckDB's are
-        # standard-SQL: halve the doubled backslashes, spell RLIKE as
-        # regexp_matches(x, p), and split() as string_split().
-        text = text.replace("\\\\", "\\")
-        text = re.sub(
-            r"(\S+(?:\([^()]*\))?) RLIKE ('(?:[^']|'')*')",
-            r"regexp_matches(\1, \2)",
-            text,
-        )
-    return text
-
-
-import re  # noqa: E402  (used by _build's RLIKE rewrite)
-
-
 @register(
     "twas_parse_awards",
-    oracle=_build("duck"),
+    oracle=sqlkit.build(_sql, "duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc="TWAS awards-archive parse stage (scripts/local/twas_awards_to_s3.py)",
@@ -378,4 +308,4 @@ def twas_parse_awards(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics map with reference line cites).  One scan, pure column
     algebra under one round-robin spread exchange, no hash shuffle, no
     Python."""
-    return spark.sql(_build("spark"))
+    return spark.sql(sqlkit.build(_sql, "spark"))

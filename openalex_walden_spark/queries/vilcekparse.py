@@ -52,6 +52,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from openalex_walden_spark.queries import sqlkit
 from openalex_walden_spark.queries.registry import register
 
 # vilcek_prizes_to_s3.py:133-141 — scheme name -> fallback amount
@@ -74,103 +75,24 @@ _HON_PREFIX = ("(?i)^(?:Dr\\\\.?|Prof\\\\.?|Professor|Mr\\\\.?|Ms\\\\.?|"
 _SLUGIFY = "[^a-z0-9]+"
 
 
-def _helpers(dialect: str):
-    if dialect == "spark":
-        g, S = "", "STRING"
+def _sql(dialect: str) -> str:
+    k = sqlkit.kit(dialect)
+    g, cs, bar, arr, asize, elem = k.g, k.cs, k.bar, k.arr, k.asize, k.elem
+    filt, jn, like, sl, splitws = k.filt, k.jn, k.like, k.sl, k.splitws
+    striphtml = k.striphtml
 
-        def arr_pairs(pairs) -> str:
+    def arr_pairs(pairs) -> str:
+        if dialect == "spark":
             if not pairs:
                 return "array()"
             items = ", ".join(
                 f"named_struct('nm', {n}, 'sl', {s})" for n, s in pairs)
             return f"array({items})"
-
-        def arr(*items: str) -> str:
-            return f"array({', '.join(items)})" if items else "array()"
-
-        def elem(a: str, i: str) -> str:
-            return f"try_element_at({a}, {i})"
-
-        def asize(a: str) -> str:
-            return f"size({a})"
-
-        def sl(a: str, start: str, length: str) -> str:
-            return f"slice({a}, {start}, {length})"
-
-        def jn(a: str, n: str) -> str:
-            return f"array_join(slice({a}, 1, {n}), ' ')"
-
-        def splitws(x: str) -> str:
-            return f"filter(split({x}, '\\\\s+'), t -> t <> '')"
-
-        def filt(a: str, c: str) -> str:
-            return f"filter({a}, t -> {c})"
-
-        def like(x: str, pat: str) -> str:
-            return f"{x} rlike '{pat}'"
-    else:
-        g, S = ", 'g'", "VARCHAR"
-
-        def arr_pairs(pairs) -> str:
-            if not pairs:
-                return ("[]::STRUCT(nm VARCHAR, sl VARCHAR)[]")
-            items = ", ".join(
-                "{'nm': %s, 'sl': %s}" % (n, s) for n, s in pairs)
-            return f"[{items}]"
-
-        def arr(*items: str) -> str:
-            return f"[{', '.join(items)}]" if items else "[]::VARCHAR[]"
-
-        def elem(a: str, i: str) -> str:
-            return f"{a}[({i})]"
-
-        def asize(a: str) -> str:
-            return f"len({a})"
-
-        def sl(a: str, start: str, length: str) -> str:
-            return f"list_slice({a}, {start}, ({start}) + ({length}) - 1)"
-
-        def jn(a: str, n: str) -> str:
-            return f"array_to_string(list_slice({a}, 1, {n}), ' ')"
-
-        def splitws(x: str) -> str:
-            return (f"list_filter(regexp_split_to_array({x}, '\\\\s+'), "
-                    f"t -> t <> '')")
-
-        def filt(a: str, c: str) -> str:
-            return f"list_filter({a}, t -> {c})"
-
-        def like(x: str, pat: str) -> str:
-            return f"regexp_matches({x}, '{pat}')"
-
-    def striphtml(x: str) -> str:
-        e = f"regexp_replace({x}, '<[^>]+>', ' '{g})"
-        e = f"replace({e}, '&amp;', '&')"
-        return f"nullif(trim(regexp_replace({e}, '\\\\s+', ' '{g})), '')"
-
-    return (g, S, arr_pairs, arr, elem, asize, sl, jn, splitws, filt,
-            like, striphtml)
-
-
-def _sql(dialect: str) -> str:
-    (g, S, arr_pairs, arr, elem, asize, sl, jn, splitws, filt, like,
-     striphtml) = _helpers(dialect)
-
-    def cs(expr: str) -> str:
-        return f"CAST({expr} AS {S})"
-
-    def bar(name: str, prev: str, passthrough: list, cols: list) -> str:
-        if dialect == "spark":
-            ns = ", ".join(f"'{c}', {e}" for c, e in cols)
-            sel = ", ".join(f"_s.{c} AS {c}" for c, _ in cols)
-            pt = ", ".join(f"_p.{c}" for c in passthrough)
-            return (f"{name} AS (\n  SELECT {pt}, {sel}\n  FROM {prev} _p\n"
-                    f"  LATERAL VIEW explode(array(named_struct({ns}))) "
-                    f"_bv AS _s\n)")
-        sel = ", ".join(f"{e} AS {c}" for c, e in cols)
-        pt = ", ".join(passthrough)
-        return (f"{name} AS MATERIALIZED (\n  SELECT {pt}, {sel}\n"
-                f"  FROM {prev}\n)")
+        if not pairs:
+            return ("[]::STRUCT(nm VARCHAR, sl VARCHAR)[]")
+        items = ", ".join(
+            "{'nm': %s, 'sl': %s}" % (n, s) for n, s in pairs)
+        return f"[{items}]"
 
     # prize_type arm table — ordered (name, slug) literal pairs
     P = "Vilcek Prize"
@@ -359,16 +281,9 @@ WHERE year_i IS NOT NULL
 """
 
 
-def _build(dialect: str) -> str:
-    text = _sql(dialect)
-    if dialect == "duck":
-        text = text.replace("\\\\", "\\")
-    return text
-
-
 @register(
     "vilcek_parse_prizes",
-    oracle=_build("duck"),
+    oracle=sqlkit.build(_sql, "duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc=("Vilcek Foundation prizes parse "
@@ -381,4 +296,4 @@ def vilcek_parse_prizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     with no-year drops, single-pass honorific strip + degree peel,
     600-char word-safe bio truncation, comma-location US rule.  One
     scan under one round-robin spread exchange, no Python."""
-    return spark.sql(_build("spark"))
+    return spark.sql(sqlkit.build(_sql, "spark"))

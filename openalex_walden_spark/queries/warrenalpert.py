@@ -39,6 +39,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from openalex_walden_spark.queries import sqlkit
 from openalex_walden_spark.queries.registry import register
 
 _COHORT_AMOUNT = "500000.0"
@@ -52,109 +53,26 @@ _PROVENANCE = "warren_alpert_prize"
 _YEARS = "(?:19|20)[0-9]{2}"
 
 
-def _helpers(dialect: str):
-    if dialect == "spark":
-        g, S = "", "STRING"
+def _sql(dialect: str) -> str:
+    k = sqlkit.kit(dialect)
+    g, S, cs, bar, arr, asize = k.g, k.S, k.cs, k.bar, k.arr, k.asize
+    elem, filt, head, jnsep, rxall = k.elem, k.filt, k.head, k.jnsep, k.rxall
+    striphtml, tx = k.striphtml, k.tx
 
-        def elem(a: str, i: str) -> str:
-            return f"try_element_at({a}, {i})"
-
-        def asize(a: str) -> str:
-            return f"size({a})"
-
-        def rxall(x: str, pat: str) -> str:
-            return f"regexp_extract_all({x}, '{pat}', 0)"
-
-        def filt(a: str, c: str) -> str:
-            return f"filter({a}, t -> {c})"
-
-        def tx(a: str, e: str) -> str:
-            return f"transform({a}, t -> {e})"
-
-        def jnsep(a: str, sep: str) -> str:
-            return f"array_join({a}, {sep})"
-
-        def wstruct(wid: str, first: str, last: str, wtitle: str,
-                    bio: str, positions: str, headshot: str) -> str:
+    def wstruct(wid: str, first: str, last: str, wtitle: str,
+                bio: str, positions: str, headshot: str) -> str:
+        if dialect == "spark":
             return (f"named_struct('wid', {wid}, 'fn', {first}, "
                     f"'ln', {last}, 'wtitle', {wtitle}, 'bio', {bio}, "
                     f"'positions', {positions}, 'headshot', {headshot})")
+        return (f"{{'wid': {wid}, 'fn': {first}, 'ln': {last}, "
+                f"'wtitle': {wtitle}, 'bio': {bio}, "
+                f"'positions': {positions}, 'headshot': {headshot}}}")
 
-        def pstruct(title: str, loc: str) -> str:
-            return f"named_struct('ptitle', {title}, 'loc', {loc})"
-
-        def arr(*items: str) -> str:
-            return f"array({', '.join(items)})" if items else "array()"
-
-        def parr(*items: str) -> str:
-            return (f"array({', '.join(items)})" if items else
-                    "slice(array(named_struct('ptitle', '', "
-                    "'loc', '')), 1, 0)")
-    else:
-        g, S = ", 'g'", "VARCHAR"
-
-        def elem(a: str, i: str) -> str:
-            return f"{a}[({i})]"
-
-        def asize(a: str) -> str:
-            return f"len({a})"
-
-        def rxall(x: str, pat: str) -> str:
-            return f"regexp_extract_all({x}, '{pat}', 0)"
-
-        def filt(a: str, c: str) -> str:
-            return f"list_filter({a}, t -> {c})"
-
-        def tx(a: str, e: str) -> str:
-            return f"list_transform({a}, t -> {e})"
-
-        def jnsep(a: str, sep: str) -> str:
-            return f"array_to_string({a}, {sep})"
-
-        def wstruct(wid: str, first: str, last: str, wtitle: str,
-                    bio: str, positions: str, headshot: str) -> str:
-            return (f"{{'wid': {wid}, 'fn': {first}, 'ln': {last}, "
-                    f"'wtitle': {wtitle}, 'bio': {bio}, "
-                    f"'positions': {positions}, 'headshot': {headshot}}}")
-
-        def pstruct(title: str, loc: str) -> str:
-            return f"{{'ptitle': {title}, 'loc': {loc}}}"
-
-        def arr(*items: str) -> str:
-            return f"[{', '.join(items)}]"
-
-        def parr(*items: str) -> str:
-            return (f"[{', '.join(items)}]" if items else
-                    "list_filter([{'ptitle': '', 'loc': ''}], t -> false)")
-
-    def totext(x: str) -> str:
-        e = f"regexp_replace({x}, '<[^>]+>', ' '{g})"
-        e = f"replace({e}, '&amp;', '&')"
-        return f"nullif(trim(regexp_replace({e}, '\\\\s+', ' '{g})), '')"
-
-    return (g, S, elem, asize, rxall, filt, tx, jnsep, wstruct, pstruct,
-            arr, parr, totext)
-
-
-def _sql(dialect: str) -> str:
-    (g, S, elem, asize, rxall, filt, tx, jnsep, wstruct, pstruct, arr,
-     parr, totext) = _helpers(dialect)
-
-    def cs(expr: str) -> str:
-        return f"CAST({expr} AS {S})"
-
-    def bar(name: str, prev: str, passthrough: list, cols: list) -> str:
+    def pstruct(title: str, loc: str) -> str:
         if dialect == "spark":
-            ns = ", ".join(f"'{c}', {e}" for c, e in cols)
-            sel = ", ".join(f"_s.{c} AS {c}" for c, _ in cols)
-            pt = ", ".join(f"_p.{c}" for c in passthrough)
-            return (f"{name} AS (\n  SELECT {pt}, {sel}\n  FROM {prev} _p\n"
-                    f"  LATERAL VIEW explode(array(named_struct({ns}))) "
-                    f"_bv AS _s\n)")
-        sel = ", ".join(f"{e} AS {c}" for c, e in cols)
-        pt = ", ".join(passthrough)
-        return (f"{name} AS MATERIALIZED (\n  SELECT {pt}, {sel}\n"
-                f"  FROM {prev}\n)")
+            return f"named_struct('ptitle', {title}, 'loc', {loc})"
+        return f"{{'ptitle': {title}, 'loc': {loc}}}"
 
     if dialect == "spark":
         wexplode = "LATERAL VIEW posexplode(winners) _wv AS wpos, w"
@@ -172,23 +90,24 @@ def _sql(dialect: str) -> str:
 
     w1 = wstruct("'w1'", "'Carl'", "concat('June', lk)", "''",
                  "concat('<p>Bio &amp; career ', lkk, '.</p>')",
-                 parr(pstruct("'Professor'", "'Harvard Medical School'")),
+                 arr(pstruct("'Professor'", "'Harvard Medical School'")),
                  "'https://img/1.jpg'")
     w2 = wstruct("'w2'", "''", "''",
                  "concat('Dr. Unnamed Honoree ', lkk)", "CAST(NULL AS "
                  + S + ")",
-                 parr(pstruct("''", "''"),
+                 arr(pstruct("''", "''"),
                       pstruct("'Director'",
                               "concat('Institute ', lkk)")),
                  "CAST(NULL AS " + S + ")")
+    # an empty positions list, typed like a filled one
+    one_position = arr(pstruct("''", "''"))
+    no_positions = (head(one_position, "0") if dialect == "spark"
+                    else filt(one_position, "false"))
     w3 = wstruct("'w3'", "concat('Mary', lk)", "'O''Neill'", "''",
-                 "'<p>Short  bio.</p>'", parr(),
+                 "'<p>Short  bio.</p>'", no_positions,
                  "'https://img/3.jpg'")
 
-    if dialect == "spark":
-        empty_winners = f"slice({arr('w1x')}, 1, 0)"
-    else:
-        empty_winners = f"list_slice({arr('w1x')}, 1, 0)"
+    empty_winners = head(arr("w1x"), "0")
 
     label = ("CASE CAST(o_orderkey % 3 AS INT) "
              "WHEN 0 THEN " + cs("1990 + o_orderkey % 30") + " "
@@ -214,7 +133,7 @@ def _sql(dialect: str) -> str:
     slug = f"trim(BOTH '-' FROM {slug})"
     slug = f"coalesce(nullif({slug}, ''), 'unknown')"
 
-    years = rxall("label", _YEARS)
+    years = rxall("label", _YEARS, 0)
 
     return f"""
 WITH cohorts AS (
@@ -245,8 +164,8 @@ withw AS (
      "WHEN trim(w.fn) <> '' THEN trim(w.fn) "
      "WHEN trim(w.ln) <> '' THEN trim(w.ln) "
      "ELSE trim(w.wtitle) END"),
-    ("desc_text", totext("cohort_desc")),
-    ("bio_text", totext("w.bio")),
+    ("desc_text", striphtml("cohort_desc")),
+    ("bio_text", striphtml("w.bio")),
     ("positions_raw", f"nullif({pos_text}, '')"),
     ("affiliation_raw", first_aff),
     ("start_year", elem(years, "1")),
@@ -284,16 +203,9 @@ FROM named
 """
 
 
-def _build(dialect: str) -> str:
-    text = _sql(dialect)
-    if dialect == "duck":
-        text = text.replace("\\\\", "\\")
-    return text
-
-
 @register(
     "warren_alpert_parse_prizes",
-    oracle=_build("duck"),
+    oracle=sqlkit.build(_sql, "duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc=("Warren Alpert Prize parse "
@@ -307,4 +219,4 @@ def warren_alpert_parse_prizes(spark: SparkSession,
     fallback, positions text + first-affiliation walks, dash-collapsed
     [:90] slug ids.  One scan + one Generate, one round-robin spread
     exchange over the scan, no Python."""
-    return spark.sql(_build("spark"))
+    return spark.sql(sqlkit.build(_sql, "spark"))

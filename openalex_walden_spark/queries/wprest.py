@@ -37,32 +37,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from openalex_walden_spark.queries import sqlkit
 from openalex_walden_spark.queries.registry import register
-
-
-def _helpers(dialect: str):
-    if dialect == "spark":
-        g, stype = "", "STRING"
-
-        def rl(col: str, pat: str) -> str:
-            return f"{col} RLIKE '{pat}'"
-    else:
-        g, stype = ", 'g'", "VARCHAR"
-
-        def rl(col: str, pat: str) -> str:
-            return f"regexp_matches({col}, '{pat}')"
-
-    def rx(src: str, pat: str, grp: int) -> str:
-        return f"nullif(regexp_extract({src}, '{pat}', {grp}), '')"
-
-    def strip_html(x: str) -> str:
-        c = f"regexp_replace(coalesce({x}, ''), '<[^>]+>', ' '{g})"
-        c = (f"replace(replace(replace({c}, '&amp;', '&'), '&#8211;', "
-             f"'–'), '&nbsp;', ' ')")
-        return (f"nullif(trim(regexp_replace({c}, '\\\\s+', ' '{g})), "
-                f"'')")
-
-    return g, stype, rl, rx, strip_html
 
 
 # brain_tumour_charity_to_s3.py:47-52 — label (colon stripped,
@@ -77,7 +53,7 @@ BTC_TITLE_RE = ("(?i)^(Professor|Prof|Dr|Mr|Mrs|Ms|Miss|Sir|Dame)"
                 "\\\\.?\\\\s+")
 
 
-def _btc_arm(dialect: str, cs, nullcols, S: str, g: str) -> str:
+def _btc_arm(dialect: str) -> str:
     """The Brain Tumour Charity research-projects arm
     (scripts/local/brain_tumour_charity_to_s3.py, round 12).
 
@@ -107,47 +83,17 @@ def _btc_arm(dialect: str, cs, nullcols, S: str, g: str) -> str:
       ships title/link only (:134-136).  No currency column exists in
       the reference output — none is invented."""
     sp = dialect == "spark"
+    k = sqlkit.kit(dialect)
+    g, S, cs, bar, nullcols = k.g, k.S, k.cs, k.bar, k.nullcols
+    asize, elem, idx_of, jn = k.asize, k.elem, k.idx_of, k.jn
     labels_all = ", ".join(f"'{k}'" for k in BTC_LABELS)
 
     def lab(field: str) -> str:
         return ", ".join(f"'{k}'" for k, v in BTC_LABELS.items()
                          if v == field)
 
-    if sp:
-        def idx_of(arr, cond):
-            return (f"array_min(zip_with({arr}, sequence(1, "
-                    f"size({arr})), (t, i) -> CASE WHEN {cond} "
-                    f"THEN i END))")
-
-        def el(a, i):
-            return f"try_element_at({a}, {i})"
-
-        arr_open, arr_close = "array(", ")"
-        splitre = "split(pi_first_src, ';|,| and |&|/')"
-        asz = "size"
-
-        def sl1(a, n):
-            return f"slice({a}, 1, {n})"
-
-        def jn(a):
-            return f"array_join({a}, ' ')"
-    else:
-        def idx_of(arr, cond):
-            return (f"list_min(list_transform({arr}, (t, i) -> "
-                    f"CASE WHEN {cond} THEN i END))")
-
-        def el(a, i):
-            return f"{a}[({i})]"
-
-        arr_open, arr_close = "[", "]"
-        splitre = "regexp_split_to_array(pi_first_src, ';|,| and |&|/')"
-        asz = "len"
-
-        def sl1(a, n):
-            return f"list_slice({a}, 1, {n})"
-
-        def jn(a):
-            return f"array_to_string({a}, ' ')"
+    splitre = ("split(pi_first_src, ';|,| and |&|/')" if sp
+               else "regexp_split_to_array(pi_first_src, ';|,| and |&|/')")
 
     # pre-colon label key of a line
     def lk(t: str) -> str:
@@ -167,26 +113,12 @@ def _btc_arm(dialect: str, cs, nullcols, S: str, g: str) -> str:
 
     def field_idx(field: str) -> str:
         cond = (f"{lk('t')} IN ({lab(field)}) AND "
-                + val("t", el("lines", "i + 1")) + " <> ''")
+                + val("t", elem("lines", "i + 1")) + " <> ''")
         return f"CASE WHEN detail_ok THEN {idx_of('lines', cond)} END"
 
     def field_from_idx(i: str) -> str:
-        v = val(el("lines", f"({i})"), el("lines", f"({i}) + 1"))
+        v = val(elem("lines", f"({i})"), elem("lines", f"({i}) + 1"))
         return f"CASE WHEN {i} IS NOT NULL THEN nullif({v}, '') END"
-
-    def bar(name: str, prev: str, passthrough: list, cols: list) -> str:
-        if sp:
-            ns = ", ".join(f"'{c}', {e}" for c, e in cols)
-            sel = ", ".join(f"_s.{c} AS {c}" for c, _ in cols)
-            pt = ", ".join(f"_p.{c}" for c in passthrough)
-            return (f"{name} AS (\n  SELECT {pt}, {sel}\n"
-                    f"  FROM {prev} _p\n"
-                    f"  LATERAL VIEW explode(array(named_struct({ns}))) "
-                    f"_bv AS _s\n)")
-        sel = ", ".join(f"{e} AS {c}" for c, e in cols)
-        pt = ", ".join(passthrough)
-        return (f"{name} AS MATERIALIZED (\n  SELECT {pt}, {sel}\n"
-                f"  FROM {prev}\n)")
 
     # parse_cost (commas stripped first; truncating int)
     cost_num = ("try_cast(regexp_extract(replace(cost_raw, ',', ''), "
@@ -284,7 +216,7 @@ def _btc_arm(dialect: str, cs, nullcols, S: str, g: str) -> str:
         lines_expr = (f"list_filter([{lines_items}], "
                       f"x -> x IS NOT NULL)")
 
-    pi_first = ("trim(regexp_replace(" + el("PISPLIT", "1")
+    pi_first = ("trim(regexp_replace(" + elem("PISPLIT", "1")
                 + f", '{BTC_TITLE_RE}', ''{g}))")
     pi_first = pi_first.replace("PISPLIT",
                                 "(" + splitre.replace(
@@ -369,14 +301,14 @@ bt_named AS (
     {nullcols('date_end', 'local_name', 'partners', 'duration',
               'beneficiaries', 'type_names')},
     link AS landing_page_url,
-    CASE WHEN pi_head IS NULL OR {asz}(bt_toks) = 0 THEN NULL
-         WHEN {asz}(bt_toks) = 1 THEN NULL
-         ELSE {jn(sl1('bt_toks', f'{asz}(bt_toks) - 1'))} END
+    CASE WHEN pi_head IS NULL OR {asize('bt_toks')} = 0 THEN NULL
+         WHEN {asize('bt_toks')} = 1 THEN NULL
+         ELSE {jn('bt_toks', asize('bt_toks') + ' - 1')} END
       AS btc_pi_given,
     CASE WHEN pi_head IS NULL OR pi_head = '' THEN NULL
-         WHEN {asz}(bt_toks) = 0 THEN NULL
-         WHEN {asz}(bt_toks) = 1 THEN {el('bt_toks', '1')}
-         ELSE {el('bt_toks', f'{asz}(bt_toks)')} END AS btc_pi_family,
+         WHEN {asize('bt_toks')} = 0 THEN NULL
+         WHEN {asize('bt_toks')} = 1 THEN {elem('bt_toks', '1')}
+         ELSE {elem('bt_toks', asize('bt_toks'))} END AS btc_pi_family,
     bt_institution AS btc_institution,
     bt_programme AS btc_programme
   FROM bt_named
@@ -384,26 +316,16 @@ bt_named AS (
 
 
 def _sql(dialect: str) -> str:
-    g, S, rl, rx, strip_html = _helpers(dialect)
+    k = sqlkit.kit(dialect)
+    g, S, cs, bar, nullcols, rl = k.g, k.S, k.cs, k.bar, k.nullcols, k.rl
+    rx = k.rx
 
-    def cs(expr: str) -> str:
-        return f"CAST({expr} AS {S})"
-
-    def nullcols(*names: str) -> str:
-        return ", ".join(f"CAST(NULL AS {S}) AS {n}" for n in names)
-
-    def bar(name: str, prev: str, passthrough: list, cols: list) -> str:
-        if dialect == "spark":
-            ns = ", ".join(f"'{c}', {e}" for c, e in cols)
-            sel = ", ".join(f"_s.{c} AS {c}" for c, _ in cols)
-            pt = ", ".join(f"_p.{c}" for c in passthrough)
-            return (f"{name} AS (\n  SELECT {pt}, {sel}\n  FROM {prev} _p\n"
-                    f"  LATERAL VIEW explode(array(named_struct({ns}))) "
-                    f"_bv AS _s\n)")
-        sel = ", ".join(f"{e} AS {c}" for c, e in cols)
-        pt = ", ".join(passthrough)
-        return (f"{name} AS MATERIALIZED (\n  SELECT {pt}, {sel}\n"
-                f"  FROM {prev}\n)")
+    def strip_html(x: str) -> str:
+        c = f"regexp_replace(coalesce({x}, ''), '<[^>]+>', ' '{g})"
+        c = (f"replace(replace(replace({c}, '&amp;', '&'), '&#8211;', "
+             f"'–'), '&nbsp;', ' ')")
+        return (f"nullif(trim(regexp_replace({c}, '\\\\s+', ' '{g})), "
+                f"'')")
 
     ks = cs("o_orderkey")
 
@@ -786,7 +708,7 @@ hw_out AS (
         "start_year", "end_year", "page_date", "date_start", "date_end",
         "local_name", "partners", "duration", "beneficiaries",
         "type_names") + ","
-    btc = _btc_arm(dialect, cs, nullcols, S, g)
+    btc = _btc_arm(dialect)
     bt_extras = ("btc_pi_given, btc_pi_family, btc_institution, "
                  "btc_programme")
     bt_extra_nulls = nullcols("btc_pi_given", "btc_pi_family",
@@ -879,17 +801,9 @@ UNION ALL SELECT {cols}, {hw_extra_nulls}, {te_extra_nulls},
 """
 
 
-def _build(dialect: str) -> str:
-    text = _sql(dialect)
-    if dialect == "duck":
-        text = text.replace("\\\\", "\\")
-        text = text.replace("AS STRING", "AS VARCHAR")
-    return text
-
-
 @register(
     "wprest_parse_projects",
-    oracle=_build("duck"),
+    oracle=sqlkit.build(_sql, "duck"),
     tags=("domain", "awards", "scrape"),
     tables=("orders",),
     doc=("WP-REST project-parse pair (scripts/local/gulbenkian_to_s3.py,"
@@ -902,4 +816,4 @@ def wprest_parse_projects(spark: SparkSession, sf_dir: str) -> DataFrame:
     amount grammars, the year fallbacks, the taxonomy join-render).
     Two barriered scan arms, no hash shuffle (one round-robin spread
     exchange per scan), no Python."""
-    return spark.sql(_build("spark"))
+    return spark.sql(sqlkit.build(_sql, "spark"))

@@ -10,18 +10,18 @@ one-task footer-reading job ("parquet at <unknown>:0") on every
 ``spark.read.parquet`` that is not given a schema; a catalog store or a
 Delta log records the schema instead, so the reads of the reference
 never pay for it. ``_SCHEMAS`` keeps the first inferred schema of each
-file, keyed by its identity ``(path, st_mtime_ns, st_size)`` plus the
-values of the confs that change what inference returns
-(``_INFERENCE_CONFS``). Later reads pass it to ``spark.read.schema``,
-which plans without a job. A rewritten file gets a new key, so it is
-inferred again. Every read still builds a fresh relation with fresh
-exprIds, so self-joins resolve exactly as with inference.
+file, keyed by its identity ``(path, st_mtime_ns, st_size)``. Later
+reads pass it to ``spark.read.schema``, which plans without a job. A
+rewritten file gets a new key, so it is inferred again. Every read still
+builds a fresh relation with fresh exprIds, so self-joins resolve
+exactly as with inference.
 
 ``events.parquet`` needs special handling: its ``ts`` column is physical
 INT64 TIMESTAMP(NANOS), which stock Spark 4.x rejects with
-``PARQUET_TYPE_ILLEGAL``. We read it with
-``spark.sql.legacy.parquet.nanosAsLong=true`` (raw nanos as BIGINT) and
-derive two portable columns:
+``PARQUET_TYPE_ILLEGAL``. ``load_table`` sets
+``spark.sql.legacy.parquet.nanosAsLong=true`` (raw nanos as BIGINT)
+before it reads any table, so every schema is inferred under the same
+conf, and ``events`` derives two portable columns:
 
 - ``ts_us``  BIGINT      — microseconds since epoch (floor of nanos/1000;
   identical to DuckDB's nanos→TIMESTAMP truncation, so oracle queries can
@@ -54,14 +54,12 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Confs the engine sets that change the schema parquet inference returns.
-_INFERENCE_CONFS = ("spark.sql.legacy.parquet.nanosAsLong",)
 _SCHEMAS: dict[tuple, StructType] = {}
 
 
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     st = os.stat(path)
-    key = (path, st.st_mtime_ns, st.st_size, *map(spark.conf.get, _INFERENCE_CONFS))
+    key = (path, st.st_mtime_ns, st.st_size)
     schema = _SCHEMAS.get(key)
     if schema is not None:
         return spark.read.schema(schema).parquet(path)
@@ -71,10 +69,6 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
 
 
 def _load_events(spark: SparkSession, path: str) -> DataFrame:
-    # The conf is left enabled: it only affects nanosecond-precision parquet
-    # columns (which Spark would otherwise refuse to read at all), and the
-    # lazy DataFrame must still see it at execution time.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = _read_parquet(spark, path)
     if dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts_us", F.expr("ts div 1000")).withColumn(
@@ -96,6 +90,12 @@ def _load_events(spark: SparkSession, path: str) -> DataFrame:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    # Set before the first read of any table, so a schema inferred before
+    # ``events`` is never inferred again.  The conf stays enabled: it only
+    # affects nanosecond-precision parquet columns (which Spark would
+    # otherwise refuse to read at all), and a lazy DataFrame must still
+    # see it at execution time.
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         return _load_events(spark, path)

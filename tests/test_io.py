@@ -69,6 +69,22 @@ def test_register_views_reuses_inferred_schemas(spark, sf_dir, jobs_in):
     assert a.join(b, a.o_orderkey == b.o_orderkey).count() == a.count() > 0
 
 
+def test_events_read_keeps_earlier_schemas(spark, sf_dir, jobs_in,
+                                           monkeypatch):
+    """Reading ``events`` enables the nanos-as-long conf; a table read
+    before it keeps its inferred schema, so reading it again after
+    ``events`` plans without a Spark job."""
+    from openalex_walden_spark import tables
+
+    monkeypatch.setattr(tables, "_SCHEMAS", {})
+    spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    tables.load_table(spark, sf_dir, "orders")
+    tables.load_table(spark, sf_dir, "events")
+    with jobs_in("orders_after_events") as jobs:
+        tables.load_table(spark, sf_dir, "orders")
+    assert jobs == []
+
+
 def test_load_table_reinfers_a_rewritten_file(spark, tmp_path):
     """The kept schema is keyed by the file's identity: rewriting the
     file with another schema makes the next read infer it again."""

@@ -95,9 +95,8 @@ BUILD_JOBS = {
 @pytest.fixture(scope="session")
 def fixture_schemas(spark, sf_dir):
     """Infer every fixture table's schema once, so no build counts an
-    inference job.  events goes first: its loader sets the conf that is
-    part of every table's schema key."""
-    for name in ("events", *TABLES):
+    inference job."""
+    for name in TABLES:
         if os.path.exists(os.path.join(sf_dir, f"{name}.parquet")):
             load_table(spark, sf_dir, name)
 
