@@ -33,19 +33,28 @@ Layout::
                                   #  "schema": {...}, "buckets": {"3": 2}}
       buckets/3/v_00000002/part-*.parquet   # immutable
 
+The bucket count is sized once, when the first merge creates the
+state: one bucket per ``ROWS_PER_BUCKET`` rows of that first batch, so
+a small state is a few files and a large one splits into files near
+Delta's size. Later merges inherit the count from the manifest; a
+state created small stays at its count until :func:`rebucket_state`
+rewrites it under a larger one.
+
 The manifest carries the schema of the bucket files, as Delta's
 ``metaData`` action does, so reads pass it to the parquet reader
 instead of launching a footer-inference job. A manifest written
 without it is read by inference and gets the field at its next commit.
 
-No driver-side data loops: the only collected values are the touched
-bucket ids (≤ n_buckets scalars — the same driver-scalar budget as the
-reference's DECLARE VARIABLE high-water mark).
+No driver-side data loops: the only collected values are the first
+batch's row count and the touched bucket ids (≤ n_buckets scalars — the
+same driver-scalar budget as the reference's DECLARE VARIABLE
+high-water mark).
 """
 
 from __future__ import annotations
 
 import json
+import math
 import os
 import re
 import shutil
@@ -60,7 +69,10 @@ _M_RE = re.compile(r"^manifest_v(\d{8})\.json$")
 _TOMBSTONE = "_tombstone"
 _BUCKET = "_bucket"
 
-DEFAULT_BUCKETS = 16
+# Rows per bucket when a state is created: at about 100 B/row, 1 << 20
+# rows make buckets of roughly 100 MB, near Delta's 128 MB
+# auto-compaction file target.
+ROWS_PER_BUCKET = 1 << 20
 
 
 def merge_upsert(
@@ -195,7 +207,7 @@ def merge_into_state(
     delete_predicate: Column | None = None,
     tie_breaker: str | None = None,
     keep_versions: int = 2,
-    n_buckets: int = DEFAULT_BUCKETS,
+    n_buckets: int | None = None,
 ) -> None:
     """One partition-pruned MERGE round against a bucketed state table.
 
@@ -207,7 +219,10 @@ def merge_into_state(
     with :func:`read_state`.
 
     ``n_buckets`` is fixed at state creation (persisted in the
-    manifest); later calls inherit it.
+    manifest); later calls inherit it. When it is None, creation sizes
+    it from the first batch as ``ceil(rows / ROWS_PER_BUCKET)``, at
+    least 1, by counting the batch once. A state created small keeps
+    that count as it grows, until :func:`rebucket_state` rewrites it.
     """
     prev_v = current_version(state_path)
     if prev_v is not None:
@@ -217,6 +232,8 @@ def merge_into_state(
         _check_keys(manifest, keys, state_path)
     else:
         manifest, prev_buckets = {}, {}
+        if n_buckets is None:
+            n_buckets = max(1, math.ceil(batch.count() / ROWS_PER_BUCKET))
 
     tomb = (
         F.coalesce(delete_predicate, F.lit(False))
@@ -226,19 +243,22 @@ def merge_into_state(
     bexpr = _bucket_expr(keys, n_buckets)
     batch2 = batch.withColumn(_TOMBSTONE, tomb).withColumn(_BUCKET, bexpr)
 
-    # Driver-side scalars: which buckets does this batch touch?
-    touched = sorted(
-        r[0] for r in batch2.select(_BUCKET).distinct().collect() if r[0] is not None
-    )
-    touched_paths = [
-        _bucket_dir(state_path, b, prev_buckets[str(b)])
-        for b in touched
-        if str(b) in prev_buckets
-    ]
-    if touched_paths:
-        target = _read_buckets(spark, manifest, touched_paths).withColumn(_BUCKET, bexpr)
-    else:
-        target = None
+    # A state with no bucket files yet has no target to prune, so every
+    # staged bucket is promoted (touched None). Otherwise the driver-side
+    # scalars are the buckets this batch touches.
+    touched: list[int] | None = None
+    target = None
+    if prev_buckets:
+        touched = sorted(
+            r[0] for r in batch2.select(_BUCKET).distinct().collect() if r[0] is not None
+        )
+        touched_paths = [
+            _bucket_dir(state_path, b, prev_buckets[str(b)])
+            for b in touched
+            if str(b) in prev_buckets
+        ]
+        if touched_paths:
+            target = _read_buckets(spark, manifest, touched_paths).withColumn(_BUCKET, bexpr)
 
     # Tombstones ride through the window as ordinary rows: a stored
     # tombstone beats an older-sequence late upsert; a newer upsert

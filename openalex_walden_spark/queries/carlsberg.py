@@ -89,7 +89,6 @@ def _sql(dialect: str) -> str:
     clean_ent, elem, filt, jn = k.clean_ent, k.elem, k.filt, k.jn
     overlap, rx, sl, splitre, tx = k.overlap, k.rx, k.sl, k.splitre, k.tx
 
-    K = cs("k")
     markers = ", ".join(f"'{m}'" for m in _MARKERS)
     marker_arr = (f"array({markers})" if dialect == "spark"
                   else f"[{markers}]")

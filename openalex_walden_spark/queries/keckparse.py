@@ -111,7 +111,6 @@ def _sql(dialect: str) -> str:
     prog_cases = " ".join(f"WHEN '{k}' THEN '{v}'"
                           for k, v in _PROG_NAME.items())
 
-    cat_cond = like("S", _CATEGORY)
     city_cond = like("S", _CITY)
 
     above_nc = filt("above", "NOT (" + like("t", _CATEGORY) + ")")

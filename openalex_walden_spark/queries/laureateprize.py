@@ -1349,7 +1349,6 @@ ib_out AS (
                "instr(replace(name_pref, ';', ','), ',') - 1) "
                "ELSE name_pref END)")
     wl_toks = splitws("name_head")
-    wl_rev_flags = tx_expr = None  # placeholders, defined below
     if dialect == "spark":
         wl_flags = (f"transform(reverse({wl_toks}), t -> CASE WHEN "
                     f"trim(TRAILING '.' FROM t) IN ({wl_sufs}) "

@@ -754,7 +754,6 @@ mt_out AS (
 )"""
 
     # ---- helmsley ---------------------------------------------------------
-    hm_dot = rx("hm.date_raw", "^([0-9]{2})\\\\.([0-9]{2})\\\\.([0-9]{4})$", 0)
     hm_iso = (
         f"CASE WHEN hm.date_raw IS NULL THEN NULL "
         f"WHEN {rl('trim(hm.date_raw)', '^[0-9]{2}[.][0-9]{2}[.][0-9]{4}$')} "

@@ -82,8 +82,6 @@ def _sql(dialect: str) -> str:
     clean_ent, elem, jn, rx = k.clean_ent, k.elem, k.jn, k.rx
     splitre = k.splitre
 
-    K = cs("k")
-
     # ---- JSON string builders (values carry no escapables) -----------
     def jstr(expr: str) -> str:
         """NULL-safe JSON string render: '"v"' or 'null'."""

@@ -546,7 +546,6 @@ def _sql(dialect: str) -> str:
     bb_sum_p = "t.tag = 'p' AND contains(t.text, 'Frontiers of Knowledge Award')"
     bb_break = ("(t.text LIKE 'With the collaboration of%' OR "
                 "t.text LIKE 'Edificio San%')")
-    bb_mode_hdr = "upper(t.text) IN ('BIO', 'CONTRIBUTION', 'INTERVIEW', 'MORE')"
 
     def arrlit(*items: str) -> str:
         body = ",\n      ".join(items)
@@ -843,9 +842,6 @@ dd_out AS (
                     f"x -> trim(x)), x -> x <> '')")
         ml_lateral = "\n  CROSS JOIN UNNEST(parts) AS ml_l(laureate)"
     ml_given, ml_family = split_nf("laureate")
-    ml_desc_cond = ("NOT (t = 'Share' OR t LIKE '‹ Previous%' OR t IN "
-                    "('Show more', 'Laureates', 'All winners', "
-                    "'Next winner ›'))")
     # strings[5:] up to the first terminator
     ml_stop = idx_of("profile_tail",
                      "t = 'Share' OR t LIKE '‹ Previous%' OR t IN "

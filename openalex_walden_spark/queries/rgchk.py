@@ -129,7 +129,6 @@ def _sql(dialect: str) -> str:
         rows = _ROWS_SPARK
         joinsep = lambda a, s: f"array_join({a}, '{s}')"  # noqa: E731
         transform = "transform"
-        distinct = "array_distinct"
         splitfn = lambda v, p: f"filter(split({v}, '{p}'), x -> trim(x) <> '')"  # noqa: E731
     else:
         rows = (_ROWS_SPARK
@@ -141,12 +140,9 @@ def _sql(dialect: str) -> str:
                          "chr(10) || 'Prof B Lee; Dr A Chan'"))
         joinsep = lambda a, s: f"list_aggr({a}, 'string_agg', '{s}')"  # noqa: E731
         transform = "list_transform"
-        distinct = "list_distinct"
         splitfn = lambda v, p: (  # noqa: E731
             f"list_filter(regexp_split_to_array({v}, '{p}'), "
             f"x -> trim(x) <> '')")
-
-    nl = "'\\n'" if dialect == "spark" else "chr(10)"
 
     def clean(col: str) -> str:
         # clean_text: BOM/NBSP, CRLF fold, [ \t]+ -> ' ', \n{3,} -> \n\n
@@ -210,8 +206,7 @@ def _sql(dialect: str) -> str:
                     f" 0)")
         kept = f"list_slice({toks}, 1, {keep} - 0)" \
             if dialect == "duck" else f"slice({toks}, 1, {keep})"
-        detok = (f"{transform}({kept}, t -> trim(BOTH ',' FROM t))"
-                 if True else kept)
+        detok = f"{transform}({kept}, t -> trim(BOTH ',' FROM t))"
         return f"""
     CASE WHEN {compact(col)} IS NULL THEN CAST(NULL AS {S})
          WHEN {base} LIKE '%,%'
@@ -262,7 +257,6 @@ def _sql(dialect: str) -> str:
         co_dedup = "array_distinct(co0)"
     else:
         co_dedup = "list_filter(co0, (x, i) -> list_position(co0, x) = i)"
-    del distinct
 
     quoted_names = transform + '(co_names, x -> concat(\'"\', x, \'"\'))'
     struct_entry = (

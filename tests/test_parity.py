@@ -84,7 +84,7 @@ BUILD_JOBS = {
     # stale_audit's mass-delete cap probe counts the stale ids
     "es_sync_stale_audit": 3,
     # three real merge_into_state rounds write the state it reads
-    "j9_merge_state_rounds": 12,
+    "j9_merge_state_rounds": 10,
     # llm.guarded_llm_pass meters a chunk to project the cost gate
     "llm_judge_verdicts": 6,
     # DECLARE/SET VAR run as eager SQL commands

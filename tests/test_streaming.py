@@ -573,6 +573,91 @@ def test_merge_rejects_mismatched_bucket_keys(spark, tmp_path):
     assert {r["k"] for r in read_state(spark, state).collect()} == {1, 2, 3}
 
 
+def _n_buckets(state: str) -> int:
+    with open(_manifest_path(state)) as f:
+        return json.load(f)["n_buckets"]
+
+
+def test_new_state_sizes_buckets_from_first_batch(spark, tmp_path, monkeypatch):
+    """A new state gets one bucket per ROWS_PER_BUCKET rows of its first
+    batch; later merges inherit that count however large they are, and
+    an explicit n_buckets at creation wins over the sizing."""
+    from openalex_walden_spark.operators import merge
+
+    monkeypatch.setattr(merge, "ROWS_PER_BUCKET", 10)
+
+    def rows(lo, hi, seq):
+        return spark.createDataFrame(
+            [(i, f"v{i}", seq) for i in range(lo, hi)], "k int, v string, seq int"
+        )
+
+    state = str(tmp_path / "sized")
+    merge_into_state(spark, state, rows(0, 35, 1), ["k"], "seq")
+    assert _n_buckets(state) == 4
+    merge_into_state(spark, state, rows(35, 200, 1), ["k"], "seq")
+    merge_into_state(spark, state, rows(0, 5, 2), ["k"], "seq", n_buckets=16)
+    assert _n_buckets(state) == 4
+    assert read_state(spark, state).count() == 200
+
+    explicit = str(tmp_path / "explicit")
+    merge_into_state(spark, explicit, rows(0, 35, 1), ["k"], "seq", n_buckets=2)
+    assert _n_buckets(explicit) == 2
+
+
+def test_small_first_batch_gets_one_bucket(spark, tmp_path):
+    state = str(tmp_path / "small")
+    b1 = spark.createDataFrame([(i, f"v{i}", 1) for i in range(50)], "k int, v string, seq int")
+    merge_into_state(spark, state, b1, ["k"], "seq")
+    assert _n_buckets(state) == 1
+    assert os.listdir(os.path.join(state, "buckets")) == ["0"]
+    assert read_state(spark, state).count() == 50
+
+
+def test_empty_first_batch_creates_empty_state(spark, tmp_path):
+    """An empty first batch commits a state with no bucket files: it reads
+    as None and the next merge fills it."""
+    state = str(tmp_path / "empty")
+    schema = "k int, v string, seq int"
+    merge_into_state(spark, state, spark.createDataFrame([], schema), ["k"], "seq")
+    assert _n_buckets(state) == 1
+    assert read_state(spark, state) is None
+    b2 = spark.createDataFrame([(1, "a", 1), (2, "b", 1)], schema)
+    merge_into_state(spark, state, b2, ["k"], "seq")
+    assert {r["k"]: r["v"] for r in read_state(spark, state).collect()} == {1: "a", 2: "b"}
+
+
+def test_first_batch_resolves_duplicate_keys(spark, tmp_path):
+    """With no target to read, duplicate keys inside the creating batch
+    still resolve by sequence in the one window pass."""
+    state = str(tmp_path / "dups")
+    b1 = spark.createDataFrame(
+        [(1, "a", 1), (1, "c", 3), (1, "b", 2), (2, "y", 4), (2, "x", 5)],
+        "k int, v string, seq int",
+    )
+    merge_into_state(spark, state, b1, ["k"], "seq")
+    assert sorted((r["k"], r["v"]) for r in read_state(spark, state).collect()) == [
+        (1, "c"),
+        (2, "x"),
+    ]
+
+
+def test_create_with_explicit_buckets_runs_only_the_write(spark, tmp_path, jobs_in):
+    """Creating a state with a given n_buckets needs no job before the
+    write: there is no target whose touched buckets must be found. A
+    later merge collects them, in two jobs (the distinct's shuffle and
+    its result)."""
+    state = str(tmp_path / "create_jobs")
+    b1 = spark.createDataFrame([(i, f"v{i}", 1) for i in range(20)], "k int, v string, seq int")
+    b2 = spark.createDataFrame([(3, "new", 2)], "k int, v string, seq int")
+    with jobs_in("create") as create:
+        merge_into_state(spark, state, b1, ["k"], "seq", n_buckets=4)
+    with jobs_in("merge") as merge:
+        merge_into_state(spark, state, b2, ["k"], "seq")
+    assert len(merge) - len(create) == 2
+    final = {r["k"]: r["v"] for r in read_state(spark, state).collect()}
+    assert len(final) == 20 and final[3] == "new"
+
+
 def test_stream_dedup_within_watermark_drops_redeliveries(spark, events, tmp_path):
     """Bounded-state streaming dedup: an at-least-once source redelivers
     every file; dropDuplicatesWithinWatermark must emit each event_id
