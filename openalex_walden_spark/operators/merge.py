@@ -34,10 +34,12 @@ Layout::
       buckets/3/v_00000002/part-*.parquet   # immutable
 
 The bucket count is sized once, when the first merge creates the
-state: one bucket per ``ROWS_PER_BUCKET`` rows of that first batch, so
-a small state is a few files and a large one splits into files near
-Delta's size. Later merges inherit the count from the manifest; a
-state created small stays at its count until :func:`rebucket_state`
+state: one bucket per ``ROWS_PER_BUCKET`` rows of that first batch.
+This fits a state whose first batch is its initial load, as in a CDC
+stream that lands the base table as batch 0. A state whose first batch
+is small (a drip-fed stream, an empty source) gets one bucket and
+keeps it: later merges inherit the count from the manifest, and a
+state that outgrew it stays there until :func:`rebucket_state`
 rewrites it under a larger one.
 
 The manifest carries the schema of the bucket files, as Delta's
@@ -69,10 +71,13 @@ _M_RE = re.compile(r"^manifest_v(\d{8})\.json$")
 _TOMBSTONE = "_tombstone"
 _BUCKET = "_bucket"
 
-# Rows per bucket when a state is created: at about 100 B/row, 1 << 20
-# rows make buckets of roughly 100 MB, near Delta's 128 MB
-# auto-compaction file target.
-ROWS_PER_BUCKET = 1 << 20
+# Rows per bucket when a state is created. The benchmark's cdc_stream
+# state (narrow columns: ids, numbers, one-letter flags) is 712 KB of
+# parquet for about 61k rows, about 12 B/row; at that width 1 << 23
+# rows make a bucket of about 100 MB, under Delta's 128 MB
+# auto-compaction file target. Wider rows make proportionally larger
+# buckets.
+ROWS_PER_BUCKET = 1 << 23
 
 
 def merge_upsert(
@@ -221,8 +226,9 @@ def merge_into_state(
     ``n_buckets`` is fixed at state creation (persisted in the
     manifest); later calls inherit it. When it is None, creation sizes
     it from the first batch as ``ceil(rows / ROWS_PER_BUCKET)``, at
-    least 1, by counting the batch once. A state created small keeps
-    that count as it grows, until :func:`rebucket_state` rewrites it.
+    least 1, by counting the batch once, so it fits only a first batch
+    that is the initial load. A state created small keeps that count as
+    it grows, until :func:`rebucket_state` rewrites it.
     """
     prev_v = current_version(state_path)
     if prev_v is not None:

@@ -46,9 +46,14 @@ def test_merge_upsert_delete_propagation(spark):
 
 
 def test_merge_into_state_versioned(spark, tmp_path):
+    """A small first batch gets one bucket, and its duplicate keys
+    resolve by sequence with no target to read."""
     state = str(tmp_path / "state")
-    b1 = spark.createDataFrame([(1, "a", 1), (2, "b", 1)], "k int, v string, seq int")
+    b1 = spark.createDataFrame(
+        [(1, "a", 1), (2, "b", 1), (1, "a0", 0)], "k int, v string, seq int"
+    )
     merge_into_state(spark, state, b1, ["k"], "seq")
+    assert _n_buckets(state) == 1
     b2 = spark.createDataFrame([(2, "b2", 2), (3, "c", 1)], "k int, v string, seq int")
     merge_into_state(spark, state, b2, ["k"], "seq")
     final = {r["k"]: r["v"] for r in read_state(spark, state).collect()}
@@ -604,13 +609,24 @@ def test_new_state_sizes_buckets_from_first_batch(spark, tmp_path, monkeypatch):
     assert _n_buckets(explicit) == 2
 
 
-def test_small_first_batch_gets_one_bucket(spark, tmp_path):
-    state = str(tmp_path / "small")
-    b1 = spark.createDataFrame([(i, f"v{i}", 1) for i in range(50)], "k int, v string, seq int")
-    merge_into_state(spark, state, b1, ["k"], "seq")
+def test_state_created_small_keeps_its_count_until_rebucket(spark, tmp_path, monkeypatch):
+    """The count is sized from the first batch alone: a state created
+    from a tiny batch stays at one bucket however far it grows, until
+    rebucket_state rewrites it under a count sized for its rows."""
+    from openalex_walden_spark.operators import merge
+
+    monkeypatch.setattr(merge, "ROWS_PER_BUCKET", 10)
+    schema = "k int, v string, seq int"
+    state = str(tmp_path / "grown")
+    merge_into_state(spark, state, spark.createDataFrame([(0, "v0", 1)], schema), ["k"], "seq")
+    for lo in (1, 101):
+        batch = spark.createDataFrame([(i, f"v{i}", 1) for i in range(lo, lo + 100)], schema)
+        merge_into_state(spark, state, batch, ["k"], "seq")
     assert _n_buckets(state) == 1
     assert os.listdir(os.path.join(state, "buckets")) == ["0"]
-    assert read_state(spark, state).count() == 50
+    merge.rebucket_state(spark, state, ["k"], n_buckets_new=20)
+    assert _n_buckets(state) == 20
+    assert read_state(spark, state).count() == 201
 
 
 def test_empty_first_batch_creates_empty_state(spark, tmp_path):
@@ -624,21 +640,6 @@ def test_empty_first_batch_creates_empty_state(spark, tmp_path):
     b2 = spark.createDataFrame([(1, "a", 1), (2, "b", 1)], schema)
     merge_into_state(spark, state, b2, ["k"], "seq")
     assert {r["k"]: r["v"] for r in read_state(spark, state).collect()} == {1: "a", 2: "b"}
-
-
-def test_first_batch_resolves_duplicate_keys(spark, tmp_path):
-    """With no target to read, duplicate keys inside the creating batch
-    still resolve by sequence in the one window pass."""
-    state = str(tmp_path / "dups")
-    b1 = spark.createDataFrame(
-        [(1, "a", 1), (1, "c", 3), (1, "b", 2), (2, "y", 4), (2, "x", 5)],
-        "k int, v string, seq int",
-    )
-    merge_into_state(spark, state, b1, ["k"], "seq")
-    assert sorted((r["k"], r["v"]) for r in read_state(spark, state).collect()) == [
-        (1, "c"),
-        (2, "x"),
-    ]
 
 
 def test_create_with_explicit_buckets_runs_only_the_write(spark, tmp_path, jobs_in):
