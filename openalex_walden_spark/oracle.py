@@ -228,21 +228,42 @@ def _python_udf_modules(plan, jvm) -> set[str]:
     return mods
 
 
+def _sql_function_ddls(plan_text: str) -> list[str]:
+    """DDL of each engine SQL function (``sql_udfs._ALL``) that
+    ``plan_text`` calls, and of each function those bodies call, in name
+    order; the plan names a SQL function but does not show its body."""
+    from openalex_walden_spark.functions import sql_udfs
+
+    ddls = {re.search(r"FUNCTION (\w+)", d)[1]: d for d in sql_udfs._ALL}
+    seen: set[str] = set()
+    texts = [plan_text]
+    while texts:
+        text = texts.pop()
+        for name, ddl in ddls.items():
+            if name not in seen and re.search(rf"\b{name}\(", text):
+                seen.add(name)
+                texts.append(ddl)
+    return [ddls[n] for n in sorted(seen)]
+
+
 def plan_fingerprint(df, frozen=()) -> str:
     """sha256 of the query's normalized analyzed logical plan.
 
     ``frozen`` holds the ``QueryExecution`` of each sub-plan the query
     froze behind ``localCheckpoint`` (``checkpoint_capture``); their plans
-    are folded in ahead of the final one.  Each Python UDF contributes the
-    source of its function's module and of that module's engine-internal
-    imports.  The analyzed plan is used because optimized plans are not
-    stable across sessions (``_common_expr`` placement, among others).
+    are folded in ahead of the final one.  Each engine SQL function the
+    plans call contributes its DDL (``_sql_function_ddls``), and each
+    Python UDF the source of its function's module and of that module's
+    engine-internal imports.  The analyzed plan is used because optimized
+    plans are not stable across sessions (``_common_expr`` placement,
+    among others).
     """
     jvm = df.sparkSession._jvm  # noqa: SLF001
     plans = [qe.analyzed() for qe in frozen]
     plans.append(df._jdf.queryExecution().analyzed())  # noqa: SLF001
-    parts = [_normalize_plan("\n".join(
-        p.treeString(True, False, 2**31 - 1, False, False) for p in plans))]
+    text = "\n".join(
+        p.treeString(True, False, 2**31 - 1, False, False) for p in plans)
+    parts = [_normalize_plan(text)] + _sql_function_ddls(text)
     udf_mods: set[str] = set()
     for p in plans:
         udf_mods |= _python_udf_modules(p, jvm)

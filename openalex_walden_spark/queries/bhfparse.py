@@ -128,7 +128,7 @@ FROM orders
 def _sql(dialect: str) -> str:
     k = sqlkit.kit(dialect)
     g, S, asize, elem, fmt, head = k.g, k.S, k.asize, k.elem, k.fmt, k.head
-    idx_of, jnagg, rl, splitsp = k.idx_of, k.jnagg, k.rl, k.splitsp
+    jnagg, rl, splitsp = k.jnagg, k.rl, k.splitsp
 
     rows = (_ROWS_SPARK if dialect == "spark" else
             _ROWS_SPARK
@@ -137,9 +137,8 @@ def _sql(dialect: str) -> str:
                      "list_extract(['2021/22', '2022/23', '2023/24'],"))
 
     tok_norm = "lower(trim(BOTH ',.' FROM t))"
-    first_keep = (f"coalesce({idx_of('toks', f'{tok_norm} NOT IN ({_PREFIX_TITLES})')}, "
-                  f"{asize('toks')} + 1)")
-    last_keep = (f"coalesce({idx_of('toks', f'{tok_norm} NOT IN ({_DEGREE_SUFFIXES})', 'array_max')}, 0)")
+    kept = k.strip_runs("toks", f"{tok_norm} NOT IN ({_PREFIX_TITLES})",
+                        f"{tok_norm} NOT IN ({_DEGREE_SUFFIXES})")
 
     completion_of = f"^{_PLACE}"
     completion_stem = f"^(of {_PLACE}|College London|College|London)"
@@ -183,9 +182,7 @@ sliced AS (
   -- Spark slice(arr, start, LENGTH) vs DuckDB list_slice(arr, begin,
   -- END-INDEX).
   SELECT *,
-    {(f"slice(toks, {first_keep}, greatest({last_keep} - {first_keep} + 1, 0))"
-      if dialect == "spark" else
-      f"list_slice(toks, {first_keep}, {last_keep})")} AS kept
+    {kept} AS kept
   FROM tokenized
 ),
 splitn AS (

@@ -88,7 +88,7 @@ FROM orders
 def _sql(dialect: str) -> str:
     k = sqlkit.kit(dialect)
     g, S, asize, elem, head = k.g, k.S, k.asize, k.elem, k.head
-    idx_of, jnagg, splitsp = k.idx_of, k.jnagg, k.splitsp
+    jnagg, splitsp = k.jnagg, k.splitsp
     if dialect == "spark":
         rows = _ROWS_SPARK
     else:
@@ -114,12 +114,8 @@ def _sql(dialect: str) -> str:
     tok_pref = "trim(TRAILING '.' FROM t)"
     tok_suff = "trim(TRAILING '.,' FROM t)"
     toks = splitsp("name")
-    first_keep = (f"coalesce({idx_of('toks', f'{tok_pref} NOT IN {_PREFIX_TITLES}')}, "
-                  f"{asize('toks')} + 1)")
-    last_keep = (f"coalesce({idx_of('toks', f'{tok_suff} NOT IN {_DEGREE_SUFFIXES}', 'array_max')}, 0)")
-    kept = (f"slice(toks, {first_keep}, greatest({last_keep} - {first_keep} + 1, 0))"
-            if dialect == "spark"
-            else f"list_slice(toks, {first_keep}, {last_keep})")
+    kept = k.strip_runs("toks", f"{tok_pref} NOT IN {_PREFIX_TITLES}",
+                        f"{tok_suff} NOT IN {_DEGREE_SUFFIXES}")
 
     return f"""
 WITH raw AS ({rows}),

@@ -122,7 +122,7 @@ FROM orders
 
 def _sql(dialect: str) -> str:
     k = sqlkit.kit(dialect)
-    S, asize, elem, head, idx_of = k.S, k.asize, k.elem, k.head, k.idx_of
+    S, asize, elem, head = k.S, k.asize, k.elem, k.head
     jnagg, rl, splitsp = k.jnagg, k.rl, k.splitsp
     if dialect == "spark":
         rows = _ROWS_SPARK
@@ -150,12 +150,8 @@ def _sql(dialect: str) -> str:
     tok_pref = "lower(trim(TRAILING '.' FROM t))"
     tok_suff = "lower(trim(TRAILING '.,' FROM t))"
     toks = splitsp("investigator")
-    first_keep = (f"coalesce({idx_of('toks', f'{tok_pref} NOT IN ({_PREFIX_TITLES})')}, "
-                  f"{asize('toks')} + 1)")
-    last_keep = (f"coalesce({idx_of('toks', f'{tok_suff} NOT IN ({_DEGREE_SUFFIXES})', 'array_max')}, 0)")
-    kept = (f"slice(toks, {first_keep}, greatest({last_keep} - {first_keep} + 1, 0))"
-            if dialect == "spark"
-            else f"list_slice(toks, {first_keep}, {last_keep})")
+    kept = k.strip_runs("toks", f"{tok_pref} NOT IN ({_PREFIX_TITLES})",
+                        f"{tok_suff} NOT IN ({_DEGREE_SUFFIXES})")
 
     return f"""
 WITH raw AS ({rows}),

@@ -93,6 +93,14 @@ class _Kit:
         """``length`` elements from ``start`` joined by a space."""
         return self.jnall(self.sl(a, start, length))
 
+    def strip_runs(self, a: str, lead_keep: str, trail_keep: str) -> str:
+        """``a`` without its leading run of elements failing ``lead_keep``
+        and its trailing run failing ``trail_keep`` (conditions on the
+        element ``t``): a name's titles and degrees popped."""
+        first = f"coalesce({self.idx_of(a, lead_keep)}, {self.asize(a)} + 1)"
+        last = f"coalesce({self.idx_of(a, trail_keep, 'array_max')}, 0)"
+        return self.span(a, first, last)
+
 
 class _Spark(_Kit):
     g, S, fmt = "", "STRING", "format_string"
@@ -131,6 +139,10 @@ class _Spark(_Kit):
 
     def head(self, a: str, n: str) -> str:
         return f"slice({a}, 1, {n})"
+
+    def span(self, a: str, first: str, last: str) -> str:
+        """Elements ``first`` through ``last`` (1-based, inclusive)."""
+        return f"slice({a}, {first}, greatest({last} - {first} + 1, 0))"
 
     def jnsep(self, a: str, sep: str) -> str:
         return f"array_join({a}, {sep})"
@@ -209,6 +221,9 @@ class _Duck(_Kit):
 
     def head(self, a: str, n: str) -> str:
         return f"list_slice({a}, 1, {n})"
+
+    def span(self, a: str, first: str, last: str) -> str:
+        return f"list_slice({a}, {first}, {last})"
 
     def jnsep(self, a: str, sep: str) -> str:
         return f"array_to_string({a}, {sep})"

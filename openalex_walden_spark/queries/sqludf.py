@@ -14,7 +14,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from openalex_walden_spark.functions.sql_udfs import create_sql_udfs
+from openalex_walden_spark.functions.sql_udfs import (
+    AWARD_FAMILIES,
+    compile_family_key,
+    create_sql_udfs,
+)
 from openalex_walden_spark.queries.registry import register
 
 # ---------------------------------------------------------------------------
@@ -384,318 +388,15 @@ CASE CAST(o_orderkey % 54 AS INT)
 END
 """
 
-_FAMILY_NAME = """
-CASE CAST(o_orderkey % 54 AS INT)
-  WHEN 0 THEN 'nih' WHEN 1 THEN 'nsf' WHEN 2 THEN 'erc'
-  WHEN 3 THEN 'ukri' WHEN 4 THEN 'wellcome' WHEN 5 THEN 'dod'
-  WHEN 6 THEN 'kakenhi' WHEN 7 THEN 'anr' WHEN 8 THEN 'fapesp'
-  WHEN 9 THEN 'doe' WHEN 10 THEN 'cdmrp' WHEN 11 THEN 'aei'
-  WHEN 12 THEN 'most_tw' WHEN 13 THEN 'capes' WHEN 14 THEN 'ncn'
-  WHEN 15 THEN 'gacr'
-  WHEN 16 THEN 'nsfc' WHEN 17 THEN 'dfg' WHEN 18 THEN 'fct'
-  WHEN 19 THEN 'nserc' WHEN 20 THEN 'snsf' WHEN 21 THEN 'cihr'
-  WHEN 22 THEN 'aha' WHEN 23 THEN 'shandong' WHEN 24 THEN 'bmbf'
-  WHEN 25 THEN 'fwf' WHEN 26 THEN 'isciii' WHEN 27 THEN 'vr'
-  WHEN 28 THEN 'nasa' WHEN 29 THEN 'amed' WHEN 30 THEN 'dhhs'
-  WHEN 31 THEN 'nhmrc' WHEN 32 THEN 'hunan' WHEN 33 THEN 'zhejiang'
-  WHEN 34 THEN 'innovate_uk' WHEN 35 THEN 'nihr'
-  WHEN 36 THEN 'ec' WHEN 37 THEN 'epsrc' WHEN 38 THEN 'nstc_tw'
-  WHEN 39 THEN 'mrc' WHEN 40 THEN 'bbsrc' WHEN 41 THEN 'nerc'
-  WHEN 42 THEN 'stfc' WHEN 43 THEN 'esrc' WHEN 44 THEN 'ahrc'
-  WHEN 45 THEN 'aro' WHEN 46 THEN 'onr' WHEN 47 THEN 'afosr'
-  WHEN 48 THEN 'darpa' WHEN 49 THEN 'dtra' WHEN 50 THEN 'usamrmc'
-  WHEN 51 THEN 'usamrdc' WHEN 52 THEN 'usamraa'
-  ELSE 'generic'
-END
-"""
+# The fixture's funder family per o_orderkey slot, in the key rule
+# table's order; the last slot is the unconfigured 'generic' family.
+_FAMILY_NAME = (
+    f"CASE CAST(o_orderkey % {len(AWARD_FAMILIES) + 1} AS INT)\n"
+    + "".join(f"  WHEN {i} THEN '{f}'\n" for i, f in enumerate(AWARD_FAMILIES))
+    + "  ELSE 'generic'\nEND"
+)
 
 _FAMILY_RAW_DUCK = _FAMILY_RAW_SPARK.replace("AS STRING", "AS VARCHAR")
-
-# DuckDB inline mirror of award_family_key (functions/sql_udfs.py).
-# Patterns are lookaround-free on purpose: RE2 (DuckDB) and Java regex
-# (Spark) then agree verbatim.
-_FAMILY_KEY_DUCK = """
-CASE
-  WHEN family = 'nih' THEN
-    CASE WHEN nullif(regexp_extract(_n, '([A-Z]{2}) ?-?([0-9]{5,6})', 1), '') IS NOT NULL
-         THEN concat(regexp_extract(_n, '([A-Z]{2}) ?-?([0-9]{5,6})', 1),
-                     lpad(regexp_extract(_n, '([A-Z]{2}) ?-?([0-9]{5,6})', 2), 6, '0'))
-    END
-  WHEN family = 'nsf' THEN
-    nullif(regexp_extract(regexp_replace(_n, '[ -]', '', 'g'), '([0-9]{7})', 1), '')
-  WHEN family = 'erc' THEN
-    CAST(CAST(nullif(CASE
-      WHEN regexp_matches(regexp_replace(_n, '[ -]', '', 'g'), '^[0-9]{12}$')
-        THEN substr(regexp_replace(_n, '[ -]', '', 'g'), 7)
-      ELSE regexp_extract(regexp_replace(_n, '[ -]', '', 'g'), '([0-9]{5,6})$', 1)
-    END, '') AS BIGINT) AS VARCHAR)
-  WHEN family = 'ukri' THEN
-    coalesce(
-      regexp_replace(nullif(regexp_extract(_n,
-        '((EP|BBS|BB|NE|ES|AH|MR|ST)/ ?[A-Z0-9]{6,7}(/[0-9]{1,2})?)', 1), ''),
-        '[ /]', '', 'g'),
-      nullif(regexp_replace(regexp_replace(_n,
-        '^(EPSRC|BBSRC|NERC|ESRC|AHRC|MRC|STFC|UKRI|GRANT|NO)[ .:#-]*', ''),
-        '[ _/.-]', '', 'g'), ''))
-  WHEN family = 'wellcome' THEN
-    lpad(coalesce(
-      nullif(regexp_extract(_n, '360G-WELLCOME-([0-9]{5,6})', 1), ''),
-      nullif(regexp_extract(_n, '^([0-9]{5,6})', 1), '')), 6, '0')
-  WHEN family = 'dod' THEN
-    nullif(regexp_extract(regexp_replace(_n, '[-_ ]', '', 'g'),
-      '((W81XWH|DAMD[0-9]{2}|HT[0-9]{4}|W911NF|N00014|FA[0-9]{4}|HR0011)[0-9]{2}[A-Z0-9]{3,9})',
-      1), '')
-  WHEN family = 'kakenhi' THEN
-    nullif(regexp_extract(regexp_replace(_n, '^(KAKENHI|JP|GRANT|NO[.]?)[ -]*', ''),
-      '^([0-9]{2}[A-Z][0-9]{5}|[0-9]{8})$', 1), '')
-  WHEN family = 'anr' THEN
-    CASE WHEN nullif(regexp_extract(_n, '^ANR-([0-9]{2})-([A-Z0-9]{2,6})-([0-9]{4})', 1), '') IS NOT NULL
-         THEN concat(
-           regexp_extract(_n, '^ANR-([0-9]{2})-([A-Z0-9]{2,6})-([0-9]{4})', 1), '-',
-           regexp_extract(_n, '^ANR-([0-9]{2})-([A-Z0-9]{2,6})-([0-9]{4})', 2), '-',
-           regexp_extract(_n, '^ANR-([0-9]{2})-([A-Z0-9]{2,6})-([0-9]{4})', 3))
-    END
-  WHEN family = 'fapesp' THEN
-    nullif(regexp_extract(regexp_replace(_n, ' ', '', 'g'),
-      '^([0-9]{2}/[0-9]{5}-[0-9])$', 1), '')
-  WHEN family = 'doe' THEN
-    nullif(regexp_extract(regexp_replace(_n, '[ -]', '', 'g'),
-      '^(?:DE)?((SC|EE|FE|AR|NE|NA|EM|OE|IA|PI|BI|CF|ET|SF|HS|DP|EW)[0-9]{7}|(FG|FC|AC|AI|GO|PS|EV|ER|AA)[0-9]{4}[A-Z]{1,2}[0-9]{4,6})$',
-      1), '')
-  WHEN family = 'cdmrp' THEN
-    nullif(regexp_extract(regexp_replace(_n, '[-_ ]', '', 'g'),
-      '^((W81XWH|DAMD[0-9]{2}|HT[0-9]{4}|W911[A-Z0-9]{2}|CDMRPL)[0-9A-Z]{5,14})$',
-      1), '')
-  WHEN family = 'aei' THEN
-    nullif(regexp_extract(regexp_replace(_n, ' ', '', 'g'),
-      '^((PID|PGC|RYC|RTI|CEX|TED|SEV|BES|FPU|FJC|IJC|CNS|EUR|EQC|PLEC|PDC)[0-9]{4}-[0-9]{5,6}[A-Z0-9-]{0,8})$',
-      1), '')
-  WHEN family = 'most_tw' THEN
-    nullif(regexp_replace(
-      regexp_replace(_n, '^(MOST|NSC|NSTC)[ -]*', ''),
-      '[ -]', '', 'g'), '')
-  WHEN family = 'capes' THEN
-    nullif(regexp_extract(regexp_replace(_n, ' ', '', 'g'),
-      '^((8888[0-9]|99999)[.][0-9]{6}/[0-9]{4}-[0-9]{2})$', 1), '')
-  WHEN family = 'ncn' THEN
-    nullif(regexp_extract(regexp_replace(_n, ' ', '', 'g'),
-      '^(20[0-9]{2}/[0-9]{2}/[A-Z]{1,2}/[A-Z]{2,3}[0-9]{1,2}/[0-9]{5})$', 1), '')
-  WHEN family = 'gacr' THEN
-    coalesce(
-      nullif(regexp_extract(_n, '^G[A-Z]([0-9]{2}-[0-9]{5}[A-Z])$', 1), ''),
-      nullif(regexp_extract(_n, '^G[A-Z](P?[0-9]{3}/[0-9]{2}/[A-Z]?[0-9]{3,4})$', 1), ''))
-  WHEN family = 'nsfc' THEN
-    coalesce(
-      nullif(regexp_extract(_n, '(^|[^A-Z0-9])(U[0-9]{7})([^0-9]|$)', 2), ''),
-      nullif(regexp_extract(_n, '(^|[^0-9])([0-9]{8})([^0-9]|$)', 2), ''),
-      nullif(regexp_extract(regexp_replace(_n, ' ', '', 'g'),
-        '(^|[^0-9])([0-9]{8})([^0-9]|$)', 2), ''))
-  WHEN family = 'dfg' THEN
-    nullif(regexp_extract(_n, '(^|[^0-9])([0-9]{9})([^0-9]|$)', 2), '')
-  WHEN family = 'fct' THEN
-    nullif(regexp_replace(_n, ' ', '', 'g'), '')
-  WHEN family = 'nserc' THEN
-    CASE
-      WHEN regexp_matches(regexp_replace(_n, ' ', '', 'g'),
-                          '[A-Z]{3,7}/?-?[0-9]{4}-?[0-9]{4,6}$')
-        THEN concat(
-          regexp_extract(regexp_replace(_n, ' ', '', 'g'),
-                         '([0-9]{4})-?[0-9]{4,6}$', 1), '-',
-          CAST(CAST(regexp_extract(regexp_replace(_n, ' ', '', 'g'),
-                                   '([0-9]{4,6})$', 1) AS BIGINT) AS VARCHAR))
-      WHEN regexp_matches(_n, '^[0-9]{5,6}[ -][0-9]{4}$')
-        THEN concat(
-          regexp_extract(_n, '([0-9]{4})$', 1), '-',
-          CAST(CAST(regexp_extract(_n, '^([0-9]{5,6})', 1)
-                    AS BIGINT) AS VARCHAR))
-    END
-  WHEN family = 'snsf' THEN
-    CAST(CAST(nullif(CASE
-      WHEN regexp_matches(_n, '^[0-9]{12}$') THEN substr(_n, 7)
-      ELSE regexp_extract(_n, '([0-9]{5,6})$', 1)
-    END, '') AS BIGINT) AS VARCHAR)
-  WHEN family = 'cihr' THEN
-    CAST(CAST(nullif(regexp_extract(
-      regexp_replace(regexp_replace(_n, '^#+ ?', ''),
-                     '^(950[- ]|[A-Z]{2,4}[0-9]?[- ]?)', ''),
-      '^([0-9]{4,6})([-_][0-9]+)?$', 1), '') AS BIGINT) AS VARCHAR)
-  WHEN family = 'aha' THEN
-    nullif(regexp_replace(_n, ' ', '', 'g'), '')
-  WHEN family = 'shandong' THEN
-    nullif(regexp_extract(regexp_replace(_n, '[ -]', '', 'g'),
-      '(ZR(19|20)[0-9]{2}[A-Z]{1,3}[0-9]{2,4}|[0-9]{4}ZR[A-Z][0-9A-Z]{5})',
-      1), '')
-  WHEN family = 'bmbf' THEN
-    nullif(regexp_replace(_n, '[+ /-]', '', 'g'), '')
-  WHEN family = 'fwf' THEN
-    nullif(regexp_extract(regexp_replace(_n, ' ', '', 'g'),
-      '^(?:10[.]55776/|HTTPS?://(?:DX[.])?DOI[.]ORG/10[.]55776/)?([A-Z]{1,3}[0-9]{3,7})(?:-[A-Z][0-9]{1,3})?$',
-      1), '')
-  WHEN family = 'isciii' THEN
-    CASE WHEN regexp_matches(regexp_replace(_n, ' ', '', 'g'),
-                             '^[A-Z]{2,4}[0-9]{2}(CIII)?[/-][0-9]{1,5}$')
-         THEN concat(
-           regexp_extract(regexp_replace(_n, ' ', '', 'g'),
-                          '^([A-Z]{2,4}[0-9]{2}(CIII)?)[/-]', 1), '/',
-           lpad(regexp_extract(regexp_replace(_n, ' ', '', 'g'),
-                               '[/-]([0-9]{1,5})$', 1), 5, '0'))
-    END
-  WHEN family = 'vr' THEN
-    CASE WHEN regexp_matches(
-                regexp_replace(_n, '^(VR|DNR|GRANT)[ .:#-]*', ''),
-                '^(19|20)[0-9]{2}[- ][0-9]{4,5}$')
-         THEN concat(
-           regexp_extract(
-             regexp_replace(_n, '^(VR|DNR|GRANT)[ .:#-]*', ''),
-             '^((19|20)[0-9]{2})', 1), '-',
-           lpad(regexp_extract(
-             regexp_replace(_n, '^(VR|DNR|GRANT)[ .:#-]*', ''),
-             '[- ]([0-9]{4,5})$', 1), 5, '0'))
-    END
-  WHEN family = 'nasa' THEN
-    nullif(regexp_replace(_n, '[ -]', '', 'g'), '')
-  WHEN family = 'amed' THEN
-    nullif(regexp_extract(_n,
-      '^(?:JP)?([0-9]{2}[A-Z]{2}[0-9]{7})(?:H[0-9]{4})?$', 1), '')
-  WHEN family = 'dhhs' THEN
-    coalesce(
-      nullif(regexp_extract(regexp_replace(_n, '[ -]', '', 'g'),
-        '([A-Z][A-Z0-9]{4}[0-9]{6})', 1), ''),
-      nullif(regexp_extract(regexp_replace(_n, '[ -]', '', 'g'),
-        '(^|[^0-9])([0-9]{2}[A-Z][A-Z0-9][0-9]{4,5})([^0-9]|$)', 2), ''))
-  WHEN family = 'nhmrc' THEN
-    coalesce(
-      nullif(regexp_extract(_n,
-        '(^|[^A-Z0-9])(APP|GNT) ?-?([0-9]{6,7})([^0-9]|$)', 3), ''),
-      nullif(regexp_extract(regexp_replace(_n, ' ', '', 'g'),
-                            '^(?:ID|NHMRC)?[.:#-]*([0-9]{6,7})$', 1), ''))
-  WHEN family = 'hunan' THEN
-    coalesce(
-      nullif(regexp_extract(
-        regexp_replace(regexp_replace(_n, '^(NO|GRANT)[ .:#-]*', ''),
-                       ' ', '', 'g'),
-        '^((19|20)[0-9]{2}JJ[0-9]{4,5})$', 1), ''),
-      CASE WHEN regexp_matches(
-                  regexp_replace(regexp_replace(_n, '^(NO|GRANT)[ .:#-]*', ''),
-                                 ' ', '', 'g'),
-                  '^[0-9]{2}JJ[0-9]{4,5}$')
-           THEN concat('20',
-                  regexp_replace(regexp_replace(_n, '^(NO|GRANT)[ .:#-]*', ''),
-                                 ' ', '', 'g'))
-      END)
-  WHEN family = 'zhejiang' THEN
-    coalesce(
-      nullif(regexp_extract(
-        regexp_replace(regexp_replace(_n, '^(NO|GRANT)[ .:#-]*', ''),
-                       ' ', '', 'g'),
-        '^(L[A-Z]{0,4}[0-9]{2}[A-Z][0-9]{6})$', 1), ''),
-      CASE WHEN regexp_matches(
-                  regexp_replace(regexp_replace(_n, '^(NO|GRANT)[ .:#-]*', ''),
-                                 ' ', '', 'g'),
-                  '^[A-Z]{1,4}[0-9]{2}[A-Z][0-9]{6}$')
-            AND NOT regexp_matches(
-                  regexp_replace(regexp_replace(_n, '^(NO|GRANT)[ .:#-]*', ''),
-                                 ' ', '', 'g'),
-                  '^L')
-           THEN concat('L',
-                  regexp_replace(regexp_replace(_n, '^(NO|GRANT)[ .:#-]*', ''),
-                                 ' ', '', 'g'))
-      END)
-  WHEN family = 'innovate_uk' THEN
-    nullif(regexp_extract(regexp_replace(_n, ' ', '', 'g'),
-      '^(?:PROJECT|GRANT|APP|NO)?[.:#-]*([0-9]{5,8}|KTP[0-9]{6})$', 1), '')
-  WHEN family = 'nihr' THEN
-    coalesce(
-      nullif(regexp_extract(
-        regexp_replace(regexp_replace(_n, '^NIHR[- ]', ''), ' ', '', 'g'),
-        '^(?:[A-Z]{2,6})?([0-9]{2}/[0-9]{2,4}/[0-9]{2,4})$', 1), ''),
-      nullif(regexp_extract(
-        regexp_replace(_n, '^NIHR[- ]', ''),
-        '(^|[^A-Z0-9-])([A-Z]{1,5}(-[A-Z0-9]{1,4}){0,3}-(19|20)[0-9]{2}-[0-9]{2,6}(-[A-Z0-9]{1,6}){0,2})([^A-Z0-9-]|$)',
-        2), ''),
-      nullif(regexp_replace(
-        regexp_replace(_n, '^NIHR[- ]', ''), ' ', '', 'g'), ''))
-  WHEN family = 'ec' THEN
-    coalesce(
-      nullif(regexp_extract(_n, '(^|[^0-9])(101[0-9]{6})([^0-9]|$)', 2), ''),
-      nullif(regexp_extract(_n, '(^|[^0-9])([0-9]{6})([^0-9]|$)', 2), ''))
-  WHEN family = 'epsrc' THEN
-    nullif(regexp_replace(_n, ' ', '', 'g'), '')
-  WHEN family = 'nstc_tw' THEN
-    nullif(regexp_replace(
-      regexp_replace(_n, '^(MOST|NSC|NSTC)[ -]*', ''),
-      '[ -]', '', 'g'), '')
-  WHEN family = 'mrc' THEN
-    coalesce(
-      regexp_replace(nullif(regexp_extract(_n,
-        '(^|[^A-Z0-9])(MR/ ?[A-Z0-9]{6,7}(/[0-9]{1,2})?)([^A-Z0-9]|$)', 2),
-        ''), '[ /]', '', 'g'),
-      nullif(regexp_replace(regexp_replace(_n,
-        '^(MRC|UKRI|GRANT|NO)[ .:#-]*', ''), '[ _/.-]', '', 'g'), ''))
-  WHEN family = 'bbsrc' THEN
-    coalesce(
-      regexp_replace(nullif(regexp_extract(_n,
-        '(^|[^A-Z0-9])(BBS?/ ?[A-Z0-9/]{6,14}?(/[0-9]{1,2})?)([^A-Z0-9]|$)', 2),
-        ''), '[ /]', '', 'g'),
-      nullif(regexp_replace(regexp_replace(_n,
-        '^(BBSRC|UKRI|GRANT|NO)[ .:#-]*', ''), '[ _/.-]', '', 'g'), ''))
-  WHEN family = 'nerc' THEN
-    coalesce(
-      regexp_replace(nullif(regexp_extract(_n,
-        '(^|[^A-Z0-9])(NE/ ?[A-Z0-9]{6,7}(/[0-9]{1,2})?)([^A-Z0-9]|$)', 2),
-        ''), '[ /]', '', 'g'),
-      nullif(regexp_replace(regexp_replace(_n,
-        '^(NERC|UKRI|GRANT|NO)[ .:#-]*', ''), '[ _/.-]', '', 'g'), ''))
-  WHEN family = 'stfc' THEN
-    coalesce(
-      regexp_replace(nullif(regexp_extract(_n,
-        '(^|[^A-Z0-9])((ST|PP)/ ?[A-Z0-9/]{6,9}?(/[0-9]{1,2})?)([^A-Z0-9]|$)', 2),
-        ''), '[ /]', '', 'g'),
-      nullif(regexp_replace(regexp_replace(_n,
-        '^(STFC|UKRI|GRANT|NO)[ .:#-]*', ''), '[ _/.-]', '', 'g'), ''))
-  WHEN family = 'esrc' THEN
-    coalesce(
-      regexp_replace(nullif(regexp_extract(_n,
-        '(^|[^A-Z0-9])(ES/ ?[A-Z0-9]{6,7}(/[0-9]{1,2})?)([^A-Z0-9]|$)', 2),
-        ''), '[ /]', '', 'g'),
-      nullif(regexp_replace(regexp_replace(_n,
-        '^(ESRC|UKRI[ .:#-]|GRANT|NO)[ .:#-]*', ''), '[ _/.-]', '', 'g'), ''))
-  WHEN family = 'ahrc' THEN
-    coalesce(
-      regexp_replace(nullif(regexp_extract(_n,
-        '(^|[^A-Z0-9])(AH/ ?[A-Z0-9]{6,7}(/[0-9]{1,2})?)([^A-Z0-9]|$)', 2),
-        ''), '[ /]', '', 'g'),
-      nullif(regexp_replace(regexp_replace(_n,
-        '^(AHRC|UKRI[ .:#-]|GRANT|NO)[ .:#-]*', ''), '[ _/.-]', '', 'g'), ''))
-  WHEN family = 'aro' THEN
-    nullif(regexp_extract(regexp_replace(_n, '[-_ ]', '', 'g'),
-      '^(W911NF[0-9]{2}[A-Z0-9]{3,9})$', 1), '')
-  WHEN family = 'onr' THEN
-    nullif(regexp_extract(regexp_replace(_n, '[-_ ]', '', 'g'),
-      '^(N[0-9]{7}[A-Z0-9]{3,9})$', 1), '')
-  WHEN family = 'afosr' THEN
-    nullif(regexp_extract(regexp_replace(_n, '[-_ ]', '', 'g'),
-      '^((FA[0-9]{4}|F49620)[0-9]{2}[A-Z0-9]{3,9})$', 1), '')
-  WHEN family = 'darpa' THEN
-    nullif(regexp_extract(regexp_replace(_n, '[-_ ]', '', 'g'),
-      '^((HR0011|D[0-9]{2}A[CP]|N66001|W31P4Q|FA86[0-9]{2}|FA87[0-9]{2})[0-9A-Z]{5,12})$',
-      1), '')
-  WHEN family = 'dtra' THEN
-    nullif(regexp_extract(regexp_replace(_n, '[-_ ]', '', 'g'),
-      '^(HDTRA[0-9]{3}[A-Z0-9]{3,9})$', 1), '')
-  WHEN family = 'usamrmc' THEN
-    nullif(regexp_extract(regexp_replace(_n, '[-_ ]', '', 'g'),
-      '^((W81XWH|DAMD[0-9]{2}|HT[0-9]{4})[0-9]{2}[A-Z0-9]{3,9})$', 1), '')
-  WHEN family = 'usamrdc' THEN
-    nullif(regexp_extract(regexp_replace(_n, '[-_ ]', '', 'g'),
-      '^((W81XWH|DAMD[0-9]{2}|HT[0-9]{4})[0-9]{2}[A-Z0-9]{3,9})$', 1), '')
-  WHEN family = 'usamraa' THEN
-    nullif(regexp_extract(regexp_replace(_n, '[-_ ]', '', 'g'),
-      '^((W81XWH|DAMD[0-9]{2}|HT[0-9]{4})[0-9]{2}[A-Z0-9]{3,9})$', 1), '')
-  ELSE
-nullif(regexp_replace(_sq, '0*([0-9]+)\\z', '\\1'), '')
-END
-"""
 
 _FAMILY_BATTERY_ORACLE = f"""
 WITH raw AS (
@@ -710,7 +411,7 @@ normed AS (
   FROM raw
 ),
 keyed AS (
-  SELECT family, {_FAMILY_KEY_DUCK} AS k FROM normed
+  SELECT family, {compile_family_key(1)} AS k FROM normed
 )
 SELECT family, length(k) AS key_len,
        count(*)::BIGINT AS n, count(DISTINCT k)::BIGINT AS n_keys
@@ -807,7 +508,7 @@ _VERDICT_DUCK = f"""CASE
   WHEN n_awards = 1 THEN 'confirmed'
   WHEN n_awards > 1 THEN 'confirmed_ambiguous'
   WHEN ({compile_grammar_case(1)}) THEN 'plausible'
-  WHEN ({_FAMILY_KEY_DUCK}) IS NOT NULL THEN 'plausible'
+  WHEN ({compile_family_key(1)}) IS NOT NULL THEN 'plausible'
   WHEN ({compile_foreign_scheme(1)}) THEN 'foreign_scheme'
   ELSE 'garbage'
 END"""
@@ -938,7 +639,7 @@ skey AS (
 ),
 keyed AS (
   SELECT family, s, _n,
-         ({_FAMILY_KEY_DUCK}) AS s_nk,
+         ({compile_family_key(1)}) AS s_nk,
          ({compile_generic_key("s", 1)}) AS s_nk_g
   FROM skey
 ),
@@ -950,7 +651,7 @@ bnorm AS (
 ),
 reg AS (
   SELECT DISTINCT family, nk
-  FROM (SELECT family, ({_FAMILY_KEY_DUCK}) AS nk FROM bnorm)
+  FROM (SELECT family, ({compile_family_key(1)}) AS nk FROM bnorm)
 ),
 reg_g AS (
   SELECT DISTINCT family, nk_g
@@ -1108,7 +809,7 @@ pkey AS (
 ),
 keyed AS (
   SELECT o_orderkey, family,
-         ({_FAMILY_KEY_DUCK}) AS p_nk,
+         ({compile_family_key(1)}) AS p_nk,
          ({compile_generic_key("part", 1)}) AS p_nk_g,
          ({compile_grammar_case(1)}) AS p_gram,
          ({compile_weak_surface(1)}) AS p_weak
@@ -1122,7 +823,7 @@ bnorm AS (
 ),
 reg AS (
   SELECT DISTINCT family, nk
-  FROM (SELECT family, ({_FAMILY_KEY_DUCK}) AS nk FROM bnorm)
+  FROM (SELECT family, ({compile_family_key(1)}) AS nk FROM bnorm)
 ),
 reg_g AS (
   SELECT DISTINCT family, nk_g
@@ -1301,7 +1002,7 @@ wf_gram AS (
 ),
 wf_keyed AS (
   SELECT w.o_orderkey, w.family AS source_family, w.t_family,
-         ({_FAMILY_KEY_DUCK.replace("family =", "t_family =")}) AS f_nk
+         ({compile_family_key(1, "t_family")}) AS f_nk
   FROM wf_gram w
 ),
 bnorm AS (
@@ -1312,7 +1013,7 @@ bnorm AS (
 ),
 reg AS (
   SELECT DISTINCT family, nk
-  FROM (SELECT family, ({_FAMILY_KEY_DUCK}) AS nk FROM bnorm)
+  FROM (SELECT family, ({compile_family_key(1)}) AS nk FROM bnorm)
 )
 SELECT k.source_family, k.t_family AS target_family,
        count(*)::BIGINT AS n,

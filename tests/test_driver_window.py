@@ -154,3 +154,19 @@ def test_plan_fingerprint_folds_udf_module_source(
     monkeypatch.setattr(oracle, "_module_source", lambda m: read(m) + (
         "\n# edited" if m == "openalex_walden_spark.functions.lid" else ""))
     assert _fingerprint(spark, sf_dir, "text_lang_id") != base
+
+
+def test_plan_fingerprint_folds_sql_function_ddl(
+    spark, sf_dir, monkeypatch
+) -> None:
+    """The plan only names a SQL function, so the DDL of each one it
+    calls, and of the functions their bodies call, is folded in: editing
+    award_strip, which the query reaches only through award_key's body,
+    moves the fingerprint."""
+    from openalex_walden_spark.functions import sql_udfs
+
+    base = _fingerprint(spark, sf_dir, "udf_award_normalize")
+    monkeypatch.setattr(sql_udfs, "_ALL", tuple(
+        d.replace("'[ -]'", "'[ _-]'") if "FUNCTION award_strip(" in d else d
+        for d in sql_udfs._ALL))
+    assert _fingerprint(spark, sf_dir, "udf_award_normalize") != base

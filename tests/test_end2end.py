@@ -104,10 +104,10 @@ def test_doc_catalog_counts_match_registry():
     )
     # Funder-family count (the round-7 verdict caught README/COVERAGE
     # still saying 16 after the normalizer grew to 36): derive the truth
-    # from the CASE branches of award_family_key itself.
-    from openalex_walden_spark.functions import sql_udfs
+    # from the key rule table that award_family_key renders.
+    from openalex_walden_spark.functions.sql_udfs import AWARD_FAMILIES
 
-    n_fam = sql_udfs._AWARD_FAMILY_KEY.count("WHEN family = '")
+    n_fam = len(AWARD_FAMILIES)
     m = re.search(r"award batteries over (\d+)\s+funder families", readme)
     assert m, "README funder-family phrase missing"
     assert int(m.group(1)) == n_fam, (

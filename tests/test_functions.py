@@ -433,15 +433,15 @@ def test_award_family_battery_every_family_fires(spark_udfs):
     non-null normalized key for its own synthetic deposited format.
     Guards the silent failure mode where a pattern is broken identically
     in both dialects (both produce NULL, the oracle hash still matches).
-    The family count is derived from award_family_key's CASE branches,
-    so adding a family without a firing fixture format fails here."""
-    from openalex_walden_spark.functions import sql_udfs
+    The family count is the key rule table's, so adding a family without
+    a firing fixture format fails here."""
+    from openalex_walden_spark.functions.sql_udfs import AWARD_FAMILIES
     from openalex_walden_spark.queries.sqludf import (
         _FAMILY_NAME,
         _FAMILY_RAW_SPARK,
     )
 
-    n_fam = sql_udfs._AWARD_FAMILY_KEY.count("WHEN family = '")
+    n_fam = len(AWARD_FAMILIES)
     spark = spark_udfs
     df = spark.range(1, 4000).selectExpr("id AS o_orderkey").selectExpr(
         f"({_FAMILY_NAME}) AS family",
@@ -458,62 +458,104 @@ def test_award_family_battery_every_family_fires(spark_udfs):
 
 
 def test_award_digit_boundary_vectors_both_dialects(spark_udfs):
-    """Round-7 ADVICE: nsfc/dfg/nhmrc must emulate the reference's digit
-    -boundary lookarounds ((?<!\\d)...(?!\\d)) lookaround-free — a 9-digit
-    run must NOT key as its first 8 digits, 'U12345678' as 'U1234567',
-    or 'APP12345678' as '1234567'.  dhhs/nihr must extract ids EMBEDDED
-    in surrounding text (the reference is unanchored there).  Each
-    vector is pinned against the expected key in BOTH dialects, so a
-    divergent emulation cannot hide behind a both-NULL oracle match."""
+    """Both award keys (award_family_key, award_registry_key) pinned per
+    vector in BOTH dialects, the DuckDB side rendered from the same rule
+    table, so a divergent emulation cannot hide behind a both-NULL oracle
+    match.  Round-7 ADVICE: nsfc/dfg/nhmrc must emulate the reference's
+    digit-boundary lookarounds ((?<!\\d)...(?!\\d)) lookaround-free — a
+    9-digit run must NOT key as its first 8 digits, 'U12345678' as
+    'U1234567', or 'APP12345678' as '1234567'.  dhhs/nihr must extract
+    ids EMBEDDED in surrounding text (the reference is unanchored there).
+    The edge strings (blank, NULL, long, trailing newline, non-ASCII
+    digits, 'ß') pin where the two engines differ: a vector with a
+    (Spark, DuckDB) pair is a known divergence."""
     import duckdb
+    import pandas as pd
 
-    from openalex_walden_spark.queries.sqludf import _FAMILY_KEY_DUCK
+    from openalex_walden_spark.functions.sql_udfs import (
+        compile_family_key,
+        compile_registry_key,
+    )
 
+    long_x = "X" * 300
     vectors = [
-        # family, award, expected key (None = reference rejects)
-        ("nsfc", "123456789", None),           # 9-digit run: no bare-8 prefix
-        ("nsfc", "U12345678", "12345678"),     # U-form rejected; digit arm fires
-        ("nsfc", "U1803261", "U1803261"),      # clean U+7 form
-        ("nsfc", "GRANT 81771234", "81771234"),
-        ("dfg", "123456789", "123456789"),
-        ("dfg", "1234567890", None),           # 10-digit run: no 9-digit prefix
-        ("dfg", "PROJEKT 405602047 FUNDED", "405602047"),
-        ("nhmrc", "APP12345678", None),        # 8 digits: reference rejects
-        ("nhmrc", "APP1059515", "1059515"),
-        ("nhmrc", "GNT2009991", "2009991"),
-        ("nhmrc", "XAPP1059515", None),        # letter-glued APP is not a match
-        ("dhhs", "NO 12 DP 34567", "12DP34567"),   # embedded grant grammar
-        ("dhhs", "T32GM007753", "T32GM007753"),    # contract grammar
-        ("nihr", "NIHR PGFAR-2013-00123 AWARD", "PGFAR-2013-00123"),
+        # key, family, award, expected key (None = reference rejects)
+        ("family", "nsfc", "123456789", None),        # 9-digit run: no bare-8 prefix
+        ("family", "nsfc", "U12345678", "12345678"),  # U-form rejected; digit arm fires
+        ("family", "nsfc", "U1803261", "U1803261"),   # clean U+7 form
+        ("family", "nsfc", "GRANT 81771234", "81771234"),
+        ("family", "dfg", "123456789", "123456789"),
+        ("family", "dfg", "1234567890", None),        # 10-digit run: no 9-digit prefix
+        ("family", "dfg", "PROJEKT 405602047 FUNDED", "405602047"),
+        ("family", "nhmrc", "APP12345678", None),     # 8 digits: reference rejects
+        ("family", "nhmrc", "APP1059515", "1059515"),
+        ("family", "nhmrc", "GNT2009991", "2009991"),
+        ("family", "nhmrc", "XAPP1059515", None),     # letter-glued APP is not a match
+        ("family", "dhhs", "NO 12 DP 34567", "12DP34567"),   # embedded grant grammar
+        ("family", "dhhs", "T32GM007753", "T32GM007753"),    # contract grammar
+        ("family", "nihr", "NIHR PGFAR-2013-00123 AWARD", "PGFAR-2013-00123"),
+        ("registry", "nsfc", "U1803261", "U1803261"),
+        ("registry", "nsfc", "GRANT 81771234", None),  # registry grammars anchor
+        ("registry", "nhmrc", "APP1059515", None),
+        ("registry", "nsf", "1748958", "1748958"),
+        ("registry", "most_tw", "MOST 108-2221-E-001-001", "1082221E001001"),
+        ("registry", "mrc", "MR/N000000/1", "MRN0000001"),
+        ("registry", "generic", "awd - 0012345", "AWD12345"),
+        # edge strings, both keys
+        ("family", "nih", "", None),
+        ("registry", "nih", "", None),
+        ("family", "generic", "   ", None),
+        ("registry", "generic", "   ", None),
+        ("family", "nsf", None, None),
+        ("registry", "nsf", None, None),
+        ("family", "nsf", long_x + " 1748958", "1748958"),
+        ("registry", "nsf", long_x + " 1748958", None),
+        ("family", "generic", long_x + "-00042", long_x + "42"),
+        ("family", "nsf", "DMS-1748958\n", "1748958"),
+        # Java's '$' also matches before a final line terminator, RE2's
+        # only at the end: an anchored rule keys a trailing-newline id
+        # in Spark alone
+        ("registry", "nsf", "1748958\n", ("1748958", None)),
+        ("family", "generic", "AWD-0042\n", "AWD42"),
+        ("family", "nsf", "١٢٣٤٥٦٧", None),          # [0-9] is ASCII in both
+        ("registry", "nsf", "١٢٣٤٥٦٧", None),
+        ("family", "generic", "١٢٣٤٥٦٧", "١٢٣٤٥٦٧"),
+        # upper('ß'): Java maps it to 'SS', DuckDB to capital sharp s
+        ("family", "generic", "straße 12345", ("STRASSE12345", "STRAẞE12345")),
+        ("registry", "generic", "straße 12345", ("STRASSE12345", "STRAẞE12345")),
     ]
+    rows = [(i, side, f, a) for i, (side, f, a, _) in enumerate(vectors)]
     spark = spark_udfs
     sdf = spark.createDataFrame(
-        [(i, f, a) for i, (f, a, _) in enumerate(vectors)],
-        "idx INT, family STRING, award STRING",
-    ).selectExpr("idx", "award_family_key(family, award) AS k")
+        rows, "idx INT, side STRING, family STRING, award STRING"
+    ).selectExpr(
+        "idx",
+        "CASE side WHEN 'family' THEN award_family_key(family, award)"
+        " ELSE award_registry_key(family, award) END AS k",
+    )
     got_spark = {r["idx"]: r["k"] for r in sdf.collect()}
 
     con = duckdb.connect()
-    values = ", ".join(
-        f"({i}, '{f}', '{a}')" for i, (f, a, _) in enumerate(vectors)
-    )
+    con.register("v", pd.DataFrame(rows, columns=["idx", "side", "family", "award"]))
     got_duck = dict(con.sql(f"""
-        WITH v(idx, family, award) AS (VALUES {values}),
-        normed AS (
-          SELECT idx, family,
+        WITH normed AS (
+          SELECT idx, side, family,
                  regexp_replace(upper(trim(award)), '  +', ' ', 'g') AS _n,
                  regexp_replace(regexp_replace(upper(trim(award)),
                                 '\\s+', ' ', 'g'), '[ -]', '', 'g') AS _sq
           FROM v)
-        SELECT idx, {_FAMILY_KEY_DUCK} AS k FROM normed
+        SELECT idx, CASE side WHEN 'family' THEN {compile_family_key(1)}
+                    ELSE {compile_registry_key(1)} END AS k
+        FROM normed
     """).fetchall())
 
-    for i, (fam, award, want) in enumerate(vectors):
-        assert got_spark[i] == want, (
-            f"Spark: {fam} {award!r} -> {got_spark[i]!r}, want {want!r}"
+    for i, (side, fam, award, want) in enumerate(vectors):
+        want_spark, want_duck = want if isinstance(want, tuple) else (want, want)
+        assert got_spark[i] == want_spark, (
+            f"Spark {side}: {fam} {award!r} -> {got_spark[i]!r}, want {want_spark!r}"
         )
-        assert got_duck[i] == want, (
-            f"DuckDB: {fam} {award!r} -> {got_duck[i]!r}, want {want!r}"
+        assert got_duck[i] == want_duck, (
+            f"DuckDB {side}: {fam} {award!r} -> {got_duck[i]!r}, want {want_duck!r}"
         )
 
 
@@ -525,13 +567,7 @@ def test_award_verdict_tiers_both_dialects(spark_udfs):
     outside the scored set are unscored."""
     import duckdb
 
-    from openalex_walden_spark.functions.sql_udfs import (
-        compile_foreign_scheme,
-        compile_grammar_case,
-        compile_weak_surface,
-        _GRAMMAR_RULES,
-    )
-    from openalex_walden_spark.queries.sqludf import _FAMILY_KEY_DUCK
+    from openalex_walden_spark.queries.sqludf import _VERDICT_DUCK
 
     vectors = [
         # family, award, n_awards, expected verdict
@@ -556,18 +592,6 @@ def test_award_verdict_tiers_both_dialects(spark_udfs):
     ).selectExpr("idx", "award_verdict(family, award, n_awards) AS v")
     got_spark = {r["idx"]: r["v"] for r in sdf.collect()}
 
-    scored = ", ".join(f"'{f}'" for f in _GRAMMAR_RULES)
-    verdict_duck = f"""CASE
-      WHEN award IS NULL OR trim(award) = '' THEN 'garbage'
-      WHEN family NOT IN ({scored}) THEN 'unscored'
-      WHEN n_awards >= 1 AND ({compile_weak_surface(1)}) THEN 'confirmed_weak'
-      WHEN n_awards = 1 THEN 'confirmed'
-      WHEN n_awards > 1 THEN 'confirmed_ambiguous'
-      WHEN ({compile_grammar_case(1)}) THEN 'plausible'
-      WHEN ({_FAMILY_KEY_DUCK}) IS NOT NULL THEN 'plausible'
-      WHEN ({compile_foreign_scheme(1)}) THEN 'foreign_scheme'
-      ELSE 'garbage'
-    END"""
     con = duckdb.connect()
     values = ", ".join(
         f"({i}, '{f}', " + ("NULL" if a is None else f"'{a}'") + f", {n})"
@@ -581,7 +605,7 @@ def test_award_verdict_tiers_both_dialects(spark_udfs):
                  regexp_replace(regexp_replace(upper(trim(award)),
                                 '\\s+', ' ', 'g'), '[ -]', '', 'g') AS _sq
           FROM v)
-        SELECT idx, {verdict_duck} FROM normed
+        SELECT idx, {_VERDICT_DUCK} FROM normed
     """).fetchall())
 
     for i, (fam, award, n, want) in enumerate(vectors):
